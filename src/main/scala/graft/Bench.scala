@@ -48,10 +48,10 @@ object Bench {
 
   /** The noise-canary probe: a FIXED-WORK job — 200M-row arithmetic sum
     * over a pinned 32-partition range, no IO, no data dependence. ONE
-    * definition shared by the bench's in-artifact calibration and the
-    * standalone [[graft.tools.Canary]] recalibration tool, so the
-    * BASELINE.md load-normalization band can never be re-measured
-    * against a silently different workload.
+    * definition behind the bench's in-artifact `calibration_sec`, which is
+    * also what the BASELINE.md load-normalization band is recalibrated
+    * from, so the band can never be re-measured against a silently
+    * different workload.
     */
   private[graft] def calProbe(spark: SparkSession): Double = {
     val t0 = System.nanoTime()
@@ -59,28 +59,19 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** The ONE session configuration the bench and the canary share
-    * (ADVICE r17: the two tools defaulted SPARK_GRAFT_CPUS differently —
-    * 4 here, 32 in the canary — so with the env var unset the
-    * recalibration tool measured the fixed-work probe under ~8× the
-    * bench's parallelism, silently minting a quiet band the bench could
-    * never match). Probe wall-time depends on executor thread count, so
-    * the instrument and the thing it calibrates MUST build identical
-    * sessions; the default is 32 — the configuration every BASELINE.md
-    * band and driver artifact was recorded under (`local[32]`).
+  /** The bench session. Probe wall-time depends on executor thread
+    * count, so the calibration probe and the queries it calibrates run in
+    * this one session; the default is 32 — the configuration every
+    * BASELINE.md band and bench artifact was recorded under
+    * (`local[32]`).
     */
   private[graft] def benchSession(appName: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_AQE: A/B instrument for the driver-scheduling-floor
-    // measurement (r19, guide §1.2 step 3 — config last). DEFAULT IS ON,
-    // identical to every recorded band; the driver never sets it, so its
-    // bench is untouched. Flip to "false" only for same-window A/Bs.
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
     val spark = SparkSession.builder()
       .appName(appName)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", aqe)
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

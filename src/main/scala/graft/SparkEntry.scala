@@ -1015,7 +1015,8 @@ object SparkEntry {
 
   /** The shared cluster label table behind q_dedup_clusters and
     * q_near_dedup: pairs + the iterative CC build run ONCE per corpus and
-    * are reused ([[graft.operators.Dedup.clustersCached]]) — the artifact
+    * are reused ([[graft.operators.Dedup.clustersCached]], resident in
+    * [[graft.util.SessionIndices]] until flush) — the artifact
     * lifecycle a 100 TB pipeline uses (labels are an ingest-time product,
     * persisted via Dedup.writeClusters; queries reuse, never recompute).
     */
@@ -2239,7 +2240,8 @@ object SparkEntry {
 
   /** The customer↔supplier trade graph as a cached prepared artifact
     * (GraphOps.prepareCached — built once per table dir, checkpointed
-    * with degrees and nodes); only the iterative ranking bills per query.
+    * with degrees and nodes, resident in graft.util.SessionIndices);
+    * only the iterative ranking bills per query.
     * Dedup on the raw INT key pair (cheap shuffle), then mint the string
     * node ids; the c- and s-prefixed namespaces are disjoint and the pair
     * set is already unique, so the union is distinct by construction and

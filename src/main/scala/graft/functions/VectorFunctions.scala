@@ -188,28 +188,26 @@ object VectorFunctions {
     z.toDouble / Long.MaxValue.toDouble
   }
 
-  /** Plane matrices are row-independent derived constants — computed once
-    * per (nBits, dim, seed) per JVM instead of 3 xor-mults per component
-    * per ROW (what the old per-row UDF paid on every corpus signing pass).
+  /** The (nBits x dim) plane matrix of one signer. Row-independent: each
+    * holder ([[SimHashSignature]], [[graft.operators.VectorSearch.SimHashLsh]])
+    * derives it once and keeps it for its own lifetime, instead of 3
+    * xor-mults per component per ROW (what the old per-row UDF paid on
+    * every corpus signing pass). No JVM-wide memo: a banded index signs
+    * with L seeds in one job, and a shared memo either grows with every
+    * key a long-lived JVM ever signed with or thrashes between the legs.
     */
-  private val planesCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int, Long), Array[Array[Double]]]
-
   def simhashPlanes(nBits: Int, dim: Int, seed: Long): Array[Array[Double]] =
-    planesCache.computeIfAbsent(
-      (nBits, dim, seed),
-      _ => Array.tabulate(nBits, dim)((j, i) => simhashPlane(seed, j, i)))
+    Array.tabulate(nBits, dim)((j, i) => simhashPlane(seed, j, i))
 
   /** Shared signing kernel over an array<float> row: sign-projection onto
-    * the cached planes, i-ascending double accumulation — bit-identical
+    * the signer's planes, i-ascending double accumulation — bit-identical
     * to the Seq[Float] UDF it replaces (same fold order, same widening).
     */
-  def simhashSig(vec: ArrayData, nBits: Int, dim: Int, seed: Long): Long = {
-    val planes = simhashPlanes(nBits, dim, seed)
+  def simhashSig(vec: ArrayData, planes: Array[Array[Double]], dim: Int): Long = {
     val n = math.min(dim, vec.numElements())
     var sig = 0L
     var j = 0
-    while (j < nBits) {
+    while (j < planes.length) {
       val row = planes(j)
       var dot = 0.0
       var i = 0
@@ -240,12 +238,20 @@ object VectorFunctions {
             s"simhash_sig expects ARRAY<FLOAT>, got ${other.sql}")
       }
 
-    override def nullSafeEval(v: Any): Any =
-      VectorFunctions.simhashSig(v.asInstanceOf[ArrayData], nBits, dim, seed)
+    /** This signer's planes: derived once per expression instance and
+      * handed to the generated code as a reference object.
+      */
+    @transient private[graft] lazy val planes: Array[Array[Double]] =
+      VectorFunctions.simhashPlanes(nBits, dim, seed)
 
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    override def nullSafeEval(v: Any): Any =
+      VectorFunctions.simhashSig(v.asInstanceOf[ArrayData], planes, dim)
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val p = ctx.addReferenceObj("simhashPlanes", planes, "double[][]")
       nullSafeCodeGen(ctx, ev, v =>
-        s"${ev.value} = graft.functions.VectorFunctions.simhashSig($v, $nBits, $dim, ${seed}L);")
+        s"${ev.value} = graft.functions.VectorFunctions.simhashSig($v, $p, $dim);")
+    }
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)

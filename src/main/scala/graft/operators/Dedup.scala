@@ -702,59 +702,27 @@ object Dedup {
   def loadClusters(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
-  // Label-table registry (ingest-time build, query-time reuse — the same
-  // lifecycle as FtsIndex.buildCached): one CC run per corpus key per
-  // session. At cluster scale the table is written with writeClusters and
-  // loaded back; the in-session cache serves the local/bench lifecycle.
-  // Entries record the checkpoint RDD ids the build pinned so
-  // invalidation can actually release the blocks (the returned labels are
-  // a projection over localCheckpoint blocks, which Dataset.unpersist
-  // cannot free). Cached DataFrames are bound to the building session;
-  // the cache must be invalidated across session restarts.
-  private final case class CachedLabels(labels: DataFrame, pinnedRddIds: Set[Int])
-  private val clusterCache = new java.util.concurrent.ConcurrentHashMap[String, CachedLabels]()
-  // Per-key monitors, NOT CHM bin locks: the CC build runs many Spark
-  // jobs while holding its lock (same rationale as FtsIndex.lockFor — a
-  // bin lock would stall unrelated keys and break on reentrancy).
-  private val clusterLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def clusterLockFor(key: String): Object =
-    clusterLocks.computeIfAbsent(key, _ => new Object)
+  // Session-resident label tables (graft.util.SessionIndices): one CC run
+  // per corpus key per session. At cluster scale the table is written
+  // with writeClusters and loaded back; the registry serves the
+  // local/bench lifecycle. Cached DataFrames are bound to the building
+  // session; the registry must be cleared across session restarts.
+  private val resident = graft.util.SessionIndices.namespace[DataFrame]("dedup.clusters")
 
   /** Build-once cluster labels per corpus `key`; later callers reuse the
     * checkpointed label table instead of re-running pair detection + the
-    * iterative CC build. The label table's checkpoint blocks are read
-    * directly off its plan (the CC loop has already released every
-    * superseded round itself), so concurrent persists by other operators
-    * are never claimed (ADVICE r4). Released by [[invalidateClusters]].
+    * iterative CC build. The entry hands over the label table's checkpoint
+    * RDDs, read directly off its plan (the CC loop has already released
+    * every superseded round itself), so concurrent persists by other
+    * operators are never claimed (ADVICE r4). The returned labels are a
+    * projection over checkpoint blocks (or files, in reliable mode),
+    * which `Dataset.unpersist` cannot free.
     */
   def clustersCached(key: String, nodes: => DataFrame, idCol: String, pairs: => DataFrame): DataFrame =
-    clusterLockFor(key).synchronized {
-      val hit = clusterCache.get(key)
-      if (hit != null) hit.labels
-      else {
-        val labels = nearDupClusters(nodes, idCol, pairs)
-        val pinned = graft.util.Checkpoints.pinnedRddIds(labels)
-        clusterCache.put(key, CachedLabels(labels, pinned))
-        labels
-      }
+    resident.getOrBuild(key) {
+      val labels = nearDupClusters(nodes, idCol, pairs)
+      graft.util.SessionIndices.Resident.pinning(labels, labels)
     }
-
-  /** Drop every cached label table and release its checkpoint blocks
-    * (companion of Pipeline.flush).
-    */
-  def invalidateClusters(): Unit = {
-    import scala.jdk.CollectionConverters._
-    clusterCache.keySet().asScala.toSeq.foreach { key =>
-      clusterLockFor(key).synchronized {
-        Option(clusterCache.remove(key)).foreach { cached =>
-          val sc = cached.labels.sparkSession.sparkContext
-          cached.pinnedRddIds.foreach { id =>
-            sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false))
-          }
-        }
-      }
-    }
-  }
 
   /** Global duplicated-SPAN removal — exact-substring dedup at fixed
     * k-word span granularity (the "remove repeated passages" step of

@@ -49,12 +49,7 @@ object FtsIndex {
       // run's batch N as a replay of the old run's batch N and silently
       // drop it from the index.
       lastBatchToken: Option[String] = None
-  ) {
-    private[operators] def unpersistAll(): Unit = {
-      postings.unpersist()
-      retained.foreach(_.unpersist())
-    }
-  }
+  )
 
   /** Build the index over `textCol` of `docs` keyed by `idCol`.
     * Equivalent of S7 `create_fts_index` (src/load/lancedb_store.py:104-112).
@@ -139,53 +134,23 @@ object FtsIndex {
     Index(spark.read.parquet(s"$path/postings"), numDocs, avgDocLen)
   }
 
-  // Ingest-time index registry: one built index per corpus key, so the
-  // query side (BM25 / hybrid / context assembly) reads rather than
-  // rebuilds — mirroring the reference's write-then-index lifecycle.
-  private val cache = new java.util.concurrent.ConcurrentHashMap[String, Index]()
-
-  // Per-key monitors: index builds run SPARK JOBS while holding their
-  // lock, so the lock must never be a CHM bin lock (compute() would stall
-  // an unrelated corpus key hashing to the same bin behind a full build,
-  // and a reentrant cache access from the same thread would throw).
-  // Monitor objects are never removed — one Object per corpus key ever
-  // seen, bounded and tiny — so two threads can never hold DIFFERENT
-  // monitors for the same key.
-  private val keyLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def lockFor(key: String): Object =
-    keyLocks.computeIfAbsent(key, _ => new Object)
+  // Session-resident index per corpus key, so the query side (BM25 /
+  // hybrid / context assembly) reads rather than rebuilds — mirroring the
+  // reference's write-then-index lifecycle. The entry hands over every
+  // persisted postings fragment.
+  private val resident = graft.util.SessionIndices.namespace[Index]("fts")
+  private def held(idx: Index): graft.util.SessionIndices.Resident[Index] =
+    graft.util.SessionIndices.Resident(idx, idx.postings +: idx.retained)
 
   def buildCached(key: String, docs: => DataFrame, idCol: String, textCol: String): Index =
-    lockFor(key).synchronized {
-      val existing = cache.get(key)
-      if (existing != null) existing
-      else {
-        val idx = build(docs, idCol, textCol)
-        cache.put(key, idx)
-        idx
-      }
-    }
-
-  /** Incrementally extend the CACHED index under `key` (no-op None if the
-    * key isn't built yet — first search will build from the full table).
-    * The replaced entry's fragments stay persisted because the new index
-    * retains them; a later invalidate unpersists the whole chain.
-    */
-  def appendCached(key: String, newDocs: DataFrame, idCol: String, textCol: String): Option[Index] =
-    lockFor(key).synchronized {
-      Option(cache.get(key)).map { idx =>
-        val next = append(idx, newDocs, idCol, textCol)
-        cache.put(key, next)
-        next
-      }
-    }
+    resident.getOrBuild(key)(held(build(docs, idCol, textCol)))
 
   /** Streaming-safe incremental maintenance: atomically ensure the cached
     * index under `key` includes the micro-batch identified by
     * `batchToken` (a RUN-SCOPED identity, e.g. "checkpointDir#batchId" —
     * bare batch ids collide across runs/checkpoint resets). Exactly one
-    * of three things happens, all inside the map's per-key compute (which
-    * also serializes against concurrent [[buildCached]] calls):
+    * of three things happens, all under the key's monitor (which also
+    * serializes against concurrent [[buildCached]] calls):
     *
     *   - index present, `lastBatchToken == batchToken`: REPLAYED batch —
     *     no-op (a retried micro-batch must not union its postings twice);
@@ -201,9 +166,9 @@ object FtsIndex {
     * pre-existing corpus even if no search ever runs — the price of
     * closing the build-vs-extend race windows on both sides.
     *
-    * Lock scope: the Spark work runs under the PER-KEY monitor (not a
-    * CHM bin lock), so an unrelated corpus key never waits behind this
-    * build, and multi-corpus streaming under one JVM stays safe.
+    * Ownership: the checkpoint storage under `newDocs` stays the
+    * caller's while it still reads the batch; it passes to the index
+    * only through [[handOverBatch]], once the caller is done with it.
     */
   def extendForBatch(
       key: String,
@@ -213,29 +178,32 @@ object FtsIndex {
       textCol: String,
       preBatchCorpus: => DataFrame
   ): Index =
-    lockFor(key).synchronized {
-      val next = cache.get(key) match {
-        case null =>
-          append(build(preBatchCorpus, idCol, textCol), newDocs, idCol, textCol)
-            .copy(lastBatchToken = Some(batchToken))
-        case idx if idx.lastBatchToken.contains(batchToken) => idx
-        case idx =>
-          append(idx, newDocs, idCol, textCol).copy(lastBatchToken = Some(batchToken))
-      }
-      cache.put(key, next)
-      next
+    resident.update(key) {
+      case Some(r) if r.value.lastBatchToken.contains(batchToken) => r
+      case Some(r) =>
+        // the extended postings union every old fragment, so the old
+        // entry's storage all carries over
+        held(append(r.value, newDocs, idCol, textCol).copy(lastBatchToken = Some(batchToken)))
+          .copy(pinned = r.pinned, pinnedIn = r.pinnedIn)
+      case None =>
+        held(append(build(preBatchCorpus, idCol, textCol), newDocs, idCol, textCol)
+          .copy(lastBatchToken = Some(batchToken)))
     }
 
-  def invalidate(key: String): Unit =
-    lockFor(key).synchronized {
-      Option(cache.remove(key)).foreach(_.unpersistAll())
-    }
+  /** Close a batch passed to [[extendForBatch]]: call once the caller has
+    * finished reading `batchDocs`, on success and failure alike. The
+    * index under `key` takes the batch's checkpoint storage if its
+    * postings still read it, and [[invalidate]] releases it from then on;
+    * otherwise (a replayed batch the index skipped, or the key
+    * invalidated while the batch was still in use) it is released here.
+    */
+  def handOverBatch(key: String, batchDocs: DataFrame): Unit =
+    resident.handOver(key, batchDocs)(idx => Seq(idx.postings))
 
-  /** Drop every cached index — the warehouse-flush companion. */
-  def invalidateAll(): Unit = {
-    import scala.jdk.CollectionConverters._
-    cache.keySet().asScala.toSeq.foreach(invalidate)
-  }
+  /** Drop the index under `key` and release its fragments and handed-over
+    * batch checkpoints.
+    */
+  def invalidate(key: String): Unit = resident.invalidate(key)
 
   /** BM25 score expression for one (tf, df, docLen) posting.
     * idf = ln(1 + (N - df + 0.5)/(df + 0.5)) — the Robertson-Sparck Jones

@@ -52,29 +52,18 @@ object GraphOps {
     PreparedGraph(withDeg, nodes)
   }
 
-  // Prepared-graph registry: graph extraction + preparation is ingest-time
-  // ETL with the same lifecycle as FtsIndex.buildCached /
-  // Dedup.clustersCached / VectorSearch.buildIvfCached — built once, read
-  // by every ranking query. The iterative ranking itself is never cached
-  // (it IS the query). Entries record the checkpoint RDD ids the prepare
-  // pinned so invalidation can release the blocks (Dataset.unpersist
-  // cannot free localCheckpoint blocks). Builds run under PER-KEY
-  // monitors, not the CHM's compute bin lock: prepare() runs Spark jobs,
-  // and a bin lock would stall unrelated keys and break on reentrancy
-  // (the FtsIndex.lockFor / Dedup.clusterLockFor rationale).
-  private final case class CachedGraph(graph: PreparedGraph, pinnedRddIds: Set[Int])
-  private val graphCache =
-    new java.util.concurrent.ConcurrentHashMap[String, CachedGraph]()
-  private val graphLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def graphLockFor(key: String): Object =
-    graphLocks.computeIfAbsent(key, _ => new Object)
+  // Session-resident prepared graphs (graft.util.SessionIndices): graph
+  // extraction + preparation is ingest-time ETL, built once and read by
+  // every ranking query. The iterative ranking itself is never cached (it
+  // IS the query).
+  private val resident = graft.util.SessionIndices.namespace[PreparedGraph]("graph.prepared")
 
-  /** Build-once [[PreparedGraph]] keyed by `key`. The checkpoint RDD ids
-    * are read directly off the two pinned DataFrames' LogicalRDD plans —
-    * concurrent persist activity by other operators is never attributed
-    * to this graph (ADVICE r4: a global before/after diff of
-    * `getPersistentRDDs` could claim, and later unpersist, blocks owned
-    * by FtsIndex/Dedup/IVF caches).
+  /** Build-once [[PreparedGraph]] keyed by `key`. The entry hands over the
+    * checkpoint RDD ids read directly off the two pinned DataFrames'
+    * LogicalRDD plans — concurrent persist activity by other operators is
+    * never attributed to this graph (ADVICE r4: a global before/after diff
+    * of `getPersistentRDDs` could claim, and later release, blocks owned
+    * by other session-resident indices).
     */
   def prepareCached(
       key: String,
@@ -83,33 +72,10 @@ object GraphOps {
       dstCol: String,
       edgesAreDistinct: Boolean = false
   ): PreparedGraph =
-    graphLockFor(key).synchronized {
-      val hit = graphCache.get(key)
-      if (hit != null) hit.graph
-      else {
-        val g = prepare(edges, srcCol, dstCol, edgesAreDistinct)
-        val pinned = graft.util.Checkpoints.pinnedRddIds(g.withDeg, g.nodes)
-        graphCache.put(key, CachedGraph(g, pinned))
-        g
-      }
+    resident.getOrBuild(key) {
+      val g = prepare(edges, srcCol, dstCol, edgesAreDistinct)
+      graft.util.SessionIndices.Resident.pinning(g, g.withDeg, g.nodes)
     }
-
-  /** Drop every cached prepared graph and release its checkpoint blocks
-    * (companion of Pipeline.flush).
-    */
-  def invalidateGraphs(): Unit = {
-    import scala.jdk.CollectionConverters._
-    graphCache.keySet().asScala.toSeq.foreach { key =>
-      graphLockFor(key).synchronized {
-        Option(graphCache.remove(key)).foreach { cached =>
-          val sc = cached.graph.withDeg.sparkSession.sparkContext
-          cached.pinnedRddIds.foreach { id =>
-            sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false))
-          }
-        }
-      }
-    }
-  }
 
   /** Synchronous PageRank over an edge list, `iters` rounds, in FIXED-POINT
     * integer arithmetic — deliberately not floating point:

@@ -391,27 +391,42 @@ object SequencePacking {
     * lease's renew is serialized per Held). After a failure, not-yet-
     * started shards are skipped; already-running shards finish their own
     * publish (each is content-preserving and individually proven). The
-    * FIRST failure is rethrown after all in-flight work settles.
+    * FIRST failure is rethrown after all in-flight work settles, with
+    * every later shard failure attached via `addSuppressed`. If the
+    * calling thread is interrupted while waiting, not-yet-started shards
+    * are cancelled, the interrupt flag is restored and the
+    * InterruptedException propagates.
     */
-  private def forEachShardConcurrently(shards: Seq[Long], maxInFlight: Int = 3)(
+  private[graft] def forEachShardConcurrently(shards: Seq[Long], maxInFlight: Int = 3)(
       f: Long => Unit): Unit = {
     if (shards.lengthCompare(1) <= 0) { shards.foreach(f); return }
-    val failed = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(maxInFlight, shards.size))
     try {
       val futures = shards.map { sh =>
         pool.submit(new java.util.concurrent.Callable[Unit] {
           override def call(): Unit =
-            if (failed.get() == null) {
+            if (failures.isEmpty) {
               try f(sh)
-              catch { case t: Throwable => failed.compareAndSet(null, t); throw t }
+              catch { case t: Throwable => failures.add(t); throw t }
             }
         })
       }
-      futures.foreach(fu => try fu.get() catch { case _: Throwable => () })
-      val t = failed.get()
-      if (t != null) throw t
+      try futures.foreach { fu =>
+        try fu.get() catch { case _: java.util.concurrent.ExecutionException => () }
+      }
+      catch {
+        case e: InterruptedException =>
+          futures.foreach(_.cancel(false))
+          Thread.currentThread().interrupt()
+          throw e
+      }
+      val first = failures.peek()
+      if (first != null) {
+        failures.forEach(t => if (t ne first) first.addSuppressed(t))
+        throw first
+      }
     } finally pool.shutdown()
   }
 

@@ -411,10 +411,13 @@ object VectorSearch {
     private[operators] def planeComponent(j: Int, i: Int): Double =
       VectorFunctions.simhashPlane(seed, j, i)
 
+    // derived once per signer: a banded index probes with the same L
+    // signers on every query
+    @transient private lazy val planes = VectorFunctions.simhashPlanes(nBits, dim, seed)
+
     def signatureOf(vec: Seq[Float]): Long = {
       // same fold order and widening as the executor kernel
-      // (VectorFunctions.simhashSig); planes come from the shared cache
-      val planes = VectorFunctions.simhashPlanes(nBits, dim, seed)
+      // (VectorFunctions.simhashSig)
       var sig = 0L
       var j = 0
       while (j < nBits) {
@@ -987,27 +990,20 @@ object VectorSearch {
     IvfIndex(indexed, model.clusterCenters.map(_.toArray), vecCol)
   }
 
-  // Index registry (ingest-time build, query-time read — same lifecycle
-  // as FtsIndex.buildCached; at cluster scale the indexed DF is a table
-  // partitioned by ivf_cell instead of an in-memory persist).
-  private val ivfCache = new java.util.concurrent.ConcurrentHashMap[String, IvfIndex]()
+  // Session-resident IVF indices (graft.util.SessionIndices): ingest-time
+  // build, query-time read; at cluster scale the indexed DF is a table
+  // partitioned by ivf_cell instead of an in-memory persist.
+  private val resident = graft.util.SessionIndices.namespace[IvfIndex]("ivf")
 
   def buildIvfCached(key: String, corpus: => org.apache.spark.sql.DataFrame, vecCol: String,
       nLists: Int = 16, seed: Long = 42L): IvfIndex =
     // build params are part of the cache identity: the same key with a
     // different vector column, nLists, or seed must not serve the old
     // quantizer
-    ivfCache.computeIfAbsent(s"$key:$vecCol:$nLists:$seed",
-      _ => buildIvf(corpus, vecCol, nLists, seed))
-
-  def invalidateIvf(key: String, vecCol: String, nLists: Int = 16, seed: Long = 42L): Unit =
-    Option(ivfCache.remove(s"$key:$vecCol:$nLists:$seed")).foreach(_.indexed.unpersist())
-
-  /** Drop every cached IVF index — the warehouse-flush companion. */
-  def invalidateAllIvf(): Unit = {
-    ivfCache.values.forEach(idx => idx.indexed.unpersist())
-    ivfCache.clear()
-  }
+    resident.getOrBuild(s"$key:$vecCol:$nLists:$seed") {
+      val ivf = buildIvf(corpus, vecCol, nLists, seed)
+      graft.util.SessionIndices.Resident(ivf, persisted = Seq(ivf.indexed))
+    }
 
   // --------------------------------------------------------- product quantization
 

@@ -494,18 +494,13 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
     graft.util.JsonLog.info("delete_document", "document_id" -> documentId)
   }
 
-  /** Flush the warehouse AND the in-memory index caches — every other
+  /** Flush the warehouse AND every session-resident index — every other
     * mutation path invalidates the FTS cache, and flush must too, or a
     * long-lived session would serve BM25 hits for a deleted corpus.
     */
   def flush(dryRun: Boolean = false): Seq[String] = {
     val dropped = catalog.flush(dryRun)
-    if (!dryRun) {
-      FtsIndex.invalidateAll()
-      graft.operators.VectorSearch.invalidateAllIvf()
-      graft.operators.Dedup.invalidateClusters()
-      graft.operators.GraphOps.invalidateGraphs()
-    }
+    if (!dryRun) graft.util.SessionIndices.clear()
     dropped
   }
 
@@ -633,10 +628,6 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
   def getDocument(id: String): Option[org.apache.spark.sql.Row] =
     if (!catalog.exists("documents")) None
     else catalog.read("documents").where(col("id") === id).collect().headOption
-
-  def getDocumentByHash(fileHash: String): Option[org.apache.spark.sql.Row] =
-    if (!catalog.exists("documents")) None
-    else catalog.read("documents").where(col("file_hash") === fileHash).collect().headOption
 
   /** Status histogram + chunk count (A1/A2, src/pipeline.py:297-311).
     * Empty histogram (not a path error) on a fresh warehouse.

@@ -161,9 +161,10 @@ final class StreamingIngest(
     // RDD per gate per micro-batch. They cannot be released earlier: each
     // truncates the lineage of everything downstream of it, so the blocks
     // are live until the final table appends finish. The `chunks` pin
-    // below is NOT scratch — the live FTS index retains its blocks and
-    // FtsIndex.invalidate is its release point.
+    // below is NOT scratch — when the batch completes it is handed to the
+    // live FTS index, which releases it when its key is invalidated.
     val scratchPins = scala.collection.mutable.ArrayBuffer.empty[Int]
+    var batchChunks: Option[DataFrame] = None
     def pinScratch(df: DataFrame): DataFrame = {
       val p = df.localCheckpoint()
       scratchPins ++= graft.util.Checkpoints.pinnedRddIds(p)
@@ -397,12 +398,16 @@ final class StreamingIngest(
     // One materialization of the chunk+embed work: the batch feeds the
     // table append AND the FTS extension, and without the pin each
     // consumer (plus the index's lazily-persisted postings) would re-run
-    // the embedding mapPartitions. The checkpointed blocks are retained
-    // by the live index's batch postings; FtsIndex.invalidate is the
-    // release point (Dataset.unpersist cannot free checkpoint RDDs —
-    // they go through the block manager, not the cache manager).
+    // the embedding mapPartitions. The batch owns the checkpointed blocks
+    // until it completes; then FtsIndex.handOverBatch (below, in the
+    // finally) gives them to the session-resident FTS index if its batch
+    // postings still read them, and FtsIndex.invalidate / Pipeline.flush
+    // release them with the index — Dataset.unpersist alone cannot free
+    // checkpoint RDDs. A takedown or flush that invalidates the key
+    // mid-batch therefore never frees blocks this batch is still reading.
     val chunks = Embedder.withEmbedding(chunkRows, "text", "embedding", config.embedding)
       .localCheckpoint()
+    batchChunks = Some(chunks)
 
     // Crash-replay view of the table, computed structurally (no collected
     // id lists, no isin literals). A doc of THIS batch can already have
@@ -422,7 +427,7 @@ final class StreamingIngest(
     // index's lazily-persisted postings retain this frame's lineage until
     // first search, which can be AFTER this batch's scratch pins (which
     // `docs` sits on top of) are released below — `chunks`' blocks are
-    // the ones the index already retains until FtsIndex.invalidate.
+    // the ones the index takes over at the end of the batch.
     // Zero-chunk docs drop out, which is correct for both consumers: they
     // have no postings to exclude and no landed chunks to skip.
     val batchDocs = chunks.select(col("document_id")).distinct()
@@ -581,6 +586,7 @@ final class StreamingIngest(
     graft.util.JsonLog.info("stream_batch_ingested", "batch_id" -> batchId)
 
     } finally {
+      batchChunks.foreach(FtsIndex.handOverBatch(ftsKey, _))
       graft.util.Checkpoints.release(scratchPins.toSet, s)
     }
   }

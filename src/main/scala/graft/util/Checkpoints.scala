@@ -42,11 +42,11 @@ object Checkpoints {
       out
     } else df.localCheckpoint()
 
-  /** The RDD ids a pinned DataFrame holds persisted blocks under — empty
-    * in reliable mode (files, not blocks). Used by operator caches to
-    * release exactly their own blocks on invalidation (a global
-    * before/after diff of `getPersistentRDDs` would mis-attribute
-    * concurrent persists by unrelated operators).
+  /** The RDD ids a pinned DataFrame holds its storage under — persisted
+    * blocks in local mode, checkpoint files in reliable mode. Used by
+    * session-resident indices to release exactly their own storage on
+    * invalidation (a global before/after diff of `getPersistentRDDs`
+    * would mis-attribute concurrent persists by unrelated operators).
     */
   def pinnedRddIds(dfs: DataFrame*): Set[Int] =
     dfs.flatMap { df =>

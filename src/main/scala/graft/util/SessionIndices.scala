@@ -1,0 +1,135 @@
+package graft.util
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Session-resident derived structures: the FTS postings, IVF cells,
+  * connected-component dedup labels and prepared PageRank graphs that are
+  * built once per corpus key at ingest time and then read by every query
+  * (the reference builds its FTS index once per batch, after load, and
+  * serves every search from it).
+  *
+  * One decision lives here: how such a structure is built once per key,
+  * shared across requests, and released. Operators declare a typed
+  * [[Namespace]] and keep only their build functions.
+  *
+  * Locking: each key has its own monitor, never a `ConcurrentHashMap` bin
+  * lock. Builds run Spark jobs while holding it, and a bin lock would
+  * stall unrelated keys that hash to the same bin behind a full build
+  * (and throw on a reentrant access from the same thread). Slots are
+  * never removed (one small object per key ever seen), so two threads can
+  * never hold different monitors for the same key.
+  */
+object SessionIndices {
+
+  /** A built structure plus exactly the storage its build function hands over:
+    * `persisted` frames are unpersisted and `pinned` checkpoint RDD ids
+    * go through [[Checkpoints.release]] (blocks in local mode, files in
+    * reliable mode) when the entry is invalidated. RDD ids are numbered
+    * per SparkContext, so the ids are released against `pinnedIn`, the
+    * session of the frames they were read from, never whichever session
+    * happens to be active at release time.
+    */
+  final case class Resident[A](
+      value: A,
+      persisted: Seq[DataFrame] = Nil,
+      pinned: Set[Int] = Set.empty,
+      pinnedIn: Option[SparkSession] = None)
+
+  object Resident {
+    /** An entry that owns the checkpoint storage behind `frames`. */
+    def pinning[A](value: A, frames: DataFrame*): Resident[A] =
+      Resident(value, pinned = Checkpoints.pinnedRddIds(frames: _*),
+        pinnedIn = frames.headOption.map(_.sparkSession))
+  }
+
+  private final class Slot { var entry: Option[Resident[_]] = None }
+  private val slots = new java.util.concurrent.ConcurrentHashMap[String, Slot]()
+  private def slot(key: String): Slot = slots.computeIfAbsent(key, _ => new Slot)
+
+  /** One operator's keys. Namespaces keep operators' keys disjoint, so an
+    * entry is only ever read back as the type it was built as.
+    */
+  final class Namespace[A] private[SessionIndices] (name: String) {
+    private def slotOf(key: String): Slot = slot(s"$name:$key")
+
+    /** The entry under `key`, built by `build` if absent. */
+    def getOrBuild(key: String)(build: => Resident[A]): A = {
+      val s = slotOf(key)
+      s.synchronized {
+        s.entry match {
+          case Some(r) => r.value.asInstanceOf[A]
+          case None =>
+            val r = build
+            s.entry = Some(r)
+            r.value
+        }
+      }
+    }
+
+    /** Atomically replace the entry under `key` with `f(current)`. The new
+      * entry must carry every piece of storage it still uses from the old
+      * one: the old entry is dropped, not released.
+      */
+    def update(key: String)(f: Option[Resident[A]] => Resident[A]): A = {
+      val s = slotOf(key)
+      s.synchronized {
+        val r = f(s.entry.asInstanceOf[Option[Resident[A]]])
+        s.entry = Some(r)
+        r.value
+      }
+    }
+
+    /** Hand the checkpoint storage pinned under `frame` to the entry under
+      * `key` once the caller is done reading `frame`: the ids that the
+      * entry's `reads` frames still reference become the entry's to
+      * release; the rest (all of them, if the entry was invalidated or
+      * replaced meanwhile) are released at once. Deferring the hand-over
+      * to this call means an [[invalidate]] racing the caller's own reads
+      * can never free storage under them.
+      */
+    def handOver(key: String, frame: DataFrame)(reads: A => Seq[DataFrame]): Unit = {
+      val ids = Checkpoints.pinnedRddIds(frame)
+      val s = slotOf(key)
+      val kept = s.synchronized {
+        s.entry.asInstanceOf[Option[Resident[A]]] match {
+          case Some(r) =>
+            val used = ids.intersect(Checkpoints.pinnedRddIds(reads(r.value): _*))
+            if (used.nonEmpty)
+              s.entry = Some(r.copy(pinned = r.pinned ++ used,
+                pinnedIn = r.pinnedIn.orElse(Some(frame.sparkSession))))
+            used
+          case None => Set.empty[Int]
+        }
+      }
+      Checkpoints.release(ids -- kept, frame.sparkSession)
+    }
+
+    /** Drop the entry under `key` and release its storage. */
+    def invalidate(key: String): Unit = SessionIndices.invalidate(s"$name:$key")
+  }
+
+  def namespace[A](name: String): Namespace[A] = new Namespace[A](name)
+
+  private def invalidate(fullKey: String): Unit =
+    Option(slots.get(fullKey)).foreach { s =>
+      s.synchronized {
+        val old = s.entry
+        s.entry = None
+        old.foreach(release)
+      }
+    }
+
+  private def release(r: Resident[_]): Unit = {
+    // a stopped context took its blocks with it
+    r.persisted.filterNot(_.sparkSession.sparkContext.isStopped).foreach(_.unpersist())
+    r.pinnedIn.filterNot(_.sparkContext.isStopped).foreach(Checkpoints.release(r.pinned, _))
+  }
+
+  /** Drop and release every entry of every namespace (the warehouse-flush
+    * companion).
+    */
+  def clear(): Unit = {
+    import scala.jdk.CollectionConverters._
+    slots.keySet().asScala.toSeq.foreach(invalidate)
+  }
+}

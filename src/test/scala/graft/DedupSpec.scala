@@ -162,14 +162,14 @@ class DedupSpec extends AnyFunSuite {
     // drop the map entry (Dataset.unpersist can't free checkpoint RDDs)
     val sc = spark.sparkContext
     val pinnedBefore = sc.getPersistentRDDs.size
-    Dedup.invalidateClusters()
+    graft.util.SessionIndices.clear()
     assert(sc.getPersistentRDDs.size < pinnedBefore,
-      "invalidateClusters must unpersist the CC build's checkpoint blocks")
+      "clearing the registry must unpersist the CC build's checkpoint blocks")
     val third = Dedup.clustersCached(key, nodes, "id", pairs)
     assert(!(third eq first), "a fresh build must follow invalidation")
     assert(third.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
       Map(1L -> 1L, 2L -> 1L, 7L -> 7L))
-    Dedup.invalidateClusters()
+    graft.util.SessionIndices.clear()
   }
 
   test("dedupSpansGlobal keeps only the corpus-wide first occurrence of each span") {

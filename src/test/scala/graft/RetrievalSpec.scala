@@ -82,24 +82,23 @@ class RetrievalSpec extends AnyFunSuite {
     assert(a.toSeq == b.toSeq, "append-maintained index must score identically to a rebuild")
   }
 
-  test("appendCached extends the cached index; invalidate unpersists every fragment") {
+  test("extendForBatch extends the cached index; invalidate unpersists every fragment") {
     import org.apache.spark.storage.StorageLevel
     val key = "fts-leak-test"
     FtsIndex.invalidate(key)
-    val base = FtsIndex.buildCached(key, docs.where($"doc_id" <= 3), "doc_id", "text")
-    val appended = FtsIndex.appendCached(key, docs.where($"doc_id" > 3), "doc_id", "text")
-    assert(appended.isDefined && appended.get.numDocs == 5)
-    assert(appended.get.retained.nonEmpty, "appended index must track persisted fragments")
+    val pre = docs.where($"doc_id" <= 3)
+    val base = FtsIndex.buildCached(key, pre, "doc_id", "text")
+    val extended = FtsIndex.extendForBatch(key, "run#1", docs.where($"doc_id" > 3), "doc_id", "text", pre)
+    assert(extended.numDocs == 5)
+    assert(extended.retained.nonEmpty, "extended index must track persisted fragments")
     // searching through the cache sees the extended corpus
     val hits = FtsIndex.search(spark, FtsIndex.buildCached(key, docs, "doc_id", "text"),
       "streaming", 5).collect()
-    assert(hits.map(_.getLong(0)).contains(5L), "doc 5 arrived via append")
+    assert(hits.map(_.getLong(0)).contains(5L), "doc 5 arrived via the batch extension")
 
     FtsIndex.invalidate(key)
     assert(base.postings.storageLevel == StorageLevel.NONE, "base fragment unpersisted")
-    appended.get.retained.foreach(df => assert(df.storageLevel == StorageLevel.NONE))
-    // missing key: appendCached is a no-op None, not a phantom build
-    assert(FtsIndex.appendCached("never-built", docs, "doc_id", "text").isEmpty)
+    extended.retained.foreach(df => assert(df.storageLevel == StorageLevel.NONE))
   }
 
   test("BM25: term-matching docs rank first; scores positive and ordered") {

@@ -888,6 +888,47 @@ class SequencePackingSpec extends AnyFunSuite {
     assert(SequencePacking.affectedShardsFor(spark, dir, Seq(44L)).toSet == Set(fromData(44L)))
   }
 
+  test("forEachShardConcurrently: an interrupted caller keeps its interrupt and cancels unstarted shards") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val running = new CountDownLatch(1)
+    val unblock = new CountDownLatch(1)
+    @volatile var outcome: Option[Throwable] = None
+    @volatile var flagAfter = false
+    val caller = new Thread(() => {
+      try SequencePacking.forEachShardConcurrently((1L to 5L), maxInFlight = 1) { sh =>
+        started.add(sh)
+        running.countDown()
+        unblock.await()
+      } catch { case t: Throwable => outcome = Some(t) }
+      flagAfter = Thread.currentThread().isInterrupted
+    })
+    caller.start()
+    assert(running.await(30, TimeUnit.SECONDS))
+    caller.interrupt()
+    caller.join(30000)
+    assert(!caller.isAlive, "the interrupted caller must stop waiting on the shards")
+    unblock.countDown()
+    Thread.sleep(200)
+    assert(outcome.exists(_.isInstanceOf[InterruptedException]), s"got $outcome")
+    assert(flagAfter, "the caller's interrupt flag must be restored")
+    assert(started.toArray.toSeq == Seq(1L), "shards not yet started must be cancelled")
+  }
+
+  test("forEachShardConcurrently: secondary shard failures are attached to the first") {
+    val barrier = new java.util.concurrent.CyclicBarrier(3)
+    val e = intercept[IllegalStateException] {
+      SequencePacking.forEachShardConcurrently(Seq(1L, 2L, 3L), maxInFlight = 3) { sh =>
+        // all three shards are in flight before any fails
+        barrier.await(30, java.util.concurrent.TimeUnit.SECONDS)
+        throw new IllegalStateException(s"shard $sh")
+      }
+    }
+    val all = (e +: e.getSuppressed.toSeq).map(_.getMessage).toSet
+    assert(all == Set("shard 1", "shard 2", "shard 3"), s"got $all")
+    assert(e.getSuppressed.length == 2)
+  }
+
   private def rmDir(f: java.io.File): Unit = {
     val kids = f.listFiles(); if (kids != null) kids.foreach(rmDir); f.delete()
   }

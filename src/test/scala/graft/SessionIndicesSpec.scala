@@ -1,0 +1,204 @@
+package graft
+
+import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
+import graft.operators.{Dedup, FtsIndex, GraphOps, VectorSearch}
+import graft.util.{Checkpoints, SessionIndices}
+
+/** The session-resident index registry behind FtsIndex, VectorSearch
+  * (IVF), Dedup (CC labels) and GraphOps (prepared graphs): release of
+  * exactly the handed-over storage, per-key locking, build-once.
+  */
+class SessionIndicesSpec extends AnyFunSuite {
+  private lazy val spark = SparkTestBase.spark
+  import spark.implicits._
+
+  private def uniq(name: String) = s"spec:$name-${System.nanoTime()}"
+  private lazy val docs = Seq((1L, "alpha bravo"), (2L, "charlie delta"), (3L, "echo alpha"))
+    .toDF("id", "text")
+  private lazy val vecs = (0 until 12).map { i =>
+    (i.toLong, Array.tabulate(4)(j => ((i * 7 + j * 3) % 11).toFloat / 11f))
+  }.toDF("vec_id", "embedding")
+  private lazy val nodes = Seq(1L, 2L, 7L).toDF("id")
+  private lazy val pairs = Seq((1L, 2L)).toDF("id_a", "id_b")
+  private lazy val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
+
+  private def persistent: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("invalidate releases the checkpoint blocks a streaming batch handed to the FTS index") {
+    val key = uniq("handover")
+    val batch = Seq((4L, "foxtrot golf")).toDF("id", "text").localCheckpoint()
+    val batchIds = Checkpoints.pinnedRddIds(batch)
+    assert(batchIds.nonEmpty && batchIds.subsetOf(persistent), "precondition: the batch is pinned")
+    val idx = FtsIndex.extendForBatch(key, "run#0", batch, "id", "text", docs)
+    FtsIndex.handOverBatch(key, batch)
+    assert(batchIds.subsetOf(persistent), "the index reads the batch, so it keeps it")
+    assert(FtsIndex.search(spark, idx, "foxtrot", 5).count() == 1L)
+    // a replayed batch is skipped by the index, so its fresh pin is
+    // released at hand-over rather than held
+    val replay = Seq((4L, "foxtrot golf")).toDF("id", "text").localCheckpoint()
+    val replayIds = Checkpoints.pinnedRddIds(replay)
+    assert(FtsIndex.extendForBatch(key, "run#0", replay, "id", "text", docs).numDocs == 4L)
+    FtsIndex.handOverBatch(key, replay)
+    assert(replayIds.intersect(persistent).isEmpty, "an unread replay batch is released at once")
+
+    FtsIndex.invalidate(key)
+    assert(batchIds.intersect(persistent).isEmpty,
+      "the batch's checkpoint RDDs must be released with the index")
+    assert(idx.retained.forall(_.storageLevel == StorageLevel.NONE))
+  }
+
+  test("an invalidate between extendForBatch and the batch's appends frees nothing the batch still reads") {
+    val key = uniq("handover-race")
+    val batch = Seq((5L, "hotel india")).toDF("id", "text").localCheckpoint()
+    val batchIds = Checkpoints.pinnedRddIds(batch)
+    FtsIndex.extendForBatch(key, "run#1", batch, "id", "text", docs)
+    // a takedown (deleteStreamDocument) or Pipeline.flush lands mid-batch
+    FtsIndex.invalidate(key)
+    assert(batchIds.subsetOf(persistent), "the batch's blocks survive the invalidate")
+    // the batch's table append still reads its chunks
+    val out = java.nio.file.Files.createTempDirectory("graft-handover-race").resolve("chunks").toString
+    batch.write.parquet(out)
+    assert(spark.read.parquet(out).count() == 1L)
+    // the batch ends: the index it extended is gone, so nothing takes the pin
+    FtsIndex.handOverBatch(key, batch)
+    assert(batchIds.intersect(persistent).isEmpty, "released at hand-over, not leaked")
+  }
+
+  test("a streaming micro-batch leaves no checkpoint RDD behind once its FTS key is invalidated") {
+    val wh = java.nio.file.Files.createTempDirectory("graft-stream-release").resolve("wh").toString
+    val ingest = new graft.streaming.StreamingIngest(spark, GraftConfig(warehouseDir = wh))
+    val before = persistent
+    def batch(i: Int) = Seq((s"# Doc $i\n\nrelease every pin of batch $i once the index goes.",
+      s"file:///release/d$i.md")).toDF("value", "path")
+    try {
+      ingest.ingestBatch(batch(0), 0L, runToken = "ckptRel")
+      assert((persistent -- before).nonEmpty, "precondition: the live index holds the batch's chunks")
+      // a takedown racing later batches: each invalidate lands while the
+      // batch may still be reading its chunks, and must never fail it
+      val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val invalidator = new Thread(() =>
+        while (!stop.get) { FtsIndex.invalidate(ingest.ftsKey); Thread.sleep(5) })
+      invalidator.start()
+      try (1 to 3).foreach(i => ingest.ingestBatch(batch(i), i.toLong, runToken = "ckptRel"))
+      finally { stop.set(true); invalidator.join() }
+      assert(new graft.sources.Catalog(spark, wh).read("chunks_stream")
+        .select("document_id").distinct().count() == 4L)
+    } finally FtsIndex.invalidate(ingest.ftsKey)
+    assert((persistent -- before).isEmpty, s"left pinned: ${persistent -- before}")
+  }
+
+  test("reliable-checkpoint mode: releasing a clustersCached entry deletes its checkpoint files") {
+    val sc = spark.sparkContext
+    val dir = java.nio.file.Files.createTempDirectory("graft-registry-ckpt")
+    sc.setCheckpointDir(dir.toString)
+    try {
+      val labels = Dedup.clustersCached(uniq("reliable-cc"), nodes, "id", pairs)
+      val files = labels.queryExecution.analyzed.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.getCheckpointFile
+      }.flatten
+      assert(files.nonEmpty, "precondition: the label table is a reliable checkpoint")
+      def exists(f: String) = java.nio.file.Files.exists(java.nio.file.Paths.get(new java.net.URI(f)))
+      assert(files.forall(exists))
+      SessionIndices.clear()
+      assert(!files.exists(exists), s"checkpoint files left behind: $files")
+    } finally {
+      // restore block-based mode for the rest of the shared-session suite
+      classOf[org.apache.spark.SparkContext]
+        .getMethod("checkpointDir_$eq", classOf[Option[_]])
+        .invoke(sc, None)
+    }
+  }
+
+  test("a build blocked inside its by-name argument blocks neither other keys' builds nor lookups") {
+    val ivfHit = uniq("ivf-hit")
+    val ftsHit = uniq("fts-hit")
+    VectorSearch.buildIvfCached(ivfHit, vecs, "embedding", nLists = 2)
+    FtsIndex.buildCached(ftsHit, docs, "id", "text")
+    val pool = Executors.newFixedThreadPool(2)
+    val entered = new CountDownLatch(2)
+    val unblock = new CountDownLatch(1)
+    // `build` receives its corpus by name: the latch waits run inside the
+    // registry's build, with the key's monitor held
+    def blocked[T](df: DataFrame)(build: (=> DataFrame) => T): java.util.concurrent.Future[T] =
+      pool.submit(new Callable[T] {
+        def call(): T = build { entered.countDown(); unblock.await(); df }
+      })
+    try {
+      val blockedIvf = blocked(vecs)(c => VectorSearch.buildIvfCached(uniq("ivf-blocked"), c, "embedding", nLists = 2))
+      val blockedFts = blocked(docs)(c => FtsIndex.buildCached(uniq("fts-blocked"), c, "id", "text"))
+      assert(entered.await(60, TimeUnit.SECONDS), "both builds reached their by-name argument")
+      // every other key of every kind is served while those builds hang
+      val others = Executors.newSingleThreadExecutor()
+      try {
+        others.submit(new Callable[Unit] {
+          def call(): Unit = {
+            VectorSearch.buildIvfCached(ivfHit, vecs, "embedding", nLists = 2)
+            FtsIndex.buildCached(ftsHit, docs, "id", "text")
+            VectorSearch.buildIvfCached(uniq("ivf-other"), vecs, "embedding", nLists = 2)
+            FtsIndex.buildCached(uniq("fts-other"), docs, "id", "text")
+            Dedup.clustersCached(uniq("cc-other"), nodes, "id", pairs)
+            GraphOps.prepareCached(uniq("graph-other"), edges, "src", "dst")
+          }
+        }).get(120, TimeUnit.SECONDS)
+      } finally others.shutdown()
+      assert(!blockedIvf.isDone && !blockedFts.isDone, "the blocked builds were still in progress")
+      unblock.countDown()
+      assert(blockedIvf.get(120, TimeUnit.SECONDS).centroids.length == 2)
+      assert(blockedFts.get(120, TimeUnit.SECONDS).numDocs == 3L)
+    } finally { unblock.countDown(); pool.shutdown() }
+  }
+
+  test("same-key contention builds once and every caller gets the same entry") {
+    val ftsKey = uniq("fts-contended")
+    val ivfKey = uniq("ivf-contended")
+    val ftsBuilds = new AtomicInteger()
+    val ivfBuilds = new AtomicInteger()
+    val go = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(4)
+    try {
+      val futures = (1 to 4).map { _ =>
+        pool.submit(new Callable[(AnyRef, AnyRef)] {
+          def call(): (AnyRef, AnyRef) = {
+            go.await()
+            (FtsIndex.buildCached(ftsKey, { ftsBuilds.incrementAndGet(); docs }, "id", "text"),
+              VectorSearch.buildIvfCached(ivfKey, { ivfBuilds.incrementAndGet(); vecs }, "embedding", nLists = 2))
+          }
+        })
+      }
+      go.countDown()
+      val got = futures.map(_.get(120, TimeUnit.SECONDS))
+      assert(ftsBuilds.get == 1 && ivfBuilds.get == 1, s"builds: fts ${ftsBuilds.get}, ivf ${ivfBuilds.get}")
+      assert(got.forall(g => (g._1 eq got.head._1) && (g._2 eq got.head._2)))
+    } finally { pool.shutdown(); FtsIndex.invalidate(ftsKey) }
+  }
+
+  test("clear() releases all four kinds of entry and the next request rebuilds") {
+    val ftsKey = uniq("fts-clear")
+    val ivfKey = uniq("ivf-clear")
+    val ccKey = uniq("cc-clear")
+    val graphKey = uniq("graph-clear")
+    val fts = FtsIndex.buildCached(ftsKey, docs, "id", "text")
+    val ivf = VectorSearch.buildIvfCached(ivfKey, vecs, "embedding", nLists = 2)
+    val labels = Dedup.clustersCached(ccKey, nodes, "id", pairs)
+    val graph = GraphOps.prepareCached(graphKey, edges, "src", "dst")
+    val pinned = Checkpoints.pinnedRddIds(labels, graph.withDeg, graph.nodes)
+    assert(fts.postings.storageLevel != StorageLevel.NONE && ivf.indexed.storageLevel != StorageLevel.NONE)
+    assert(pinned.nonEmpty && pinned.subsetOf(persistent))
+
+    SessionIndices.clear()
+    assert(fts.postings.storageLevel == StorageLevel.NONE, "FTS postings unpersisted")
+    assert(ivf.indexed.storageLevel == StorageLevel.NONE, "IVF cells unpersisted")
+    assert(pinned.intersect(persistent).isEmpty, "CC labels and prepared-graph checkpoints released")
+
+    assert(!(FtsIndex.buildCached(ftsKey, docs, "id", "text") eq fts))
+    assert(!(VectorSearch.buildIvfCached(ivfKey, vecs, "embedding", nLists = 2) eq ivf))
+    assert(!(Dedup.clustersCached(ccKey, nodes, "id", pairs) eq labels))
+    assert(!(GraphOps.prepareCached(graphKey, edges, "src", "dst") eq graph))
+    SessionIndices.clear()
+  }
+}

@@ -487,4 +487,29 @@ class VectorFunctionsSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("each SimHash signer owns its planes: L seeds in one projection sign like their probes") {
+    import graft.operators.VectorSearch
+    val e = VectorFunctions.SimHashSignature(
+      org.apache.spark.sql.catalyst.expressions.Literal(null,
+        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType)), 8, 16, 7L)
+    assert(e.planes eq e.planes, "planes are derived once per expression instance")
+    assert(e.planes.length == 8 && e.planes.forall(_.length == 16))
+    assert(e.planes(3)(5) == VectorFunctions.simhashPlane(7L, 3, 5))
+    // banded signing: several seeds in ONE stage (what a shared last-key
+    // memo would thrash on), in and out of whole-stage codegen
+    val rng = new scala.util.Random(11)
+    val df = (0 until 40).map(i => (i.toLong, Array.fill(16)(rng.nextFloat() * 2 - 1))).toDF("id", "vec")
+    val signers = (0 until 4).map(i => VectorSearch.SimHashLsh(nBits = 8, dim = 16, seed = 42L + 7919L * i))
+    val signed = df.select(col("id") +: col("vec") +: signers.zipWithIndex.map { case (l, i) =>
+      VectorFunctions.simhashSigCol(col("vec"), l.nBits, l.dim, l.seed).as(s"s$i")
+    }: _*)
+    for (wholeStage <- Seq("true", "false")) {
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      try signed.collect().foreach { r =>
+        val v = r.getAs[scala.collection.Seq[Float]]("vec").toIndexedSeq
+        signers.indices.foreach(i => assert(r.getLong(2 + i) == signers(i).signatureOf(v), s"seed $i row ${r.getLong(0)}"))
+      } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    }
+  }
 }
