@@ -207,7 +207,7 @@ object OracleSql {
        |         md5('ep1:' || CAST(bin_id AS VARCHAR)) AS k
        |  FROM bins)""".stripMargin
 
-  /** One unrolled BPE merge round (the TextAnalysis.trainBpe twin —
+  /** One unrolled BPE merge round (the TextAnalysis.trainBpeLocal twin —
     * the kmeansCtes recipe). Per round r: pair stats over the segmented
     * vocabulary (p_r), weighted argmax with lexicographic tie-break
     * (b_r), LEFT-TO-RIGHT GREEDY merge via a sequential list_reduce

@@ -392,9 +392,7 @@ object SparkEntry {
       .agg(count(lit(1)).as("n_events"), dsum(col("value"), 6).as("total_value"))
       .orderBy("window_start", "event_type")
 
-  /** Sessionization: 30-min-gap sessions via lag + cumulative flag sum —
-    * the batch twin of flatMapGroupsWithState sessionization.
-    */
+  /** Sessionization: 30-min-gap sessions via lag + cumulative flag sum. */
   private def qSessionize(s: SparkSession, dir: String): DataFrame = {
     val byUser = Window.partitionBy("user_id").orderBy(col("ts_us"), col("event_id"))
     val cum = byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -981,7 +979,8 @@ object SparkEntry {
     * signature q_simhash_sig oracle-proved), banded into 13 nibble-groups
     * so pigeonhole recall is complete at maxHamming = 12 — the banded set
     * therefore EQUALS brute force and is exactly oracle-checkable. The
-    * xxhash64 production path ([[Dedup.simhashPairs]]) keeps its own spec.
+    * xxhash64 production path ([[Dedup.simhash]] banded by
+    * [[Dedup.hammingPairsFromSigs]]) keeps its own spec.
     */
   private def qSimhashPairs(s: SparkSession, dir: String): DataFrame =
     portableSimhashPairs(s, dir).orderBy("id_a", "id_b")
@@ -1191,9 +1190,8 @@ object SparkEntry {
       .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
 
   /** Embedding-cosine near-duplicate pairs, brute-force (exact, oracle-
-    * checkable). The library's scale path is the LSH-blocked
-    * [[VectorSearch.nearDuplicatePairs]] (q_embed_neardup_lsh); this
-    * brute-force baseline exists to oracle-check it, so its input is
+    * checkable). The scale path is the LSH-blocked q_embed_neardup_lsh;
+    * this brute-force baseline exists to oracle-check it, so its input is
     * capped to a FIXED window (vec_id < 512) — the pair generator stays
     * O(1) in corpus size instead of quadratic (VERDICT r4 #3), and the
     * oracle twin applies the identical cap.
@@ -1217,8 +1215,6 @@ object SparkEntry {
     * association), hyperplane signs are a fixed ±1 literal matrix embedded
     * identically in the DuckDB twin ([[OracleSql.lshSigns]]), and the
     * banded candidate set + exact cosine re-rank replicate on both sides.
-    * The production operator ([[VectorSearch.nearDuplicatePairs]]) keeps
-    * its own spec coverage.
     */
   private def qEmbedNeardupLsh(s: SparkSession, dir: String): DataFrame = {
     // 8-bit bands: the synthetic corpus is ~10 tight clusters, so 4-bit

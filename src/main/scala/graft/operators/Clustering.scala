@@ -180,15 +180,6 @@ object Clustering {
   ): DataFrame =
     assignWith(kmeansFit(df, idCol, vecCol, k, iters, quantScale), df, vecCol)
 
-  /** Cluster sizes and mean quantized vector norm — the usual first look
-    * at a clustering's balance. One shuffle over (cluster) keys.
-    */
-  def clusterSizes(assigned: DataFrame): DataFrame =
-    assigned
-      .groupBy("cluster")
-      .agg(count(lit(1)).as("n"))
-      .orderBy("cluster")
-
   /** SemDeDup candidate generation (Abbas et al. 2023): near-duplicate
     * pairs WITHIN each k-means cluster — the clustering blocks the
     * candidate space so the quadratic pair stage runs per cluster
@@ -271,28 +262,6 @@ object Clustering {
     // returns 1 so the failure, if any, names the real problem (no rows).
     val floored = math.max(k, kMin.toLong)
     math.min(math.min(floored, math.max(n, 1L)), Int.MaxValue.toLong).toInt
-  }
-
-  /** [[withinClusterNearDupPairs]] with the cluster count derived from the
-    * corpus size (k = max(kMin, ceil(n / targetClusterSize))) — the
-    * default entry point for SemDeDup at scale: callers who do not pick k
-    * get flat per-cluster pair work by construction instead of by reading
-    * a doc comment. Costs one count() of the input up front (the fit
-    * already runs driver actions for seeding, so this adds no new
-    * synchronization class).
-    */
-  def withinClusterNearDupPairsScaled(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      iters: Int,
-      simFp: Long,
-      targetClusterSize: Long = 1000L,
-      quantScale: Int = 1000,
-      normScale: Int = 10000
-  ): DataFrame = {
-    val k = scaledK(df.count(), targetClusterSize)
-    withinClusterNearDupPairs(df, idCol, vecCol, k, iters, simFp, quantScale, normScale)
   }
 
   /** Full SemDeDup pass: cluster, pair within clusters, close the pair

@@ -10,12 +10,12 @@ import graft.functions.TextFunctions
   * so nothing ever materializes an O(n^2) cross product.
   *
   * Inventory:
-  *   - exact:      hash-groupBy on normalized text (one shuffle on a short
-  *                 hash key — the cheapest possible full-corpus dedup)
+  *   - exact:      md5 of normalized text, keep-one per digest (the
+  *                 ranking shuffles only a short hash key — the cheapest
+  *                 possible full-corpus dedup)
   *   - minhash:    shingle -> minhash signature -> band -> bucket join
   *   - simhash:    64-bit simhash + banded Hamming blocking
   *   - ngramJaccard: word n-gram Jaccard via explode + semi-blocked join
-  *   - embedding near-dup: see [[VectorSearch.nearDuplicatePairs]]
   */
 object Dedup {
 
@@ -24,18 +24,6 @@ object Dedup {
     // explicit ws class (TextFunctions.Ws): Java \s includes \x0B, RE2
     // (the DuckDB oracle) does not — pin both engines to the same class
     trim(regexp_replace(lower(text), graft.functions.TextFunctions.Ws + "+", " "))
-
-  /** Exact duplicate groups: md5 over normalized text. Returns one row per
-    * hash with the sorted list of member ids and the group size; groups of
-    * size 1 are dropped. The md5 key (not the full text) is the shuffle
-    * key, so 100 TB of text shuffles only ids + 32-byte digests.
-    */
-  def exactGroups(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs
-      .select(col(idCol).as("id"), md5(normalized(col(textCol))).as("text_hash"))
-      .groupBy("text_hash")
-      .agg(count(lit(1)).as("n_dups"), sort_array(collect_list(col("id"))).as("ids"))
-      .where(col("n_dups") > 1)
 
   /** Keep one representative per exact-duplicate group (min id wins).
     *
@@ -300,30 +288,6 @@ object Dedup {
     }
   }
 
-  /** SimHash near-dup pairs within `maxHamming` bits, banded into
-    * `maxHamming + 1` chunks of the 64-bit signature (pigeonhole: a pair
-    * differing in at most `maxHamming` bits must agree exactly on at least
-    * one band). Deriving the band count from the parameter keeps recall
-    * complete for ANY `maxHamming` in [0, 63] — a fixed 4-way split would
-    * silently miss pairs beyond distance 3.
-    */
-  def simhashPairs(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      maxHamming: Int = 3
-  ): DataFrame =
-    hammingPairsFromSigs(simhash(docs, idCol, textCol), "id", "simhash", maxHamming)
-
-  /** Near-dup pairs within `maxHamming` bits over an ALREADY-COMPUTED
-    * 64-bit signature column — the banding/self-join half of
-    * [[simhashPairs]], factored out so any 64-bit perceptual signature
-    * (text simhash, image dHash — [[Multimodal.imageNearDupPairs]])
-    * shares one audited pair generator. Pigeonhole banding into
-    * `maxHamming + 1` chunks keeps recall complete for any radius in
-    * [0, 63]; the join key is the band, never the corpus, so pair work
-    * is bucket-quadratic, not corpus-quadratic.
-    */
   /** The shared band-explode of a 64-bit signature frame into
     * `maxHamming + 1` pigeonhole bands — the one audited banding used by
     * both the self-join ([[hammingPairsFromSigs]]) and the batch-vs-index
@@ -345,6 +309,14 @@ object Dedup {
       }: _*)).as("band")
     )
 
+  /** Near-dup pairs within `maxHamming` bits over an ALREADY-COMPUTED
+    * 64-bit signature column — text [[simhash]] or image dHash (the
+    * Pipeline's image dedup) — so every 64-bit perceptual signature
+    * shares one audited pair generator. Pigeonhole banding into
+    * `maxHamming + 1` chunks keeps recall complete for any radius in
+    * [0, 63]; the join key is the band, never the corpus, so pair work
+    * is bucket-quadratic, not corpus-quadratic.
+    */
   def hammingPairsFromSigs(
       sigs: DataFrame,
       idCol: String,

@@ -20,9 +20,8 @@ import org.apache.spark.sql.functions._
   * (scaled probability ratios with add-one smoothing, floor division at
   * every step), so document scores are bit-identical in any engine and
   * under any partitioning — the oracle-checkable path. True DSIR sums
-  * LOG-ratios (= log of the product ratio); that ordering is available
-  * from the same bucket tables via [[logRatioWeights]] (doubles,
-  * spec-tested — `ln` is not bit-portable across engines).
+  * LOG-ratios (= log of the product ratio); `ln` is not bit-portable
+  * across engines, so only the ratio form is offered.
   *
   * Scale shape (100 TB): gram strings never shuffle — each gram is
   * digested to a 60-bit BIGINT at the scan ([[TextAnalysis.wordGrams]])
@@ -141,35 +140,6 @@ object ImportanceSampling {
           s"($scale * (_ct + 1) * " +
             s"(($scale * (_nr + $buckets)) div (_nt + $buckets))) div ((_cr + 1) * $scale)"
         ).as("w")
-      )
-  }
-
-  /** True-DSIR log-ratio weights (doubles): `ln(p_t(b)) - ln(p_r(b))`
-    * with the same smoothing. Summing these per document is the log of
-    * the product importance ratio — the published estimator. Not
-    * oracle-portable (ln differs in final ulps across engines);
-    * [[ratioWeights]] is the hash-checked twin.
-    */
-  def logRatioWeights(
-      raw: DataFrame,
-      textCol: String,
-      target: DataFrame,
-      targetTextCol: String,
-      n: Int = 2,
-      buckets: Int = 4096
-  ): DataFrame = {
-    val cr = bucketCounts(raw, textCol, n, buckets)
-    val ct = bucketCounts(target, targetTextCol, n, buckets)
-    val totR = cr.agg(coalesce(sum("cnt"), lit(0L)).as("_nr"))
-    val totT = ct.agg(coalesce(sum("cnt"), lit(0L)).as("_nt"))
-    cr.select(col("bucket"), col("cnt").as("_cr"))
-      .join(ct.select(col("bucket").as("_bt"), col("cnt").as("_ct")), col("bucket") === col("_bt"), "left")
-      .crossJoin(broadcast(totR))
-      .crossJoin(broadcast(totT))
-      .select(
-        col("bucket"),
-        (log((coalesce(col("_ct"), lit(0L)) + 1).cast("double") / (col("_nt") + buckets).cast("double")) -
-          log((col("_cr") + 1).cast("double") / (col("_nr") + buckets).cast("double"))).as("w_log")
       )
   }
 

@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{catalyst, Column, DataFrame}
+import org.apache.spark.sql.{catalyst, Column}
 import org.apache.spark.sql.functions._
 
-/** Z-order (Morton-curve) data layout — multi-dimensional clustering for
+/** Z-order (Morton-curve) key — the clustering key for multi-dimensional
   * scan locality, the engine-side analog of Delta/Iceberg `OPTIMIZE
   * ZORDER BY`.
   *
@@ -66,19 +66,4 @@ object Layout {
       exprs => zorder2Expr(exprs(0), exprs(1)),
       "scala_udf"
     )
-
-  /** Lay `df` out z-ordered on (`colA`, `colB`): range-partition + sort
-    * within partitions by the Morton code (ties broken by the inputs so
-    * the layout is total and deterministic). Write the result partition-
-    * preserving (`.write.parquet`) and every file's (colA, colB) min/max
-    * footer spans a compact rectangle — both predicates prune.
-    */
-  def zorderLayout(df: DataFrame, colA: String, colB: String, nParts: Int): DataFrame = {
-    require(nParts >= 1, s"need nParts >= 1, got $nParts")
-    require(!df.columns.contains("_z"), "df must not contain reserved column _z")
-    df.withColumn("_z", zorder2(col(colA), col(colB)))
-      .repartitionByRange(nParts, col("_z"), col(colA), col(colB))
-      .sortWithinPartitions(col("_z"), col(colA), col(colB))
-      .drop("_z")
-  }
 }

@@ -1,55 +1,42 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-/** Multimodal columns for training-data pipelines: image/audio/video as
-  * opaque `binary` columns with typed metadata structs, plus
-  * decode / feature-extract / resize / frame-sample operators.
+/** Multimodal columns for training-data pipelines: image/video payloads
+  * as opaque `binary` columns, plus the perceptual-hash and frame-sample
+  * operators over them.
   *
-  * The Spark-side plumbing — schemas, partition-preserving mapPartitions
-  * execution, batch shape, null handling — is real and tested. Two codecs
-  * plug into the [[MediaCodec]] seam: [[ImageIoCodec]] REALLY decodes
-  * PNG/JPEG/GIF/BMP via the JDK's javax.imageio (dims, resize, grid
-  * features); [[StubCodec]] remains for audio/video payloads and synthetic
+  * Codecs plug into the [[MediaCodec]] seam: [[ImageIoCodec]] REALLY
+  * decodes PNG/JPEG/GIF/BMP via the JDK's javax.imageio (dims, resize,
+  * dHash); [[StubCodec]] remains for video payloads and synthetic
   * fixtures (no ffmpeg in this build) — deterministic from payload bytes
   * so tests are exact, and clearly marked.
   *
   * Scale notes: media payloads dominate row size, so operators never
-  * shuffle payloads — all transforms are narrow; anything aggregate-shaped
-  * (e.g. feature stats) first projects payloads away. Use
+  * shuffle payloads — all transforms are narrow. Use
   * `spark.sql.files.maxPartitionBytes` to keep scan partitions bounded
   * when rows are multi-MB.
   */
 object Multimodal {
 
-  val imageMetaSchema: StructType = StructType(Seq(
-    StructField("format", StringType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("n_channels", IntegerType)
-  ))
-
   /** Codec seam. STUB implementations are deterministic in payload bytes. */
   trait MediaCodec extends Serializable {
     def imageDims(bytes: Array[Byte]): (Int, Int)
     def resize(bytes: Array[Byte], w: Int, h: Int): Array[Byte]
-    def embed(bytes: Array[Byte], dim: Int): Array[Float]
 
     /** 64-bit perceptual difference hash (dHash): 9×8 grayscale grid,
       * bit (row·8 + x) set iff cell (x+1, row) is brighter than cell
       * (x, row). Nearby images differ in few bits, so Hamming distance
       * is a visual-similarity metric — the image-dedup signature
-      * ([[Multimodal.imageNearDupPairs]]).
+      * ([[Dedup.hammingPairsFromSigs]] bands it).
       */
     def dHash(bytes: Array[Byte]): Long
   }
 
   /** STUB codec — no media libraries in this build. Dimensions are derived
-    * deterministically from a payload hash; resize re-hashes; embed is a
-    * seeded projection of payload bytes. Replace with a real codec for
-    * production use (the operators are codec-agnostic).
+    * deterministically from a payload hash; resize re-hashes. Replace with
+    * a real codec for production use (the operators are codec-agnostic).
     */
   object StubCodec extends MediaCodec {
     private def h64(bytes: Array[Byte]): Long = {
@@ -75,17 +62,6 @@ object Multimodal {
       }
       out
     }
-    override def embed(bytes: Array[Byte], dim: Int): Array[Float] = {
-      val v = new Array[Float](dim)
-      var seed = h64(bytes)
-      var i = 0
-      while (i < dim) {
-        seed = seed * 6364136223846793005L + 1442695040888963407L
-        v(i) = ((seed >>> 40).toInt / Int.MaxValue.toFloat)
-        i += 1
-      }
-      v
-    }
 
     /** Stub dHash = the payload hash: identical bytes hash identically
       * (exact-dup plumbing testable without a decoder) but there is NO
@@ -101,8 +77,7 @@ object Multimodal {
     *   - `imageDims` reads only the header via an ImageReader (no full
     *     raster decode — cheap even for multi-MB payloads)
     *   - `resize` is a real bilinear rescale, re-encoded as PNG
-    *   - `embed` is a deterministic grid-luminance feature: mean luminance
-    *     over `dim` row-major cells, L2-normalized
+    *   - `dHash` is a real perceptual hash over the decoded raster
     *
     * Throws IllegalArgumentException on undecodable payloads — callers
     * that must tolerate junk bytes keep using [[StubCodec]] or filter
@@ -149,29 +124,6 @@ object Multimodal {
       out.toByteArray
     }
 
-    override def embed(bytes: Array[Byte], dim: Int): Array[Float] = {
-      val img = decode(bytes)
-      val (w, h) = (img.getWidth, img.getHeight)
-      val sums = new Array[Double](dim)
-      val counts = new Array[Long](dim)
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val cell = math.min(dim - 1, ((y.toLong * w + x) * dim / (w.toLong * h)).toInt)
-          val rgb = img.getRGB(x, y)
-          val lum = 0.299 * ((rgb >> 16) & 0xff) + 0.587 * ((rgb >> 8) & 0xff) + 0.114 * (rgb & 0xff)
-          sums(cell) += lum / 255.0
-          counts(cell) += 1
-          x += 1
-        }
-        y += 1
-      }
-      val v = Array.tabulate(dim)(i => if (counts(i) == 0) 0f else (sums(i) / counts(i)).toFloat)
-      val norm = math.sqrt(v.map(f => f.toDouble * f).sum)
-      if (norm == 0) v else v.map(f => (f / norm).toFloat)
-    }
-
     /** Real dHash over the decoded raster, ALL-INTEGER so two JVMs (or
       * two partitionings of the same corpus) can never disagree: per-cell
       * luminance is an exact long sum of 299·R + 587·G + 114·B over a
@@ -180,7 +132,7 @@ object Multimodal {
       * sum_b·cnt_a — instead of dividing. Images narrower than the grid
       * fail loudly (an empty cell would make bits degenerate-zero and
       * silently alias unrelated tiny images); filter on
-      * [[withImageMeta]] dims first.
+      * [[imageDims]] first.
       */
     override def dHash(bytes: Array[Byte]): Long = {
       val img = decode(bytes)
@@ -237,8 +189,6 @@ object Multimodal {
     override def imageDims(bytes: Array[Byte]): (Int, Int) = ImageIoCodec.imageDims(bytes)
     override def resize(bytes: Array[Byte], w: Int, h: Int): Array[Byte] =
       ImageIoCodec.resize(bytes, w, h)
-    override def embed(bytes: Array[Byte], dim: Int): Array[Float] =
-      ImageIoCodec.embed(bytes, dim)
     override def dHash(bytes: Array[Byte]): Long =
       // NonFatal, not just IllegalArgumentException: ImageIO.read throws
       // IIOException (an IOException) on corrupt-but-recognized payloads
@@ -246,35 +196,6 @@ object Multimodal {
       // one bad image aborts the ingest batch
       try ImageIoCodec.dHash(bytes)
       catch { case scala.util.control.NonFatal(_) => StubCodec.dHash(bytes) }
-  }
-
-  /** Attach decoded image metadata (format sniffed from magic bytes, dims
-    * from the codec) to a binary `content` column.
-    */
-  def withImageMeta(df: DataFrame, contentCol: String = "content", codec: MediaCodec = StubCodec): DataFrame = {
-    val metaUdf = udf(
-      new org.apache.spark.sql.api.java.UDF1[Array[Byte], Row] {
-        override def call(bytes: Array[Byte]): Row =
-          if (bytes == null) null
-          else {
-            val fmt =
-              if (bytes.length >= 8 && (bytes(0) & 0xff) == 0x89 && bytes(1) == 'P') "png"
-              else if (bytes.length >= 3 && (bytes(0) & 0xff) == 0xff && (bytes(1) & 0xff) == 0xd8) "jpeg"
-              else "unknown"
-            val (w, h) = codec.imageDims(bytes)
-            Row(fmt, w, h, 3)
-          }
-      },
-      imageMetaSchema
-    )
-    df.withColumn("image_meta", metaUdf(col(contentCol)))
-  }
-
-  /** Resize payloads to (w, h) — narrow, partition-preserving. */
-  def resizeImages(df: DataFrame, w: Int, h: Int, contentCol: String = "content",
-      outCol: String = "resized", codec: MediaCodec = StubCodec): DataFrame = {
-    val f = udf { (bytes: Array[Byte]) => Option(bytes).map(codec.resize(_, w, h)) }
-    df.withColumn(outCol, f(col(contentCol)))
   }
 
   /** Perceptual-hash column (`dhash`, 64-bit long) — narrow,
@@ -285,133 +206,6 @@ object Multimodal {
   def withImageDHash(df: DataFrame, contentCol: String = "content",
       outCol: String = "dhash", codec: MediaCodec = StubCodec): DataFrame = {
     val f = udf { (bytes: Array[Byte]) => Option(bytes).map(codec.dHash) }
-    df.withColumn(outCol, f(col(contentCol)))
-  }
-
-  /** Image near-duplicate pairs: dHash signatures + the shared banded
-    * Hamming pair generator ([[Dedup.hammingPairsFromSigs]] — the text
-    * SimHash machinery, reused bit-for-bit). Output (id_a, id_b,
-    * hamming) with id_a < id_b and hamming <= maxHamming. Scale shape:
-    * one decode pass to 8-byte signatures, band-bucket self-join on the
-    * signature bands — pair work is bucket-quadratic, image bytes never
-    * cross an exchange. Feed the pairs to [[Dedup.nearDupClusters]] /
-    * [[Dedup.nearDedupFromClusters]] for canonical keep-one dedup,
-    * exactly like text.
-    */
-  def imageNearDupPairs(
-      df: DataFrame,
-      idCol: String,
-      contentCol: String = "content",
-      maxHamming: Int = 6,
-      codec: MediaCodec = StubCodec
-  ): DataFrame =
-    Dedup.hammingPairsFromSigs(
-      withImageDHash(df, contentCol, "dhash", codec)
-        .select(col(idCol), col("dhash"))
-        // null payloads keep their row in withImageDHash, but here a null
-        // signature would band to struct(bi, null) — and struct equality
-        // treats null fields as equal, so null-payload rows would form one
-        // quadratic all-pairs bucket that the hamming filter then discards
-        .where(col("dhash").isNotNull),
-      idCol, "dhash", maxHamming)
-
-  /** Media embedding column (the image twin of the text embedder). */
-  def withMediaEmbedding(df: DataFrame, dim: Int = 64, contentCol: String = "content",
-      outCol: String = "media_embedding", codec: MediaCodec = StubCodec): DataFrame = {
-    val f = udf { (bytes: Array[Byte]) => Option(bytes).map(codec.embed(_, dim)) }
-    df.withColumn(outCol, f(col(contentCol)))
-  }
-
-  val audioMetaSchema: StructType = StructType(Seq(
-    StructField("encoding", StringType),
-    StructField("sample_rate", FloatType),
-    StructField("channels", IntegerType),
-    StructField("frames", LongType),
-    StructField("duration_ms", DoubleType)
-  ))
-
-  /** REAL audio decode for WAV/AIFF/AU on the JDK's javax.sound.sampled —
-    * no external dependency (the ffmpeg-class formats stay stubbed).
-    * Header metadata (encoding, sample rate, channels, frame count,
-    * duration) plus [[audioEnergy]] real RMS-per-window features from the
-    * PCM stream.
-    */
-  object JavaSoundCodec extends Serializable {
-    import javax.sound.sampled.AudioSystem
-    import java.io.ByteArrayInputStream
-
-    def audioMeta(bytes: Array[Byte]): (String, Float, Int, Long, Double) = {
-      val in = new ByteArrayInputStream(bytes)
-      val fmt = AudioSystem.getAudioFileFormat(in)
-      val af = fmt.getFormat
-      val frames = fmt.getFrameLength.toLong
-      val durationMs =
-        if (af.getFrameRate > 0 && frames >= 0) frames * 1000.0 / af.getFrameRate else -1.0
-      (af.getEncoding.toString, af.getSampleRate, af.getChannels, frames, durationMs)
-    }
-
-    /** RMS energy per fixed-size window over the decoded PCM samples
-      * (first channel), normalized to [0,1] — a real, deterministic audio
-      * feature from real bytes.
-      */
-    def audioEnergy(bytes: Array[Byte], windows: Int): Array[Float] = {
-      require(windows > 0, s"audioEnergy: windows must be positive, got $windows")
-      val stream = AudioSystem.getAudioInputStream(new ByteArrayInputStream(bytes))
-      try {
-        val af = stream.getFormat
-        require(af.getSampleSizeInBits == 16, s"audioEnergy expects 16-bit PCM, got ${af.getSampleSizeInBits}")
-        val bytesPerFrame = af.getFrameSize
-        val data = stream.readAllBytes()
-        val nFrames = data.length / bytesPerFrame
-        val sums = new Array[Double](windows)
-        val counts = new Array[Long](windows)
-        val bigEndian = af.isBigEndian
-        var i = 0
-        while (i < nFrames) {
-          val off = i * bytesPerFrame
-          val sample =
-            if (bigEndian) ((data(off) << 8) | (data(off + 1) & 0xff)).toShort
-            else ((data(off + 1) << 8) | (data(off) & 0xff)).toShort
-          val w = math.min(windows - 1, (i.toLong * windows / math.max(nFrames, 1)).toInt)
-          val norm = sample / 32768.0
-          sums(w) += norm * norm
-          counts(w) += 1
-          i += 1
-        }
-        Array.tabulate(windows)(w =>
-          if (counts(w) == 0) 0f else math.sqrt(sums(w) / counts(w)).toFloat)
-      } finally stream.close()
-    }
-  }
-
-  /** Attach real audio metadata (javax.sound header read) to a binary
-    * column; undecodable payloads yield a null struct.
-    */
-  def withAudioMeta(df: DataFrame, contentCol: String = "content"): DataFrame = {
-    val metaUdf = udf(
-      new org.apache.spark.sql.api.java.UDF1[Array[Byte], Row] {
-        override def call(bytes: Array[Byte]): Row =
-          if (bytes == null) null
-          else
-            try {
-              val (enc, rate, ch, frames, dur) = JavaSoundCodec.audioMeta(bytes)
-              Row(enc, rate, ch, frames, dur)
-            } catch { case _: Exception => null }
-      },
-      audioMetaSchema
-    )
-    df.withColumn("audio_meta", metaUdf(col(contentCol)))
-  }
-
-  /** Real RMS-energy feature column over WAV payloads (null if undecodable). */
-  def withAudioEnergy(df: DataFrame, windows: Int = 16, contentCol: String = "content",
-      outCol: String = "audio_energy"): DataFrame = {
-    val f = udf { (bytes: Array[Byte]) =>
-      Option(bytes).flatMap { b =>
-        try Some(JavaSoundCodec.audioEnergy(b, windows))
-        catch { case _: Exception => None }
-      }
-    }
     df.withColumn(outCol, f(col(contentCol)))
   }
 

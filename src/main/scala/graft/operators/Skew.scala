@@ -11,11 +11,6 @@ import org.apache.spark.sql.functions._
   */
 object Skew {
 
-  /** Salted skew join: replicate each `right` row `salt` times and scatter
-    * `left` across the replicas, so one hot key spreads over `salt`
-    * reducers instead of one. Use when `right` is small-ish per key (it is
-    * replicated) and `left` carries the skew.
-    */
   /** Deterministic salt in [0, salt) from the full row content. Salting
     * must be a pure function of the row: partition-id / monotonic-id
     * schemes reassign salts when a task is recomputed after a fetch
@@ -38,6 +33,11 @@ object Skew {
   private def rowSalt(df: DataFrame, salt: Int): Column =
     pmod(xxhash64(df.columns.toIndexedSeq.map(col): _*), lit(salt)).cast("int")
 
+  /** Salted skew join: replicate each `right` row `salt` times and scatter
+    * `left` across the replicas, so one hot key spreads over `salt`
+    * reducers instead of one. Use when `right` is small-ish per key (it is
+    * replicated) and `left` carries the skew.
+    */
   def saltedJoin(
       left: DataFrame,
       right: DataFrame,
@@ -57,18 +57,6 @@ object Skew {
       .join(saltedRight, Seq(key, "_salt"), joinType)
       .drop("_salt")
   }
-
-  /** Two-phase skewed aggregation: partial-aggregate on (key, salt), then
-    * final-aggregate on key. Spark's hash aggregate already does map-side
-    * partials; this helps when a single reduce key overflows one task
-    * (e.g. giant collect_list groups).
-    */
-  def twoPhaseCount(df: DataFrame, key: String, salt: Int = 16): DataFrame =
-    df.withColumn("_salt", rowSalt(df, salt))
-      .groupBy(col(key), col("_salt"))
-      .agg(count(lit(1)).as("_partial"))
-      .groupBy(col(key))
-      .agg(sum("_partial").as("n"))
 
   /** Salted sum+count: the general hot-key aggregation. Phase 1 spreads
     * each group over `salt` reducers (partial sum/count per (keys, salt)),

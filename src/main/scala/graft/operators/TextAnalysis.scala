@@ -105,25 +105,11 @@ object TextAnalysis {
     )
   }
 
-  /** Rolling-hash document fingerprint (winnowing-lite): the minimum `keep`
-    * xxhash64 values over character `k`-gram windows of the normalized
-    * text, hashed together. Documents sharing most content share
-    * fingerprint minima. Returns a single 64-bit fingerprint column.
-    */
-  def fingerprint(text: Column, k: Int = 8, keep: Int = 4): Column = {
-    val norm = Dedup.normalized(text)
-    val n = length(norm)
-    val grams = transform(
-      sequence(lit(1), greatest(n - (k - 1), lit(1))),
-      i => xxhash64(substr(norm, i, lit(k)))
-    )
-    xxhash64(slice(sort_array(grams), 1, keep))
-  }
-
-  /** Cross-engine-checkable twin of [[fingerprint]]: md5 gram hashes,
-    * lexicographic min-`keep` selection, md5 of the concatenation — every
-    * step expressible identically in standard SQL (the DuckDB oracle),
-    * unlike the xxhash64 fast path above.
+  /** Rolling-hash document fingerprint (winnowing-lite): md5 hashes of
+    * the character `k`-gram windows of the normalized text, the
+    * lexicographic min-`keep` of them, md5 of their concatenation.
+    * Documents sharing most content share fingerprint minima, and every
+    * step is expressible identically in standard SQL (the DuckDB oracle).
     */
   def fingerprintPortable(text: Column, k: Int = 8, keep: Int = 4): Column = {
     val norm = Dedup.normalized(text)
@@ -681,12 +667,9 @@ object TextAnalysis {
     * [[graft.functions.TextFunctions.ftsTokens]] output (lowercase
     * alphanumeric), so the delimiter cannot occur inside a symbol.
     *
-    * Scale shape (the [[bpePairStats]] contract, iterated): the corpus
-    * is touched ONCE for the word histogram; every round's pair count,
-    * argmax, and re-segmentation run over the VOCABULARY (|vocab| x avg
-    * word length rows, independent of corpus size). The per-round
-    * argmax is a 1-row driver pull — the k-means-centroid convention
-    * for iterative operators.
+    * Scale shape: the corpus is touched ONCE for the word histogram;
+    * every round's pair count, argmax, and re-segmentation then run
+    * driver-local over the bounded VOCABULARY ([[trainBpeLocal]]).
     */
   def bpeMerges(docs: DataFrame, textCol: String, rounds: Int): DataFrame = {
     val spark = docs.sparkSession
@@ -695,52 +678,6 @@ object TextAnalysis {
     stats.toDF("round", "pair_a", "pair_b", "n", "n_symbols")
   }
 
-  /** The per-round-Spark-job training loop, kept as the cross-check twin
-    * of [[trainBpeLocal]] (spec-pinned equal): every round re-counts all
-    * pairs over the segmented vocabulary as one Spark job. Correct at
-    * any round count but pays one job + one 1-row driver pull PER MERGE
-    * — tokenizer training is 10k–50k merges, which is tens of thousands
-    * of sequential jobs. Production path is [[bpeMerges]] (local loop).
-    */
-  private[graft] def bpeMergesDistributed(docs: DataFrame, textCol: String, rounds: Int): DataFrame = {
-    val spark = docs.sparkSession
-    val (stats, vocab) = trainBpe(docs, textCol, rounds)
-    releaseVocab(vocab)
-    import spark.implicits._
-    stats.toDF("round", "pair_a", "pair_b", "n", "n_symbols")
-  }
-
-  /** Driver-local BPE merge training — the production path behind
-    * [[bpeMerges]]. The corpus is touched by Spark exactly ONCE (the
-    * word histogram, one word-keyed shuffle with map-side combine); the
-    * bounded `(word, freq)` vocabulary is then pulled driver-side and
-    * the entire merge loop runs locally with incremental pair-count
-    * maintenance — merging pair p only touches words containing p, via
-    * a pair→word-ids index — so 10k–50k merges cost zero Spark jobs
-    * after the histogram, vs one job + one driver pull PER MERGE on the
-    * [[bpeMergesDistributed]] path.
-    *
-    * Safety bound: the vocabulary row count is counted BEFORE collect
-    * and must not exceed `maxVocab` (default 10M distinct words ≈ a few
-    * GB driver heap for words + segmentations + pair index — natural-
-    * language vocabularies plateau in the low millions even at 100 TB,
-    * per Heaps' law; a corpus that trips the bound is noise-heavy and
-    * should be pre-filtered, or trained via [[bpeMergesDistributed]]).
-    *
-    * With `likelihood = true` the argmax switches to the WordPiece
-    * score `count(ab) / (count(a) * count(b))` over maintained
-    * per-symbol weighted counts — everything else (counting, apply,
-    * output shape) is unchanged; see [[wordPieceMerges]].
-    *
-    * Semantics are pinned equal to [[trainBpe]] by spec: same pair
-    * counting (every adjacent position, overlapping occurrences
-    * included, weighted by word frequency), same argmax tie-break
-    * (max n, then lexicographic pair_a, pair_b — tokens are ASCII so
-    * Scala and UTF8-binary ordering agree), same left-to-right greedy
-    * non-overlapping apply. Returns the per-round
-    * `(round, pair_a, pair_b, n, n_symbols)` stats and the final
-    * segmented vocabulary as `(word, freq, symbols)`.
-    */
   /** ONE corpus pass shared by every driver-local tokenizer trainer:
     * the (word, freq) histogram, row count checked against `maxVocab`
     * BEFORE the driver collect (Heaps' law keeps natural-language
@@ -1082,30 +1019,37 @@ object TextAnalysis {
     }
   }
 
-  /** Frequency-prune a histogram: drop words seen fewer than `minFreq`
-    * times — the remediation when a noise-heavy corpus trips the
-    * trainers' `maxVocab` bound (hapax typos/markup dominate the tail of
-    * any web-scale vocabulary; real tokenizer pipelines cut them before
-    * training). Narrow filter, no shuffle.
+  /** Driver-local BPE merge training — the production path behind
+    * [[bpeMerges]]. The corpus is touched by Spark exactly ONCE (the
+    * word histogram, one word-keyed shuffle with map-side combine); the
+    * bounded `(word, freq)` vocabulary is then pulled driver-side and
+    * the entire merge loop runs locally with incremental pair-count
+    * maintenance — merging pair p only touches words containing p, via
+    * a pair→word-ids index — so 10k–50k merges cost zero Spark jobs
+    * after the histogram, where a per-round Spark loop would pay one job
+    * and one driver pull PER MERGE.
+    *
+    * Safety bound: the vocabulary row count is counted BEFORE collect
+    * and must not exceed `maxVocab` (default 10M distinct words ≈ a few
+    * GB driver heap for words + segmentations + pair index — natural-
+    * language vocabularies plateau in the low millions even at 100 TB,
+    * per Heaps' law; a corpus that trips the bound is noise-heavy and
+    * should be pre-filtered).
+    *
+    * With `likelihood = true` the argmax switches to the WordPiece
+    * score `count(ab) / (count(a) * count(b))` over maintained
+    * per-symbol weighted counts — everything else (counting, apply,
+    * output shape) is unchanged; see [[wordPieceMerges]].
+    *
+    * Semantics are pinned by the q_bpe_merges oracle and by golden
+    * specs: pair counting at every adjacent position (overlapping
+    * occurrences included, weighted by word frequency), argmax tie-break
+    * on max n, then lexicographic pair_a, pair_b (tokens are ASCII so
+    * Scala and UTF8-binary ordering agree), left-to-right greedy
+    * non-overlapping apply. Returns the per-round
+    * `(round, pair_a, pair_b, n, n_symbols)` stats and the final
+    * segmented vocabulary as `(word, freq, symbols)`.
     */
-  def pruneWordHistogram(h: WordHistogram, minFreq: Long): WordHistogram = {
-    require(minFreq >= 1L, s"need minFreq >= 1, got $minFreq")
-    WordHistogram(h.hist.where(col("freq") >= minFreq))
-  }
-
-  /** In-memory histogram merge (the [[extendLm]] shape): counts are
-    * associative, so extend-then-train equals train-on-everything
-    * exactly. O(batch) count work plus a vocabulary-sized merge.
-    */
-  def extendWordHistogram(
-      h: WordHistogram,
-      batch: DataFrame,
-      textCol: String
-  ): WordHistogram =
-    WordHistogram(
-      h.hist.unionByName(wordHistFrame(batch, textCol))
-        .groupBy("word").agg(sum("freq").as("freq")))
-
   private[graft] def trainBpeLocal(
       docs: DataFrame,
       textCol: String,
@@ -1115,7 +1059,7 @@ object TextAnalysis {
   ): (Seq[(Long, String, String, Long, Long)], Array[(String, Long, Seq[String])]) =
     trainBpeLocalFromRows(
       wordHistLocal(docs, textCol, maxVocab, "bpeMerges",
-        "pre-filter the corpus or use bpeMergesDistributed"),
+        "pre-filter the corpus"),
       rounds, likelihood)
 
   /** The merge loop over an already-collected histogram — order-
@@ -1225,91 +1169,6 @@ object TextAnalysis {
     val finalVocab = Array.tabulate(nWords)(w => (words(w), freqs(w), segs(w).toSeq))
     (out.toSeq, finalVocab)
   }
-
-  /** The [[bpeMergesDistributed]] training loop, returning BOTH the
-    * per-round merge statistics and the final segmented vocabulary
-    * `(word, freq, seg)` (seg delimiter-bounded, PINNED — caller
-    * releases via [[releaseVocab]]). Shared by [[bpeMergesDistributed]]
-    * (stats surface) and [[bpeTokenCounts]] (apply surface) so the two
-    * can never train differently.
-    *
-    * Each round PINS its re-segmented vocabulary ([[graft.util
-    * .Checkpoints]] — localCheckpoint, or reliable checkpoint when a dir
-    * is set) and releases the superseded round: a plain `.cache()` kept
-    * the whole merge history in ONE logical plan, whose nested
-    * `aggregate` expressions blew up plan-string generation (driver OOM)
-    * near 20 rounds — the same per-round-pin discipline as
-    * [[Dedup.nearDupClusters]].
-    */
-  private def trainBpe(
-      docs: DataFrame,
-      textCol: String,
-      rounds: Int
-  ): (Seq[(Long, String, String, Long, Long)], DataFrame) = {
-    require(rounds >= 1, s"bpeMerges: rounds must be >= 1, got $rounds")
-    val spark = docs.sparkSession
-    val segSyms = filter(split(col("seg"), "\\|"), x => length(x) > 0)
-    var vocab = graft.util.Checkpoints.pin(docs
-      .select(explode(TextFunctions.ftsTokens(col(textCol))).as("word"))
-      .groupBy("word")
-      .agg(count(lit(1)).as("freq"))
-      .select(
-        col("word"),
-        col("freq"),
-        concat(lit("|"), regexp_replace(col("word"), "(.)", "$1|")).as("seg")))
-    var livePin = graft.util.Checkpoints.pinnedRddIds(vocab)
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long, Long)]
-    (1 to rounds).foreach { r =>
-      val best = vocab
-        .select(col("freq"), segSyms.as("_syms"))
-        .where(size(col("_syms")) >= 2)
-        .select(
-          col("freq"),
-          explode(expr(
-            "transform(sequence(1, size(_syms) - 1), " +
-              "i -> struct(element_at(_syms, i) AS pair_a, element_at(_syms, i + 1) AS pair_b))")).as("p"))
-        .groupBy(col("p.pair_a").as("pair_a"), col("p.pair_b").as("pair_b"))
-        .agg(sum("freq").as("n"))
-        .orderBy(desc("n"), col("pair_a"), col("pair_b"))
-        .limit(1)
-        .collect()
-      if (best.isEmpty) {
-        graft.util.Checkpoints.release(livePin, spark)
-        require(best.nonEmpty,
-          s"bpeMerges: vocabulary exhausted all pairs before round $r — lower `rounds`")
-      }
-      val (a, b, n) =
-        (best.head.getString(0), best.head.getString(1), best.head.getLong(2))
-      val merged = graft.util.Checkpoints.pin(vocab.withColumn(
-        "seg",
-        aggregate(
-          segSyms,
-          lit("|"),
-          (acc, x) =>
-            when(
-              x === lit(b) && acc.endsWith(lit("|" + a + "|")),
-              concat(
-                substr(acc, lit(1), length(acc) - lit(a.length + 1)),
-                lit(a + b + "|")))
-              .otherwise(concat(acc, x, lit("|"))))))
-      val nSymbols = merged
-        .agg(sum(col("freq") * size(segSyms)).as("ns"))
-        .collect().head.getLong(0)
-      graft.util.Checkpoints.release(livePin, spark)
-      livePin = graft.util.Checkpoints.pinnedRddIds(merged)
-      vocab = merged
-      out += ((r.toLong, a, b, n, nSymbols))
-    }
-    (out.toSeq, vocab)
-  }
-
-  /** Release the pinned vocabulary [[trainBpe]] returns (blocks or
-    * checkpoint files, whichever mode pinned them — `unpersist()` cannot
-    * free checkpoint RDDs).
-    */
-  private def releaseVocab(vocab: DataFrame): Unit =
-    graft.util.Checkpoints.release(
-      graft.util.Checkpoints.pinnedRddIds(vocab), vocab.sparkSession)
 
   /** Apply a freshly-trained BPE tokenizer back to the corpus: per-doc
     * token counts under `rounds` merges — the ENCODE half of tokenizer

@@ -131,9 +131,8 @@ object VectorSearch {
     * candidate generation over each query's BOUNDED top-N (pass ~5-10x k
     * candidates from [[topK]]/[[topKBatch]]/IVF). One shuffle groups
     * candidates by query; each group is an in-memory greedy loop over
-    * <= N vectors (flatMapGroups — the [[graft.streaming.EventStreams
-    * .sessionize]] precedent: per-group bounded sequential logic, never a
-    * corpus-wide loop). Deterministic: candidates are sorted (score desc,
+    * <= N vectors (flatMapGroups: per-group bounded sequential logic,
+    * never a corpus-wide loop). Deterministic: candidates are sorted (score desc,
     * id asc) before the loop and ties pick the smaller id, so the output
     * is partition-invariant.
     *
@@ -403,13 +402,6 @@ object VectorSearch {
     * only matching partitions.
     */
   final case class SimHashLsh(nBits: Int = 16, dim: Int = 64, seed: Long = 42L) {
-
-    /** plane(j) component i — deterministic pseudo-gaussian from a seeded
-      * 64-bit mix (SplitMix64 finalizer), identical on driver and executors.
-      * Shared definition: [[graft.functions.VectorFunctions.simhashPlane]].
-      */
-    private[operators] def planeComponent(j: Int, i: Int): Double =
-      VectorFunctions.simhashPlane(seed, j, i)
 
     // derived once per signer: a banded index probes with the same L
     // signers on every query
@@ -1393,42 +1385,5 @@ object VectorSearch {
     val codebook = Array.tabulate(nSub, k)((s, c) =>
       flat.slice((s * k + c) * subDim, (s * k + c + 1) * subDim))
     PqModel(codebook, num("quantScale").toInt)
-  }
-
-  /** All-pairs near-duplicate detection by embedding cosine, LSH-blocked:
-    * only pairs sharing a signature band are compared — the classic
-    * O(n^2) -> O(n·bucket) reduction. Returns (id_a, id_b, score) with
-    * id_a < id_b.
-    */
-  def nearDuplicatePairs(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      threshold: Double,
-      lsh: SimHashLsh = SimHashLsh()
-  ): DataFrame = {
-    // not persisted (lazy API, no unpersist hook): the re-attach joins
-    // recompute a narrow projection of the source scan
-    val slim = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val sigd = lsh.withSignature(slim, "v")
-    // band the signature into 4-bit bands; pairs matching any band meet.
-    // The band self-join carries only (id, band) — vectors re-attach by id
-    // after the distinct, so embedding payloads are never shuffled twice.
-    val banded = sigd.select(
-      col("id"),
-      explode(
-        array((0 until lsh.nBits by 4).map(s => concat_ws(":", lit(s), shiftright(col("sig"), s).bitwiseAND(lit(0xf)))): _*)
-      ).as("band")
-    )
-    val a = banded.as("a")
-    val b = banded.as("b")
-    a.join(b, col("a.band") === col("b.band") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-      .join(slim.select(col("id").as("id_a"), col("v").as("va")), "id_a")
-      .join(slim.select(col("id").as("id_b"), col("v").as("vb")), "id_b")
-      .withColumn("score", VectorFunctions.cosineSim(col("va"), col("vb")))
-      .where(col("score") >= threshold)
-      .select("id_a", "id_b", "score")
   }
 }

@@ -109,44 +109,6 @@ final class Retriever(
         col("section_h1"), col("section_h2"), col("chunk_index"), col("score"))
   }
 
-  /** Batch vector retrieval: top-k chunks for MANY queries in one job
-    * (training-pipeline shape — e.g. mine context for a whole eval set).
-    * Chunk ids are strings, so a deterministic numeric surrogate
-    * (row_number over id) carries them through the TopKBy heap and joins
-    * back after.
-    */
-  def vectorSearchMany(queryTexts: Seq[String], k: Int): DataFrame = {
-    import spark.implicits._
-    val queries = queryTexts.zipWithIndex
-      .map { case (t, i) => (i.toLong, embedder.embedOne(t)) }
-      .toDF("query_id", "qvec")
-    // shuffle-free deterministic surrogate: a global-window row_number
-    // would single-partition-sort the whole corpus (the exact shape the
-    // heap aggregate avoids); a 64-bit hash of the unique id doesn't
-    val corpus = chunks
-      .where(col("embedding").isNotNull)
-      .withColumn("sid", xxhash64(col("id")))
-    // Surrogate-collision guard: a 64-bit collision would silently
-    // attribute one chunk's score to another and fan out duplicate hits.
-    // One ids-only aggregation (no payload) per call — negligible next to
-    // the scan, and it turns an undetectable corruption into a hard error.
-    val counts = corpus.agg(
-      countDistinct(col("sid")).as("n_sid"),
-      countDistinct(col("id")).as("n_id")
-    ).head()
-    require(counts.getLong(0) == counts.getLong(1),
-      s"xxhash64 surrogate collision in chunk ids (${counts.getLong(1)} ids -> " +
-        s"${counts.getLong(0)} surrogates); re-key the corpus or use a composite key")
-    val top = VectorSearch
-      .topKBatch(queries, corpus, "query_id", "qvec", "sid", "embedding", k)
-      .select(col("query_id"), explode(col("top")).as("hit"))
-      .select(col("query_id"), col("hit.id").as("sid"), col("hit.score").as("score"))
-    top
-      .join(corpus.select(col("sid"), col("id"), col("document_id"), col("document_title"), col("text")), "sid")
-      .drop("sid")
-      .orderBy(col("query_id"), desc("score"), col("id"))
-  }
-
   /** ADC-shortlist vector search — the measured 0.9-recall regime
     * (VERDICT r13 #4; SCALE.md's retrieval-regime table adjudicated it
     * over banded-LSH at this corpus: ≥0.9 recall at a fraction of the

@@ -130,30 +130,37 @@ object TextKernels {
     new GenericArrayData(rows)
   }
 
+  /** A null or empty element — what `length(t) > 0` does not keep
+    * (`length(null)` is null, which `filter` drops like false).
+    */
+  private def dropped(w: UTF8String): Boolean = w == null || w.numBytes() == 0
+
   /** filter(arr, t => length(t) > 0) over UTF8Strings — the tokenizer tail
-    * of `ftsTokens` and friends; returns the input untouched when nothing
-    * is empty (the common case). Null handling lives in the expression
-    * (standard null propagation, unlike the shingle kernels' empty-array
-    * guard).
+    * of `ftsTokens` and friends: drops null and empty elements, and
+    * returns the input untouched when there are none (the common case).
+    * A null ARRAY is the expression's concern (standard null propagation,
+    * unlike the shingle kernels' empty-array guard).
     */
   def nonEmptyStrings(arr: ArrayData): ArrayData = {
     val m = arr.numElements()
-    var empties = 0
+    var drops = 0
     var i = 0
-    while (i < m) { if (arr.getUTF8String(i).numBytes() == 0) empties += 1; i += 1 }
-    if (empties == 0) return arr
-    val out = new Array[AnyRef](m - empties)
+    while (i < m) { if (dropped(arr.getUTF8String(i))) drops += 1; i += 1 }
+    if (drops == 0) return arr
+    val out = new Array[AnyRef](m - drops)
     var o = 0
     i = 0
     while (i < m) {
       val w = arr.getUTF8String(i)
-      if (w.numBytes() > 0) { out(o) = w; o += 1 }
+      if (!dropped(w)) { out(o) = w; o += 1 }
       i += 1
     }
     new GenericArrayData(out)
   }
 
-  /** filter(w, t => length(t) > 0), bytes extracted once. */
+  /** filter(w, t => length(t) > 0), bytes extracted once: null and empty
+    * words are dropped, as in the HOF trees.
+    */
   private def nonEmptyWordBytes(words: ArrayData): Array[Array[Byte]] = {
     val m0 = words.numElements()
     val ws = new Array[Array[Byte]](m0)
@@ -161,7 +168,7 @@ object TextKernels {
     var i = 0
     while (i < m0) {
       val w = words.getUTF8String(i)
-      if (w.numBytes() > 0) { ws(m) = w.getBytes; m += 1 }
+      if (!dropped(w)) { ws(m) = w.getBytes; m += 1 }
       i += 1
     }
     if (m == m0) ws else java.util.Arrays.copyOf(ws, m)

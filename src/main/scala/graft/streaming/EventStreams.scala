@@ -1,69 +1,27 @@
 package graft.streaming
 
-import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Event-time streaming operators over the `events` schema
-  * (event_id, ts, user_id, event_type, value): watermarked tumbling/sliding
-  * window aggregation, and stateful sessionization via
-  * flatMapGroupsWithState.
+/** Event-time streaming operators: watermarked per-window sums and
+  * sketches over a stream, and the batch drift readouts over their sinks.
   *
   * The reference has no streaming runtime (SURVEY.md §2.11) — these are the
-  * engine's forward-looking stream surface, with semantics matching the
-  * batch twins in SparkEntry (q_event_tumbling / q_sessionize) so batch
-  * backfill and streaming produce the same tables.
+  * engine's forward-looking stream surface, sharing their arithmetic with
+  * the batch operators ([[graft.operators.DriftMonitor]],
+  * [[graft.operators.Sketches]]) so batch backfill and streaming produce
+  * the same tables.
   *
   * Scale notes: the watermark bounds state (no unbounded window buffers);
-  * sessionization state is one small case class per active user, dropped
-  * on event-time timeout; both operators shuffle once on their grouping key.
+  * each aggregation shuffles once on its grouping key.
   */
 object EventStreams {
 
-  /** Watermarked tumbling-window counts/sums per event type. Append mode:
-    * a window emits only once its watermark passes — late events beyond
-    * `lateness` are dropped, matching the contract of the batch backfill.
-    */
-  def tumblingAgg(events: DataFrame, windowLen: String = "1 hour", lateness: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", lateness)
-      .groupBy(window(col("ts"), windowLen), col("event_type"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(18,6)")).cast("double").as("total_value")
-      )
-      .select(
-        col("window.start").as("window_start"),
-        col("event_type"),
-        col("n_events"),
-        col("total_value")
-      )
-
-  /** Streaming drift guardrail, stream side: watermarked per-window
-    * category counts — the sink [[windowDrift]] compares against a
-    * reference distribution. Append mode: a window's counts emit once
-    * the watermark closes it (the [[tumblingAgg]] contract), so the
-    * drift readout only ever sees complete windows. State is bounded by
-    * open windows x |categories|.
-    */
-  def windowedCategoryCounts(
-      events: DataFrame,
-      tsCol: String,
-      catCol: String,
-      windowLen: String = "1 hour",
-      lateness: String = "10 minutes"
-  ): DataFrame =
-    events
-      .withWatermark(tsCol, lateness)
-      .groupBy(window(col(tsCol), windowLen), col(catCol).as("category"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("category"), col("n"))
-
-  /** Batch drift readout over a [[windowedCategoryCounts]] sink: every
-    * closed window's category mix against a static REFERENCE
-    * distribution `(category, n)` — yesterday's mix, a golden profile,
-    * or a long-run average. Per (window, category):
+  /** Drift readout over per-window category counts
+    * `(window_start, category, n)`, from a streaming sink or a batch
+    * backfill: every closed window's category mix against a static
+    * REFERENCE distribution `(category, n)` — yesterday's mix, a golden
+    * profile, or a long-run average. Per (window, category):
     * observed/reference proportions in ppm (integer floor division, the
     * [[graft.operators.DriftMonitor]] arithmetic), their absolute
     * difference, and `tvd2_ppm` = the window's summed |Δppm| (2e6 x the
@@ -115,7 +73,7 @@ object EventStreams {
 
   /** Streaming EMBEDDING drift, stream side: watermarked per-window
     * quantized per-dimension component sums over a vector column — the
-    * vector half of the drift matrix ([[windowedCategoryCounts]] is the
+    * vector half of the drift matrix ([[windowDrift]] reads the
     * categorical half). Same quantization contract as
     * [[graft.operators.DriftMonitor.embeddingDrift]]: components map to
     * `floor(x * scale)` longs (exact integer sums), null and
@@ -216,155 +174,4 @@ object EventStreams {
     */
   def windowedHllEstimate(registers: DataFrame, p: Int = 12): DataFrame =
     graft.operators.Sketches.hllEstimateBy(registers, Seq("window_start"), p)
-
-  /** Streaming exact dedup: drop events whose `keyCols` were already seen
-    * within the watermark horizon — the streaming twin of the batch exact
-    * dedup (Dedup.exactDedup) for at-least-once sources that can replay.
-    * `dropDuplicatesWithinWatermark` keeps per-key state only until the
-    * watermark passes the key's last-seen time, so state is bounded by
-    * (arrival rate x lateness), never by stream length.
-    */
-  def dedupStream(
-      events: DataFrame,
-      keyCols: Seq[String],
-      lateness: String = "10 minutes"
-  ): DataFrame =
-    events
-      .withWatermark("ts", lateness)
-      .dropDuplicatesWithinWatermark(keyCols)
-
-  /** Watermarked stream-stream interval join: match each `left` event to
-    * `right` events of the same `keyCol` whose timestamp falls within
-    * `[left.ts, left.ts + windowSeconds]` (e.g. click -> purchase
-    * attribution). Both sides carry watermarks and the join condition
-    * bounds event-time distance, so Spark can expire buffered state —
-    * the required shape for an unbounded stream-stream join.
-    */
-  def intervalJoin(
-      left: DataFrame,
-      right: DataFrame,
-      keyCol: String,
-      windowSeconds: Long,
-      lateness: String = "10 minutes"
-  ): DataFrame = {
-    val l = left.withWatermark("ts", lateness).alias("l")
-    val r = right.withWatermark("ts", lateness).alias("r")
-    l.join(
-      r,
-      col(s"l.$keyCol") === col(s"r.$keyCol") &&
-        col("r.ts") >= col("l.ts") &&
-        col("r.ts") <= col("l.ts") + expr(s"INTERVAL $windowSeconds SECONDS")
-    )
-  }
-
-  /** Watermarked sliding-window term counts over a text stream — the
-    * "what is trending in the ingest feed" aggregation. One row per
-    * (window, word) emitted when the watermark closes the window (append
-    * mode). Tokenization matches the batch engine
-    * ([[graft.operators.Dedup.normalized]] split), so stream counts agree
-    * with a batch backfill over the same rows.
-    *
-    * State is bounded by (windows open under the watermark) x (vocabulary
-    * arriving in them), never by stream length. The explode multiplies
-    * rows before the shuffle, but each carries only (ts, word) — the
-    * document body never reaches the aggregation.
-    *
-    * Top-k per window is deliberately NOT computed here: ranking needs a
-    * window function over a closed group, which streaming aggregation
-    * cannot express incrementally. Pair with [[trendingTerms]] over the
-    * emitted sink — the same lambda-free split as FtsIndex streaming
-    * maintenance (O(batch) stream work, rank on read).
-    */
-  def windowedTermCounts(
-      docs: DataFrame,
-      tsCol: String,
-      textCol: String,
-      windowLen: String = "1 hour",
-      slide: String = "1 hour",
-      lateness: String = "10 minutes"
-  ): DataFrame =
-    docs
-      .withWatermark(tsCol, lateness)
-      .select(
-        col(tsCol).as("ts"),
-        explode(
-          filter(
-            split(graft.operators.Dedup.normalized(col(textCol)), " "),
-            t => length(t) > 0
-          )
-        ).as("word")
-      )
-      .groupBy(window(col("ts"), windowLen, slide), col("word"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("word"), col("n"))
-
-  /** Batch rank over a [[windowedTermCounts]] sink: the k most frequent
-    * words of every closed window, ties broken alphabetically.
-    */
-  def trendingTerms(counts: DataFrame, k: Int): DataFrame = {
-    require(k >= 1, s"need k >= 1, got $k")
-    val win = org.apache.spark.sql.expressions.Window
-      .partitionBy("window_start")
-      .orderBy(desc("n"), col("word"))
-    counts
-      .withColumn("rn", row_number().over(win).cast("long"))
-      .where(col("rn") <= k)
-  }
-
-  final case class Event(event_id: Long, ts: Timestamp, user_id: Long, value: Double)
-  final case class SessionState(start: Long, end: Long, n: Long, total: Double)
-  final case class Session(
-      user_id: Long,
-      session_start_us: Long,
-      session_end_us: Long,
-      n_events: Long,
-      total_value: Double
-  )
-
-  /** Stateful sessionization: a session closes after `gapSeconds` of
-    * event-time silence (state timeout), emitting one row. The streaming
-    * twin of the batch lag/cumsum sessionizer (SparkEntry.qSessionize).
-    */
-  def sessionize(
-      events: Dataset[Event],
-      gapSeconds: Long = 1800
-  ): Dataset[Session] = {
-    import events.sparkSession.implicits._
-    val gapUs = gapSeconds * 1000000L
-
-    events
-      .withWatermark("ts", "30 minutes")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, Session](
-        OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()
-      ) { (userId: Long, batch: Iterator[Event], state: GroupState[SessionState]) =>
-        if (batch.isEmpty && state.hasTimedOut) {
-          // silence gap elapsed: close and emit the session
-          val s = state.get
-          state.remove()
-          Iterator.single(Session(userId, s.start, s.end, s.n, s.total))
-        } else {
-          val out = scala.collection.mutable.ListBuffer.empty[Session]
-          var cur = state.getOption
-          batch.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-            val us = e.ts.getTime * 1000L
-            cur match {
-              case Some(s) if us - s.end <= gapUs =>
-                cur = Some(s.copy(end = us, n = s.n + 1, total = s.total + e.value))
-              case Some(s) =>
-                out += Session(userId, s.start, s.end, s.n, s.total)
-                cur = Some(SessionState(us, us, 1, e.value))
-              case None =>
-                cur = Some(SessionState(us, us, 1, e.value))
-            }
-          }
-          cur.foreach { s =>
-            state.update(s)
-            state.setTimeoutTimestamp(s.end / 1000L + gapSeconds * 1000L)
-          }
-          out.iterator
-        }
-      }
-  }
 }

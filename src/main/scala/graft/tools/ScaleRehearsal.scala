@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
@@ -55,16 +55,7 @@ object ScaleRehearsal {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.benchSession("graft-scale")
     graft.Bench.silenceBoundedWindowWarning()
     val meter = new Meter
     spark.sparkContext.addSparkListener(meter)
@@ -378,8 +369,8 @@ object ScaleRehearsal {
     // measurement is that the driver-local loop makes merge count nearly
     // FREE after the one corpus histogram pass — wall time is histogram +
     // O(local work), with the marginal cost of 10x more merges a driver-
-    // side constant, vs one Spark job + one driver pull PER MERGE on the
-    // distributed twin. Corpus: the Zipf-real synthetic (50k docs x 40
+    // side constant, vs one Spark job + one driver pull PER MERGE on a
+    // per-round Spark loop. Corpus: the Zipf-real synthetic (50k docs x 40
     // words over a ~20k-word vocabulary — words like "w1234", so ~100k
     // mergeable symbol positions; the sf0.1 text corpus's ~60-word
     // vocabulary exhausts its pair space long before 1k merges). The
@@ -400,12 +391,6 @@ object ScaleRehearsal {
         measure(s"bpe_local_r$rounds") {
           TextAnalysis.bpeMerges(bpeDocs, "text", rounds = rounds).count()
         }
-      }
-      // the distributed twin at 20 rounds prices the per-merge job cost
-      // the local loop eliminates (20, not 1000: tens of thousands of
-      // sequential jobs is exactly the path being retired)
-      measure("bpe_distributed_r20") {
-        TextAnalysis.bpeMergesDistributed(bpeDocs, "text", rounds = 20).count()
       }
       // the other two tokenizer trainers over the same corpus: the
       // likelihood argmax adds per-symbol bookkeeping to the same local
@@ -955,7 +940,8 @@ object ScaleRehearsal {
         measure(s"pipe_pack_x$factor") {
           packed = SequencePacking
             .packGreedy(curated.select(col("doc_id"), col("token_est")),
-              "doc_id", "token_est", budget = 2048, partitions = cpus.toInt)
+              "doc_id", "token_est", budget = 2048,
+              partitions = spark.sparkContext.defaultParallelism)
             .localCheckpoint()
           packed.count()
         }

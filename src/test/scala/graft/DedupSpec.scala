@@ -17,9 +17,6 @@ class DedupSpec extends AnyFunSuite {
   ).toDF("doc_id", "text")
 
   test("exact dedup groups normalize case and whitespace") {
-    val groups = Dedup.exactGroups(docs, "doc_id", "text").collect()
-    assert(groups.length == 1)
-    assert(groups.head.getAs[scala.collection.Seq[Long]]("ids").toSeq == Seq(1L, 2L, 5L))
     val kept = Dedup.exactDedup(docs, "doc_id", "text").select("doc_id").as[Long].collect().toSet
     assert(kept == Set(1L, 3L, 4L))
   }
@@ -42,7 +39,8 @@ class DedupSpec extends AnyFunSuite {
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(ham(sigs(1L), sigs(3L)) < ham(sigs(1L), sigs(4L)))
 
-    val pairs = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3).collect()
+    val pairs = Dedup.hammingPairsFromSigs(Dedup.simhash(docs, "doc_id", "text"), "id", "simhash", 3)
+      .collect()
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b")))
     assert(pairs.contains((1L, 2L)))
   }
@@ -70,7 +68,8 @@ class DedupSpec extends AnyFunSuite {
       val words = base.take(4 + i % 4) ++ Seq(s"doc$i", s"tail${i % 5}", s"x${i % 3}")
       (i.toLong, words.mkString(" "))
     }.toDF("doc_id", "text")
-    val sigs = Dedup.simhash(corpus, "doc_id", "text").collect()
+    val sigFrame = Dedup.simhash(corpus, "doc_id", "text")
+    val sigs = sigFrame.collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[Long]("simhash")).toMap
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     for (maxHamming <- Seq(0, 3, 7, 12, 23)) {
@@ -78,11 +77,11 @@ class DedupSpec extends AnyFunSuite {
         a <- sigs.keys; b <- sigs.keys if a < b
         if ham(sigs(a), sigs(b)) <= maxHamming
       } yield (a, b)).toSet
-      val banded = Dedup.simhashPairs(corpus, "doc_id", "text", maxHamming).collect()
+      val banded = Dedup.hammingPairsFromSigs(sigFrame, "id", "simhash", maxHamming).collect()
         .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
       assert(banded == expected, s"maxHamming=$maxHamming: banding must not lose pairs")
     }
-    intercept[IllegalArgumentException](Dedup.simhashPairs(corpus, "doc_id", "text", 64))
+    intercept[IllegalArgumentException](Dedup.hammingPairsFromSigs(sigFrame, "id", "simhash", 64))
   }
 
   test("nearDupClusters: transitive closure to min-id labels; singletons self-labeled") {

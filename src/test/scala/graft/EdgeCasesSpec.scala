@@ -25,11 +25,14 @@ class EdgeCasesSpec extends AnyFunSuite {
   }
 
   test("dedup operators over empty and single-row corpora") {
-    assert(Dedup.exactGroups(emptyDocs, "doc_id", "text").count() == 0)
+    def hammingPairs(df: org.apache.spark.sql.DataFrame) =
+      Dedup.hammingPairsFromSigs(Dedup.simhash(df, "doc_id", "text"), "id", "simhash", 3)
+    assert(Dedup.exactDedup(emptyDocs, "doc_id", "text").count() == 0)
     assert(Dedup.minhashLshPairs(emptyDocs, "doc_id", "text").count() == 0)
-    assert(Dedup.simhashPairs(emptyDocs, "doc_id", "text").count() == 0)
+    assert(hammingPairs(emptyDocs).count() == 0)
     val one = Seq((1L, "a single document here")).toDF("doc_id", "text")
     assert(Dedup.minhashLshPairs(one, "doc_id", "text").count() == 0)
+    assert(hammingPairs(one).count() == 0)
     assert(Dedup.ngramJaccardPairs(one, "doc_id", "text").count() == 0)
   }
 

@@ -6,155 +6,11 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.streaming.EventStreams
-import graft.streaming.EventStreams.Event
 
 class EventStreamsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
   private def ts(minute: Int): Timestamp = new Timestamp(1700000000000L + minute * 60000L)
-
-  test("watermarked tumbling aggregation emits closed windows, drops late data") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, Timestamp, String, Double)]
-    val events = input.toDF().toDF("event_id", "ts", "event_type", "value")
-    val agg = EventStreams.tumblingAgg(events, windowLen = "10 minutes", lateness = "5 minutes")
-    val q = agg.writeStream.format("memory").queryName("tumbling_out")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      input.addData((1L, ts(1), "click", 1.0), (2L, ts(4), "click", 2.0), (3L, ts(2), "view", 5.0))
-      q.processAllAvailable()
-      // advance watermark far past the first window
-      input.addData((4L, ts(40), "click", 1.0))
-      q.processAllAvailable()
-      // this event is older than the watermark -> dropped
-      input.addData((5L, ts(3), "click", 100.0))
-      q.processAllAvailable()
-      input.addData((6L, ts(80), "click", 1.0))
-      q.processAllAvailable()
-
-      val out = spark.table("tumbling_out").collect()
-      // 10-min windows align to wall-clock boundaries, not to ts(0)
-      val w0 = ts(1).getTime / 600000L * 600000L
-      val clickW1 = out.filter(r => r.getAs[String]("event_type") == "click" &&
-        r.getAs[Timestamp]("window_start").getTime == w0)
-      assert(clickW1.length == 1)
-      assert(clickW1.head.getAs[Long]("n_events") == 2, "late event must not be counted")
-      assert(clickW1.head.getAs[Double]("total_value") == 3.0)
-    } finally q.stop()
-  }
-
-  test("stateful sessionization closes sessions on event-time gaps") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Event]
-    val sessions = EventStreams.sessionize(input.toDS(), gapSeconds = 600)
-    val q = sessions.writeStream.format("memory").queryName("sessions_out")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      // user 1: two events close together; user 2: one event
-      input.addData(Event(1, ts(0), 1L, 1.0), Event(2, ts(5), 1L, 2.0), Event(3, ts(1), 2L, 7.0))
-      q.processAllAvailable()
-      // much later events: watermark passes, timeouts fire, old sessions emit
-      input.addData(Event(4, ts(120), 1L, 1.0), Event(5, ts(120), 2L, 1.0))
-      q.processAllAvailable()
-      input.addData(Event(6, ts(600), 3L, 1.0))
-      q.processAllAvailable()
-
-      val out = spark.table("sessions_out").as[EventStreams.Session].collect()
-      val u1 = out.filter(_.user_id == 1L)
-      assert(u1.exists(s => s.n_events == 2 && s.total_value == 3.0),
-        s"user1 first session missing: ${out.mkString(";")}")
-      val u2 = out.filter(_.user_id == 2L)
-      assert(u2.exists(s => s.n_events == 1 && s.total_value == 7.0))
-    } finally q.stop()
-  }
-
-  test("streaming dedup drops replayed keys within the watermark horizon") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, Timestamp, String)]
-    val events = input.toDF().toDF("event_id", "ts", "payload")
-    val deduped = EventStreams.dedupStream(events, Seq("event_id"), lateness = "5 minutes")
-    val q = deduped.writeStream.format("memory").queryName("dedup_out")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      input.addData((1L, ts(1), "a"), (2L, ts(2), "b"))
-      q.processAllAvailable()
-      // at-least-once source replays event 1 (same key, later arrival)
-      input.addData((1L, ts(3), "a-replay"), (3L, ts(4), "c"))
-      q.processAllAvailable()
-      val out = spark.table("dedup_out").collect().map(_.getAs[Long]("event_id")).toSeq
-      assert(out.sorted == Seq(1L, 2L, 3L), s"replay must be dropped, got $out")
-    } finally q.stop()
-  }
-
-  test("stream-stream interval join attributes right events within the window, expiring state") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val clicks = MemoryStream[(Long, Timestamp, Long)]
-    val buys = MemoryStream[(Long, Timestamp, Long)]
-    val joined = EventStreams.intervalJoin(
-      clicks.toDF().toDF("click_id", "ts", "user_id"),
-      buys.toDF().toDF("buy_id", "ts", "user_id"),
-      keyCol = "user_id",
-      windowSeconds = 600,
-      lateness = "5 minutes"
-    ).select(col("l.click_id"), col("r.buy_id"))
-    val q = joined.writeStream.format("memory").queryName("attrib_out")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      clicks.addData((10L, ts(0), 1L), (11L, ts(0), 2L))
-      buys.addData((20L, ts(5), 1L))   // within 10 min of click 10 -> match
-      buys.addData((21L, ts(30), 2L))  // 30 min after click 11 -> no match
-      clicks.addData((12L, ts(60), 3L))
-      buys.addData((22L, ts(61), 3L))  // match
-      // advance both watermarks so earlier state can expire and emit
-      clicks.addData((13L, ts(200), 9L))
-      buys.addData((23L, ts(200), 9L))
-      q.processAllAvailable()
-      val got = spark.table("attrib_out").collect()
-        .map(r => (r.getAs[Long]("click_id"), r.getAs[Long]("buy_id"))).toSet
-      assert(got.contains((10L, 20L)), s"in-window purchase must match, got $got")
-      assert(got.contains((12L, 22L)))
-      assert(!got.exists(_._2 == 21L), "out-of-window purchase must not match")
-    } finally q.stop()
-  }
-
-  test("windowed term counts close with the watermark; trendingTerms ranks the sink") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Timestamp, String)]
-    val docs = input.toDF().toDF("ts", "text")
-    val counts = EventStreams.windowedTermCounts(
-      docs, "ts", "text", windowLen = "10 minutes", slide = "10 minutes", lateness = "5 minutes")
-    val q = counts.writeStream.format("memory").queryName("terms_out")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      input.addData((ts(1), "spark spark flink"), (ts(4), "spark beam"))
-      q.processAllAvailable()
-      assert(spark.table("terms_out").isEmpty, "window must not emit before the watermark closes it")
-      // advance watermark past the first window; then a late doc arrives
-      input.addData((ts(40), "later window"))
-      q.processAllAvailable()
-      input.addData((ts(2), "spark spark spark late-and-dropped"))
-      q.processAllAvailable()
-
-      val w0 = ts(1).getTime / 600000L * 600000L
-      val first = spark.table("terms_out").collect()
-        .filter(_.getAs[Timestamp]("window_start").getTime == w0)
-        .map(r => r.getAs[String]("word") -> r.getAs[Long]("n")).toMap
-      assert(first == Map("spark" -> 3L, "flink" -> 1L, "beam" -> 1L),
-        s"late doc must not inflate counts: $first")
-
-      val top = EventStreams.trendingTerms(spark.table("terms_out"), k = 2)
-        .where(col("window_start") === new Timestamp(w0))
-        .orderBy("rn").collect()
-        .map(r => (r.getAs[String]("word"), r.getAs[Long]("n"), r.getAs[Long]("rn")))
-      // tie between beam/flink at n=1: alphabetical wins rank 2
-      assert(top.toSeq == Seq(("spark", 3L, 1L), ("beam", 1L, 2L)), top.mkString(";"))
-    } finally q.stop()
-  }
 
   test("streaming HLL registers close with the watermark and equal the batch sketch per window") {
     import spark.implicits._
@@ -217,41 +73,26 @@ class EventStreamsSpec extends AnyFunSuite {
     assert(hits.head.getAs[Double]("score") > 0.999)
   }
 
-  test("streaming category counts close with the watermark; windowDrift scores the sink") {
+  test("windowDrift scores a batch-built (window_start, category, n) frame") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Timestamp, String)]
-    val events = input.toDF().toDF("ts", "cat")
-    val counts = EventStreams.windowedCategoryCounts(
-      events, "ts", "cat", windowLen = "10 minutes", lateness = "5 minutes")
-    val q = counts.writeStream.format("memory").queryName("drift_counts")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      // window 0: 3 click, 1 error (reference expects 50/50)
-      input.addData((ts(1), "click"), (ts(2), "click"), (ts(3), "click"), (ts(4), "error"))
-      q.processAllAvailable()
-      assert(spark.table("drift_counts").isEmpty, "window must not emit before the watermark closes")
-      input.addData((ts(40), "click")) // advance watermark past window 0
-      q.processAllAvailable()
-
-      val reference = Seq(("click", 10L), ("error", 10L), ("view", 0L)).toDF("category", "n")
-      val w0 = new Timestamp(ts(1).getTime / 600000L * 600000L)
-      val out = EventStreams.windowDrift(
-          spark.table("drift_counts"), reference, "category", "n")
-        .where(col("window_start") === w0)
-        .orderBy("category").collect()
-      val byCat = out.map(r => r.getAs[String]("category") -> r).toMap
-      // click: obs 3/4 = 750000 ppm vs ref 10/20 = 500000 -> |diff| 250000
-      assert(byCat("click").getAs[Long]("n") == 3L)
-      assert(byCat("click").getAs[Long]("ppm_obs") == 750000L)
-      assert(byCat("click").getAs[Long]("ppm_ref") == 500000L)
-      assert(byCat("click").getAs[Long]("abs_ppm_diff") == 250000L)
-      // error: 250000 vs 500000 -> 250000; view: reference-only row, 0 vs 0
-      assert(byCat("error").getAs[Long]("abs_ppm_diff") == 250000L)
-      assert(byCat("view").getAs[Long]("n") == 0L && byCat("view").getAs[Long]("abs_ppm_diff") == 0L)
-      // tvd2 = 500000 on every row of the window (TVD = 0.25)
-      assert(out.forall(_.getAs[Long]("tvd2_ppm") == 500000L))
-    } finally q.stop()
+    // window 0: 3 click, 1 error (reference expects 50/50)
+    val w0 = new Timestamp(ts(1).getTime / 600000L * 600000L)
+    val counts = Seq((w0, "click", 3L), (w0, "error", 1L)).toDF("window_start", "category", "n")
+    val reference = Seq(("click", 10L), ("error", 10L), ("view", 0L)).toDF("category", "n")
+    val out = EventStreams.windowDrift(counts, reference, "category", "n")
+      .where(col("window_start") === w0)
+      .orderBy("category").collect()
+    val byCat = out.map(r => r.getAs[String]("category") -> r).toMap
+    // click: obs 3/4 = 750000 ppm vs ref 10/20 = 500000 -> |diff| 250000
+    assert(byCat("click").getAs[Long]("n") == 3L)
+    assert(byCat("click").getAs[Long]("ppm_obs") == 750000L)
+    assert(byCat("click").getAs[Long]("ppm_ref") == 500000L)
+    assert(byCat("click").getAs[Long]("abs_ppm_diff") == 250000L)
+    // error: 250000 vs 500000 -> 250000; view: reference-only row, 0 vs 0
+    assert(byCat("error").getAs[Long]("abs_ppm_diff") == 250000L)
+    assert(byCat("view").getAs[Long]("n") == 0L && byCat("view").getAs[Long]("abs_ppm_diff") == 0L)
+    // tvd2 = 500000 on every row of the window (TVD = 0.25)
+    assert(out.forall(_.getAs[Long]("tvd2_ppm") == 500000L))
   }
 
   test("streaming vector sums close with the watermark; vectorWindowDrift scores the sink") {

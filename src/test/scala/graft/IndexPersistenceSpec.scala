@@ -397,16 +397,6 @@ class IndexPersistenceSpec extends AnyFunSuite {
     val expect = counts(TextAnalysis.wordHistogram(full, "text"))
     assert(counts(loaded) == expect, "load must equal one histogram over A ++ B, replay collapsed")
 
-    // the in-memory merge agrees with the persisted path
-    assert(counts(TextAnalysis.extendWordHistogram(
-      TextAnalysis.wordHistogram(a, "text"), b, "text")) == expect)
-
-    // the maxVocab remediation verb: pruning drops exactly the sub-minFreq
-    // tail and the pruned histogram still trains
-    val pruned = TextAnalysis.pruneWordHistogram(loaded, minFreq = 2L)
-    assert(counts(pruned) == expect.filter(_._2 >= 2L))
-    assert(TextAnalysis.trainBpeTokenizer(pruned, 2, 10000000L).merges.length == 2)
-
     // retraining each family from the GROWN histogram is bit-identical to
     // training on the concatenated corpus — zero corpus reads at retrain
     assert(TextAnalysis.trainBpeTokenizer(loaded, 6, 10000000L) ==

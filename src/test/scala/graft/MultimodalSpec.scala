@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.Multimodal
+import graft.operators.{Dedup, Multimodal}
 import graft.sources.ImageExtraction
 
 class MultimodalSpec extends AnyFunSuite {
@@ -11,28 +11,6 @@ class MultimodalSpec extends AnyFunSuite {
 
   private val png = Array[Byte](0x89.toByte, 'P', 'N', 'G', 13, 10, 26, 10) ++ Array.fill[Byte](100)(7)
   private val jpg = Array[Byte](0xff.toByte, 0xd8.toByte, 0xff.toByte) ++ Array.fill[Byte](80)(3)
-
-  test("image meta: format sniffing + deterministic dims; null-safe") {
-    val df = Seq((1L, png), (2L, jpg)).toDF("id", "content")
-      .union(Seq((3L, null.asInstanceOf[Array[Byte]])).toDF("id", "content"))
-    val meta = Multimodal.withImageMeta(df).select(col("id"), col("image_meta.*")).collect()
-      .map(r => r.getLong(0) -> r).toMap
-    assert(meta(1L).getAs[String]("format") == "png")
-    assert(meta(2L).getAs[String]("format") == "jpeg")
-    assert(meta(1L).getAs[Int]("width") >= 64)
-    val again = Multimodal.withImageMeta(Seq((1L, png)).toDF("id", "content"))
-      .select(col("image_meta.width")).head().getInt(0)
-    assert(again == meta(1L).getAs[Int]("width"), "dims deterministic")
-  }
-
-  test("resize + media embedding: deterministic, correct shape") {
-    val df = Seq((1L, png)).toDF("id", "content")
-    val r1 = Multimodal.resizeImages(df, 64, 64).select("resized").head().getAs[Array[Byte]](0)
-    val r2 = Multimodal.resizeImages(df, 64, 64).select("resized").head().getAs[Array[Byte]](0)
-    assert(r1.toSeq == r2.toSeq)
-    val e = Multimodal.withMediaEmbedding(df, dim = 16).select("media_embedding").head().getSeq[Float](0)
-    assert(e.length == 16)
-  }
 
   /** A REAL PNG encoded in-memory: w x h with a deterministic gradient. */
   private def realPng(w: Int, h: Int): Array[Byte] = {
@@ -52,25 +30,13 @@ class MultimodalSpec extends AnyFunSuite {
     val resized = Multimodal.ImageIoCodec.resize(bytes, 40, 30)
     assert(Multimodal.ImageIoCodec.imageDims(resized) == (40, 30))
 
-    // grid-luminance embedding: right shape, unit norm, deterministic
-    val e1 = Multimodal.ImageIoCodec.embed(bytes, 16)
-    val e2 = Multimodal.ImageIoCodec.embed(bytes, 16)
-    assert(e1.toSeq == e2.toSeq)
-    assert(e1.length == 16)
-    assert(math.abs(e1.map(f => f.toDouble * f).sum - 1.0) < 1e-5)
-
     // junk bytes are a hard error, not silent garbage
     intercept[IllegalArgumentException](Multimodal.ImageIoCodec.imageDims(Array[Byte](1, 2, 3)))
   }
 
-  test("withImageMeta with ImageIoCodec reports true decoded dimensions") {
-    val df = Seq((1L, realPng(150, 101)), (2L, realPng(30, 30))).toDF("id", "content")
-    val meta = Multimodal.withImageMeta(df, codec = Multimodal.ImageIoCodec)
-      .select(col("id"), col("image_meta.*")).collect()
-      .map(r => r.getLong(0) -> r).toMap
-    assert(meta(1L).getAs[String]("format") == "png")
-    assert(meta(1L).getAs[Int]("width") == 150 && meta(1L).getAs[Int]("height") == 101)
-    assert(meta(2L).getAs[Int]("width") == 30 && meta(2L).getAs[Int]("height") == 30)
+  test("ImageIoCodec.imageDims reports true decoded dimensions") {
+    assert(Multimodal.ImageIoCodec.imageDims(realPng(150, 101)) == (150, 101))
+    assert(Multimodal.ImageIoCodec.imageDims(realPng(30, 30)) == (30, 30))
   }
 
   test("extractImages(decodeDims = true) filters icons by REAL decoded size") {
@@ -91,51 +57,6 @@ class MultimodalSpec extends AnyFunSuite {
       .collect()
     assert(rows.length == 1, "only the truly >=100px image survives")
     assert(rows.head.getAs[Int]("width") == 200 && rows.head.getAs[Int]("height") == 150)
-  }
-
-  /** A REAL 16-bit PCM WAV encoded in-memory: loud sine first half,
-    * silence second half.
-    */
-  private def realWav(sampleRate: Float = 8000f, seconds: Double = 0.5): Array[Byte] = {
-    import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
-    val n = (sampleRate * seconds).toInt
-    val pcm = new Array[Byte](n * 2)
-    for (i <- 0 until n / 2) { // first half: 440 Hz at 80% amplitude
-      val s = (math.sin(2 * math.Pi * 440 * i / sampleRate) * 0.8 * 32767).toShort
-      pcm(2 * i) = (s & 0xff).toByte
-      pcm(2 * i + 1) = ((s >> 8) & 0xff).toByte
-    }
-    val fmt = new AudioFormat(sampleRate, 16, 1, true, false)
-    val stream = new AudioInputStream(new java.io.ByteArrayInputStream(pcm), fmt, n.toLong)
-    val out = new java.io.ByteArrayOutputStream()
-    AudioSystem.write(stream, AudioFileFormat.Type.WAVE, out)
-    out.toByteArray
-  }
-
-  test("JavaSoundCodec reads REAL WAV metadata and RMS energy from real bytes") {
-    val bytes = realWav()
-    val (enc, rate, ch, frames, durMs) = Multimodal.JavaSoundCodec.audioMeta(bytes)
-    assert(enc == "PCM_SIGNED" && rate == 8000f && ch == 1)
-    assert(frames == 4000L)
-    assert(math.abs(durMs - 500.0) < 1.0)
-
-    val energy = Multimodal.JavaSoundCodec.audioEnergy(bytes, windows = 8)
-    assert(energy.length == 8)
-    // loud first half, silent second half
-    assert(energy.take(4).forall(_ > 0.3), energy.mkString(","))
-    assert(energy.drop(4).forall(_ < 0.01), energy.mkString(","))
-
-    intercept[Exception](Multimodal.JavaSoundCodec.audioMeta(Array[Byte](1, 2, 3)))
-  }
-
-  test("withAudioMeta/withAudioEnergy attach real columns; junk payloads go null") {
-    val df = Seq((1L, realWav()), (2L, Array[Byte](9, 9, 9))).toDF("id", "content")
-    val rows = Multimodal.withAudioEnergy(Multimodal.withAudioMeta(df), windows = 4)
-      .select(col("id"), col("audio_meta"), col("audio_energy")).collect()
-      .map(r => r.getLong(0) -> r).toMap
-    assert(rows(1L).getStruct(1).getAs[Float]("sample_rate") == 8000f)
-    assert(rows(1L).getSeq[Float](2).length == 4)
-    assert(rows(2L).isNullAt(1) && rows(2L).isNullAt(2))
   }
 
   test("frame sampling explodes one row per sampled frame, capped") {
@@ -207,7 +128,17 @@ class MultimodalSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Multimodal.ImageIoCodec.dHash(realPng(8, 8)))
   }
 
-  test("imageNearDupPairs finds the perturbed twin and not the stranger") {
+  /** Image near-dup pairs the way the Pipeline's image dedup forms them:
+    * dHash signatures banded by the shared Hamming pair generator.
+    */
+  private def dHashPairs(df: org.apache.spark.sql.DataFrame, maxHamming: Int,
+      codec: Multimodal.MediaCodec): Set[(Long, Long)] =
+    Dedup.hammingPairsFromSigs(
+      Multimodal.withImageDHash(df, "content", "dhash", codec).where(col("dhash").isNotNull),
+      "id", "dhash", maxHamming)
+      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  test("dHash pairs find the perturbed twin and not the stranger") {
     val base = realPng(120, 80)
     val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(base))
     for (y <- 35 until 45; x <- 53 until 66) img.setRGB(x, y, 0)
@@ -221,18 +152,14 @@ class MultimodalSpec extends AnyFunSuite {
 
     val df = Seq((1L, base), (2L, o1.toByteArray), (3L, o2.toByteArray))
       .toDF("id", "content")
-    val pairs = Multimodal
-      .imageNearDupPairs(df, "id", maxHamming = 6, codec = Multimodal.ImageIoCodec)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val pairs = dHashPairs(df, maxHamming = 6, codec = Multimodal.ImageIoCodec)
     assert(pairs == Set((1L, 2L)), s"expected exactly the perturbed twin pair, got $pairs")
   }
 
-  test("imageNearDupPairs with StubCodec detects exact duplicates without a decoder") {
+  test("StubCodec dHash pairs detect exact duplicates without a decoder") {
     val p1 = png ++ Array[Byte](1, 2, 3)
     val df = Seq((1L, p1), (2L, p1.clone()), (3L, jpg)).toDF("id", "content")
-    val pairs = Multimodal.imageNearDupPairs(df, "id", maxHamming = 0)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs == Set((1L, 2L)))
+    assert(dHashPairs(df, maxHamming = 0, codec = Multimodal.StubCodec) == Set((1L, 2L)))
   }
 
   test("image file sink writes payloads and returns metadata-only rows") {

@@ -79,15 +79,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(ctx.startsWith("Documents referenced:"))
     assert(ctx.contains("[Source: Spark Guide]"))
 
-    // batch retrieval: many queries, one job; per-query top hit matches
-    // the single-query vector search
-    val batchHits = ret.vectorSearchMany(
-      Seq("spark catalyst optimizer queries", "pasta tomato basil cooking"), k = 2
-    ).collect()
-    val byQuery = batchHits.groupBy(_.getAs[Long]("query_id"))
-    assert(byQuery(0L).head.getAs[String]("document_title") == "Spark Guide")
-    assert(byQuery(1L).head.getAs[String]("document_title") == "Cooking")
-
     // topic routing (X5/Q5): first known topic in the query drives the
     // title filter; no topic -> no filter
     assert(ret.extractTopic("advice on nutrition during pregnancy").contains("pregnancy"))

@@ -61,15 +61,6 @@ class SqlSurfaceSpec extends AnyFunSuite {
     assert(plain.getLong(1) == salted.getLong(1))
   }
 
-  test("two-phase count matches plain groupBy count") {
-    val df = (1 to 500).map(i => ("k" + (i % 3), i)).toDF("k", "v")
-    val plain = df.groupBy("k").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val salted = Skew.twoPhaseCount(df, "k")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(plain == salted)
-  }
-
   test("salted sum+count is bit-identical to the direct groupBy") {
     // one pathologically hot key, fractional values (decimal exactness)
     val df = (1 to 2000).map(i => (if (i % 10 == 0) "cold" + (i % 5) else "hot", i / 7.0))

@@ -53,8 +53,8 @@ class TextAnalysisSpec extends AnyFunSuite {
       (2L, "the quick brown fox jumps over the lazy dog"),
       (3L, "entirely different content in this document")
     ).toDF("id", "text")
-    val fp = df.select(col("id"), TextAnalysis.fingerprint(col("text")).as("fp"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val fp = df.select(col("id"), TextAnalysis.fingerprintPortable(col("text")).as("fp"))
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(fp(1L) == fp(2L))
     assert(fp(1L) != fp(3L))
   }
@@ -271,39 +271,44 @@ class TextAnalysisSpec extends AnyFunSuite {
     ), s"got $out")
   }
 
-  test("bpeMerges (local loop) == bpeMergesDistributed, 6 rounds, mixed corpus") {
-    // the production driver-local loop and the per-round-Spark-job twin
-    // must emit identical (round, pair_a, pair_b, n, n_symbols) rows —
-    // same overlap counting, same lexicographic tie-break, same greedy
-    // apply. Corpus chosen to exercise ties (round 3 of the classic
-    // walkthrough) and overlapping runs (aaaa).
+  private def mergeRows(df: org.apache.spark.sql.DataFrame) = df.collect()
+    .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3), r.getLong(4))).toSeq
+
+  test("bpeMerges golden rows, 6 rounds, tie + overlap corpus") {
+    // (round, pair_a, pair_b, n, n_symbols) as the per-round Spark-job
+    // training loop emitted them: same overlap counting, same
+    // lexicographic tie-break, same greedy apply. Corpus chosen to
+    // exercise ties (round 3 of the classic walkthrough) and
+    // overlapping runs (aaaa).
     val docs = Seq(
       "low low lower", "newest newest newest widest",
       "aaaa aaaa", "banana bandana").toDF("text")
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3), r.getLong(4))).toSeq
-    val local = rows(TextAnalysis.bpeMerges(docs, "text", rounds = 6))
-    val dist = rows(TextAnalysis.bpeMergesDistributed(docs, "text", rounds = 6))
-    assert(local == dist, s"local $local\n!= distributed $dist")
+    assert(mergeRows(TextAnalysis.bpeMerges(docs, "text", rounds = 6)) == Seq(
+      (1L, "a", "a", 6L, 52L), (2L, "a", "n", 4L, 48L), (3L, "e", "s", 4L, 44L),
+      (4L, "es", "t", 4L, 40L), (5L, "e", "w", 3L, 37L), (6L, "ew", "est", 3L, 34L)))
   }
 
-  test("bpeMerges local == distributed on randomized small-alphabet corpora (seeded sweep)") {
+  test("bpeMerges golden rows on seeded small-alphabet corpora") {
     // the equivalence argument (overlap counting, lexicographic
     // tie-break, greedy apply, rank monotonicity) has subtle corners —
-    // sweep seeded random corpora over a 4-letter alphabet (maximizes
-    // runs and ties, the hard cases) and pin the twins equal on each
+    // seeded random corpora over a 4-letter alphabet (maximizes runs and
+    // ties, the hard cases), each pinned to the rows the per-round
+    // Spark-job loop emitted
+    val golden = Seq(
+      Seq((1L, "b", "d", 9L, 98L), (2L, "b", "b", 7L, 92L), (3L, "a", "c", 5L, 87L)),
+      Seq((1L, "d", "d", 10L, 74L), (2L, "b", "b", 4L, 71L), (3L, "c", "d", 4L, 67L)),
+      Seq((1L, "a", "a", 6L, 109L), (2L, "b", "d", 6L, 103L), (3L, "c", "d", 6L, 97L)),
+      Seq((1L, "c", "c", 9L, 108L), (2L, "b", "c", 7L, 101L), (3L, "a", "a", 5L, 96L)),
+      Seq((1L, "c", "b", 11L, 111L), (2L, "c", "d", 7L, 104L), (3L, "a", "a", 6L, 99L)))
     val rnd = new scala.util.Random(42)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3), r.getLong(4))).toSeq
-    (1 to 5).foreach { trial =>
+    golden.zipWithIndex.foreach { case (want, trial) =>
       val docs = (1 to 8).map { _ =>
         (1 to (3 + rnd.nextInt(5))).map { _ =>
           (1 to (1 + rnd.nextInt(5))).map(_ => "abcd".charAt(rnd.nextInt(4))).mkString
         }.mkString(" ")
       }.toDF("text")
-      val local = rows(TextAnalysis.bpeMerges(docs, "text", rounds = 3))
-      val dist = rows(TextAnalysis.bpeMergesDistributed(docs, "text", rounds = 3))
-      assert(local == dist, s"trial $trial diverged:\nlocal $local\ndist  $dist")
+      val got = mergeRows(TextAnalysis.bpeMerges(docs, "text", rounds = 3))
+      assert(got == want, s"trial ${trial + 1} diverged: $got")
     }
   }
 

@@ -18,7 +18,11 @@ class TextKernelsSpec extends AnyFunSuite {
 
   /** The pre-round-19 Dedup.shingles tree, verbatim. */
   private def shinglesRef(text: Column, k: Int): Column =
-    TextFunctions.bindOnce(split(Dedup.normalized(text), " "), w =>
+    shinglesOver(split(Dedup.normalized(text), " "), k)
+
+  /** Its shingle half over an already-split word array. */
+  private def shinglesOver(words: Column, k: Int): Column =
+    TextFunctions.bindOnce(words, w =>
       array_distinct(
         filter(
           transform(
@@ -30,11 +34,12 @@ class TextKernelsSpec extends AnyFunSuite {
       ))
 
   /** The pre-round-19 TextAnalysis.wordGrams tree, verbatim. */
-  private def wordGramsRef(text: Column, n: Int): Column = {
-    val wordsExpr = TextFunctions.bindOnce(
-      split(Dedup.normalized(text), " "),
-      w => filter(w, t => length(t) > 0)
-    )
+  private def wordGramsRef(text: Column, n: Int): Column =
+    gramsRef(split(Dedup.normalized(text), " "), n)
+
+  /** Its gram half over an already-split word array. */
+  private def gramsRef(words: Column, n: Int): Column = {
+    val wordsExpr = TextFunctions.bindOnce(words, w => filter(w, t => length(t) > 0))
     TextFunctions.bindOnce(
       wordsExpr,
       w =>
@@ -188,6 +193,72 @@ class TextKernelsSpec extends AnyFunSuite {
           r.getAs[scala.collection.Seq[String]]("neu").toSeq ==
             r.getAs[scala.collection.Seq[String]]("ref").toSeq,
           s"id=${r.getLong(0)}")
+    }
+  }
+
+  test("null and empty words: kernels == HOF forms under CODEGEN_ONLY and NO_CODEGEN") {
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeProjection}
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.plans._
+
+    val arrays: Seq[Seq[String]] = Seq(
+      Seq("a", null, "", "b"),
+      Seq(null),
+      Seq("", null, ""),
+      Seq(null, "x", null, "y", "z"),
+      Seq("déjà", null, "vu", "", "déjà", "vu"),
+      Seq.empty)
+    // the HOF forms, evaluated by Spark
+    val hof = arrays.zipWithIndex.map { case (a, i) => (i.toLong, a) }.toDF("id", "words")
+      .select(
+        col("id"),
+        filter(col("words"), t => length(t) > 0).as("ne"),
+        gramsRef(col("words"), 1).as("g1"),
+        gramsRef(col("words"), 2).as("g2"),
+        gramsRef(col("words"), 3).as("g3"),
+        shinglesOver(col("words"), 2).as("sh"))
+      .orderBy("id").collect()
+      .map(r => (r.getSeq[String](1), r.getSeq[Long](2), r.getSeq[Long](3), r.getSeq[Long](4),
+        r.getSeq[String](5)))
+
+    val in = BoundReference(0, ArrayType(StringType, containsNull = true), nullable = false)
+    val exprs: Seq[Expression] = Seq(
+      NonEmptyStrings(in), WordGramDigests(in, 1), WordGramDigests(in, 2), WordGramDigests(in, 3),
+      UniBiGramDigests(in), LmTokenStream(in), WordShingles(in, 2))
+    val modeKey = "spark.sql.codegen.factoryMode"
+    val prevMode = spark.conf.getOption(modeKey)
+    org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    try {
+      for ((mode, generated) <- Seq("CODEGEN_ONLY" -> true, "NO_CODEGEN" -> false)) {
+        spark.conf.set(modeKey, mode)
+        val proj = UnsafeProjection.create(exprs)
+        assert(proj.getClass.getName.contains("Interpreted") != generated,
+          s"$mode built ${proj.getClass.getName}")
+        arrays.zip(hof).foreach { case (a, (ne, g1, g2, g3, sh)) =>
+          val row = proj(org.apache.spark.sql.catalyst.InternalRow(
+            new GenericArrayData(a.map(w => if (w == null) null else UTF8String.fromString(w)).toArray)))
+          def longs(i: Int): Seq[Long] = row.getArray(i).toLongArray().toSeq
+          val ctx = s"$mode ${a.map(String.valueOf)}"
+          assert(row.getArray(0).toSeq[UTF8String](StringType).map(_.toString) == ne, ctx)
+          assert(longs(1) == g1 && longs(2) == g2 && longs(3) == g3, ctx)
+          assert(longs(4) == g1 ++ g2.map(_ | TextKernels.BiTag), ctx)
+          val stream = row.getArray(5)
+          val got = (0 until stream.numElements()).map { i =>
+            val t = stream.getStruct(i, 3)
+            (t.getLong(0), if (t.isNullAt(1)) None else Some(t.getLong(1)),
+              if (t.isNullAt(2)) None else Some(t.getLong(2)))
+          }
+          val want = g1.indices.map(i =>
+            (g1(i), if (i > 0) Some(g1(i - 1)) else None, if (i > 0) Some(g2(i - 1)) else None))
+          assert(got == want, ctx)
+          assert(row.getArray(6).toSeq[UTF8String](StringType).map(_.toString) == sh, ctx)
+        }
+      }
+    } finally prevMode match {
+      case Some(m) => spark.conf.set(modeKey, m)
+      case None => spark.conf.unset(modeKey)
     }
   }
 

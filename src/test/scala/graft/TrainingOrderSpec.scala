@@ -60,23 +60,4 @@ class TrainingOrderSpec extends AnyFunSuite {
       assert(z == mortonRef(a & 0xFFFF, b & 0xFFFF), s"zorder2($a, $b)")
     }
   }
-
-  test("zorderLayout: partitions hold disjoint z-ranges (files prune on both dims)") {
-    val pts = (for (x <- 0L until 64L; y <- 0L until 64L) yield (x, y)).toDF("x", "y")
-    val laid = Layout.zorderLayout(pts, "x", "y", 8)
-      .withColumn("pid", spark_partition_id())
-      .withColumn("z", Layout.zorder2(col("x"), col("y")))
-    val ranges = laid.groupBy("pid").agg(min("z").as("lo"), max("z").as("hi"))
-      .collect().map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1)
-    assert(ranges.length > 1, "multiple partitions")
-    ranges.sliding(2).foreach {
-      case Array((_, hi1), (lo2, _)) => assert(hi1 <= lo2, s"z-ranges disjoint: $hi1 vs $lo2")
-      case _ =>
-    }
-    // locality payoff: a predicate on y alone overlaps strictly fewer
-    // partitions than a y-filter would under an x-only sort (which smears
-    // every y across every partition)
-    val yHit = laid.where(col("y") < 8).select("pid").distinct().count()
-    assert(yHit < 8, s"y-filter must prune some z-partitions, hit $yHit/8")
-  }
 }

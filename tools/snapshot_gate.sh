@@ -14,6 +14,9 @@ OUT="/tmp/snapshot_gate_out"
 echo "[gate] sbt compile"
 sbt -batch compile
 
+echo "[gate] no unreached public defs"
+python3 tools/uncalled_api.py
+
 echo "[gate] correctness battery at $SF"
 rm -rf "$OUT"
 SPARK_GRAFT_CPUS=8 sbt -batch "runMain graft.Verify /root/testdata/$SF $OUT"
