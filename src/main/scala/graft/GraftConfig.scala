@@ -13,7 +13,6 @@ final case class ExtractionConfig(
       * the reference is likewise gated behind availability).
       */
     method: String = "jvm",
-    ocrDpi: Int = 300,
     // Quality thresholds for text-density heuristics (src/config.py:52-57)
     minCharsPerPage: Int = 100,
     minWordsPerPage: Int = 20,

@@ -39,6 +39,11 @@ final class RestServer(spark: SparkSession, config: GraftConfig = GraftConfig.de
   private val retriever = new Retriever(spark, pipeline, config)
   private val mapper = new ObjectMapper()
 
+  // `max_tokens` bounds of /search/context (the reference's request
+  // schema, src/api/schemas.py:128)
+  private val MinContextTokens = 100
+  private val MaxContextTokens = 16000
+
   // ---------------------------------------------------------------- JSON
 
   private def setField(node: ObjectNode, name: String, v: Any): Unit = v match {
@@ -118,6 +123,20 @@ final class RestServer(spark: SparkSession, config: GraftConfig = GraftConfig.de
   private def textField(node: com.fasterxml.jackson.databind.JsonNode, name: String): Option[String] =
     Option(node.get(name)).filterNot(_.isNull).map(_.asText)
 
+  /** Integer field bounded to `[lo, hi]`; JSON null and absent both give
+    * `default`. Anything else — a fraction, a string, a value out of
+    * range — is a client error (the reference's `Field(ge=, le=)`
+    * request schema, src/api/schemas.py:106,128).
+    */
+  private def boundedInt(node: com.fasterxml.jackson.databind.JsonNode, name: String,
+      default: Int, lo: Int, hi: Int): Either[String, Int] =
+    Option(node.get(name)).filterNot(_.isNull) match {
+      case None => Right(default)
+      case Some(v) if v.isIntegralNumber && v.canConvertToInt && v.asInt >= lo && v.asInt <= hi =>
+        Right(v.asInt)
+      case Some(v) => Left(s"$name must be an integer in [$lo, $hi], got: $v")
+    }
+
   private def handle(ex: HttpExchange): Unit = {
     val method = ex.getRequestMethod
     val segments = ex.getRequestURI.getPath.split("/").filter(_.nonEmpty).toList
@@ -181,9 +200,12 @@ final class RestServer(spark: SparkSession, config: GraftConfig = GraftConfig.de
               error(ex, 400, s"Invalid search mode: $other. Use: vector, hybrid, keyword, adc")
               return
           }
-          val k = Option(req.get("limit")).filterNot(_.isNull).map(_.asInt).getOrElse(10)
+          val k = boundedInt(req, "limit", config.search.defaultK, 1, config.search.maxK) match {
+            case Left(msg) => error(ex, 400, msg); return
+            case Right(v)  => v
+          }
           val titleFilter = textField(req, "title_filter").filter(_.nonEmpty)
-          respond(ex, 200, dfToJsonArray(retriever.search(query, mode, k, titleFilter), math.max(k, 1)))
+          respond(ex, 200, dfToJsonArray(retriever.search(query, mode, k, titleFilter), k))
 
         case ("POST", "search" :: "context" :: Nil) =>
           val req = parseBody(ex) match {
@@ -192,7 +214,11 @@ final class RestServer(spark: SparkSession, config: GraftConfig = GraftConfig.de
           }
           val query = textField(req, "query").getOrElse("")
           if (query.isEmpty) { error(ex, 400, "query is required"); return }
-          val maxTokens = Option(req.get("max_tokens")).filterNot(_.isNull).map(_.asInt).getOrElse(4000)
+          val maxTokens = boundedInt(req, "max_tokens", config.search.defaultMaxTokens,
+              MinContextTokens, MaxContextTokens) match {
+            case Left(msg) => error(ex, 400, msg); return
+            case Right(v)  => v
+          }
           val node = mapper.createObjectNode()
           node.put("query", query)
           node.put("context", retriever.getContext(query, maxTokens))

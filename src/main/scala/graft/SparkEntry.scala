@@ -699,8 +699,8 @@ object SparkEntry {
       .limit(20)
   }
 
-  /** Persisted-LSH index lifecycle (the writeIvf/loadIvf story for the
-    * SimHash family, VERDICT r8 #8): build the signature index over the
+  /** Persisted-LSH index lifecycle for the SimHash family (VERDICT
+    * r8 #8): build the signature index over the
     * 80% base corpus (vec_id % 5 != 0), WRITE it partitioned by signature
     * prefix, LOAD the artifact back, EXTEND it with the 20% batch under
     * the loaded planes, and answer an exact top-20 over the result. The
@@ -1016,8 +1016,8 @@ object SparkEntry {
     * q_near_dedup: pairs + the iterative CC build run ONCE per corpus and
     * are reused ([[graft.operators.Dedup.clustersCached]], resident in
     * [[graft.util.SessionIndices]] until flush) — the artifact
-    * lifecycle a 100 TB pipeline uses (labels are an ingest-time product,
-    * persisted via Dedup.writeClusters; queries reuse, never recompute).
+    * lifecycle a 100 TB pipeline uses (labels are an ingest-time product;
+    * queries reuse, never recompute).
     */
   private def portableClusterLabels(s: SparkSession, dir: String): DataFrame =
     graft.operators.Dedup.clustersCached(

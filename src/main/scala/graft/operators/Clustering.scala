@@ -62,8 +62,7 @@ object Clustering {
 
   /** Trained centroids — plain data, serializable, the unit of
     * incremental reuse: fit once at ingest, [[assignWith]] every later
-    * batch against the FROZEN centroids in one narrow pass (the
-    * [[VectorSearch.extendIvf]] contract for clustering: O(batch), no
+    * batch against the FROZEN centroids in one narrow pass (O(batch), no
     * refit; re-fit = periodic compaction).
     */
   final case class KmeansModel(centroids: Array[Array[Long]], quantScale: Int) {

@@ -122,14 +122,14 @@ object CorpusHygiene {
 
   /** Per-document contamination SCORE: the fraction of a document's
     * distinct n-gram shingles present in the eval set — the graded
-    * signal behind [[decontaminate]]'s binary gate (threshold curation,
+    * signal behind [[contaminatedIds]]' binary gate (threshold curation,
     * partial-overlap audits, leakage dashboards). Same plan shape as
     * [[contaminatedIds]]: corpus grams left-join the BROADCAST distinct
     * eval grams, then one (id)-keyed count aggregation — corpus text
     * never shuffles. Documents with fewer than `n` words have zero
     * shingles and score (0, 0, 0.0) via the explode_outer row.
     *
-    * Size contract (same as [[contaminatedIds]]/[[decontaminate]]): the
+    * Size contract (same as [[contaminatedIds]]): the
     * eval side is a BENCHMARK, not a corpus — its distinct gram set must
     * fit the broadcast/driver limit (tens of millions of grams ≈ a few
     * GB; typical eval suites are orders of magnitude under that). Scoring
@@ -159,27 +159,6 @@ object CorpusHygiene {
         "frac",
         when(col("n_grams") > 0, col("n_hits").cast("double") / col("n_grams"))
           .otherwise(lit(0.0)))
-  }
-
-  /** Drop contaminated documents from the corpus (anti-join of
-    * [[contaminatedIds]]). The contaminated-id set is usually a small
-    * minority and broadcasts; for corpora where boilerplate n-grams
-    * (license headers, templates) contaminate a large fraction, pass
-    * `broadcastIds = false` to fall back to a shuffled anti-join on the
-    * uniform id key instead of collecting the set to the driver.
-    */
-  def decontaminate(
-      corpus: DataFrame,
-      idCol: String,
-      textCol: String,
-      evalSet: DataFrame,
-      evalTextCol: String,
-      n: Int = 13,
-      broadcastIds: Boolean = true
-  ): DataFrame = {
-    val bad = contaminatedIds(corpus, idCol, textCol, evalSet, evalTextCol, n)
-    val rhs = if (broadcastIds) broadcast(bad) else bad
-    corpus.join(rhs, corpus(idCol) === rhs("id"), "left_anti")
   }
 
   /** [[contaminatedIds]] for eval sets too large to broadcast-hash-join

@@ -60,9 +60,10 @@ object Curation {
     *                  shingles present in the eval set) reaches
     *                  `maxContamination` are dropped. `maxContamination`
     *                  near 0 approaches the published binary any-13-gram
-    *                  drop ([[CorpusHygiene.decontaminate]]); higher
-    *                  thresholds keep docs that merely quote a line of a
-    *                  benchmark while still dropping wholesale inclusions.
+    *                  drop (anti-join [[CorpusHygiene.contaminatedIds]]);
+    *                  higher thresholds keep docs that merely quote a line
+    *                  of a benchmark while still dropping wholesale
+    *                  inclusions.
     * @param qualityModel when set, the MODEL-BASED quality gate: docs the
     *                  fitted [[QualityClassifier.CentroidModel]] predicts
     *                  −1 are dropped — the distilled-teacher filter
@@ -137,7 +138,7 @@ object Curation {
       tokenCounter: Option[TokenCounter] = None
   ): DataFrame = clusters match {
     // artifact reuse: with a precomputed label table (ingest-time
-    // Dedup.nearDupClusters -> writeClusters) the whole fuzzy-dedup pass
+    // Dedup.nearDupClusters) the whole fuzzy-dedup pass
     // is the filter stage plus the label-table thinning — no pair
     // detection, no iterative CC, nothing checkpointed (and so nothing to
     // release). `jaccardThreshold` is ignored on this path: the threshold
@@ -279,9 +280,8 @@ object Curation {
     * a left-anti join, corpus text never shuffles (the score side moves
     * only (id, gram-digest) pairs against broadcast eval grams). When
     * boilerplate overlap makes the contaminated set itself large, pass
-    * `broadcastContaminatedIds = false` (the [[CorpusHygiene
-    * .decontaminate]] escape hatch) to anti-join by shuffle instead of
-    * collecting the ids to the driver.
+    * `broadcastContaminatedIds = false` to anti-join by shuffle instead
+    * of collecting the ids to the driver.
     */
   private def contaminationGate(
       df: DataFrame,
@@ -297,7 +297,7 @@ object Curation {
     case Some(eval) =>
       require(maxContamination > 0.0 && maxContamination <= 1.0,
         s"maxContamination must be in (0, 1]: $maxContamination (0 would drop every doc — " +
-          "frac >= 0 always holds; for the binary any-gram drop use CorpusHygiene.decontaminate)")
+          "frac >= 0 always holds; for the binary any-gram drop anti-join CorpusHygiene.contaminatedIds)")
       val bad = CorpusHygiene
         .contaminationFraction(df, idCol, textCol, eval, evalTextCol, contamN)
         .where(col("frac") >= maxContamination)

@@ -233,7 +233,7 @@ object Dedup {
       // signed with different numHashes would silently skew est_jaccard
       // (matches / size(sig_a) with a truncated zip). Mixed lengths mean
       // the index is mis-built — fail the job loudly rather than emit
-      // biased estimates ([[writeSigIndex]] also validates on append).
+      // biased estimates.
       .withColumn("matches",
         when(size(col("sig_a")) === size(col("sig_b")),
           aggregate(zip_with(col("sig_a"), col("sig_b"),
@@ -350,8 +350,7 @@ object Dedup {
     * (band_idx, band_val) keys (pigeonhole-complete recall) and join on
     * the band — 8-byte signatures only, payloads never move. At 100 TB
     * the index side's banding is computed on read here; persist the
-    * banded projection as an artifact (the [[writeSigIndex]]
-    * convention) to skip even that scan per batch.
+    * banded projection as an artifact to skip even that scan per batch.
     */
   def incrementalHammingPairs(
       indexSigs: DataFrame,
@@ -484,7 +483,7 @@ object Dedup {
     nearDedupFromClusters(docs, idCol, nearDupClusters(docs, idCol, pairs, idACol, idBCol))
 
   /** [[nearDedup]] over a PRECOMPUTED label table (the output of
-    * [[nearDupClusters]], possibly persisted with [[writeClusters]]):
+    * [[nearDupClusters]], e.g. served by [[clustersCached]]):
     * keep the MIN-id member of each cluster AMONG THE DOCS PRESENT. The
     * representative is computed over `docs`, not assumed to be the label
     * value: when the canonical doc was filtered away upstream (quality
@@ -494,7 +493,7 @@ object Dedup {
     * computed over a sub- or super-set corpus stays usable.
     *
     * This is the artifact-reuse half of near-dup dedup: the iterative CC
-    * build runs ONCE at ingest ([[nearDupClusters]] -> [[writeClusters]]),
+    * build runs ONCE per corpus ([[nearDupClusters]] -> [[clustersCached]]),
     * and every later dedup/curation pass is this per-cluster min plus one
     * anti-join — all on id-only columns, so document payloads never
     * shuffle. (When `docs` IS the label corpus, the min present member is
@@ -552,133 +551,10 @@ object Dedup {
       .withColumnRenamed("_rep_cluster", "cluster")
   }
 
-  /** Persist a cluster label table as a parquet artifact — the durable
-    * form of [[nearDupClusters]] (same lifecycle as `FtsIndex.write` and
-    * `VectorSearch.writeIvf`): pairs and labels are ingest-time products,
-    * and recomputing the pair set plus the whole CC iteration per query
-    * is exactly the recompute a 100 TB pipeline cannot afford.
-    */
-  def writeClusters(labels: DataFrame, path: String): Unit =
-    // sibling lease: this store's root IS the parquet dataset, and the
-    // overwrite deletes the root wholesale — an in-root lock would be
-    // erased by the very verb it protects
-    graft.sources.StoreLease.withLease(path, "write-clusters", sibling = true) {
-      labels.select("id", "cluster").write.mode("overwrite").parquet(path)
-    }
-
-  /** Persist a MinHash signature index ([[minhashSignaturePortable]] /
-    * [[minhashSignature]] output) as the durable artifact behind
-    * [[incrementalSigPairs]]. `append = true` is the daily-ingest path:
-    * the new batch's signatures land as ADDITIONAL parquet files — old
-    * rows are never rewritten, so index maintenance cost is O(batch)
-    * regardless of corpus size.
-    */
-  def writeSigIndex(sigs: DataFrame, path: String, append: Boolean = false): Unit =
-    // writer lease (r16 verdict #1 — the append mode is the daily-ingest
-    // path, exactly the two-drivers-appending exposure the shard store is
-    // defended against); sibling placement because the non-append mode
-    // overwrites the store root wholesale, lock included
-    graft.sources.StoreLease.withRenewableLease(
-      path, if (append) "append-sigs" else "write-sigs", sibling = true) { lease =>
-    // numHashes of THIS batch (O(batch) scan — append-path maintenance
-    // cost stays proportional to the batch, never the corpus)
-    val batchLen = sigs.agg(
-      min(size(col("sig"))).as("lo"), max(size(col("sig"))).as("hi")).head()
-    val emptyBatch = batchLen.isNullAt(0)
-    val (lo, hi) = if (emptyBatch) (0, 0) else (batchLen.getInt(0), batchLen.getInt(1))
-    require(emptyBatch || lo == hi,
-      s"sig batch mixes signature lengths $lo..$hi — one numHashes per index")
-    val hconf = sigs.sparkSession.sparkContext.hadoopConfiguration
-    if (append) {
-      // parquet append does NOT validate schemas across files: appending
-      // array<bigint> sigs onto an array<string> index would corrupt it
-      // silently, surfacing only on the next probe's scan — fail at
-      // write time instead
-      val existingDf =
-        try Some(sigs.sparkSession.read.parquet(path))
-        catch { case _: org.apache.spark.sql.AnalysisException => None } // first write
-      existingDf.foreach { idx =>
-        val existing = idx.schema("sig").dataType
-        val incoming = sigs.schema("sig").dataType
-        // catalogString drops nullability: a persisted index reads back
-        // with containsNull=true while a freshly computed batch carries
-        // containsNull=false — identical element types must still append
-        require(existing.catalogString == incoming.catalogString,
-          s"sig index at $path holds ${existing.catalogString}, " +
-            s"refusing to append ${incoming.catalogString}")
-        // numHashes must match too: mixed-length signatures skew the
-        // agreement-fraction estimate downstream (the sidecar read is one
-        // small file, not an index scan). An index written before the
-        // sidecar existed has no certificate — derive numHashes from one
-        // stored row instead of trusting the NEW batch to define it
-        // (stamping the batch's length would falsely certify uniformity
-        // for a possibly different-length index).
-        val idxLen = sigMetaNumHashes(path, hconf).orElse(
-          idx.select(size(col("sig")).as("n")).limit(1).collect()
-            .headOption.map(_.getInt(0)))
-        idxLen.foreach { n =>
-          require(emptyBatch || n == hi,
-            s"sig index at $path was built with numHashes=$n, refusing to append numHashes=$hi")
-          // pre-sidecar index gains its certificate here even when the
-          // batch itself is empty
-          writeSigMeta(path, n, hconf)
-        }
-      }
-    }
-    sigs.select("id", "sig").write
-      .mode(if (append) "append" else "overwrite").parquet(path)
-    // heartbeat after the verb's long pole (a full-corpus overwrite can
-    // outlive any fixed ttl) so the sidecar stamp + release stay protected
-    lease.renew()
-    if (!emptyBatch) writeSigMeta(path, hi, hconf)
-  }
-
-  /** numHashes sidecar for a persisted signature index: one tiny JSON file
-    * next to the parquet parts, validated on append so a probe can trust
-    * every signature in the index shares one length.
-    */
-  private def sigMetaPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_graft_sig_meta.json")
-
-  private def writeSigMeta(path: String, numHashes: Int,
-      hconf: org.apache.hadoop.conf.Configuration): Unit = {
-    val p = sigMetaPath(path)
-    val fs = p.getFileSystem(hconf)
-    val out = fs.create(p, true)
-    try out.write(s"""{"numHashes":$numHashes}""".getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  // the session's hadoopConfiguration, not a fresh Configuration(): the
-  // sidecar must resolve the SAME filesystem (S3A credentials, HDFS
-  // settings supplied via spark.hadoop.*) as the adjacent parquet write
-  private[graft] def sigMetaNumHashes(path: String,
-      hconf: org.apache.hadoop.conf.Configuration): Option[Int] = {
-    val p = sigMetaPath(path)
-    val fs = p.getFileSystem(hconf)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val body =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      "\"numHashes\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(body).map(_.group(1).toInt)
-    }
-  }
-
-  /** Load a persisted signature index written by [[writeSigIndex]]. */
-  def loadSigIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** Load a persisted label table written by [[writeClusters]]. */
-  def loadClusters(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
   // Session-resident label tables (graft.util.SessionIndices): one CC run
-  // per corpus key per session. At cluster scale the table is written
-  // with writeClusters and loaded back; the registry serves the
-  // local/bench lifecycle. Cached DataFrames are bound to the building
-  // session; the registry must be cleared across session restarts.
+  // per corpus key per session. Cached DataFrames are bound to the
+  // building session; the registry must be cleared across session
+  // restarts.
   private val resident = graft.util.SessionIndices.namespace[DataFrame]("dedup.clusters")
 
   /** Build-once cluster labels per corpus `key`; later callers reuse the

@@ -4,8 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Multimodal columns for training-data pipelines: image/video payloads
-  * as opaque `binary` columns, plus the perceptual-hash and frame-sample
-  * operators over them.
+  * as opaque `binary` columns, plus the perceptual-hash operator over
+  * them.
   *
   * Codecs plug into the [[MediaCodec]] seam: [[ImageIoCodec]] REALLY
   * decodes PNG/JPEG/GIF/BMP via the JDK's javax.imageio (dims, resize,
@@ -207,29 +207,5 @@ object Multimodal {
       outCol: String = "dhash", codec: MediaCodec = StubCodec): DataFrame = {
     val f = udf { (bytes: Array[Byte]) => Option(bytes).map(codec.dHash) }
     df.withColumn(outCol, f(col(contentCol)))
-  }
-
-  /** Frame-sample a video payload: emit one row per sampled frame index
-    * with a deterministic frame payload (STUB: frames are hash-derived
-    * slices; a real codec extracts I-frames). `explode`-shaped — the
-    * generator pattern for media.
-    */
-  def sampleFrames(df: DataFrame, everyNth: Int, maxFrames: Int,
-      contentCol: String = "content", codec: MediaCodec = StubCodec): DataFrame = {
-    require(everyNth > 0, s"sampleFrames: everyNth must be positive, got $everyNth")
-    require(maxFrames > 0, s"sampleFrames: maxFrames must be positive, got $maxFrames")
-    val framesUdf = udf { (bytes: Array[Byte]) =>
-      if (bytes == null) Seq.empty[(Int, Array[Byte])]
-      else {
-        val nFrames = math.max(1, bytes.length / 1024)
-        (0 until nFrames by everyNth).take(maxFrames).map { i =>
-          (i, codec.resize(bytes ++ BigInt(i).toByteArray, 32, 32))
-        }
-      }
-    }
-    df.withColumn("frame", explode(framesUdf(col(contentCol))))
-      .withColumn("frame_index", col("frame._1"))
-      .withColumn("frame_bytes", col("frame._2"))
-      .drop("frame")
   }
 }

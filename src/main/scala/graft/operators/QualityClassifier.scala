@@ -207,9 +207,7 @@ object QualityClassifier {
   /** The two model-constant gap terms (‖S⁺‖²·n⁻², ‖S⁻‖²·n⁺²) must fit
     * decimal(38,0) for [[classify]]'s arithmetic to stay exact; the
     * dot terms depend on the corpus and are covered by the runtime
-    * raise_error guard instead. Checked at fit AND merge time because
-    * [[mergeCentroid]] can cross the bound incrementally even when
-    * every constituent fit was inside it.
+    * raise_error guard instead. Checked at fit AND load time.
     */
   private def requireGapHeadroom(m: CentroidModel, where: String): Unit = {
     val lim = BigInt(10).pow(38)
@@ -221,49 +219,6 @@ object QualityClassifier {
         s"(|S+|^2*nNeg^2 has ${tPos.toString.length} digits, " +
         s"|S-|^2*nPos^2 has ${tNeg.toString.length}; limit 38) - " +
         "shrink the labeled sample or nFeatures")
-  }
-
-  /** Merge two fitted models: class counts and feature sums ADD, so a
-    * merged model is BIT-IDENTICAL to one fit on the concatenated
-    * samples (spec-pinned) — the property that makes the fit
-    * embarrassingly parallel and incrementally updatable: fit each new
-    * labeled batch alone and fold it in, never re-reading old samples.
-    * (This is why the model stores raw sums, not means.)
-    */
-  private def addSums(x: Map[Int, Long], y: Map[Int, Long]): Map[Int, Long] =
-    (x.keySet ++ y.keySet).iterator
-      .map(f => f -> (x.getOrElse(f, 0L) + y.getOrElse(f, 0L)))
-      .toMap
-
-  def mergeCentroid(a: CentroidModel, b: CentroidModel): CentroidModel = {
-    require(
-      a.nFeatures == b.nFeatures,
-      s"mergeCentroid: feature-space mismatch ${a.nFeatures} vs ${b.nFeatures}")
-    val m = CentroidModel(
-      a.nFeatures, a.nPos + b.nPos, a.nNeg + b.nNeg,
-      addSums(a.sumPos, b.sumPos), addSums(a.sumNeg, b.sumNeg))
-    requireGapHeadroom(m, "mergeCentroid")
-    m
-  }
-
-  /** [[mergeCentroid]] for the k-class model: classes merge by label
-    * (a label present on one side only carries over unchanged), output
-    * label order stays sorted like [[fitCentroidK]]'s.
-    */
-  def mergeCentroidK(a: CentroidKModel, b: CentroidKModel): CentroidKModel = {
-    require(
-      a.nFeatures == b.nFeatures,
-      s"mergeCentroidK: feature-space mismatch ${a.nFeatures} vs ${b.nFeatures}")
-    val byLabel = (a.classes ++ b.classes).groupBy(_.label)
-    CentroidKModel(
-      a.nFeatures,
-      byLabel.toSeq.sortBy(_._1).map {
-        case (label, Seq(one)) => one
-        case (label, Seq(x, y)) =>
-          CentroidKModel.ClassStats(label, x.n + y.n, addSums(x.sums, y.sums))
-        case (label, more) =>
-          throw new IllegalStateException(s"label '$label' appears ${more.size} times")
-      })
   }
 
   /** K-class centroid model: one class-sum table per label — bounded
@@ -503,58 +458,6 @@ object QualityClassifier {
       s"loadModel: degenerate class counts +1:${m.nPos} -1:${m.nNeg} in $path")
     requireGapHeadroom(m, "loadModel")
     m
-  }
-
-  /** Persist a k-class model: `(feature, y, s)` sparse class-sum rows
-    * (≤ k·nFeatures) + a sidecar carrying nFeatures and every class's
-    * `(label, n)` — labels ride in the regex-parsed sidecar, so quotes
-    * and backslashes in labels are rejected (the writeLsh convention).
-    */
-  def writeModelK(m: CentroidKModel, path: String, spark: org.apache.spark.sql.SparkSession): Unit =
-    graft.sources.StoreLease.withLease(path, "write-model") {
-    m.classes.foreach(c =>
-      require(!c.label.exists(ch => ch == '"' || ch == '\\'),
-        s"writeModelK: label '${c.label}' contains a quote or backslash, " +
-          "unsupported by the params sidecar"))
-    import spark.implicits._
-    val rows = for {
-      c <- m.classes
-      (f, s) <- c.sums.toSeq.sortBy(_._1)
-    } yield (f.toLong, c.label, s)
-    rows.toDF("feature", "y", "s")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/model")
-    val classesJson = m.classes
-      .map(c => s"""{"label":"${c.label}","n":${c.n}}""")
-      .mkString("[", ",", "]")
-    writeSidecar(spark, path,
-      s"""{"kind":"centroidK","nFeatures":${m.nFeatures},"classes":$classesJson}""")
-  }
-
-  /** Load a persisted k-class model (inverse of [[writeModelK]]). The
-    * class list comes from the SIDECAR (rows cannot represent a class
-    * whose sums are all zero), and every row's label must belong to it.
-    */
-  def loadModelK(spark: org.apache.spark.sql.SparkSession, path: String): CentroidKModel = {
-    val json = readSidecar(spark, path)
-    require(
-      json.contains(""""kind":"centroidK""""),
-      s"loadModelK: $path/params.json is not a k-class centroid model sidecar: $json")
-    val classRe = """\{"label":"([^"]*)","n":(\d+)\}""".r
-    val classCounts = classRe.findAllMatchIn(json).map(m => m.group(1) -> m.group(2).toLong).toSeq
-    require(classCounts.nonEmpty, s"loadModelK: no classes in $path/params.json")
-    val df = spark.read.parquet(s"$path/model")
-    requireModelSchema(df, Seq("feature" -> "bigint", "y" -> "string", "s" -> "bigint"), path)
-    val byLabel = df.collect()
-      .groupBy(_.getString(1))
-      .map { case (y, rows) => y -> rows.map(r => r.getLong(0).toInt -> r.getLong(2)).toMap }
-    val unknown = byLabel.keySet -- classCounts.map(_._1).toSet
-    require(unknown.isEmpty,
-      s"loadModelK: model rows carry labels ${unknown.mkString(", ")} absent from the sidecar in $path")
-    CentroidKModel(
-      sidecarNum(json, "nFeatures", path).toInt,
-      classCounts.sortBy(_._1).map { case (label, n) =>
-        CentroidKModel.ClassStats(label, n, byLabel.getOrElse(label, Map.empty))
-      })
   }
 
   /** fit + classify in one call: train on the rows of `docs` matched by

@@ -200,9 +200,8 @@ object Sketches {
   /** HyperLogLog register table for `df(valueCol)`: `(idx, r)` with one
     * row per TOUCHED register (max rank wins). This is the persistable /
     * mergeable artifact: at most 2^p rows no matter the input, and the
-    * bucket-wise MAX of two tables is the table of the union
-    * ([[hllMergeRegisters]]) — per-shard sketches roll up without a
-    * second corpus pass.
+    * bucket-wise MAX of two tables is the table of the union — per-shard
+    * sketches roll up without a second corpus pass.
     *
     * Scale shape vs [[kmvDistinct]]: NO distinct prepass — every input
     * row maps straight to (idx, rank) and the max partially aggregates
@@ -219,18 +218,6 @@ object Sketches {
       .select(idx.as("idx"), rank.as("r"))
       .groupBy("idx")
       .agg(max("r").as("r"))
-  }
-
-  /** Merge HLL register tables built with the same `p`: bucket-wise max.
-    * `union` keeps this shuffle at (sketch rows) x (number of shards) —
-    * never data-sized. `p` is the CALLER's invariant — the (idx, r)
-    * schema does not carry it, so mixing p values silently produces a
-    * meaningless sketch; [[hllEstimate]]'s range guard catches the gross
-    * mismatches (an idx or rank outside its p's range) but not all.
-    */
-  def hllMergeRegisters(sketches: Seq[DataFrame]): DataFrame = {
-    require(sketches.nonEmpty, "hllMergeRegisters needs at least one sketch")
-    sketches.reduce(_ unionByName _).groupBy("idx").agg(max("r").as("r"))
   }
 
   /** The HLL estimate from a register table: one row — `n_zero`

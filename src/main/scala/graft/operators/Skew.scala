@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
 /** Skew-mitigation utilities. AQE's skew-join splitting
   * (`spark.sql.adaptive.skewJoin.enabled`, on by default in
   * [[graft.GraftSession]]) handles sort-merge skew at runtime; explicit
-  * salting remains the tool for pathological hot keys in aggregations and
-  * for joins AQE can't split (e.g. bucketed inputs).
+  * salting remains the tool for pathological hot keys in aggregations.
   */
 object Skew {
 
@@ -32,31 +31,6 @@ object Skew {
     */
   private def rowSalt(df: DataFrame, salt: Int): Column =
     pmod(xxhash64(df.columns.toIndexedSeq.map(col): _*), lit(salt)).cast("int")
-
-  /** Salted skew join: replicate each `right` row `salt` times and scatter
-    * `left` across the replicas, so one hot key spreads over `salt`
-    * reducers instead of one. Use when `right` is small-ish per key (it is
-    * replicated) and `left` carries the skew.
-    */
-  def saltedJoin(
-      left: DataFrame,
-      right: DataFrame,
-      key: String,
-      salt: Int,
-      joinType: String = "inner"
-  ): DataFrame = {
-    // right rows are replicated `salt` times, so join types that emit
-    // unmatched RIGHT rows would duplicate them `salt`-fold
-    require(
-      Set("inner", "left", "left_outer", "leftouter").contains(joinType.toLowerCase),
-      s"saltedJoin supports inner/left joins only (right side is replicated), got $joinType"
-    )
-    val saltedLeft = left.withColumn("_salt", rowSalt(left, salt))
-    val saltedRight = right.withColumn("_salt", explode(typedlit((0 until salt).toList)))
-    saltedLeft
-      .join(saltedRight, Seq(key, "_salt"), joinType)
-      .drop("_salt")
-  }
 
   /** Salted sum+count: the general hot-key aggregation. Phase 1 spreads
     * each group over `salt` reducers (partial sum/count per (keys, salt)),

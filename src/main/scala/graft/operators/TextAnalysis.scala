@@ -350,10 +350,9 @@ object TextAnalysis {
     * Plain associative counts — the simplest persisted index artifact in
     * the family ([[graft.operators.VectorSearch.writeLsh]] et al.): train
     * once on a trusted corpus, [[writeLm]] it, then [[scoreWithLm]] every
-    * incoming batch without touching the training text again, and
-    * [[extendLm]] merges new batches in O(batch + vocab). The token
+    * incoming batch without touching the training text again. The token
     * total is `sum(uni.cnt1)` by construction, so it is never stored —
-    * extension cannot drift it out of sync.
+    * it cannot drift out of sync with the tables.
     */
   final case class BigramLm(uni: DataFrame, bi: DataFrame)
 
@@ -400,19 +399,6 @@ object TextAnalysis {
     BigramLm(
       spark.read.parquet(s"$path/uni"),
       spark.read.parquet(s"$path/bi"))
-
-  /** Merge a new batch into the LM: count the batch, union, re-sum —
-    * counts are associative, so extend-then-score equals
-    * train-on-everything exactly (pinned by spec). O(batch) count work
-    * plus a vocabulary-sized merge; existing counts are never rescanned
-    * from text.
-    */
-  def extendLm(lm: BigramLm, batch: DataFrame, textCol: String): BigramLm = {
-    val b = trainBigramLm(batch, textCol)
-    BigramLm(
-      lm.uni.unionByName(b.uni).groupBy("w").agg(sum("cnt1").as("cnt1")),
-      lm.bi.unionByName(b.bi).groupBy("pair").agg(sum("cnt2").as("cnt2")))
-  }
 
   /** CCNet-style corpus bucketing: split rows into `nBuckets` contiguous
     * rank slices of the `valueCol` total order (ascending, `tieCol`

@@ -454,8 +454,8 @@ object VectorSearch {
     * ONCE at build time — the per-query signature pass over the whole
     * corpus (what [[SimHashLsh.withSignature]] costs when applied inside
     * each query) is exactly what this removes — plus an 8-bit signature
-    * PREFIX column for storage partitioning. Mirrors [[IvfIndex]]'s
-    * lifecycle: build → [[writeLsh]] (partitioned by prefix) →
+    * PREFIX column for storage partitioning. Lifecycle:
+    * build → [[writeLsh]] (partitioned by prefix) →
     * [[loadLsh]] → [[extendLsh]] (incremental, O(batch), same planes).
     */
   final case class LshIndex(indexed: DataFrame, lsh: SimHashLsh, vecCol: String) {
@@ -527,7 +527,7 @@ object VectorSearch {
   /** Incrementally extend an LSH index with a batch WITHOUT touching
     * existing rows: the batch is signed with the index's OWN planes (a
     * fresh signer here would silently split the signature space) and
-    * unioned — O(batch), the [[extendIvf]] contract for the LSH family.
+    * unioned — O(batch) work, existing rows never rewritten.
     * `newVectors` must carry the index's original corpus schema.
     */
   def extendLsh(index: LshIndex, newVectors: DataFrame): LshIndex = {
@@ -539,10 +539,10 @@ object VectorSearch {
   }
 
   /** Persist an LSH index partitioned BY SIGNATURE PREFIX: probing
-    * becomes parquet partition pruning, the [[writeIvf]] story for the
-    * LSH family. The plane parameters ride in a params sidecar so
-    * [[loadLsh]] reconstructs the identical signer (extending or probing
-    * a loaded index with different planes is meaningless).
+    * becomes parquet partition pruning. The plane parameters ride in a
+    * params sidecar so [[loadLsh]] reconstructs the identical signer
+    * (extending or probing a loaded index with different planes is
+    * meaningless).
     */
   def writeLsh(index: LshIndex, path: String): Unit =
     // writer lease (r16 verdict #1): persisted-index writes have the same
@@ -654,48 +654,23 @@ object VectorSearch {
     BandedLshIndex(tables, bands, idCol, vecCol)
   }
 
-  /** Choose the band-table count L that meets a recall target — the
+  /** Choose the band-table count L that meets each recall target — the
     * banded-LSH sizing answer, measured per corpus instead of solved by
     * hand: expected recall@k is the mean over sampled (query,
     * true-neighbor) pairs of 1 - (1 - q_i)^L, where q_i = p_i^bandBits
     * is the pair's one-table bucket-collision probability and
     * p_i = 1 - theta_i/pi its per-plane agreement (the SimHash
-    * collision identity). Returns the smallest L whose mean clears
-    * `recallTarget` PLUS the measured correlated-tables `slack` (see
-    * [[calibrateBandedLMulti]] — the returned index delivers the
-    * target, not just the model's prediction of it); fails loudly past
-    * `maxL` (the target needs wider bands or brute force, not more
-    * tables).
+    * collision identity). Returns, per target, the smallest L whose mean
+    * clears the target PLUS the measured correlated-tables `slack`;
+    * fails loudly past `maxL` (the target needs wider bands or brute
+    * force, not more tables). The probe stage runs ONCE for all targets;
+    * each target's L search is pure driver math over the same q_i
+    * sample, so one call sizes a whole recall/cost menu.
     *
     * The per-pair averaging matters: f(q) = 1 - (1-q)^L is concave in
     * q, so the closed form ceil(log(1-target)/log(1-qbar)) over a mean
     * qbar OVERSTATES recall whenever pair difficulty varies (Jensen) —
     * hard neighbors near 90 degrees dominate the misses.
-    *
-    * Cost: ONE batched exact top-k job over `sample` for the whole
-    * query panel ([[topKBatch]] bounded heaps — r17 verdict #6; the
-    * panel ids must be numeric, topKBatch's contract) + nQueries x k
-    * driver rows of math. Run on a corpus SAMPLE; the q_i distribution
-    * is a geometry property that stabilizes at modest sample sizes.
-    */
-  def calibrateBandedL(
-      sample: DataFrame,
-      idCol: String,
-      vecCol: String,
-      bandBits: Int = 8,
-      recallTarget: Double = 0.9,
-      k: Int = 10,
-      nQueries: Int = 20,
-      maxL: Int = 64,
-      slack: Double = 0.05
-  ): Int =
-    calibrateBandedLMulti(
-      sample, idCol, vecCol, bandBits, Seq(recallTarget), k, nQueries, maxL, slack)(recallTarget)
-
-  /** [[calibrateBandedL]] for SEVERAL targets at once: the probe stage
-    * (nQueries exact top-k jobs — the only expensive part) runs ONCE;
-    * each target's L search is pure driver math over the same q_i
-    * sample. Use this when sizing a recall/cost menu.
     *
     * `slack` (VERDICT r13 #5) is the model's measured optimism on real
     * corpora: the per-pair independence assumption ignores that the L
@@ -707,6 +682,12 @@ object VectorSearch {
     * `slack = 0` for the raw model answer. `target + slack` must stay
     * below 1 — past that, no table count can absorb the correlation
     * (widen the bands or use exact search).
+    *
+    * Cost: ONE batched exact top-k job over `sample` for the whole
+    * query panel ([[topKBatch]] bounded heaps — r17 verdict #6; the
+    * panel ids must be numeric, topKBatch's contract) + nQueries x k
+    * driver rows of math. Run on a corpus SAMPLE; the q_i distribution
+    * is a geometry property that stabilizes at modest sample sizes.
     */
   def calibrateBandedLMulti(
       sample: DataFrame,
@@ -720,14 +701,14 @@ object VectorSearch {
       slack: Double = 0.05
   ): Map[Double, Int] = {
     require(recallTargets.nonEmpty && recallTargets.forall(t => t > 0.0 && t < 1.0),
-      s"calibrateBandedL: recall targets must be in (0, 1), got ${recallTargets.mkString(",")}")
-    require(slack >= 0.0, s"calibrateBandedL: slack must be >= 0, got $slack")
+      s"calibrateBandedLMulti: recall targets must be in (0, 1), got ${recallTargets.mkString(",")}")
+    require(slack >= 0.0, s"calibrateBandedLMulti: slack must be >= 0, got $slack")
     require(recallTargets.forall(_ + slack < 1.0),
-      s"calibrateBandedL: target + slack must stay below 1 (targets " +
+      s"calibrateBandedLMulti: target + slack must stay below 1 (targets " +
         s"${recallTargets.mkString(",")} with slack $slack) — lower the slack, widen the " +
         "bands, or use exact search")
     require(nQueries >= 1 && k >= 1 && bandBits >= 1 && maxL >= 1,
-      s"calibrateBandedL: nQueries/k/bandBits/maxL must be positive")
+      s"calibrateBandedLMulti: nQueries/k/bandBits/maxL must be positive")
     // deterministic query panel: the nQueries lowest ids — probed in ONE
     // batched [[topKBatch]] job (r17 verdict #6: the per-query topK loop
     // ran nQueries sequential driver-paced jobs for the same scores; the
@@ -751,37 +732,15 @@ object VectorSearch {
         val p = 1.0 - math.acos(c) / math.Pi
         math.pow(p, bandBits)
       }
-    require(qs.nonEmpty, "calibrateBandedL: empty sample")
+    require(qs.nonEmpty, "calibrateBandedLMulti: empty sample")
     recallTargets.map { target =>
       target -> (1 to maxL).find { l =>
         qs.map(q => 1.0 - math.pow(1.0 - q, l)).sum / qs.length - slack >= target
       }.getOrElse(throw new IllegalArgumentException(
-        f"calibrateBandedL: recall $target%.2f (+ slack $slack%.2f) unreachable at " +
+        f"calibrateBandedLMulti: recall $target%.2f (+ slack $slack%.2f) unreachable at " +
           f"bandBits=$bandBits even with L=$maxL tables — widen the sweep with fewer " +
           "bandBits or use exact search"))
     }.toMap
-  }
-
-  /** Incrementally extend a banded index with a batch WITHOUT touching
-    * existing rows — the [[extendLsh]]/[[extendIvf]] contract for the
-    * band-OR family: the batch is signed with the index's OWN L bands
-    * (fresh signers would split the signature space per table) and
-    * unioned into every table; a loaded index's `combined` dataset gets
-    * the same batch with its `tbl` column so the one-scan probe path
-    * sees the new rows too. O(batch x L) work, rows only appended.
-    * `newVectors` must carry the index's original corpus schema.
-    */
-  def extendBandedLsh(index: BandedLshIndex, newVectors: DataFrame): BandedLshIndex = {
-    val signedPerBand = index.bands.map(b =>
-      b.withSignature(newVectors, index.vecCol).withColumnRenamed("sig", "band"))
-    val tables = index.tables.zip(signedPerBand).map { case (t, s) => t.unionByName(s) }
-    val combined = index.combined.map { c =>
-      val batch = signedPerBand.zipWithIndex
-        .map { case (s, i) => s.withColumn("tbl", lit(i)) }
-        .reduce(_ unionByName _)
-      c.unionByName(batch)
-    }
-    index.copy(tables = tables, combined = combined)
   }
 
   /** Persist the L tables as ONE dataset partitioned by (tbl, band) —
@@ -856,9 +815,9 @@ object VectorSearch {
     * corpus into `nLists` cells; a query probes only the `nProbe` cells
     * whose centroids are nearest, then exact-reranks within them. The
     * standard trade: recall vs the fraction of the corpus scanned
-    * (nProbe/nLists). At cluster scale the corpus is *written partitioned
-    * by cell id*, so probing is partition pruning on the parquet scan —
-    * a 100 TB corpus answers a query by reading only probed cells.
+    * (nProbe/nLists). The product index is session-resident
+    * ([[buildIvfCached]]): probing filters the persisted `indexed` frame
+    * to the probed cells.
     */
   final case class IvfIndex(
       indexed: org.apache.spark.sql.DataFrame,
@@ -880,78 +839,6 @@ object VectorSearch {
         .map(_._1)
       topK(indexed.where(col("ivf_cell").isin(probes.toSeq: _*)), vecCol, queryVec, k, tieBreak)
     }
-  }
-
-  /** Incrementally extend an IVF index with new vectors WITHOUT
-    * re-training: each new vector is assigned to its nearest existing
-    * centroid (squared-L2 argmin — the same metric KMeans trained with,
-    * ties to the smaller cell id) and appended to that cell. The
-    * streaming-ingest contract of [[graft.operators.FtsIndex]]
-    * `extendForBatch`, for the vector side: O(batch) work, no O(corpus)
-    * rebuild; assignment is `nLists` column-algebra dot products fused
-    * into the batch scan (no UDF, no shuffle). The frozen quantizer drifts
-    * as the corpus grows — re-train periodically as a compaction job
-    * (recall is measured, not assumed: VectorFunctionsSpec's recall
-    * contract covers the aligned and over-partitioned cases).
-    *
-    * `newVectors` must carry the index's original corpus schema (it is
-    * unioned by name under the cell assignment).
-    */
-  def extendIvf(index: IvfIndex, newVectors: DataFrame): IvfIndex = {
-    // ||v - c||^2 = ||v||^2 - 2 v.c + ||c||^2; ||v||^2 is constant per row,
-    // so argmin_j is argmin of (||c_j||^2 - 2 v.c_j) — one dot product per
-    // cell, assembled into a struct argmin (least compares (dist, cell)
-    // lexicographically: exact ties pick the smaller cell, matching the
-    // sortBy in annTopK's probe order)
-    val candidates = index.centroids.zipWithIndex.map { case (c, j) =>
-      val c2 = c.foldLeft(0.0)((s, x) => s + x * x)
-      struct(
-        (lit(c2) - lit(2.0) * VectorFunctions.dotProduct(
-          col(index.vecCol),
-          typedLit(c.toSeq)
-        )).as("dist"),
-        lit(j).as("cell")
-      )
-    }
-    // least() needs >= 2 args; a single-cell quantizer assigns trivially
-    val cellExpr =
-      if (candidates.length == 1) lit(0)
-      else least(candidates.toIndexedSeq: _*).getField("cell")
-    val assigned = newVectors.withColumn("ivf_cell", cellExpr)
-    IvfIndex(index.indexed.unionByName(assigned), index.centroids, index.vecCol)
-  }
-
-  /** Persist an IVF index partitioned BY CELL: probing then becomes
-    * parquet partition pruning — a query reads only `nProbe` of `nLists`
-    * directories. Pair with [[loadIvf]] to get the storage-backed index
-    * back (this method only writes).
-    */
-  def writeIvf(index: IvfIndex, path: String): Unit =
-    graft.sources.StoreLease.withRenewableLease(path, "write-ivf") { lease =>
-    // cluster by cell before the partitioned write (same file-count
-    // rationale as writeLsh: one file per cell directory, not one per
-    // input-partition x cell). Count pinned to the cell count (writeLsh
-    // r18 lesson: keys-only repartition is AQE-coalescible down to one
-    // directory-creating task); rows of a cell stay in one partition,
-    // so the one-file-per-directory layout is unchanged.
-    index.indexed
-      .repartition(math.min(math.max(index.centroids.length, 1), 4096), col("ivf_cell"))
-      .write.mode("overwrite").partitionBy("ivf_cell").parquet(s"$path/cells")
-    lease.renew() // the cell write is the long pole; protect the tail
-    graft.util.Sidecar.write(
-      index.indexed.sparkSession, s"$path/centroids.json",
-      index.centroids.zipWithIndex
-        .map { case (c, i) => s"""{"cell":$i,"centroid":[${c.mkString(",")}]}""" }
-        .mkString("[", ",", "]"))
-  }
-
-  def loadIvf(spark: org.apache.spark.sql.SparkSession, path: String, vecCol: String): IvfIndex = {
-    val json = graft.util.Sidecar.read(spark, s"$path/centroids.json")
-    val centroids = """"centroid":\[([^\]]*)\]""".r
-      .findAllMatchIn(json)
-      .map(_.group(1).split(",").map(_.toDouble))
-      .toArray
-    IvfIndex(spark.read.parquet(s"$path/cells"), centroids, vecCol)
   }
 
   /** Build an IVF index over an `array<float>` column with a seeded
@@ -983,8 +870,7 @@ object VectorSearch {
   }
 
   // Session-resident IVF indices (graft.util.SessionIndices): ingest-time
-  // build, query-time read; at cluster scale the indexed DF is a table
-  // partitioned by ivf_cell instead of an in-memory persist.
+  // build, query-time read.
   private val resident = graft.util.SessionIndices.namespace[IvfIndex]("ivf")
 
   def buildIvfCached(key: String, corpus: => org.apache.spark.sql.DataFrame, vecCol: String,
@@ -1004,7 +890,7 @@ object VectorSearch {
     * (floor(x * quantScale), BIGINT — the [[Clustering]] convention).
     * Plain data: serializable, broadcast-size (nSub * k * subDim longs),
     * frozen after fit — encode later batches against it without refit,
-    * the [[Clustering.KmeansModel]] / extendIvf lifecycle.
+    * the [[Clustering.KmeansModel]] lifecycle.
     */
   final case class PqModel(codebook: Array[Array[Array[Long]]], quantScale: Int) {
     def nSub: Int = codebook.length
@@ -1250,7 +1136,7 @@ object VectorSearch {
   }
 
   /** Choose the ADC shortlist size that meets a recall target — the
-    * [[calibrateBandedL]] treatment for the PQ-shortlist + exact-rescore
+    * [[calibrateBandedLMulti]] treatment for the PQ-shortlist + exact-rescore
     * operating point (r17 verdict #5: `SearchMode.Adc` ran at a fixed
     * shortlist with its recall only known from a hand-measured
     * datasheet). MEASURED, not modeled: over a deterministic query panel
@@ -1339,8 +1225,8 @@ object VectorSearch {
     graft.sources.StoreLease.withRenewableLease(path, "write-pq") { lease =>
     val writer = cellCol match {
       // one file per cell directory, not one per input-partition x cell
-      // (the writeIvf rationale). Count pinned so AQE cannot fold the
-      // partitioned write into one directory-creating task (writeLsh
+      // (the writeLsh rationale). Count pinned so AQE cannot fold the
+      // partitioned write into one directory-creating task (writeLsh's
       // r18 lesson); `numCells` (the IVF list count — one write task per
       // leaf directory, the natural width at any scale) when the caller
       // knows it, session parallelism otherwise — cells sharing a task
@@ -1362,16 +1248,11 @@ object VectorSearch {
         s""""quantScale":${model.quantScale},"flat":[${flat.mkString(",")}]}""")
   }
 
-  /** Load a persisted PQ index (inverse of [[writePq]]): the frozen
-    * codebook and the code table, ready for [[pqSearch]] (pre-filter on
-    * the cell column first for IVF-PQ probes).
-    */
-  def loadPq(spark: org.apache.spark.sql.SparkSession, path: String): (PqModel, DataFrame) =
-    (loadPqModel(spark, path), spark.read.parquet(s"$path/codes"))
-
-  /** Load ONLY the codebook sidecar of a persisted PQ artifact — the
-    * frozen-codebook consumer ([[StreamingIngest]]'s per-batch encode, a
-    * shard encoder) needs the model, not the historical codes table.
+  /** Load the codebook sidecar of a persisted PQ artifact (inverse of
+    * [[writePq]]'s codebook half) — the frozen-codebook consumers
+    * ([[StreamingIngest]]'s per-batch encode, [[graft.pipeline.Retriever]]'s
+    * ADC mode) need the model; the code table is plain parquet under
+    * `codes/`.
     */
   def loadPqModel(spark: org.apache.spark.sql.SparkSession, path: String): PqModel = {
     val where = s"$path/codebook.json"

@@ -132,7 +132,7 @@ object CommitProtocol {
     * the spec harness's entry point (process-global like [[install]]:
     * do not interleave with concurrent swaps under a different protocol).
     */
-  def withProtocol[T](p: CommitProtocol)(f: => T): T = {
+  private[graft] def withProtocol[T](p: CommitProtocol)(f: => T): T = {
     val prev = installed
     installed = p
     try f finally { installed = prev }

@@ -109,10 +109,10 @@ object LeaseProtocol {
   * export/append/retract/compact/recertify
   * ([[graft.operators.SequencePacking]]), the maintained word
   * histogram's write/append/retract/compact
-  * ([[graft.operators.TextAnalysis]]), the persisted signature index
-  * ([[graft.operators.Dedup.writeSigIndex]]), the persisted ANN indexes
-  * ([[graft.operators.VectorSearch]]'s writeLsh/writeBandedLsh/writeIvf/
-  * writePq) and tokenizer artifacts
+  * ([[graft.operators.TextAnalysis]]), the drift reference profile
+  * ([[graft.streaming.IngestGuardrail.writeProfile]]), the persisted ANN
+  * indexes ([[graft.operators.VectorSearch]]'s
+  * writeLsh/writeBandedLsh/writePq) and tokenizer artifacts
   * ([[graft.operators.TextAnalysis.writeTokenizer]]) — runs under
   * [[withLease]]; a second concurrent writer — another job's append
   * racing a takedown from a different driver — fails LOUDLY at
@@ -169,15 +169,12 @@ object StoreLease {
     * failure mid-callback (stolen/lapsed lease) is rethrown as soon as
     * the callback returns — the work may have happened, but it is NOT
     * reported as success, because exclusivity lapsed mid-verb.
-    */
-  def withHeartbeat[T](lease: LeaseProtocol.Held, periodMs: Long)(f: => T): T =
-    withHeartbeatChecked(lease, periodMs)(_ => f)
-
-  /** [[withHeartbeat]] handing `f` a `check` thunk that PROVES the lease
-    * is still exclusively ours at the instant of the call: it rethrows
-    * any failure the background heartbeat already recorded, then runs a
-    * synchronous renewal (loud on stolen/lapsed), serialized with the
-    * beat thread. Call it at the last point before a publish (ADVICE
+    *
+    * `f` gets a `check` thunk that PROVES the lease is still exclusively
+    * ours at the instant of the call: it rethrows any failure the
+    * background heartbeat already recorded, then runs a synchronous
+    * renewal (loud on stolen/lapsed), serialized with the beat thread.
+    * Call it at the last point before a publish (ADVICE
     * r17: without it, a lease known-lost mid-write was only surfaced
     * AFTER the swap's rename had already landed — post-hoc loudness
     * where an abort-before-publish was available). A check that throws
@@ -267,7 +264,7 @@ object StoreLease {
     * the spec harness's entry point (process-global like [[install]]:
     * do not interleave with concurrent verbs under a different protocol).
     */
-  def withProtocol[T](p: LeaseProtocol)(f: => T): T = {
+  private[graft] def withProtocol[T](p: LeaseProtocol)(f: => T): T = {
     val prev = installed
     installed = p
     try f finally { installed = prev }

@@ -142,12 +142,11 @@ object EventStreams {
     * so registers fold incrementally under append mode with state
     * bounded by open windows x 2^p (never by distinct values — the
     * reason this streams where exact distinct or KMV's distinct prepass
-    * cannot). The sink is the mergeable artifact: roll windows up to
-    * days, or union shards, with [[graft.operators.Sketches
-    * .hllMergeRegisters]]; read estimates batch-side with
-    * [[windowedHllEstimate]]. Same register math as the batch sketch
-    * ([[graft.operators.Sketches.hllRegisters]]), so batch == streaming
-    * by construction.
+    * cannot). The sink is the mergeable artifact: windows roll up to
+    * days, and shards union, by a bucket-wise MAX per `idx`; read
+    * estimates batch-side with [[windowedHllEstimate]]. Same register
+    * math as the batch sketch ([[graft.operators.Sketches.hllRegisters]]),
+    * so batch == streaming by construction.
     */
   def windowedHllRegisters(
       stream: DataFrame,

@@ -45,9 +45,10 @@ object IngestGuardrail {
     * read). Run at profile-refresh cadence, not per batch.
     */
   def writeProfile(corpus: DataFrame, category: Column, path: String): Unit =
-    // sibling lease: the profile's root IS the parquet dataset, and two
-    // writers refreshing the same reference profile concurrently would
-    // interleave undetected (the writeSigIndex exposure)
+    // sibling lease: the profile's root IS the parquet dataset, and the
+    // overwrite deletes the root wholesale (an in-root lock would be
+    // erased by the very verb it protects); two writers refreshing the
+    // same reference profile concurrently would interleave undetected
     graft.sources.StoreLease.withLease(path, "write-profile", sibling = true) {
       corpus
         .select(category.as("category"))

@@ -101,7 +101,7 @@ object RetrievalLadder {
         ids(loaded.annTopK(queries(qid), fetchK, col("vec_id"))))
     }
 
-    // calibrateBandedL: the datasheet row is GENERATED, not hand-solved
+    // calibrateBandedLMulti: the datasheet row is GENERATED, not hand-solved
     // (VERDICT r10 #4) — calibrate L for two recall targets at b=6, then
     // measure the calibrated index. Calibration and measurement here both
     // use the INCLUSIVE convention (query vector is a corpus row and its

@@ -36,8 +36,7 @@ object Sidecar {
   /** First integer field `key` in `json`; `where` names the artifact in
     * the failure message (e.g. the sidecar path). Throws
     * IllegalArgumentException — the malformed-artifact convention every
-    * load surface shares (loadTokenizer's unknown-family guard,
-    * writeSigIndex's refusing-to-append).
+    * load surface shares (loadTokenizer's unknown-family guard).
     */
   def num(json: String, key: String, where: String): Long =
     s""""$key":(-?\\d+)""".r.findFirstMatchIn(json)

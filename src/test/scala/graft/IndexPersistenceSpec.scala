@@ -5,40 +5,13 @@ import org.apache.spark.sql.functions._
 import graft.operators.VectorSearch
 
 /** Storage-backed index forms: the SCALE.md claims made executable —
-  * IVF cells persisted as parquet partitions so probing is partition
-  * pruning, verified in the physical plan.
+  * LSH signature prefixes, banded-LSH leaves and PQ cells persisted as
+  * parquet partitions so probing is partition pruning, verified in the
+  * physical plan.
   */
 class IndexPersistenceSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
-
-  test("IVF round-trips through partitioned parquet; probing prunes partitions") {
-    val rnd = new scala.util.Random(3)
-    val dim = 8
-    val data = (0 until 4).flatMap { c =>
-      val center = Array.fill(dim)(rnd.nextGaussian() * 10)
-      (0 until 40).map(i => (c.toLong * 100 + i, center.map(x => (x + rnd.nextGaussian() * 0.1).toFloat)))
-    }
-    val df = data.toDF("id", "vec")
-    val ivf = VectorSearch.buildIvf(df, "vec", nLists = 4)
-
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
-    VectorSearch.writeIvf(ivf, dir)
-    val loaded = VectorSearch.loadIvf(spark, dir, "vec")
-    assert(loaded.centroids.length == 4)
-    assert(loaded.indexed.count() == 160)
-
-    val query = data.head._2
-    val hits = loaded.annTopK(query, 3, col("id"), nProbe = 1).collect()
-    assert(hits.head.getAs[Long]("id") == data.head._1)
-
-    // the probe filter must reach the scan as a PartitionFilter (pruning),
-    // not a post-scan Filter
-    val plan = loaded.annTopK(query, 3, col("id"), nProbe = 1)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [") && plan.contains("ivf_cell"),
-      s"expected partition pruning on ivf_cell in:\n${plan.take(2000)}")
-  }
 
   test("PQ index round-trips; cell-partitioned codes prune on probe; append path encodes against the loaded codebook") {
     val rnd = new scala.util.Random(11)
@@ -54,7 +27,8 @@ class IndexPersistenceSpec extends AnyFunSuite {
 
     val dir = java.nio.file.Files.createTempDirectory("graft-pq").toString
     VectorSearch.writePq(model, codes, dir, cellCol = Some("cell"), numCells = Some(4))
-    val (loadedModel, loadedCodes) = VectorSearch.loadPq(spark, dir)
+    val loadedModel = VectorSearch.loadPqModel(spark, dir)
+    val loadedCodes = spark.read.parquet(s"$dir/codes")
 
     // codebook + quantScale round-trip exactly
     assert(loadedModel.quantScale == model.quantScale)
@@ -203,42 +177,6 @@ class IndexPersistenceSpec extends AnyFunSuite {
     assert(mean >= 0.8, s"banded recall@10 $mean below 0.8 floor (per-query: $recalls)")
   }
 
-  test("banded LSH extend: batch signed with the LOADED bands; both probe paths see it") {
-    import graft.operators.VectorSearch
-    val rnd = new scala.util.Random(29)
-    val dim = 16
-    def vecs(ids: Range): Seq[(Long, Array[Float])] =
-      ids.map(i => (i.toLong, Array.fill(dim)(rnd.nextGaussian().toFloat)))
-    val baseRows = vecs(0 until 80)
-    val batchRows = vecs(100 until 120)
-    val built = VectorSearch.buildBandedLsh(
-      baseRows.toDF("id", "vec"), "id", "vec", dim, numTables = 6, bandBits = 6, seed = 3L)
-    val dir = java.nio.file.Files.createTempDirectory("banded-extend").toString + "/idx"
-    VectorSearch.writeBandedLsh(built, dir)
-    val loaded = VectorSearch.loadBandedLsh(spark, dir)
-
-    // extend the LOADED index: the batch must be signed with the loaded
-    // (reconstructed) bands, and the fresh-built full-corpus index must
-    // answer identically — the extendLsh parity contract
-    val extended = VectorSearch.extendBandedLsh(loaded, batchRows.toDF("id", "vec"))
-    val fresh = VectorSearch.buildBandedLsh(
-      (baseRows ++ batchRows).toDF("id", "vec"), "id", "vec", dim, numTables = 6, bandBits = 6, seed = 3L)
-    def answer(ix: VectorSearch.BandedLshIndex, q: Array[Float]) =
-      ix.annTopK(q, 5, col("id")).select("id", "score").collect()
-        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val q = batchRows.head._2
-    assert(answer(extended, q) == answer(fresh, q),
-      "extended-after-load diverged from a fresh full-corpus build")
-    // the batch's own vector is findable through the extended index
-    assert(answer(extended, q).head._1 == batchRows.head._1)
-    // the extended COMBINED dataset carries every row exactly once per table
-    assert(extended.combined.get.count() == (80 + 20) * 6)
-    // extending an in-memory (no combined) index keeps combined empty
-    val extendedInMem = VectorSearch.extendBandedLsh(built, batchRows.toDF("id", "vec"))
-    assert(extendedInMem.combined.isEmpty)
-    assert(answer(extendedInMem, q) == answer(fresh, q))
-  }
-
   test("banded LSH write refuses indexes the sidecar cannot round-trip") {
     import graft.operators.VectorSearch
     val corpus = Seq((1L, Array(0.1f, 0.2f)), (2L, Array(0.3f, 0.4f))).toDF("id", "vec")
@@ -269,33 +207,26 @@ class IndexPersistenceSpec extends AnyFunSuite {
 
   test("signature index: write, append a day's batch, probe the loaded artifact") {
     import graft.operators.Dedup
+    // the index is a plain parquet artifact: a day's batch appends files
     val dir = java.nio.file.Files.createTempDirectory("sig-index").toString + "/sigs"
     val dup = "one two three four five six seven eight nine ten eleven twelve"
     val day0 = Seq((1L, dup), (2L, "totally different starting corpus text here")).toDF("doc_id", "text")
     val day1 = Seq((10L, dup)).toDF("doc_id", "text")
     val day2 = Seq((20L, dup)).toDF("doc_id", "text")
 
-    Dedup.writeSigIndex(Dedup.minhashSignaturePortable(day0, "doc_id", "text"), dir)
+    Dedup.minhashSignaturePortable(day0, "doc_id", "text").write.parquet(dir)
     val sig1 = Dedup.minhashSignaturePortable(day1, "doc_id", "text")
-    val p1 = Dedup.incrementalSigPairs(Dedup.loadSigIndex(spark, dir), sig1)
+    val p1 = Dedup.incrementalSigPairs(spark.read.parquet(dir), sig1)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(p1 == Set((1L, 10L)), p1.toString)
-    Dedup.writeSigIndex(sig1, dir, append = true)
+    sig1.write.mode("append").parquet(dir)
 
     // day 2 probes the grown index: pairs against BOTH day-0 and day-1 docs
     val sig2 = Dedup.minhashSignaturePortable(day2, "doc_id", "text")
-    val p2 = Dedup.incrementalSigPairs(Dedup.loadSigIndex(spark, dir), sig2)
+    val p2 = Dedup.incrementalSigPairs(spark.read.parquet(dir), sig2)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(p2 == Set((1L, 20L), (10L, 20L)), p2.toString)
-    assert(Dedup.loadSigIndex(spark, dir).count() == 3)
-
-    // appending a differently-typed signature frame is refused at write
-    // time (parquet append would otherwise silently mix schemas)
-    val longSigs = Seq((99L, Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L, 8L))).toDF("id", "sig")
-    val err = intercept[IllegalArgumentException] {
-      Dedup.writeSigIndex(longSigs, dir, append = true)
-    }
-    assert(err.getMessage.contains("refusing to append"), err.getMessage)
+    assert(spark.read.parquet(dir).count() == 3)
   }
 
   // ---- tokenizer persistence (the train-once/apply-forever artifact) ----

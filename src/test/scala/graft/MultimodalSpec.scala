@@ -59,15 +59,6 @@ class MultimodalSpec extends AnyFunSuite {
     assert(rows.head.getAs[Int]("width") == 200 && rows.head.getAs[Int]("height") == 150)
   }
 
-  test("frame sampling explodes one row per sampled frame, capped") {
-    val video = Array.fill[Byte](8192)(42) // "8 frames"
-    val df = Seq((1L, video)).toDF("id", "content")
-    val frames = Multimodal.sampleFrames(df, everyNth = 2, maxFrames = 3).collect()
-    assert(frames.length == 3)
-    assert(frames.map(_.getAs[Int]("frame_index")).toSeq == Seq(0, 2, 4))
-    assert(frames.head.getAs[Array[Byte]]("frame_bytes").nonEmpty)
-  }
-
   test("image extraction: fan-out, icon filter, path scheme, stable ids") {
     val docs = Seq(
       ("doc1", "/x/a.pdf", "unique content alpha for images".getBytes),

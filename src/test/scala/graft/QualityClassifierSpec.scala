@@ -173,65 +173,12 @@ class QualityClassifierSpec extends AnyFunSuite {
       s"expected a loud gap-overflow failure, got: $e")
   }
 
-  test("mergeCentroid enforces the gap-headroom bound it can cross incrementally") {
-    // each half is inside the decimal(38,0) headroom bound; the fold
-    // crosses it — merge must refuse rather than hand classify() a model
-    // whose constant terms overflow at score time
-    val half = QualityClassifier.CentroidModel(
-      nFeatures = 16, nPos = 1L, nNeg = 1000000000L,
-      sumPos = Map(0 -> 3000000000L), sumNeg = Map(1 -> 1L))
-    // sanity: one half alone merges with a tiny model fine — so the
-    // intercept below proves the BOUND is crossed incrementally, not
-    // that requireGapHeadroom rejects everything
-    val tiny = QualityClassifier.CentroidModel(
-      nFeatures = 16, nPos = 1L, nNeg = 1L,
-      sumPos = Map(0 -> 1L), sumNeg = Map(1 -> 1L))
-    val ok = QualityClassifier.mergeCentroid(half, tiny)
-    assert(ok.nNeg == half.nNeg + 1L)
-    val e = intercept[IllegalArgumentException] {
-      QualityClassifier.mergeCentroid(half, half)
-    }
-    assert(e.getMessage.contains("gap terms exceed decimal(38,0)"))
-  }
-
   test("fitCentroidK fails loudly on null labels") {
     val bad = Seq((1L, "a b", Some("x")), (2L, "c d", None)).toDF("doc_id", "text", "dom")
     val e = intercept[IllegalArgumentException] {
       QualityClassifier.fitCentroidK(bad, "doc_id", "text", col("dom"), 16)
     }
     assert(e.getMessage.contains("null label"))
-  }
-
-  test("mergeCentroid(fit(A), fit(B)) is bit-identical to fit(A union B)") {
-    // each half must carry both classes for fitCentroid's guard — split
-    // as 1,4 / 2,3,5,6
-    val a = docs.where(col("doc_id").isin(1L, 4L))
-    val b = docs.where(!col("doc_id").isin(1L, 4L))
-    val merged = QualityClassifier.mergeCentroid(
-      QualityClassifier.fitCentroid(a, "doc_id", "text", col("y"), 64),
-      QualityClassifier.fitCentroid(b, "doc_id", "text", col("y"), 64))
-    val whole = QualityClassifier.fitCentroid(docs, "doc_id", "text", col("y"), 64)
-    assert(merged.nPos == whole.nPos && merged.nNeg == whole.nNeg)
-    assert(merged.sumPos == whole.sumPos && merged.sumNeg == whole.sumNeg)
-    assert(merged.normPos2 == whole.normPos2 && merged.normNeg2 == whole.normNeg2)
-  }
-
-  test("mergeCentroidK folds per-label; one-sided labels carry over; mismatched spaces are loud") {
-    val a = domainDocs.where(col("doc_id") <= 4) // classes a, b
-    val b = domainDocs.where(col("doc_id") > 4) // class c only
-    val merged = QualityClassifier.mergeCentroidK(
-      QualityClassifier.fitCentroidK(a, "doc_id", "text", col("dom"), 128),
-      QualityClassifier.fitCentroidK(b, "doc_id", "text", col("dom"), 128))
-    val whole = QualityClassifier.fitCentroidK(domainDocs, "doc_id", "text", col("dom"), 128)
-    assert(merged.classes.map(_.label) == whole.classes.map(_.label))
-    merged.classes.zip(whole.classes).foreach { case (m, w) =>
-      assert(m.n == w.n && m.sums == w.sums && m.norm2 == w.norm2, s"class ${m.label}")
-    }
-    val e = intercept[IllegalArgumentException] {
-      QualityClassifier.mergeCentroidK(
-        whole, QualityClassifier.fitCentroidK(a, "doc_id", "text", col("dom"), 64))
-    }
-    assert(e.getMessage.contains("feature-space mismatch"))
   }
 
   test("writeModel/loadModel round-trip: the reloaded model scores bit-identical gaps") {
@@ -256,10 +203,14 @@ class QualityClassifierSpec extends AnyFunSuite {
   }
 
   test("loadModel is loud on a kind mismatch and on a foreign schema") {
+    // a k-class sidecar over k-class rows: the kind check refuses it
+    // before the schema is read
     val dir = java.nio.file.Files.createTempDirectory("graft-qmodelk").toString
-    val mk = QualityClassifier.fitCentroidK(
-      domainDocs, "doc_id", "text", col("dom"), nFeatures = 64)
-    QualityClassifier.writeModelK(mk, dir, spark)
+    Seq((0L, "a", 1L)).toDF("feature", "y", "s")
+      .write.mode("overwrite").parquet(s"$dir/model")
+    val pk = new java.io.PrintWriter(s"$dir/params.json")
+    try pk.write("""{"kind":"centroidK","nFeatures":64,"classes":[{"label":"a","n":1}]}""")
+    finally pk.close()
     val e = intercept[IllegalArgumentException] {
       QualityClassifier.loadModel(spark, dir)
     }
@@ -275,31 +226,6 @@ class QualityClassifierSpec extends AnyFunSuite {
       QualityClassifier.loadModel(spark, dir2)
     }
     assert(e2.getMessage.contains("schema"))
-  }
-
-  test("writeModelK/loadModelK round-trip: identical pred_class, labels sidecar-guarded") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-kmodel").toString
-    val mk = QualityClassifier.fitCentroidK(
-      domainDocs, "doc_id", "text", col("dom"), nFeatures = 64)
-    QualityClassifier.writeModelK(mk, dir, spark)
-    val rk = QualityClassifier.loadModelK(spark, dir)
-    assert(rk.nFeatures == mk.nFeatures)
-    assert(rk.classes.map(c => (c.label, c.n)) == mk.classes.map(c => (c.label, c.n)))
-    assert(
-      rk.classes.map(c => c.label -> c.sums.filter(_._2 != 0L)) ==
-        mk.classes.map(c => c.label -> c.sums.filter(_._2 != 0L)))
-    def assigned(model: QualityClassifier.CentroidKModel) =
-      QualityClassifier.classifyK(domainDocs, "doc_id", "text", model)
-        .select("doc_id", "pred_class").as[(Long, String)].collect().sortBy(_._1).toSeq
-    assert(assigned(rk) == assigned(mk))
-    // a quoted label cannot ride the regex-parsed sidecar — refuse loudly
-    val quoted = QualityClassifier.CentroidKModel(
-      4, Seq(QualityClassifier.CentroidKModel.ClassStats("""a"b""", 1L, Map(0 -> 1L)),
-        QualityClassifier.CentroidKModel.ClassStats("c", 1L, Map(1 -> 1L))))
-    val e = intercept[IllegalArgumentException] {
-      QualityClassifier.writeModelK(quoted, dir, spark)
-    }
-    assert(e.getMessage.contains("quote or backslash"))
   }
 
   test("fitClassify trains only on the labeledWhere subset") {

@@ -85,4 +85,48 @@ class RestServerSpec extends AnyFunSuite {
     } finally server.stop(0)
   }
 
+  test("REST search bounds: limit in [1, maxK] and max_tokens in [100, 16000], else 400; defaults from config") {
+    val base = Files.createTempDirectory("graft-rest-bounds").toString
+    val pdfDir = s"$base/pdfs"; Files.createDirectories(Paths.get(pdfDir))
+    (1 to 3).foreach { i =>
+      mkPdf(pdfDir, s"EP00$i Spark Notes $i.pdf",
+        s"# Spark Notes $i\n\nspark shuffles data between stages; note $i covers broadcast joins.")
+    }
+    val cfg = GraftConfig(warehouseDir = s"$base/warehouse",
+      search = SearchConfig(defaultK = 1, maxK = 2, defaultMaxTokens = 100))
+    new Pipeline(spark, cfg).processDirectory(pdfDir)
+
+    val server = new RestServer(spark, cfg).start(0)
+    val port = server.getAddress.getPort
+    val client = HttpClient.newHttpClient()
+    def post(path: String, body: String): HttpResponse[String] =
+      client.send(
+        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
+          .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+        HttpResponse.BodyHandlers.ofString())
+    def status(path: String, body: String): Int = post(path, body).statusCode
+    try {
+      Seq("-1", "0", "3", "100000", "2.5", "\"5\"", "true").foreach { bad =>
+        assert(status("/search", s"""{"query":"spark","mode":"keyword","limit":$bad}""") == 400,
+          s"limit $bad must be a 400")
+      }
+      // the bounds are inclusive, and an omitted limit takes search.defaultK
+      Seq(1, 2).foreach { k =>
+        val r = post("/search", s"""{"query":"spark","mode":"keyword","limit":$k}""")
+        assert(r.statusCode == 200, r.body)
+        assert(mapper.readTree(r.body).size == k, s"limit $k: ${r.body}")
+      }
+      val dflt = post("/search", """{"query":"spark","mode":"keyword"}""")
+      assert(dflt.statusCode == 200 && mapper.readTree(dflt.body).size == 1, dflt.body)
+
+      Seq("99", "16001", "-5", "500.5", "\"500\"").foreach { bad =>
+        assert(status("/search/context", s"""{"query":"spark","max_tokens":$bad}""") == 400,
+          s"max_tokens $bad must be a 400")
+      }
+      Seq("100", "16000", "null").foreach { ok =>
+        val r = post("/search/context", s"""{"query":"spark","max_tokens":$ok}""")
+        assert(r.statusCode == 200, s"max_tokens $ok: ${r.statusCode} ${r.body}")
+      }
+    } finally server.stop(0)
+  }
 }

@@ -78,10 +78,12 @@ class SketchesSpec extends AnyFunSuite {
     val a = spark.range(4000).select(concat(lit("x"), col("id")).as("v"))
     val b = spark.range(2000, 7000).select(concat(lit("x"), col("id")).as("v"))
     val whole = Sketches.hllDistinct(a.unionAll(b).repartition(13), "v", p = 9).head()
+    // the register table is mergeable: the bucket-wise MAX of two shards'
+    // tables is the table of their union
     val merged = Sketches.hllEstimate(
-      Sketches.hllMergeRegisters(Seq(
-        Sketches.hllRegisters(a.repartition(3), "v", p = 9),
-        Sketches.hllRegisters(b.repartition(5), "v", p = 9))),
+      Sketches.hllRegisters(a.repartition(3), "v", p = 9)
+        .unionByName(Sketches.hllRegisters(b.repartition(5), "v", p = 9))
+        .groupBy("idx").agg(max("r").as("r")),
       p = 9).head()
     assert(whole == merged)
   }

@@ -252,7 +252,7 @@ class StoreLeaseSpec extends AnyFunSuite {
     // an opaque callback 3x longer than the ttl completes cleanly under
     // the heartbeat (the swap's write-callback shape — no progress points)
     val r = StoreLease.withRenewableLease(dir, "opaque", ttlMs = 400L) { lease =>
-      StoreLease.withHeartbeat(lease, periodMs = 100L) { Thread.sleep(1200L); "ok" }
+      StoreLease.withHeartbeatChecked(lease, periodMs = 100L) { _ => Thread.sleep(1200L); "ok" }
     }
     assert(r == "ok")
     assert(!Files.exists(Paths.get(dir, StoreLease.LockFileName)), "lease not released")
@@ -260,7 +260,7 @@ class StoreLeaseSpec extends AnyFunSuite {
     // discarded and the heartbeat failure is rethrown when it returns
     val ex = intercept[IllegalStateException] {
       StoreLease.withRenewableLease(dir, "opaque2", ttlMs = 60000L) { lease =>
-        StoreLease.withHeartbeat(lease, periodMs = 50L) {
+        StoreLease.withHeartbeatChecked(lease, periodMs = 50L) { _ =>
           plantLock(dir, "thief@host#hb", System.currentTimeMillis() + 60000L, "x")
           Thread.sleep(300L)
           "done-anyway"
@@ -312,40 +312,44 @@ class StoreLeaseSpec extends AnyFunSuite {
     assert(!Files.exists(Paths.get(dir, StoreLease.LockFileName)))
   }
 
-  test("sig-index writes lease a SIBLING lock that survives the root overwrite") {
-    import graft.operators.Dedup
-    val root = Files.createTempDirectory("graft_lease_sig")
-    val dir = root.resolve("sigs").toString
-    val sigs = Seq((1L, Seq(11L, 12L)), (2L, Seq(21L, 22L))).toDF("id", "sig")
-    Dedup.writeSigIndex(sigs, dir)
+  test("drift-profile writes lease a SIBLING lock that survives the root overwrite") {
+    import graft.streaming.IngestGuardrail
+    import org.apache.spark.sql.functions.col
+    val root = Files.createTempDirectory("graft_lease_profile")
+    val dir = root.resolve("profile").toString
+    val corpus = Seq((1L, "a"), (2L, "b"), (3L, "b")).toDF("id", "category")
+    IngestGuardrail.writeProfile(corpus, col("category"), dir)
     // the lock is NOT inside the dataset dir (overwrite would erase it
     // mid-verb) and is gone after a clean release
-    val sibling = root.resolve(".sigs_writer.lock")
+    val sibling = root.resolve(".profile_writer.lock")
     assert(!Files.exists(Paths.get(dir, StoreLease.LockFileName)))
     assert(!Files.exists(sibling), "sibling lock not released")
-    // a rival's live sibling lease refuses both write modes
-    Files.writeString(sibling, s"rival@otherhost#s1|${System.currentTimeMillis() + 60000L}|write-sigs")
-    val exW = intercept[IllegalStateException](Dedup.writeSigIndex(sigs, dir))
+    // a rival's live sibling lease refuses both profile writers
+    Files.writeString(sibling, s"rival@otherhost#s1|${System.currentTimeMillis() + 60000L}|write-profile")
+    val exW = intercept[IllegalStateException](IngestGuardrail.writeProfile(corpus, col("category"), dir))
     assert(exW.getMessage.contains("held by writer rival@otherhost#s1"), exW.getMessage)
-    val exA = intercept[IllegalStateException](Dedup.writeSigIndex(sigs, dir, append = true))
-    assert(exA.getMessage.contains("held by writer rival@otherhost#s1"), exA.getMessage)
+    val observations = Seq(("run#1", "c", 5L, false, java.sql.Timestamp.valueOf("2026-01-01 00:00:00")))
+      .toDF("batch_key", "category", "n", "drifted", "observed_at")
+    val exR = intercept[IllegalStateException](IngestGuardrail.refreshProfile(observations, dir, lastN = 1))
+    assert(exR.getMessage.contains("held by writer rival@otherhost#s1"), exR.getMessage)
     Files.deleteIfExists(sibling)
-    Dedup.writeSigIndex(sigs, dir, append = true)
-    assert(spark.read.parquet(dir).count() == 4L, "append under the freed lease landed")
+    IngestGuardrail.refreshProfile(observations, dir, lastN = 1)
+    assert(spark.read.parquet(dir).count() == 1L, "refresh under the freed lease landed")
+    assert(!Files.exists(sibling), "sibling lock not released")
   }
 
   test("persisted-index writes fail loud while another writer holds the store") {
     import graft.operators.VectorSearch
     val dir = Files.createTempDirectory("graft_lease_idx").toString
     val corpus = Seq((1L, Array(1.0f, 0.0f)), (2L, Array(0.0f, 1.0f))).toDF("id", "vec")
-    plantLock(dir, "rival@otherhost#i1", System.currentTimeMillis() + 60000L, "write-ivf")
-    val idx = VectorSearch.buildIvf(corpus, "vec", nLists = 2)
-    val ex = intercept[IllegalStateException](VectorSearch.writeIvf(idx, dir))
+    plantLock(dir, "rival@otherhost#i1", System.currentTimeMillis() + 60000L, "write-lsh")
+    val idx = VectorSearch.buildLshIndex(corpus, "vec", VectorSearch.SimHashLsh(nBits = 8, dim = 2))
+    val ex = intercept[IllegalStateException](VectorSearch.writeLsh(idx, dir))
     assert(ex.getMessage.contains("held by writer rival@otherhost#i1"), ex.getMessage)
     Files.deleteIfExists(Paths.get(dir, StoreLease.LockFileName))
-    VectorSearch.writeIvf(idx, dir)
+    VectorSearch.writeLsh(idx, dir)
     assert(!Files.exists(Paths.get(dir, StoreLease.LockFileName)))
-    assert(VectorSearch.loadIvf(spark, dir, "vec").indexed.count() == 2L)
+    assert(VectorSearch.loadLsh(spark, dir).indexed.count() == 2L)
   }
 
   test("every directory swap is single-writer-checked at the swap level") {

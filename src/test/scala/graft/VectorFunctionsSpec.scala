@@ -239,7 +239,7 @@ class VectorFunctionsSpec extends AnyFunSuite {
     assert(bandedL16 >= bandedL4 + 0.2,
       f"banded recall must climb with L: L=4 $bandedL4%.3f vs L=16 $bandedL16%.3f")
 
-    // calibrateBandedL: the sizing answer must DELIVER its target,
+    // calibrateBandedLMulti: the sizing answer must DELIVER its target,
     // measured (VERDICT r10 #4, tightened r13 #5). Calibration predicts
     // recall from sampled neighbor-pair angles (q_i = p_i^b, recall =
     // mean 1-(1-q_i)^L) in the same inclusive convention recallOf uses,
@@ -247,8 +247,10 @@ class VectorFunctionsSpec extends AnyFunSuite {
     // slack (default 0.05) into the L search — so the MEASURED recall at
     // the returned L must now clear the target itself, not target-slack.
     val targetCal = 0.5
-    val calibratedL = VectorSearch.calibrateBandedL(
-      emb, "vec_id", "embedding", bandBits = 6, recallTarget = targetCal)
+    // both targets from one probe panel (0.7 is read further down)
+    val calibrated = VectorSearch.calibrateBandedLMulti(
+      emb, "vec_id", "embedding", bandBits = 6, recallTargets = Seq(targetCal, 0.7))
+    val calibratedL = calibrated(targetCal)
     info(s"calibrated L=$calibratedL for target $targetCal at b=6")
     assert(calibratedL >= 4 && calibratedL <= 40,
       s"calibrated L=$calibratedL outside the sane band [4, 40] for target $targetCal")
@@ -258,13 +260,12 @@ class VectorFunctionsSpec extends AnyFunSuite {
       f"calibrated index recall $calRecall%.3f misses target $targetCal — the folded slack " +
         "must make calibrate(t) deliver t")
     // the raw-model answer (slack = 0) stays available and is never larger
-    val rawL = VectorSearch.calibrateBandedL(
-      emb, "vec_id", "embedding", bandBits = 6, recallTarget = targetCal, slack = 0.0)
+    val rawL = VectorSearch.calibrateBandedLMulti(
+      emb, "vec_id", "embedding", bandBits = 6, recallTargets = Seq(targetCal), slack = 0.0)(targetCal)
     assert(rawL <= calibratedL, s"raw model L=$rawL must not exceed slack-folded L=$calibratedL")
     // more ambition costs more tables — the curve's direction is part
     // of the contract
-    val calibratedHigher = VectorSearch.calibrateBandedL(
-      emb, "vec_id", "embedding", bandBits = 6, recallTarget = 0.7)
+    val calibratedHigher = calibrated(0.7)
     assert(calibratedHigher > calibratedL,
       s"L must grow with the recall target: 0.5 -> $calibratedL, 0.7 -> $calibratedHigher")
 
@@ -300,34 +301,6 @@ class VectorFunctionsSpec extends AnyFunSuite {
     VectorFunctions.register(spark)
     val r = spark.sql("SELECT cosine_sim(array(1.0F, 0.0F), array(1.0F, 0.0F)) AS c").head()
     assert(math.abs(r.getDouble(0) - 1.0) < 1e-12)
-  }
-
-  test("extendIvf appends to the nearest frozen cell; probes find new vectors") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(11)
-    val dim = 8
-    val centers = (0 until 4).map(_ => Array.fill(dim)(rnd.nextGaussian() * 5))
-    val data = centers.zipWithIndex.flatMap { case (c, ci) =>
-      (0 until 30).map(i => (ci.toLong * 100 + i, c.map(x => (x + rnd.nextGaussian() * 0.1).toFloat)))
-    }
-    val ivf = graft.operators.VectorSearch.buildIvf(data.toDF("id", "vec"), "vec", nLists = 4)
-    // a new vector sitting on cluster 2's center
-    val newVec = centers(2).map(_.toFloat)
-    val extended = graft.operators.VectorSearch.extendIvf(
-      ivf, Seq((9999L, newVec)).toDF("id", "vec"))
-    // assignment = scalar nearest-centroid argmin
-    val expectedCell = ivf.centroids.zipWithIndex.minBy { case (c, _) =>
-      c.zip(newVec.map(_.toDouble)).map { case (a, b) => (a - b) * (a - b) }.sum
-    }._2
-    val gotCell = extended.indexed.where(col("id") === 9999L)
-      .select("ivf_cell").head().getInt(0)
-    assert(gotCell == expectedCell)
-    // probing with the new vector itself returns it as top-1
-    val hit = extended.annTopK(newVec, 1, col("id"), nProbe = 1).head()
-    assert(hit.getAs[Long]("id") == 9999L, hit.toString)
-    // old content unaffected
-    assert(extended.indexed.count() == 121)
-    assert(extended.centroids.sameElements(ivf.centroids), "quantizer must stay frozen")
   }
 
   test("MMR re-rank: top hit kept, near-duplicate demoted below a diverse hit") {
@@ -380,19 +353,6 @@ class VectorFunctionsSpec extends AnyFunSuite {
       .mmrRerank(mixed, "qid", "id", "vec", "score", k = 2)
       .select("id").as[Long].collect().toSeq
     assert(got == Seq(1L))
-  }
-
-  test("extendIvf works on a single-cell quantizer") {
-    import spark.implicits._
-    // buildIvf can't produce k=1 (Spark ML KMeans requires k >= 2), but a
-    // degenerate one-cell index is constructible directly (e.g. a loaded
-    // artifact) and extendIvf must not feed least() a single argument
-    val indexed = (1 to 20).map(i => (i.toLong, Array(i.toFloat, 1.0f), 0))
-      .toDF("id", "vec", "ivf_cell")
-    val ivf = graft.operators.VectorSearch.IvfIndex(indexed, Array(Array(10.0, 1.0)), "vec")
-    val ext = graft.operators.VectorSearch.extendIvf(ivf, Seq((99L, Array(5.0f, 1.0f))).toDF("id", "vec"))
-    assert(ext.indexed.where(col("id") === 99L).select("ivf_cell").head().getInt(0) == 0)
-    assert(ext.indexed.count() == 21)
   }
 
   test("quantizeInt8: codes bounded, extremes exact, zero vector safe") {

@@ -27,49 +27,28 @@ MAIN = os.path.join(ROOT, "src", "main", "scala")
 SURFACE = {"Pipeline", "Retriever", "Cli", "RestServer", "api", "StreamingIngest", "SparkEntry"}
 
 ALLOWED = {
-    # reference features that still need wiring into the product
-    "PdfSource.withFallbackExtraction": "the reference's failed-text to OCR fallback, not yet wired",
-    "Catalog.updateWhere": "the reference's status-flip UPDATE, not yet wired",
-    # pinned by a plan-shape spec
-    "Catalog.writeBucketedTable": "PlanShapeSpec pins its bucketed join plan",
-    # persisted-artifact writers whose format a product path loads
-    "TextAnalysis.writeLm": "writes the LM artifact loadLm reads",
-    "QualityClassifier.writeModel": "writes the model artifact loadModel reads",
-    "Sketches.hllCardinality": "the small-range-corrected HLL readout",
-    "Dedup.simhash": "the xxhash64 text signature that hammingPairsFromSigs bands",
-    # maintenance verbs over persisted artifacts: spec-only for now
-    "Dedup.writeClusters": "persists cluster labels; spec-only maintenance verb",
-    "Dedup.loadClusters": "loads writeClusters output; spec-only maintenance verb",
-    "Dedup.writeSigIndex": "persists the MinHash signature index; spec-only maintenance verb",
-    "Dedup.loadSigIndex": "loads writeSigIndex output; spec-only maintenance verb",
-    "VectorSearch.writeIvf": "persists the IVF index; spec-only maintenance verb",
-    "VectorSearch.loadIvf": "loads writeIvf output; spec-only maintenance verb",
-    "VectorSearch.extendIvf": "O(batch) IVF extension; spec-only maintenance verb",
-    "VectorSearch.extendBandedLsh": "O(batch) banded-LSH extension; spec-only maintenance verb",
-    "VectorSearch.loadPq": "loads writePq output with its codes; spec-only maintenance verb",
-    "VectorSearch.calibrateBandedL": "sizes the banded-LSH table count; spec-only",
-    "TextAnalysis.extendLm": "O(batch) LM extension; spec-only maintenance verb",
-    "TextAnalysis.compactWordHistogram": "folds word-histogram deltas; spec-only maintenance verb",
-    "QualityClassifier.writeModelK": "persists the k-class model; spec-only maintenance verb",
-    "QualityClassifier.loadModelK": "loads writeModelK output; spec-only maintenance verb",
-    "QualityClassifier.mergeCentroid": "merges shard-trained models; spec-only",
-    "QualityClassifier.mergeCentroidK": "merges shard-trained k-class models; spec-only",
-    "Sketches.hllMergeRegisters": "merges HLL register shards; spec-only",
-    "SequencePacking.verifyDocsIndex": "audits the shard document index; spec-only maintenance verb",
-    "SequencePacking.recertifyShards": "crash recovery for shard retraction; spec-only maintenance verb",
-    "LoaderSchedule.mintCursor": "mints a stale-checked training cursor; spec-only",
-    "LoaderSchedule.resumeFromChecked": "resumes from a stale-checked cursor; spec-only",
-    "IngestGuardrail.writeProfile": "persists the drift reference profile the guardrail reads",
-    "IngestGuardrail.refreshProfile": "rebuilds the drift reference profile; spec-only maintenance verb",
-    # operators outside the reference, still spec-only
-    "CorpusHygiene.decontaminate": "benchmark-contamination filter; spec-only",
-    "Curation.curateNearManaged": "curateNear with a release handle; spec-only",
-    "Multimodal.sampleFrames": "video frame sampling; spec-only",
-    "Skew.saltedJoin": "salted hot-key join; spec-only",
-    # spec harness entry points
-    "CommitProtocol.withProtocol": "swaps the commit protocol for a spec",
-    "StoreLease.withProtocol": "swaps the lease protocol for a spec",
-    "StoreLease.withHeartbeat": "renews a lease around an opaque callback; spec-only",
+    # ingest: PdfSource / Catalog behind Pipeline.processDirectory
+    "PdfSource.withFallbackExtraction":
+        "re-extracts with OCR the rows that fail the quality gate of withExtraction, which Pipeline ingest runs",
+    "Catalog.updateWhere": "the reference's status-flip UPDATE over the documents table Pipeline writes",
+    "Catalog.writeBucketedTable":
+        "bucketed layout for the chunks/documents tables Pipeline writes; PlanShapeSpec pins its no-shuffle join",
+    # writers of the artifacts StreamingIngest loads
+    "TextAnalysis.writeLm": "writes the LM that StreamingIngest(lmGatePath) loads with loadLm",
+    "QualityClassifier.writeModel": "writes the model that StreamingIngest(qualityModelPath) loads with loadModel",
+    "IngestGuardrail.writeProfile": "writes the drift reference profile that StreamingIngest(driftProfilePath) checks",
+    "IngestGuardrail.refreshProfile": "rebuilds that profile from guardrail_observations, which ingestBatch writes",
+    "TextAnalysis.compactWordHistogram": "folds the deltas that StreamingIngest(wordHistPath) appends",
+    # recovery and audit of the shard store StreamingIngest(shardStorePath) grows
+    "SequencePacking.recertifyShards": "recovers the shard store that deleteStreamDocument retracts from",
+    "SequencePacking.verifyDocsIndex": "audits the shard store that deleteStreamDocument retracts from",
+    # readouts and twins of SparkEntry query paths
+    "Sketches.hllCardinality": "small-range readout of the (n_zero, sum_scaled) columns the q_hll_* queries return",
+    "Dedup.simhash": "the text signature for hammingPairsFromSigs, which Pipeline's image dedup bands",
+    "LoaderSchedule.mintCursor": "mints the cursor resumeFromChecked takes, the stale-checked twin of resumeFrom",
+    "LoaderSchedule.resumeFromChecked": "the stale-checked twin of resumeFrom, which q_epoch_resume runs",
+    # leak safety of an api entry point
+    "Curation.curateNearManaged": "releases the checkpoint pins that curateNear (api.curateNear) leaves",
 }
 
 IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
