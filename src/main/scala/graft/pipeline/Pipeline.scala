@@ -505,12 +505,17 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
   }
 
   /** Point lookup + ordered listing of a document's images (S9/O2,
-    * src/load/sqlite_store.py:379-381).
+    * src/load/sqlite_store.py:379-381). Empty result (not a path error)
+    * on a warehouse ingested without `imagesDir`.
     */
-  def listImages(documentId: String): org.apache.spark.sql.DataFrame =
+  def listImages(documentId: String): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    if (!catalog.exists("images"))
+      return spark.emptyDataset[graft.model.ExtractedImage].toDF().drop("position")
     catalog.read("images")
       .where(col("document_id") === documentId)
       .orderBy("page_number", "image_index")
+  }
 
   /** Single-file ingest (S2 — the upload path,
     * src/api/routes/documents.py:112-168): process one PDF already on
@@ -560,10 +565,12 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
   }
 
   /** Chunk listing for a document, ordered by chunk_index (Q7/O1,
-    * src/load/lancedb_store.py:229-255).
+    * src/load/lancedb_store.py:229-255). Empty result (not a path error)
+    * on a fresh warehouse.
     */
   def listChunks(documentId: String, limit: Int = 1000): org.apache.spark.sql.DataFrame = {
-    require(catalog.exists("chunks"), "no chunks table yet — ingest documents first")
+    import spark.implicits._
+    if (!catalog.exists("chunks")) return spark.emptyDataset[graft.model.Chunk].toDF()
     catalog.read("chunks")
       .where(col("document_id") === documentId)
       .orderBy("chunk_index")

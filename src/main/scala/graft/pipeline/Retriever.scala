@@ -62,6 +62,10 @@ final class Retriever(
 
   private def chunks: DataFrame = pipeline.catalog.read("chunks")
 
+  // the row shape of every search mode
+  private val HitColumns = Seq("id", "document_id", "document_title", "text",
+    "section_h1", "section_h2", "chunk_index", "score").map(col)
+
   private def titlePred(titleFilter: Option[String]): Option[Column] =
     // Column-parameterized containment — injection-proof by construction
     // (the reference must escape LIKE metacharacters by hand,
@@ -81,8 +85,7 @@ final class Retriever(
     VectorSearch
       .topK(chunks, "embedding", qv, k, col("id"), Some(pred),
         scorer = graft.functions.VectorFunctions.dotProduct)
-      .select(col("id"), col("document_id"), col("document_title"), col("text"),
-        col("section_h1"), col("section_h2"), col("chunk_index"), col("score"))
+      .select(HitColumns: _*)
   }
 
   def keywordSearch(query: String, k: Int, titleFilter: Option[String] = None): DataFrame = {
@@ -105,8 +108,7 @@ final class Retriever(
     filtered
       .orderBy(desc("score"), col("id"))
       .limit(k)
-      .select(col("id"), col("document_id"), col("document_title"), col("text"),
-        col("section_h1"), col("section_h2"), col("chunk_index"), col("score"))
+      .select(HitColumns: _*)
   }
 
   /** ADC-shortlist vector search — the measured 0.9-recall regime
@@ -148,8 +150,7 @@ final class Retriever(
     VectorSearch
       .topK(chunks.join(ids, Seq("id"), "left_semi"), "embedding", qv, k, col("id"),
         Some(pred), scorer = graft.functions.VectorFunctions.dotProduct)
-      .select(col("id"), col("document_id"), col("document_title"), col("text"),
-        col("section_h1"), col("section_h2"), col("chunk_index"), col("score"))
+      .select(HitColumns: _*)
   }
 
   /** Derive the [[adcSearch]] shortlist for a recall target from THIS
@@ -203,12 +204,12 @@ final class Retriever(
       .select(col("id"), col("rrf_score").as("score"))
       .join(chunks, "id")
       .orderBy(desc("score"), col("id"))
-      .select(col("id"), col("document_id"), col("document_title"), col("text"),
-        col("section_h1"), col("section_h2"), col("chunk_index"), col("score"))
+      .select(HitColumns: _*)
   }
 
   /** Mode dispatch + topic routing (Q4/Q5,
-    * hybrid_retriever.py:57-90,148-151).
+    * hybrid_retriever.py:57-90,148-151). Empty result (not a path error)
+    * on a fresh warehouse.
     */
   def search(
       query: String,
@@ -218,7 +219,10 @@ final class Retriever(
       routeByTopic: Boolean = false
   ): DataFrame = {
     val filter = titleFilter.orElse(if (routeByTopic) extractTopic(query) else None)
-    mode match {
+    if (!pipeline.catalog.exists("chunks")) {
+      import spark.implicits._
+      spark.emptyDataset[graft.model.Chunk].withColumn("score", lit(0.0)).select(HitColumns: _*)
+    } else mode match {
       case SearchMode.Vector  => vectorSearch(query, k, filter)
       case SearchMode.Keyword => keywordSearch(query, k, filter)
       case SearchMode.Hybrid  => hybridSearch(query, k, filter)

@@ -1,6 +1,9 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths}
+import java.io.IOException
+import java.nio.file.{FileVisitResult, Files, Path, Paths, SimpleFileVisitor}
+import java.nio.file.attribute.BasicFileAttributes
+import java.util.concurrent.{ConcurrentHashMap, TimeUnit}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,17 +18,47 @@ import org.apache.spark.sql.functions._
   * 229-240, recast for immutable storage — SURVEY §7.4.4). At cluster
   * scale the same contract is served by a transactional table format; the
   * swap here is the single-writer equivalent.
+  *
+  * Read contract: [[read]] resolves a table once per version. A table's
+  * version is the listing of its directory (every file's path, size and
+  * modification time). Each `Catalog` keeps the frame it last resolved
+  * for a table together with that listing. A read whose listing matches
+  * returns the kept frame: no cache refresh, no schema inference, no
+  * Spark job, so plans cached over the table (the resident FTS postings)
+  * stay loaded across queries. Any write changes the listing, whoever
+  * makes it: an append, a swap, a flush, another `Catalog`,
+  * [[graft.streaming.StreamingIngest]] or another process. The next read
+  * then refreshes every cached plan over the path and resolves the table
+  * again, so no reader is served a stale listing.
   */
 final class Catalog(spark: SparkSession, warehouseDir: String) {
 
   private def tablePath(name: String): Path = Paths.get(warehouseDir, name)
 
+  // table name -> (listing it was resolved at, resolved frame); holds plans
+  // only, never storage
+  private val resolved = new ConcurrentHashMap[String, (Seq[(String, Long, Long)], DataFrame)]()
+
   def exists(name: String): Boolean = Files.exists(tablePath(name))
 
+  /** The table as of its current listing; throws when it does not exist. */
   def read(name: String): DataFrame = {
-    val p = tablePath(name).toString
-    spark.catalog.refreshByPath(p) // tables mutate by swap; never serve stale listings
-    spark.read.parquet(p)
+    val dir = tablePath(name)
+    // list BEFORE resolving: a write racing the resolve then leaves a
+    // listing older than the frame, which the next read re-resolves
+    val listing = Catalog.listing(dir)
+    Option(resolved.get(name)) match {
+      case Some((seen, df)) if listing.contains(seen) => df
+      case _ =>
+        val p = dir.toString
+        spark.catalog.refreshByPath(p) // the table changed: re-cache plans over it
+        val df = spark.read.parquet(p)
+        listing match {
+          case Some(l) => resolved.put(name, (l, df))
+          case None    => resolved.remove(name)
+        }
+        df
+    }
   }
 
   /** Append rows (the reference's INSERT path, sqlite_store.py:120-151). */
@@ -155,6 +188,21 @@ final class Catalog(spark: SparkSession, warehouseDir: String) {
   * read-after-swap contracts are stated once, on the trait.
   */
 object Catalog {
+
+  /** (path, size, mtime) of every file under `dir`, sorted; None when the
+    * directory cannot be listed (absent, or removed mid-walk by a swap).
+    */
+  private def listing(dir: Path): Option[Seq[(String, Long, Long)]] =
+    try {
+      val files = Vector.newBuilder[(String, Long, Long)]
+      Files.walkFileTree(dir, new SimpleFileVisitor[Path] {
+        override def visitFile(f: Path, a: BasicFileAttributes): FileVisitResult = {
+          files += ((f.toString, a.size, a.lastModifiedTime.to(TimeUnit.NANOSECONDS)))
+          FileVisitResult.CONTINUE
+        }
+      })
+      Some(files.result().sorted)
+    } catch { case _: IOException => None }
 
   /** Replace the directory at `target` with whatever `write` produces at
     * the temp path it is handed, committing through the installed

@@ -52,6 +52,7 @@ object PdfImages {
             out += materialize(pdf, s, pi + 1, idx)
             idx += 1
           } catch {
+            case e: DecodeBudgetException => throw e
             case _: Exception => idx += 1 // skip undecodable, keep index stable
           }
         }

@@ -52,7 +52,20 @@ object PdfParser {
   /** `raw` is the undecoded stream payload; call [[Pdf.decodedStream]]. */
   final case class PStream(dict: PDict, raw: Array[Byte]) extends PdfObj
 
-  final class PdfParseException(msg: String) extends RuntimeException(msg)
+  class PdfParseException(msg: String) extends RuntimeException(msg)
+
+  /** A document whose filters decode past [[MaxStreamBytes]] in one
+    * stream or [[MaxDocumentBytes]] over all its streams (a decompression
+    * bomb). Unlike other parse failures inside one object, it is never
+    * recovered from: the whole document is rejected.
+    */
+  final class DecodeBudgetException(msg: String) extends PdfParseException(msg)
+
+  /** Decoded bytes one stream may produce through its filters. */
+  val MaxStreamBytes: Long = 64L << 20
+
+  /** Decoded bytes all the streams of one document may produce together. */
+  val MaxDocumentBytes: Long = 256L << 20
   final class PdfEncryptedException(msg: String) extends RuntimeException(msg)
 
   // ---------------------------------------------------------------- lexer
@@ -310,11 +323,26 @@ object PdfParser {
 
   // ------------------------------------------------------------- filters
 
+  /** Output of one expanding filter (Flate, LZW, RunLength): throws
+    * [[DecodeBudgetException]] instead of growing past [[MaxStreamBytes]],
+    * so a bomb never holds more heap than that.
+    */
+  private final class CappedBuffer(initial: Int = 32)
+      extends java.io.ByteArrayOutputStream(initial) {
+    private def reserve(n: Int): Unit =
+      if (count.toLong + n > MaxStreamBytes)
+        throw new DecodeBudgetException(s"a stream decodes past $MaxStreamBytes bytes")
+    override def write(b: Int): Unit = { reserve(1); super.write(b) }
+    override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+      reserve(len); super.write(b, off, len)
+    }
+  }
+
   def inflate(in: Array[Byte]): Array[Byte] = {
     val inf = new Inflater()
     try {
       inf.setInput(in)
-      val out = new java.io.ByteArrayOutputStream(math.max(64, in.length * 4))
+      val out = new CappedBuffer(math.min(MaxStreamBytes, math.max(64L, in.length * 4L)).toInt)
       val buf = new Array[Byte](8192)
       while (!inf.finished() && !inf.needsDictionary()) {
         val n = inf.inflate(buf)
@@ -434,7 +462,7 @@ object PdfParser {
     * 257=EOD, `earlyChange` widens one code early (the default).
     */
   def lzwDecode(in: Array[Byte], earlyChange: Int = 1): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
+    val out = new CappedBuffer()
     val dict = new scala.collection.mutable.ArrayBuffer[Array[Byte]](4096)
     def reset(): Unit = {
       dict.clear()
@@ -481,7 +509,7 @@ object PdfParser {
   }
 
   def runLengthDecode(in: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
+    val out = new CappedBuffer()
     var i = 0
     var done = false
     while (i < in.length && !done) {
@@ -502,10 +530,17 @@ object PdfParser {
 
   // -------------------------------------------------------------- document
 
+  /** Decoded bytes a document may still produce ([[MaxDocumentBytes]]
+    * less what its streams have decoded so far); shared by every view of
+    * one parse.
+    */
+  private[pdf] final class DecodeBudget { var left: Long = MaxDocumentBytes }
+
   /** A parsed PDF document: the resolved object table + trailer. */
-  final class Pdf(
+  final class Pdf private[pdf] (
       val objects: Map[Int, PdfObj],
-      val trailer: PDict
+      val trailer: PDict,
+      budget: DecodeBudget
   ) {
     def resolve(o: PdfObj): PdfObj = resolveHops(o, 0)
 
@@ -589,6 +624,11 @@ object PdfParser {
           case _ => // unknown filter (CCITT, JBIG2...): leave raw
         }
         i += 1
+      }
+      if (filters.nonEmpty) {
+        budget.left -= data.length
+        if (budget.left < 0)
+          throw new DecodeBudgetException(s"document decodes past $MaxDocumentBytes bytes")
       }
       data
     }
@@ -720,7 +760,8 @@ object PdfParser {
     if (objects.isEmpty) throw new PdfParseException("no PDF objects found")
 
     // 2. expand object streams (don't overwrite direct definitions)
-    val pre = new Pdf(objects.toMap, PDict(Map.empty))
+    val budget = new DecodeBudget
+    val pre = new Pdf(objects.toMap, PDict(Map.empty), budget)
     objects.values.toVector.foreach {
       case s @ PStream(d, _) if d.get("Type").contains(PName("ObjStm")) =>
         try {
@@ -745,7 +786,10 @@ object PdfParser {
               catch { case _: Exception => () }
             }
           }
-        } catch { case _: Exception => () }
+        } catch {
+          case e: DecodeBudgetException => throw e
+          case _: Exception              => ()
+        }
       case _ => ()
     }
 
@@ -783,7 +827,7 @@ object PdfParser {
     val trailer = PDict(trailerMap)
     if (trailerMap.contains("Encrypt"))
       throw new PdfEncryptedException("document has /Encrypt dictionary")
-    new Pdf(objects.toMap, trailer)
+    new Pdf(objects.toMap, trailer, budget)
   }
 
   @inline private def isDigit(b: Byte): Boolean = b >= '0' && b <= '9'

@@ -161,7 +161,10 @@ object PdfText {
           pdf.get(fd, "ToUnicode") match {
             case Some(s: PStream) =>
               try Some(parseToUnicode(pdf.decodedStream(s)))
-              catch { case _: Exception => None }
+              catch {
+                case e: DecodeBudgetException => throw e
+                case _: Exception              => None
+              }
             case _ => None
           }
         case _ => None

@@ -1,0 +1,107 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.classic.ClassicConversions
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.pipeline.{Pipeline, Retriever}
+import graft.sources.Catalog
+
+/** The read contract of [[Catalog.read]]: an unchanged table resolves
+  * once, every write shows on the next read whoever makes it.
+  */
+class CatalogReadSpec extends AnyFunSuite {
+  private lazy val spark = SparkTestBase.spark
+  import SparkTestBase.spark.implicits._
+
+  private def jobsDuring(body: => Unit): Long = {
+    val jobs = new AtomicLong
+    val counter = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    spark.sparkContext.addSparkListener(counter)
+    try body
+    finally {
+      // drain the async listener bus (private API, so reflective) first
+      try {
+        val bus = spark.sparkContext.getClass.getMethod("listenerBus").invoke(spark.sparkContext)
+        bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      } catch { case _: ReflectiveOperationException => Thread.sleep(500) }
+      spark.sparkContext.removeSparkListener(counter)
+    }
+    jobs.get()
+  }
+
+  private def ids(c: Catalog): Seq[Long] =
+    c.read("t").select("id").as[Long].collect().toSeq.sorted
+
+  test("a repeated read of an unchanged table starts no Spark job") {
+    val cat = new Catalog(spark, Files.createTempDirectory("graft-cat").toString)
+    cat.append(spark.range(10).toDF("id"), "t")
+    val first = cat.read("t")
+    assert(jobsDuring((1 to 3).foreach(_ => cat.read("t"))) == 0L)
+    assert(cat.read("t") eq first)
+  }
+
+  test("writes through a second Catalog on the same warehouse show on the next read") {
+    val wh = Files.createTempDirectory("graft-cat").toString
+    val reader = new Catalog(spark, wh)
+    val writer = new Catalog(spark, wh)
+    writer.append(spark.range(0, 3).toDF("id"), "t")
+    assert(ids(reader) == Seq(0L, 1L, 2L))
+    writer.append(spark.range(3, 5).toDF("id"), "t")
+    assert(ids(reader) == (0L until 5L))
+    writer.deleteWhere("t", col("id") < 2)
+    assert(ids(reader) == (2L until 5L))
+    writer.overwrite(spark.range(7, 9).toDF("id"), "t")
+    assert(ids(reader) == Seq(7L, 8L))
+    writer.flush()
+    intercept[AnalysisException](reader.read("t"))
+    writer.append(spark.range(20, 21).toDF("id"), "t")
+    assert(ids(reader) == Seq(20L))
+  }
+
+  test("a parquet file put straight into the table directory shows on the next read") {
+    val wh = Files.createTempDirectory("graft-cat").toString
+    val cat = new Catalog(spark, wh)
+    cat.append(spark.range(0, 2).toDF("id"), "t")
+    assert(ids(cat) == Seq(0L, 1L))
+    val staged = Files.createTempDirectory("graft-cat-staged").resolve("out")
+    spark.range(5, 6).toDF("id").write.parquet(staged.toString)
+    val parts = Files.list(staged)
+    try parts.filter(_.getFileName.toString.endsWith(".parquet"))
+      .forEach(p => Files.move(p, Paths.get(wh, "t", "direct-" + p.getFileName)))
+    finally parts.close()
+    assert(ids(cat) == Seq(0L, 1L, 5L))
+  }
+
+  test("keyword searches in a row leave the resident FTS postings loaded, not rebuilt") {
+    val base = Files.createTempDirectory("graft-cat-fts").toString
+    val pdfDir = s"$base/pdfs"
+    Files.createDirectories(Paths.get(pdfDir))
+    Seq("EP001 Widget" -> "the widget manual describes gears and sprockets.",
+      "EP002 Gadget" -> "the gadget handbook covers springs and levers.").foreach {
+      case (name, body) =>
+        Files.write(Paths.get(pdfDir, s"$name.pdf"), s"%PDF-1.4\n# $name\n\n$body".getBytes("UTF-8"))
+    }
+    val cfg = GraftConfig(warehouseDir = s"$base/warehouse")
+    val pipe = new Pipeline(spark, cfg)
+    pipe.processDirectory(pdfDir)
+    val retriever = new Retriever(spark, pipe, cfg)
+    def postings = spark.sharedState.cacheManager
+      .lookupCachedData(ClassicConversions.castToImpl(pipe.ftsIndex.postings))
+      .getOrElse(fail("the FTS postings are not cached")).cachedRepresentation.cacheBuilder
+
+    assert(retriever.keywordSearch("widget gears", 3).count() > 0)
+    val built = postings
+    assert(built.isCachedColumnBuffersLoaded)
+    assert(retriever.keywordSearch("gadget springs", 3).count() > 0)
+    assert(postings eq built, "the second search rebuilt the postings")
+    assert(postings.isCachedColumnBuffersLoaded)
+  }
+}

@@ -314,4 +314,29 @@ class PdfParserSpec extends AnyFunSuite {
       assert(imgs != null)
     }
   }
+
+  test("a Flate bomb past the per-stream cap is one corrupted document, not an executor OOM") {
+    val text = Run("Folic acid intake matters in the first trimester.")
+    val bomb = PdfGen.flateBomb(text, bombs = 1, inflated = PdfParser.MaxStreamBytes + 1)
+    assert(bomb.length < (1 << 20), s"the bomb is small on disk: ${bomb.length} bytes")
+    val doc = PdfParser.parse(bomb)
+    intercept[PdfParser.DecodeBudgetException](PdfText.extractMarkdown(doc))
+    val e = PdfSource.JvmExtractor.extract("/bomb/stream.pdf", bomb)
+    assert(e.error.contains(graft.model.ValidationResult.Corrupted), e.toString)
+    // exactly at the cap still decodes
+    val atCap = PdfGen.flateBomb(text, bombs = 1, inflated = PdfParser.MaxStreamBytes)
+    assert(PdfSource.JvmExtractor.extract("/bomb/at-cap.pdf", atCap).error.isEmpty)
+  }
+
+  test("streams each under the cap are still rejected once the document passes its budget") {
+    val perStream = PdfParser.MaxStreamBytes - 1
+    val bombs = (PdfParser.MaxDocumentBytes / perStream + 1).toInt
+    val bomb = PdfGen.flateBomb(Run("Balanced meals with protein."), bombs, perStream)
+    intercept[PdfParser.DecodeBudgetException](PdfText.extractMarkdown(PdfParser.parse(bomb)))
+    val e = PdfSource.JvmExtractor.extract("/bomb/document.pdf", bomb)
+    assert(e.error.contains(graft.model.ValidationResult.Corrupted), e.toString)
+    // one page fewer fits the budget
+    val fits = PdfGen.flateBomb(Run("Balanced meals with protein."), bombs - 1, perStream)
+    assert(PdfSource.JvmExtractor.extract("/bomb/fits.pdf", fits).error.isEmpty)
+  }
 }

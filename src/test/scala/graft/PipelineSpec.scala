@@ -463,4 +463,55 @@ class PipelineSpec extends AnyFunSuite {
     // path fails loudly (table missing) rather than returning stale hits
     intercept[Exception](retriever.keywordSearch("widget gears", 5).count())
   }
+
+  test("a Flate bomb under maxFileSizeMb is one failed row; the rest of the batch completes") {
+    import graft.pdf.PdfGen
+    val (pdfDir, wh, _) = freshDirs()
+    mkPdf(pdfDir, "EP001 Widget.pdf",
+      "# Widget\n\nthe widget assembly manual describes gears and sprockets in detail.")
+    mkPdf(pdfDir, "EP002 Gadget.pdf",
+      "# Gadget\n\nthe gadget handbook covers springs, levers and small motors.")
+    val bomb = PdfGen.flateBomb(
+      PdfGen.Run("the bomb hides its payload behind one ordinary page of text"),
+      bombs = 1, inflated = graft.sources.pdf.PdfParser.MaxStreamBytes + 1)
+    assert(bomb.length < (1 << 20))
+    Files.write(Paths.get(pdfDir, "EP003 Bomb.pdf"), bomb)
+
+    val pipe = new Pipeline(spark, GraftConfig(warehouseDir = wh))
+    assert(pipe.processDirectory(pdfDir) == 2)
+    val docs = pipe.catalog.read("documents").collect()
+      .map(r => r.getAs[String]("title") -> r).toMap
+    assert(docs("Bomb").getAs[String]("status") == "failed")
+    assert(docs("Bomb").getAs[String]("error_message").contains("corrupted"))
+    assert(Seq("Widget", "Gadget").forall(t => docs(t).getAs[String]("status") == "completed"))
+    assert(pipe.catalog.read("chunks").select("document_title").distinct().count() == 2)
+  }
+
+  test("deleteDocument, then every search mode and the context miss the deleted chunks") {
+    val (pdfDir, wh, _) = freshDirs()
+    mkPdf(pdfDir, "EP001 Widget.pdf",
+      "# Widget\n\nthe widget assembly manual describes gears and sprockets in detail.")
+    mkPdf(pdfDir, "EP002 Gadget.pdf",
+      "# Gadget\n\nthe gadget handbook covers gears, springs and small motors.")
+    val cfg = GraftConfig(warehouseDir = wh)
+    val pipe = new Pipeline(spark, cfg)
+    pipe.processDirectory(pdfDir)
+    val retriever = new Retriever(spark, pipe, cfg)
+    val modes = Seq(SearchMode.Vector, SearchMode.Keyword, SearchMode.Hybrid)
+    def titles(mode: SearchMode.Value): Set[String] =
+      retriever.search("widget gears", mode, 10).select("document_title")
+        .collect().map(_.getString(0)).toSet
+    // warm: the chunks frame and the FTS postings are resident
+    modes.foreach(m => assert(titles(m).contains("Widget"), s"$m before the delete"))
+
+    val widget = pipe.catalog.read("documents").where(col("title") === "Widget")
+      .select("id").collect().head.getString(0)
+    pipe.deleteDocument(widget)
+    modes.foreach { m =>
+      val after = titles(m)
+      assert(!after.contains("Widget") && after.contains("Gadget"), s"$m after the delete: $after")
+    }
+    val ctx = retriever.getContext("widget gears", 4000)
+    assert(!ctx.contains("[Source: Widget]") && ctx.contains("[Source: Gadget]"), ctx)
+  }
 }

@@ -129,4 +129,50 @@ class RestServerSpec extends AnyFunSuite {
       }
     } finally server.stop(0)
   }
+
+  /** (GET, POST) over a running server for `cfg`, stopped after `body`. */
+  private def withServer(cfg: GraftConfig)(
+      body: (String => HttpResponse[String], (String, String) => HttpResponse[String]) => Unit): Unit = {
+    val server = new RestServer(spark, cfg).start(0)
+    val port = server.getAddress.getPort
+    val client = HttpClient.newHttpClient()
+    def send(b: HttpRequest.Builder): HttpResponse[String] =
+      client.send(b.build(), HttpResponse.BodyHandlers.ofString())
+    def uri(path: String) = URI.create(s"http://127.0.0.1:$port$path")
+    try body(path => send(HttpRequest.newBuilder(uri(path)).GET),
+      (path, json) => send(HttpRequest.newBuilder(uri(path)).POST(HttpRequest.BodyPublishers.ofString(json))))
+    finally server.stop(0)
+  }
+
+  private def okBody(r: HttpResponse[String]): String = {
+    assert(r.statusCode == 200, s"${r.statusCode}: ${r.body}"); r.body
+  }
+
+  test("REST over a fresh warehouse: search, context and listings are empty 200s, not 500s") {
+    val base = Files.createTempDirectory("graft-rest-fresh").toString
+    withServer(GraftConfig(warehouseDir = s"$base/warehouse")) { (get, post) =>
+      Seq("vector", "keyword", "hybrid").foreach { mode =>
+        val body = okBody(post("/search", s"""{"query":"spark","mode":"$mode"}"""))
+        assert(body == "[]", s"$mode: $body")
+      }
+      val ctx = mapper.readTree(okBody(post("/search/context", """{"query":"spark"}""")))
+      assert(ctx.get("context").asText ==
+        graft.operators.ContextAssembly.formatContext(Array.empty, "document_title", "text"))
+      assert(okBody(get("/documents/nope/chunks")) == "[]")
+      assert(okBody(get("/documents/nope/images")) == "[]")
+    }
+  }
+
+  test("REST image listing is an empty 200 on a warehouse ingested without imagesDir") {
+    val base = Files.createTempDirectory("graft-rest-noimg").toString
+    val pdfDir = s"$base/pdfs"; Files.createDirectories(Paths.get(pdfDir))
+    mkPdf(pdfDir, "EP001 Spark Guide.pdf", "# Spark Guide\n\nspark processes distributed data.")
+    val cfg = GraftConfig(warehouseDir = s"$base/warehouse")
+    new Pipeline(spark, cfg).processDirectory(pdfDir)
+    withServer(cfg) { (get, _) =>
+      val docId = mapper.readTree(okBody(get("/documents"))).get(0).get("id").asText
+      assert(mapper.readTree(okBody(get(s"/documents/$docId/chunks"))).size > 0)
+      assert(okBody(get(s"/documents/$docId/images")) == "[]")
+    }
+  }
 }

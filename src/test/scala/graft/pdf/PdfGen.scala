@@ -136,7 +136,59 @@ object PdfGen {
         ("<< /Filter /Standard /V 1 /R 2 /O <28bf4e5e4e758a41> /U <28bf4e5e4e758a41> /P -44 >>")
           .getBytes("ISO-8859-1")
 
-    // layout: header, objects (recording offsets), xref, trailer
+    layout(objects.toSeq, if (encrypted) s" /Encrypt $encObj 0 R" else "")
+  }
+
+  /** A text page of `run` followed by `bombs` pages whose Flate content
+    * streams each inflate to `inflated` zero bytes (a decompression bomb:
+    * about a thousandth of that on disk).
+    */
+  def flateBomb(run: Run, bombs: Int, inflated: Long): Array[Byte] = {
+    val n = bombs + 1
+    val kids = (0 until n).map(i => s"${4 + 2 * i} 0 R").mkString(" ")
+    def stream(payload: Array[Byte], filter: String): Array[Byte] =
+      s"<< /Length ${payload.length}$filter >>\nstream\n".getBytes("ISO-8859-1") ++
+        payload ++ "\nendstream".getBytes("ISO-8859-1")
+    val zeros = deflatedZeros(inflated)
+    val objects = Seq(
+      1 -> "<< /Type /Catalog /Pages 2 0 R >>".getBytes("ISO-8859-1"),
+      2 -> s"<< /Type /Pages /Kids [ $kids ] /Count $n >>".getBytes("ISO-8859-1"),
+      3 -> "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>".getBytes("ISO-8859-1")
+    ) ++ (0 until n).flatMap { i =>
+      val content =
+        if (i == 0) stream(s"BT\n/F1 12 Tf\n72 720 Td\n(${esc(run.text)}) Tj\nET\n"
+          .getBytes("ISO-8859-1"), "")
+        else stream(zeros, " /Filter /FlateDecode")
+      Seq(
+        (4 + 2 * i) -> (s"<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 612 792 ] " +
+          s"/Resources << /Font << /F1 3 0 R >> >> /Contents ${5 + 2 * i} 0 R >>")
+          .getBytes("ISO-8859-1"),
+        (5 + 2 * i) -> content)
+    }
+    layout(objects, "")
+  }
+
+  /** `n` zero bytes deflated, without holding them in memory. */
+  private def deflatedZeros(n: Long): Array[Byte] = {
+    val d = new Deflater(Deflater.BEST_COMPRESSION)
+    val zeros = new Array[Byte](1 << 20)
+    val out = new ByteArrayOutputStream()
+    val buf = new Array[Byte](8192)
+    var left = n
+    while (left > 0) {
+      val k = math.min(left, zeros.length.toLong).toInt
+      d.setInput(zeros, 0, k)
+      left -= k
+      while (!d.needsInput()) out.write(buf, 0, d.deflate(buf))
+    }
+    d.finish()
+    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
+    d.end()
+    out.toByteArray
+  }
+
+  /** Header, objects (recording offsets), xref, trailer. */
+  private def layout(objects: Seq[(Int, Array[Byte])], trailerExtra: String): Array[Byte] = {
     val out = new ByteArrayOutputStream()
     def ascii(s: String): Unit = out.write(s.getBytes("ISO-8859-1"))
     ascii("%PDF-1.4\n%âãÏÓ\n")
@@ -157,8 +209,7 @@ object PdfGen {
         case None      => ascii("0000000000 65535 f \n")
       }
     }
-    val enc = if (encrypted) s" /Encrypt $encObj 0 R" else ""
-    ascii(s"trailer\n<< /Size ${maxObj + 1} /Root 1 0 R$enc >>\nstartxref\n$xrefPos\n%%EOF\n")
+    ascii(s"trailer\n<< /Size ${maxObj + 1} /Root 1 0 R$trailerExtra >>\nstartxref\n$xrefPos\n%%EOF\n")
     out.toByteArray
   }
 
