@@ -6,7 +6,8 @@ import graft.pipeline.{Pipeline, Retriever, SearchMode}
 
 /** CLI façade mirroring the reference's `scripts/run_pipeline.py`
   * subcommands (process / list / search / context / stats / delete), plus
-  * `sql` for ad-hoc queries over the attached catalog views.
+  * `sql` for ad-hoc queries over the attached catalog views. `process
+  * --watch <pdfDir>` keeps ingesting the PDFs that arrive in the directory.
   *
   * Usage: runMain graft.Cli <warehouseDir> <command> [args...]
   */
@@ -36,8 +37,13 @@ object Cli {
     val retriever = new Retriever(spark, pipe, config)
 
     command match {
+      case "process" if rest.headOption.contains("--watch") =>
+        require(rest.length >= 2, "usage: process --watch <pdfDir>")
+        val query = new graft.streaming.StreamingIngest(spark, config).start(rest(1))
+        println(s"watching ${rest(1)} (ctrl-c to stop)")
+        query.awaitTermination() // ingest until interrupted
       case "process" =>
-        require(rest.nonEmpty, "usage: process <pdfDir>")
+        require(rest.nonEmpty, "usage: process [--watch] <pdfDir>")
         val n = pipe.processDirectory(rest(0))
         println(s"processed $n documents")
       case "list" =>

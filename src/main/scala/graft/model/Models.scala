@@ -29,6 +29,7 @@ object ValidationResult {
   val PasswordProtected = "password_protected"
   val NoPages = "no_pages"
   val TooManyPages = "too_many_pages"
+  val DecodeBudgetExceeded = "decode_budget_exceeded" // a decompression bomb
 }
 
 /** A source document (reference: src/models.py:44-77, 13 fields). */

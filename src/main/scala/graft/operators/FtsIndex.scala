@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
+import graft.util.SessionIndices.Resident
 
 /** Full-text search: inverted-index build + BM25 scoring as pure DataFrame
   * algebra (reference behavior: LanceDB/Tantivy FTS index built per batch at
@@ -32,24 +33,31 @@ object FtsIndex {
     * maintenance a pure APPEND: a new batch's postings union in without
     * touching (or staleing) any existing row, which is what makes
     * incremental ingest O(batch) instead of O(corpus) — see [[append]].
+    *
+    * The corpus stats carry the integer doc-length total, not a running
+    * mean: `avgDocLen` is `totalDocLen / numDocs`, which is bit-equal to
+    * Spark's `avg` over the int `doc_len` column (a double sum of ints,
+    * exact below 2^53, divided by the count), so an appended index and a
+    * rebuild over the same rows score identically.
     */
   final case class Index(
       postings: DataFrame,
       numDocs: Long,
-      avgDocLen: Double,
-      // persisted fragments behind `postings` (append builds a union of
-      // persisted batches): invalidate must unpersist ALL of them, or a
+      totalDocLen: Long,
+      // the persisted postings fragments `postings` unions (empty for a
+      // single build): invalidate must unpersist ALL of them, or a
       // long-lived session leaks one block-manager entry per batch
       retained: Seq[DataFrame] = Nil,
-      // RUN-SCOPED token of the last streaming micro-batch unioned in —
-      // the idempotence stamp that lets a replayed batch skip
-      // re-extension (see extendForBatch). Includes the run identity
-      // (checkpoint path), not just the batch id: batch ids restart from
-      // 0 on a fresh checkpoint, and a bare-id stamp would misread a new
-      // run's batch N as a replay of the old run's batch N and silently
-      // drop it from the index.
+      // RUN-SCOPED token of the last batch unioned in — the idempotence
+      // stamp that lets a replayed batch skip re-extension (see
+      // extendForBatch). Includes the run identity (checkpoint path), not
+      // just the batch id: batch ids restart from 0 on a fresh
+      // checkpoint, and a bare-id stamp would misread a new run's batch N
+      // as a replay of the old run's batch N and silently drop it.
       lastBatchToken: Option[String] = None
-  )
+  ) {
+    def avgDocLen: Double = if (numDocs == 0) 0.0 else totalDocLen.toDouble / numDocs
+  }
 
   /** Build the index over `textCol` of `docs` keyed by `idCol`.
     * Equivalent of S7 `create_fts_index` (src/load/lancedb_store.py:104-112).
@@ -59,7 +67,14 @@ object FtsIndex {
     * cluster scale, substitute `postings.write.bucketBy(n, "term")` for
     * `persist` — same contract.
     */
-  def build(docs: DataFrame, idCol: String, textCol: String): Index = {
+  def build(docs: DataFrame, idCol: String, textCol: String): Index =
+    indexWith(docs, idCol, textCol)(_.persist())
+
+  /** `keep` stores the postings: a lazy `persist` for [[build]], an eager
+    * pin for the session-resident builds.
+    */
+  private def indexWith(docs: DataFrame, idCol: String, textCol: String)(
+      keep: DataFrame => DataFrame): Index = {
     val tokenized = docs
       .select(col(idCol).as("doc_id"), TextFunctions.ftsTokens(col(textCol)).as("tokens"))
       .withColumn("doc_len", size(col("tokens")))
@@ -69,37 +84,32 @@ object FtsIndex {
       .groupBy("doc_id", "doc_len", "term")
       .agg(count(lit(1)).as("tf"))
 
-    // lazy persist: the full postings materialize on the first search that
-    // touches them (tokenization is cheap relative to the agg shuffle, so
-    // re-deriving it for the stats row costs less than eager caching here)
-    val postings = termFreq.persist()
+    val postings = keep(termFreq)
 
-    val stats = tokenized.agg(count(lit(1)).as("n"), avg("doc_len").as("avgdl")).head()
-    // avg over an empty corpus is NULL — an empty index must still search
-    val avgdl = if (stats.isNullAt(1)) 0.0 else stats.getDouble(1)
-    Index(postings, stats.getLong(0), avgdl)
+    val stats = tokenized.agg(count(lit(1)).as("n"), sum(col("doc_len").cast("long")).as("total")).head()
+    // sum over an empty corpus is NULL — an empty index must still search
+    Index(postings, stats.getLong(0), if (stats.isNullAt(1)) 0L else stats.getLong(1))
   }
 
   /** Incremental maintenance: extend `index` with `newDocs` WITHOUT
     * touching the existing postings — an O(batch) union plus a constant
-    * stats update (numDocs, running-mean avgdl), vs the reference's
-    * O(corpus) per-batch index rebuild. Sound for append-only ingest; a
-    * deletion/upsert batch still wants a rebuild (df would be stale
-    * nowhere — df is query-derived — but removed docs' postings must go).
+    * stats update, vs the reference's O(corpus) per-batch index rebuild.
+    * Sound for append-only ingest; a deletion/upsert batch still wants a
+    * rebuild (df would be stale nowhere — df is query-derived — but
+    * removed docs' postings must go).
     */
   def append(index: Index, newDocs: DataFrame, idCol: String, textCol: String): Index = {
     val batch = build(newDocs, idCol, textCol)
-    val total = index.numDocs + batch.numDocs
-    val avgdl =
-      if (total == 0) 0.0
-      else (index.avgDocLen * index.numDocs + batch.avgDocLen * batch.numDocs) / total
     Index(
       index.postings.unionByName(batch.postings),
-      total,
-      avgdl,
-      retained = (index.retained :+ index.postings :+ batch.postings).distinct
+      index.numDocs + batch.numDocs,
+      index.totalDocLen + batch.totalDocLen,
+      retained = fragments(index) :+ batch.postings
     )
   }
+
+  private def fragments(index: Index): Seq[DataFrame] =
+    if (index.retained.isEmpty) Seq(index.postings) else index.retained
 
   /** Persist an index as a parquet postings table + stats sidecar — the
     * durable form of the build (query clusters load this instead of
@@ -113,7 +123,7 @@ object FtsIndex {
     lease.renew() // the postings write is the long pole; protect the tail
     // stats sidecar goes through the Hadoop FileSystem of the target path
     // (not java.nio), so hdfs:// and s3a:// index locations work
-    val stats = s"""{"numDocs":${index.numDocs},"avgDocLen":${index.avgDocLen}}"""
+    val stats = s"""{"numDocs":${index.numDocs},"totalDocLen":${index.totalDocLen}}"""
     val p = new org.apache.hadoop.fs.Path(s"$path/stats.json")
     val fs = p.getFileSystem(index.postings.sparkSession.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)
@@ -129,42 +139,62 @@ object FtsIndex {
     val stats =
       try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
       finally in.close()
-    val numDocs = "\"numDocs\":(\\d+)".r.findFirstMatchIn(stats).get.group(1).toLong
-    val avgDocLen = "\"avgDocLen\":([0-9.Ee+-]+)".r.findFirstMatchIn(stats).get.group(1).toDouble
-    Index(spark.read.parquet(s"$path/postings"), numDocs, avgDocLen)
+    def field(name: String): Long = s"\"$name\":(\\d+)".r.findFirstMatchIn(stats).get.group(1).toLong
+    Index(spark.read.parquet(s"$path/postings"), field("numDocs"), field("totalDocLen"))
   }
 
   // Session-resident index per corpus key, so the query side (BM25 /
   // hybrid / context assembly) reads rather than rebuilds — mirroring the
-  // reference's write-then-index lifecycle. The entry hands over every
-  // persisted postings fragment.
+  // reference's write-then-index lifecycle.
   private val resident = graft.util.SessionIndices.namespace[Index]("fts")
-  private def held(idx: Index): graft.util.SessionIndices.Resident[Index] =
-    graft.util.SessionIndices.Resident(idx, idx.postings +: idx.retained)
+
+  /** Once the index has this many postings fragments, the next batch
+    * folds them back into one build instead of adding another, so a
+    * long-lived stream keeps a bounded union for every search to plan and
+    * scan.
+    */
+  private val MaxFragments = 8
+
+  /** A resident build: its postings are materialized and pinned at once.
+    * A lazily persisted plan over a catalog table would be re-listed when
+    * a later append refreshes that path (`Catalog.read`), and then count
+    * the rows the per-batch fragments already carry a second time.
+    */
+  private def pinnedBuild(docs: DataFrame, idCol: String, textCol: String): Resident[Index] = {
+    val idx = indexWith(docs, idCol, textCol)(graft.util.Checkpoints.pin)
+    Resident.pinning(idx, idx.postings)
+  }
+
+  /** An extended index: it keeps every fragment of the entry it extends
+    * and the storage that entry was handed.
+    */
+  private def extended(r: Resident[Index], idx: Index): Resident[Index] =
+    Resident(idx, fragments(idx), r.pinned, r.pinnedIn)
 
   def buildCached(key: String, docs: => DataFrame, idCol: String, textCol: String): Index =
-    resident.getOrBuild(key)(held(build(docs, idCol, textCol)))
+    resident.getOrBuild(key)(pinnedBuild(docs, idCol, textCol))
 
-  /** Streaming-safe incremental maintenance: atomically ensure the cached
-    * index under `key` includes the micro-batch identified by
-    * `batchToken` (a RUN-SCOPED identity, e.g. "checkpointDir#batchId" —
-    * bare batch ids collide across runs/checkpoint resets). Exactly one
-    * of three things happens, all under the key's monitor (which also
-    * serializes against concurrent [[buildCached]] calls):
+  /** Batch-safe incremental maintenance: atomically ensure the cached
+    * index under `key` includes the batch identified by `batchToken` (a
+    * RUN-SCOPED identity, e.g. "checkpointDir#batchId" — bare batch ids
+    * collide across runs/checkpoint resets). Exactly one of these
+    * happens, under the key's monitor (which also serializes against
+    * concurrent [[buildCached]] calls):
     *
     *   - index present, `lastBatchToken == batchToken`: REPLAYED batch —
-    *     no-op (a retried micro-batch must not union its postings twice);
-    *   - index present otherwise: extend with the batch, stamp the token;
-    *   - index absent: build from `preBatchCorpus` (the table BEFORE this
-    *     batch lands), then extend with the batch, stamp.
+    *     no-op (a retried batch must not union its postings twice);
+    *   - index present with fewer than [[MaxFragments]] fragments:
+    *     extend with the batch, stamp the token;
+    *   - otherwise (absent, or at the fragment bound): a pinned build of
+    *     `preBatchCorpus` (the table BEFORE this batch lands, without this
+    *     batch's documents), extended with the batch, stamp — or the
+    *     batch's build alone when that corpus is empty. At the bound this
+    *     folds every fragment back into one build.
     *
     * Call BEFORE appending the batch to the table: then a concurrent
     * search can neither double-count the batch (any index it builds/uses
     * is the one this critical section produced or preceded) nor lose it
-    * (the table only gains the batch after the index already has it). The
-    * absent case means the first streaming batch pays one build of the
-    * pre-existing corpus even if no search ever runs — the price of
-    * closing the build-vs-extend race windows on both sides.
+    * (the table only gains the batch after the index already has it).
     *
     * Ownership: the checkpoint storage under `newDocs` stays the
     * caller's while it still reads the batch; it passes to the index
@@ -177,25 +207,27 @@ object FtsIndex {
       idCol: String,
       textCol: String,
       preBatchCorpus: => DataFrame
-  ): Index =
+  ): Index = {
+    def extend(r: Resident[Index]): Resident[Index] =
+      extended(r, append(r.value, newDocs, idCol, textCol).copy(lastBatchToken = Some(batchToken)))
     resident.update(key) {
       case Some(r) if r.value.lastBatchToken.contains(batchToken) => r
-      case Some(r) =>
-        // the extended postings union every old fragment, so the old
-        // entry's storage all carries over
-        held(append(r.value, newDocs, idCol, textCol).copy(lastBatchToken = Some(batchToken)))
-          .copy(pinned = r.pinned, pinnedIn = r.pinnedIn)
-      case None =>
-        held(append(build(preBatchCorpus, idCol, textCol), newDocs, idCol, textCol)
-          .copy(lastBatchToken = Some(batchToken)))
+      case Some(r) if r.value.retained.length < MaxFragments => extend(r)
+      case _ =>
+        val corpus = preBatchCorpus
+        if (corpus.isEmpty) {
+          val idx = build(newDocs, idCol, textCol).copy(lastBatchToken = Some(batchToken))
+          Resident(idx, Seq(idx.postings))
+        } else extend(pinnedBuild(corpus, idCol, textCol))
     }
+  }
 
   /** Close a batch passed to [[extendForBatch]]: call once the caller has
     * finished reading `batchDocs`, on success and failure alike. The
     * index under `key` takes the batch's checkpoint storage if its
     * postings still read it, and [[invalidate]] releases it from then on;
-    * otherwise (a replayed batch the index skipped, or the key
-    * invalidated while the batch was still in use) it is released here.
+    * otherwise (a replayed batch the index skipped, or the key invalidated
+    * while the batch was still in use) it is released here.
     */
   def handOverBatch(key: String, batchDocs: DataFrame): Unit =
     resident.handOver(key, batchDocs)(idx => Seq(idx.postings))

@@ -670,8 +670,8 @@ object LoaderSchedule {
       // ZERO manifest rows: a legitimately EMPTIED store — every document
       // retracted, a state the append/retract protocol explicitly supports
       // — iff the data scan is empty too (ADVICE r15: this used to be
-      // misdiagnosed as 'mid-mutation, lost files' and sent the user to
-      // recertifyShards, which cannot make an empty store schedulable).
+      // misdiagnosed as 'mid-mutation, lost files', which no recovery
+      // can make schedulable).
       // An empty store's schedule is simply empty; its stamp is the zero
       // stamp, so a cursor minted against it still detects later growth.
       // The data read is schema-tolerant here (and ONLY here): a fully
@@ -684,7 +684,7 @@ object LoaderSchedule {
         s"LoaderSchedule: store at $path FAILS certification — the manifest " +
           s"has no rows but the files hold $nActual bins. The store " +
           "is mid-mutation or was written outside the export/append/retract " +
-          "protocol; run recertifyShards before scheduling.")
+          "protocol; re-export it before scheduling.")
       return (emptyBins(spark), StoreStamp(0L, 0L, 0L))
     }
     val bins = spark.read.parquet(s"$path/data")
@@ -697,7 +697,7 @@ object LoaderSchedule {
         s"${stored.getLong(0)} bins / ${stored.getLong(1)} tokens but the files hold " +
         s"${actual.getLong(0)} / ${if (actual.isNullAt(1)) 0L else actual.getLong(1)}. " +
         "The store is mid-mutation, lost files, or was written outside the " +
-        "export/append/retract protocol; run recertifyShards before scheduling.")
+        "export/append/retract protocol; re-export it before scheduling.")
     (bins, StoreStamp(stored.getLong(0), stored.getLong(1), stored.getLong(2)))
   }
 

@@ -377,89 +377,6 @@ object QualityClassifier {
       .withColumn("pred_class", coalesce(col("pred_class"), lit(emptyPred)))
   }
 
-  // ---------------------------------------------------------------------
-  // Model persistence — the writeLsh/loadLsh artifact convention: bounded
-  // parquet model rows + a params.json sidecar, schema-checked on load.
-  // Without this the model lives only as a driver-side case class: a
-  // restart of StreamingIngest(qualityModel = ...) silently loses the
-  // gate it was configured with, and two sessions cannot share a model.
-  // ---------------------------------------------------------------------
-
-  private def writeSidecar(
-      spark: org.apache.spark.sql.SparkSession, path: String, json: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/params.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(json.getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  private def readSidecar(
-      spark: org.apache.spark.sql.SparkSession, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/params.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-    finally in.close()
-  }
-
-  private def sidecarNum(json: String, key: String, path: String): Long =
-    s""""$key":(-?\\d+)""".r.findFirstMatchIn(json)
-      .getOrElse(throw new IllegalStateException(
-        s"loadModel: no '$key' in $path/params.json"))
-      .group(1).toLong
-
-  private def requireModelSchema(df: DataFrame, expected: Seq[(String, String)], path: String): Unit = {
-    val actual = df.schema.fields.map(f => f.name -> f.dataType.simpleString).toSeq
-    require(
-      actual == expected,
-      s"loadModel: $path/model has schema $actual, expected $expected - " +
-        "not a persisted QualityClassifier model (or written by an incompatible version)")
-  }
-
-  /** Persist a fitted 2-class model: `(feature, sp, sn)` parquet rows
-    * (one per feature either class saw — ≤ nFeatures of them) + a
-    * params sidecar carrying what the rows cannot (nFeatures, class
-    * counts). Overwrites `path`. The artifact is engine-portable plain
-    * parquet, so a model fit by one session gates any other.
-    */
-  def writeModel(m: CentroidModel, path: String, spark: org.apache.spark.sql.SparkSession): Unit =
-    graft.sources.StoreLease.withLease(path, "write-model") {
-    import spark.implicits._
-    val rows = (m.sumPos.keySet ++ m.sumNeg.keySet).toSeq.sorted
-      .map(f => (f.toLong, m.sumPos.getOrElse(f, 0L), m.sumNeg.getOrElse(f, 0L)))
-    rows.toDF("feature", "sp", "sn")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/model")
-    writeSidecar(spark, path,
-      s"""{"kind":"centroid2","nFeatures":${m.nFeatures},"nPos":${m.nPos},"nNeg":${m.nNeg}}""")
-  }
-
-  /** Load a persisted 2-class model (inverse of [[writeModel]]):
-    * sidecar kind + parquet schema are checked before a single row is
-    * trusted, and the reloaded model re-passes the gap-headroom bound —
-    * a loaded model scores bit-identically to the one that was written
-    * (spec-pinned).
-    */
-  def loadModel(spark: org.apache.spark.sql.SparkSession, path: String): CentroidModel = {
-    val json = readSidecar(spark, path)
-    require(
-      json.contains(""""kind":"centroid2""""),
-      s"loadModel: $path/params.json is not a 2-class centroid model sidecar: $json")
-    val df = spark.read.parquet(s"$path/model")
-    requireModelSchema(df, Seq("feature" -> "bigint", "sp" -> "bigint", "sn" -> "bigint"), path)
-    val rows = df.collect()
-    val m = CentroidModel(
-      nFeatures = sidecarNum(json, "nFeatures", path).toInt,
-      nPos = sidecarNum(json, "nPos", path),
-      nNeg = sidecarNum(json, "nNeg", path),
-      sumPos = rows.iterator.map(r => r.getLong(0).toInt -> r.getLong(1)).filter(_._2 != 0L).toMap,
-      sumNeg = rows.iterator.map(r => r.getLong(0).toInt -> r.getLong(2)).filter(_._2 != 0L).toMap)
-    require(m.nPos > 0 && m.nNeg > 0,
-      s"loadModel: degenerate class counts +1:${m.nPos} -1:${m.nNeg} in $path")
-    requireGapHeadroom(m, "loadModel")
-    m
-  }
-
   /** fit + classify in one call: train on the rows of `docs` matched by
     * `labeledWhere` (the labeled sample), score everything.
     */

@@ -480,85 +480,6 @@ object SequencePacking {
       .orderBy("shard")
   }
 
-  /** Certify the DOCUMENT-MEMBERSHIP INDEX against the data — the
-    * read-side counterpart of [[verifyShards]] for takedown discovery:
-    * a retraction trusts `path/docs` to name every shard carrying a
-    * doomed document, so an audit verb proves that trust at maintenance
-    * cadence. Recomputes `(doc_id, shard)` membership from every bin's
-    * `doc_ids` (the full scan the index exists to avoid — this is the
-    * audit, not the discovery path) and full-outer compares with the
-    * index. Returns ONLY the mismatched rows,
-    * `(doc_id, shard, in_data, in_index)`; empty = the index is exact.
-    * The crash-window analysis makes the two directions asymmetric:
-    * `in_data=false` (stale EXTRA index row — a crash between a
-    * retraction's data and index swaps) costs only a superset discovery
-    * and self-heals on the next touching rewrite; `in_index=false`
-    * (MISSING row) would make an index-resolved takedown skip that
-    * document's shard — the state this verb exists to surface (fix:
-    * re-export, or rebuild the index from data). Read-only: no lease.
-    */
-  def verifyDocsIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String
-  ): DataFrame = {
-    spark.catalog.refreshByPath(s"$path/data")
-    spark.catalog.refreshByPath(s"$path/docs")
-    val fromData = docsIndexOf(spark.read.parquet(s"$path/data"))
-      .distinct().withColumn("in_data", lit(true))
-    val fromIndex = spark.read.parquet(s"$path/docs")
-      .select(col("doc_id"), col("shard").cast("long").as("shard"))
-      .distinct().withColumn("in_index", lit(true))
-    fromData.join(fromIndex, Seq("doc_id", "shard"), "full_outer")
-      .where(col("in_data").isNull || col("in_index").isNull)
-      .select(col("doc_id"), col("shard"),
-        coalesce(col("in_data"), lit(false)).as("in_data"),
-        coalesce(col("in_index"), lit(false)).as("in_index"))
-      .orderBy("doc_id", "shard")
-  }
-
-  /** Recompute the manifest from the shard files as they are NOW and
-    * swap it in — [[exportShards]]' certify step alone, no data
-    * rewrite. This is the recovery verb for a crash that interrupts
-    * [[retractFromShards]] between its per-shard swaps and its manifest
-    * splice: the rewritten shard then fails [[verifyShards]] (correctly
-    * — the manifest IS stale), and a retraction re-run cannot fix it
-    * (the victim is already gone, so no shard looks affected).
-    * Re-certifying from the files restores the green state; returns the
-    * reloaded manifest.
-    */
-  def recertifyShards(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      ttlMs: Long = graft.sources.StoreLease.DefaultTtlMs
-  ): DataFrame =
-    graft.sources.StoreLease.withRenewableLease(path, "recertify", ttlMs) { lease =>
-      recertifyShardsImpl(spark, path, lease)
-    }
-
-  private def recertifyShardsImpl(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      lease: graft.sources.LeaseProtocol.Held
-  ): DataFrame = {
-    val manifest = manifestOf(spark.read.parquet(s"$path/data")).localCheckpoint()
-    // the full-store certification scan is this verb's long pole —
-    // heartbeat before the swap
-    lease.renew()
-    try {
-      // Catalog.swapIn tolerates an ABSENT manifest (a crash inside a
-      // previous swap's two-move window leaves none) — this verb must be
-      // able to RECOVER from that state, not throw on its own first move
-      graft.sources.Catalog.swapIn(java.nio.file.Paths.get(s"$path/manifest"), Seq(lease)) { tmp =>
-        manifest.write.mode("overwrite").parquet(tmp.toString)
-      }
-    } finally {
-      graft.util.Checkpoints.release(
-        graft.util.Checkpoints.pinnedRddIds(manifest), spark)
-    }
-    spark.catalog.refreshByPath(s"$path/manifest")
-    spark.read.parquet(s"$path/manifest")
-  }
-
   /** Surgical takedown inside EXPORTED training shards — the delete
     * verb's last mile: remove the given documents' segments from every
     * packed bin that carries them WITHOUT re-exporting the corpus. The
@@ -593,9 +514,9 @@ object SequencePacking {
     * carried any of the ids; nothing touched). Each shard swap is
     * atomic, but the cascade as a whole is not: a crash between the
     * swaps and the manifest splice leaves the rewritten shard failing
-    * [[verifyShards]] (the manifest is genuinely stale) — run
-    * [[recertifyShards]] to restore the green state; content can never
-    * resurrect (the rewritten files simply no longer hold the victim).
+    * [[verifyShards]] (the manifest is genuinely stale) — re-export the
+    * store to restore the green state; content can never resurrect (the
+    * rewritten files simply no longer hold the victim).
     */
   def retractFromShards(
       spark: org.apache.spark.sql.SparkSession,
@@ -748,8 +669,8 @@ object SequencePacking {
   /** Incremental shard refresh (VERDICT r14 #1): land a NEW batch of
     * packed bins into an EXISTING [[exportShards]] store without
     * re-exporting the corpus — the last seam between a continuously
-    * ingesting stream (`input_ids_stream` → [[packSequences]] over the
-    * batch) and the trainer's loader. O(batch) everywhere: the batch's
+    * ingesting stream ([[packSequences]] over each batch) and the
+    * trainer's loader. O(batch) everywhere: the batch's
     * bins are rebased onto fresh ids, appended into their `shard=N`
     * directories, the membership index and the append ledger grow by
     * the batch, and the manifest refresh is ADDITIVE — every manifest
@@ -987,8 +908,7 @@ object SequencePacking {
         // per affected shard (count(*) reads parquet footers, not data)
         // arbitrates whether the stored row is pre-splice (stored + delta
         // == on disk -> add), post-splice (stored == on disk -> skip), or
-        // neither (a foreign mutation crashed mid-flight -> loud, run
-        // recertifyShards).
+        // neither (a foreign mutation crashed mid-flight -> loud).
         val delta = manifestOf(batchData).collect()
           .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
           .toMap
@@ -1016,7 +936,7 @@ object SequencePacking {
               throw new IllegalStateException(
                 s"appendShards: shard $sh has $disk bins on disk but the manifest " +
                   s"records ${st._1} and this batch adds ${d._1} — the store was " +
-                  "mutated outside the append/retract protocol; run recertifyShards")
+                  "mutated outside the append/retract protocol; re-export it")
           (sh, row._1, row._2, row._3, row._4)
         }
         import spark.implicits._
@@ -1070,8 +990,8 @@ object SequencePacking {
       .where(col("shard") === shard).collect()
     require(stored.length == 1,
       s"readShard: shard $shard has ${stored.length} manifest rows at $path — " +
-        "an uncertified shard must not be read (run recertifyShards if the " +
-        "store crashed mid-mutation)")
+        "an uncertified shard must not be read (re-export the store if it " +
+        "crashed mid-mutation)")
     spark.catalog.refreshByPath(s"$path/data")
     val rows = spark.read.parquet(s"$path/data").where(col("shard") === shard)
     val actual = manifestOf(rows).collect()
@@ -1101,12 +1021,11 @@ object SequencePacking {
     * against a digest recompute of the rewritten files before the swap
     * is considered done (compaction must never be able to lose a bin
     * silently; any mismatch raises and the store is left on the
-    * already-swapped rewrite for recertifyShards to adjudicate).
+    * already-swapped rewrite, failing [[verifyShards]]).
     * Ledger rows are all RETAINED (batch keys are the replay guard
     * forever; they are tiny — one row per batch ever appended).
     *
-    * Run at maintenance cadence like
-    * [[TextAnalysis.compactWordHistogram]] / `Pipeline.gcImages`.
+    * Run at maintenance cadence like `Pipeline.gcImages`.
     * Returns the number of data files removed by the rewrite.
     *
     * Lease lifetime: the writer lease renews BETWEEN shards, so a
@@ -1185,11 +1104,11 @@ object SequencePacking {
           .collect()
         val want = stored.getOrElse(sh,
           throw new IllegalStateException(
-            s"compactShards: shard $sh has data but no manifest row; run recertifyShards first"))
+            s"compactShards: shard $sh has data but no manifest row; re-export the store"))
         require(re.length == 1 &&
           (re(0).getLong(1), re(0).getLong(2), re(0).getLong(3), re(0).getLong(4)) == want,
           s"compactShards: shard $sh digest drifted across the rewrite — " +
-            "refusing to certify; run recertifyShards to adjudicate")
+            "refusing to certify")
         val after = dataDir.listFiles().count(_.getName.endsWith(".parquet"))
         removedAcc.addAndGet((before - after).toLong)
       }

@@ -347,10 +347,9 @@ object TextAnalysis {
       scale, backoffBits)
 
   /** A trained bigram LM: digest-keyed unigram and bigram count tables.
-    * Plain associative counts — the simplest persisted index artifact in
-    * the family ([[graft.operators.VectorSearch.writeLsh]] et al.): train
-    * once on a trusted corpus, [[writeLm]] it, then [[scoreWithLm]] every
-    * incoming batch without touching the training text again. The token
+    * Plain associative counts: train once on a trusted corpus, then
+    * [[scoreWithLm]] every incoming batch without touching the training
+    * text again. The token
     * total is `sum(uni.cnt1)` by construction, so it is never stored —
     * it cannot drift out of sync with the tables.
     */
@@ -382,23 +381,6 @@ object TextAnalysis {
       counts.where(col("kg") >= biTag)
         .select((col("kg") - biTag).as("pair"), col("cnt").as("cnt2")))
   }
-
-  /** Persist the LM count tables (vocabulary-sized — plain parquet).
-    * Leased like every persisted-artifact write: two drivers rewriting
-    * the same LM store concurrently could otherwise interleave uni/bi
-    * tables from DIFFERENT corpora undetected.
-    */
-  def writeLm(lm: BigramLm, path: String): Unit =
-    graft.sources.StoreLease.withLease(path, "write-lm") {
-      lm.uni.write.mode("overwrite").parquet(s"$path/uni")
-      lm.bi.write.mode("overwrite").parquet(s"$path/bi")
-    }
-
-  /** Load a persisted LM (inverse of [[writeLm]]). */
-  def loadLm(spark: org.apache.spark.sql.SparkSession, path: String): BigramLm =
-    BigramLm(
-      spark.read.parquet(s"$path/uni"),
-      spark.read.parquet(s"$path/bi"))
 
   /** CCNet-style corpus bucketing: split rows into `nBuckets` contiguous
     * rank slices of the `valueCol` total order (ascending, `tieCol`
@@ -723,9 +705,8 @@ object TextAnalysis {
   /** Persist a histogram (vocabulary-sized parquet; `batch_key`
     * partitions replay bookkeeping — the initial write stamps "-").
     * Like every mutating histogram verb, runs under the store's writer
-    * lease (r16 verdict #1: two drivers appending deltas concurrently —
-    * a streaming ingest racing a maintenance compaction — would
-    * interleave undetected without it; the shard store's exact exposure).
+    * lease (r16 verdict #1: two drivers writing the store concurrently
+    * would interleave undetected without it).
     */
   def writeWordHistogram(h: WordHistogram, path: String): Unit =
     graft.sources.StoreLease.withLease(path, "write-hist") {
@@ -740,15 +721,6 @@ object TextAnalysis {
     * rows, which [[loadWordHistogram]] collapses before summing, so
     * replays can never double-count.
     */
-  /** Marker prefix of a batch key whose delta [[compactWordHistogram]]
-    * already folded into the base "-" rows: the store keeps one
-    * `(word="-", freq=0, batch_key="compacted:<key>")` row per folded
-    * key, INSIDE the hist table, so compaction is a single atomic swap
-    * and a crash can never separate the totals from the ledger that
-    * makes replayed pre-compact appends no-ops.
-    */
-  private val CompactedPrefix = "compacted:"
-
   def appendWordHistogram(
       batch: DataFrame,
       textCol: String,
@@ -758,132 +730,9 @@ object TextAnalysis {
     require(batchKey != "-",
       "appendWordHistogram: batch_key \"-\" is reserved for the initial writeWordHistogram stamp " +
         "— an append under it would collide with the base counts")
-    require(!batchKey.startsWith(CompactedPrefix),
-      s"appendWordHistogram: batch_key prefix '$CompactedPrefix' is reserved for " +
-        "compactWordHistogram's fold markers")
     wordHistFrame(batch, textCol)
       .select(col("word"), col("freq"), lit(batchKey).as("batch_key"))
       .write.mode("append").parquet(s"$path/hist")
-  }
-
-  /** PER-DOCUMENT word counts into the `$path/doc_hist` sidecar — the
-    * provenance a takedown needs to subtract one document's exact
-    * contribution from the maintained histogram (ADVICE r14: a deleted
-    * document's counts otherwise live in the aggregate forever; the raw
-    * text is gone by delete time and chunk text double-counts overlap
-    * windows, so the contribution must be recorded at ingest). O(batch)
-    * like [[appendWordHistogram]], same `batchKey` replay convention: a
-    * crash-replayed batch appends IDENTICAL rows, which
-    * [[retractWordHistogramDoc]] collapses before summing. Append-only —
-    * the sidecar is never rewritten.
-    */
-  def appendDocWordCounts(
-      batch: DataFrame,
-      idCol: String,
-      textCol: String,
-      path: String,
-      batchKey: String
-  ): Unit = graft.sources.StoreLease.withRenewableLease(path, "append-doc-hist") { lease =>
-    // one-time migration of a pre-bucket sidecar: appending a bucketed
-    // layout into a flat directory would leave parquet leaves at two
-    // partition depths — unreadable by partition discovery — so rewrite
-    // the legacy rows under buckets first (atomic swap, tiny). The
-    // CONDITION is an O(1) filesystem peek (one directory listing for a
-    // bucket= child), never a per-batch schema/partition discovery over
-    // the corpus-lifetime sidecar — this runs on the ingest hot path.
-    val spark = batch.sparkSession
-    val dhDir = new java.io.File(s"$path/doc_hist")
-    if (dhDir.isDirectory) {
-      val kids = Option(dhDir.listFiles()).getOrElse(Array.empty)
-      val legacyFlat = !kids.exists(f => f.isDirectory && f.getName.startsWith("bucket=")) &&
-        kids.exists(f => f.isFile && f.getName.endsWith(".parquet"))
-      if (legacyFlat) {
-        spark.catalog.refreshByPath(s"$path/doc_hist")
-        val migrated = spark.read.parquet(s"$path/doc_hist")
-          .withColumn("bucket", pmod(xxhash64(col("doc_id")), lit(64L)))
-          .localCheckpoint()
-        try {
-          graft.sources.Catalog.swapIn(
-            java.nio.file.Paths.get(s"$path/doc_hist"), Seq(lease)) { tmp =>
-            migrated.repartition(64, col("bucket"))
-              .write.mode("overwrite").partitionBy("bucket").parquet(tmp.toString)
-          }
-        } finally {
-          graft.util.Checkpoints.release(
-            graft.util.Checkpoints.pinnedRddIds(migrated), spark)
-        }
-        spark.catalog.refreshByPath(s"$path/doc_hist")
-      }
-    }
-    // the one-time legacy migration above rewrites the corpus-lifetime
-    // sidecar — heartbeat so the O(batch) append after it stays protected
-    lease.renew()
-    batch
-      .select(col(idCol).cast("string").as("doc_id"),
-        explode(TextFunctions.ftsTokens(col(textCol))).as("word"))
-      .groupBy("doc_id", "word")
-      .agg(count(lit(1)).as("freq"))
-      // partitioned by a 64-way doc_id hash bucket: doc_id is a content
-      // hash, so parquet min/max stats prune NOTHING — without the
-      // bucket, every takedown would scan the corpus-lifetime sidecar
-      // to extract one document; with it, discovery reads 1/64 of the
-      // files (the same index-over-scan move as the shard store's
-      // path/docs membership table)
-      .select(col("doc_id"), col("word"), col("freq"), lit(batchKey).as("batch_key"),
-        pmod(xxhash64(col("doc_id")), lit(64L)).as("bucket"))
-      .write.mode("append").partitionBy("bucket").parquet(s"$path/doc_hist")
-  }
-
-  /** Subtract one document's word counts from a maintained histogram —
-    * the takedown verb's histogram leg. The document's exact
-    * contribution is read from the `$path/doc_hist` sidecar (replayed
-    * ingest duplicates collapsed by the (word, batch_key) key) and
-    * appended as a NEGATIVE delta batch under the key
-    * `takedown:<docId>`, which every existing load/compact path already
-    * handles: [[loadWordHistogram]] sums it like any delta, a
-    * re-invoked delete appends IDENTICAL rows that collapse, and after
-    * [[compactWordHistogram]] folds the key its marker makes any replay
-    * a no-op — so the subtraction can never double-apply. Returns the
-    * number of distinct words subtracted (0 = unknown doc or no
-    * sidecar; nothing appended).
-    */
-  def retractWordHistogramDoc(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      docId: String
-  ): Long = {
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$path/doc_hist"))) return 0L
-    graft.sources.StoreLease.withLease(path, "retract-hist") {
-      spark.catalog.refreshByPath(s"$path/doc_hist")
-      val side = spark.read.parquet(s"$path/doc_hist")
-      // bucket prune first (the literal folds to a constant, so the scan
-      // opens 1/64 of the partition dirs); sidecars written before the
-      // bucket existed fall back to the full scan
-      val pruned =
-        if (side.columns.contains("bucket"))
-          side.where(col("bucket") === pmod(xxhash64(lit(docId)), lit(64L)))
-        else side
-      val contribution = pruned
-        .where(col("doc_id") === docId)
-        // a crash-replayed ingest batch re-appended identical rows
-        .dropDuplicates("word", "batch_key")
-        .groupBy("word").agg(sum("freq").as("freq"))
-        .localCheckpoint() // count + append must agree; never re-read mid-append
-      try {
-        val n = contribution.count()
-        if (n == 0L) 0L
-        else {
-          contribution
-            .select(col("word"), (-col("freq")).as("freq"),
-              lit(s"takedown:$docId").as("batch_key"))
-            .write.mode("append").parquet(s"$path/hist")
-          n
-        }
-      } finally {
-        graft.util.Checkpoints.release(
-          graft.util.Checkpoints.pinnedRddIds(contribution), spark)
-      }
-    }
   }
 
   /** Load a persisted histogram, collapsing appended deltas (and any
@@ -897,21 +746,9 @@ object TextAnalysis {
       spark: org.apache.spark.sql.SparkSession,
       path: String
   ): WordHistogram = {
-    spark.catalog.refreshByPath(s"$path/hist") // the store mutates by swap
-    val raw = spark.read.parquet(s"$path/hist")
-    // keys already folded into the base by compactWordHistogram: their
-    // rows were rewritten away, and a REPLAYED append under one (a crash
-    // between an append and its checkpoint commit, adjudicated after a
-    // compact) must stay a no-op — drop any post-compact re-appearance
-    val folded = raw
-      .where(col("batch_key").startsWith(CompactedPrefix))
-      .select(expr(s"substring(batch_key, ${CompactedPrefix.length + 1})").as("batch_key"))
-      .distinct()
-    val live = raw
-      .where(!col("batch_key").startsWith(CompactedPrefix))
-      .join(broadcast(folded), Seq("batch_key"), "left_anti")
+    spark.catalog.refreshByPath(s"$path/hist") // appends change the listing
     WordHistogram(
-      live
+      spark.read.parquet(s"$path/hist")
         .groupBy("word", "batch_key")
         .agg(min("freq").as("_mn"), max("freq").as("_mx"))
         .select(
@@ -924,85 +761,6 @@ object TextAnalysis {
               lit("' — a batch key was reused across different batches"))))
             .as("freq"))
         .groupBy("word").agg(sum("freq").as("freq")))
-  }
-
-  /** Compact a persisted histogram store: fold every appended batch
-    * delta into the base "-" rows, so the store returns to
-    * vocabulary-sized and [[loadWordHistogram]] stops paying an
-    * O(N_batches x vocab) re-sum — the bound that otherwise leaks into
-    * the O(batch) append contract after thousands of micro-batches
-    * (VERDICT r13 #3). Run at compaction cadence, like
-    * [[graft.pipeline.Pipeline.gcImages]].
-    *
-    * Replay semantics survive: each folded key leaves a zero-freq
-    * `compacted:<key>` marker row IN the store, and load drops any
-    * post-compact re-append under a folded key — so a crash-replayed
-    * pre-compact batch stays a no-op forever. The markers grow by one
-    * ROW per batch ever compacted (keys, not vocab x keys — the growth
-    * the compaction exists to remove). Atomicity: the new store
-    * (totals + markers) is written to a temp directory and swapped in
-    * with one atomic move — totals and their replay ledger can never be
-    * observed separately. The swap goes through [[graft.sources.Catalog.swapIn]],
-    * the engine-wide commit seam that states the POSIX-rename assumption
-    * once and is where an object-store deployment plugs in a
-    * transactional table-format commit instead.
-    */
-  def compactWordHistogram(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String
-  ): Unit = graft.sources.StoreLease.withRenewableLease(path, "compact-hist") { lease =>
-    val histPath = s"$path/hist"
-    spark.catalog.refreshByPath(histPath)
-    val raw = spark.read.parquet(histPath)
-    val totals = loadWordHistogram(spark, path).hist
-    val priorMarkers = raw
-      .where(col("batch_key").startsWith(CompactedPrefix))
-      .select("word", "freq", "batch_key").distinct()
-    val newKeys = raw
-      .where(!col("batch_key").startsWith(CompactedPrefix) && col("batch_key") =!= "-")
-      .select("batch_key").distinct()
-      // a key both folded AND re-appended (post-compact replay) already
-      // has its marker — don't mint a duplicate
-      .join(broadcast(priorMarkers.select(
-        expr(s"substring(batch_key, ${CompactedPrefix.length + 1})").as("batch_key"))),
-        Seq("batch_key"), "left_anti")
-    val compacted = totals
-      .select(col("word"), col("freq"), lit("-").as("batch_key"))
-      .unionByName(priorMarkers)
-      .unionByName(newKeys.select(
-        lit("-").as("word"), lit(0L).as("freq"),
-        concat(lit(CompactedPrefix), col("batch_key")).as("batch_key")))
-    // write-then-swap: the plan reads the directory being replaced.
-    // Committed through the engine's one swap seam (Catalog.swapIn),
-    // which documents the POSIX-rename assumption and is the single
-    // override point for object-store deployments. The compacted plan
-    // must be fully materialized before the old directory disappears —
-    // the write INTO the temp dir is that materialization.
-    graft.sources.Catalog.swapIn(java.nio.file.Paths.get(histPath), Seq(lease)) { tmp =>
-      compacted.write.mode("overwrite").parquet(tmp.toString)
-    }
-    spark.catalog.refreshByPath(histPath)
-    // the per-doc sidecar gets the same small-file treatment: each
-    // ingest batch appended one file per touched bucket, so fold each
-    // bucket back to ~one file — content identical (rows, keys, buckets
-    // all retained; only the file layout changes). Pre-bucket sidecars
-    // are left alone (their one-directory layout has no fragmentation
-    // axis to fold along).
-    val docHistPath = s"$path/doc_hist"
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(docHistPath))) {
-      // heartbeat between the two swaps: the sidecar fold re-reads the
-      // corpus-lifetime doc_hist, the compaction's long pole at scale
-      lease.renew()
-      spark.catalog.refreshByPath(docHistPath)
-      val side = spark.read.parquet(docHistPath)
-      if (side.columns.contains("bucket")) {
-        graft.sources.Catalog.swapIn(java.nio.file.Paths.get(docHistPath), Seq(lease)) { tmp =>
-          side.repartition(64, col("bucket"))
-            .write.mode("overwrite").partitionBy("bucket").parquet(tmp.toString)
-        }
-        spark.catalog.refreshByPath(docHistPath)
-      }
-    }
   }
 
   /** Driver-local BPE merge training — the production path behind
@@ -1237,7 +995,7 @@ object TextAnalysis {
     * alphabet + merge products), unigram the whole-bit cost table. All
     * are bounded driver-side (merges = rounds; costs = alphabet + topK)
     * and broadcast to executors by closure. Lifecycle verbs follow the
-    * [[writeLm]]/[[graft.operators.VectorSearch.writePq]] convention:
+    * [[graft.operators.VectorSearch.writePq]] convention:
     * train*Tokenizer → [[writeTokenizer]] → [[loadTokenizer]] → the
     * artifact overloads of [[bpeEncode]]/[[wordPieceEncode]]/
     * [[unigramTokenCounts]].
@@ -1275,9 +1033,8 @@ object TextAnalysis {
   val UnkToken: String = "<unk>"
 
   /** The STABLE (token_id, token) vocabulary of a trained tokenizer —
-    * the id space [[bpeEncodeIds]]/[[wordPieceEncodeIds]]/
-    * [[unigramEncodeIds]] emit and a trainer's embedding matrix is sized
-    * by. Deterministic from the artifact alone (no corpus, no ordering
+    * the id space [[bpeEncodeIds]] emits and a trainer's embedding
+    * matrix is sized by. Deterministic from the artifact alone (no corpus, no ordering
     * dependence): id 0 is the reserved [[UnkToken]]; BPE/WordPiece then
     * number the sorted alphabet 1..A and the merge products A+1..A+R in
     * training-round order; unigram numbers its cost-table symbols in
@@ -1729,42 +1486,6 @@ object TextAnalysis {
         sum(col("unk_w")).as("n_unk"))
   }
 
-  /** WordPiece encode to REAL token-ID sequences: greedy longest-match
-    * segmentation (the [[wordPieceEncode]] loop) mapped through the
-    * stable [[tokenVocab]] ids, concatenated in document word order —
-    * `size(input_ids)` equals [[wordPieceEncode]]'s `n_tokens`
-    * (spec-pinned). A word with any unmatched position is ONE
-    * [[UnkToken]] id 0 (the whole-word-UNK BERT convention the count
-    * encoder already follows). [[encodeIdsFrame]] scale shape.
-    */
-  def wordPieceEncodeIds(
-      tok: WordPieceTokenizer,
-      applyDocs: DataFrame,
-      idCol: String,
-      textCol: String
-  ): DataFrame = {
-    val vocab: Set[String] =
-      tok.alphabet.toSet ++ tok.merges.iterator.map { case (_, a, b) => a + b }
-    val maxLen = if (vocab.isEmpty) 1 else vocab.iterator.map(_.length).max
-    val ids = vocabIds(tok)
-    val idsOfWord = udf { (word: String) =>
-      val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-      var pos = 0
-      var ok = true
-      while (ok && pos < word.length) {
-        var l = math.min(maxLen, word.length - pos)
-        var found = 0
-        while (found == 0 && l >= 1) {
-          if (vocab.contains(word.substring(pos, pos + l))) found = l else l -= 1
-        }
-        if (found == 0) ok = false
-        else { out += ids.getOrElse(word.substring(pos, pos + found), 0L); pos += found }
-      }
-      if (ok) out.toSeq else Seq(0L)
-    }
-    encodeIdsFrame(applyDocs, idCol, textCol, idsOfWord)
-  }
-
   /** Unigram-LM (SentencePiece-style, Kudo 2018) tokenization with
     * WHOLE-BIT integer costs — the third tokenizer family next to BPE
     * (count-greedy merges) and WordPiece (likelihood-greedy merges):
@@ -1971,47 +1692,6 @@ object TextAnalysis {
         count(lit(1)).as("n_words"),
         sum(col("n_tokens_w")).as("n_tokens"),
         sum(col("cost_w")).as("cost_bits"))
-  }
-
-  /** Unigram encode to REAL token-ID sequences: each distinct word's
-    * Viterbi-optimal segmentation ([[unigramViterbiPath]] — the same DP
-    * the count encoder scores with) mapped through the stable
-    * [[tokenVocab]] ids, concatenated in document word order;
-    * `size(input_ids)` equals [[unigramTokenCounts]]'s `n_tokens`
-    * (spec-pinned). A fallback word (overlong / never-seen character) is
-    * ONE [[UnkToken]] id 0, mirroring the count encoder's single
-    * fallback token. [[encodeIdsFrame]] scale shape.
-    */
-  def unigramEncodeIds(
-      tok: UnigramTokenizer,
-      docs: DataFrame,
-      idCol: String,
-      textCol: String
-  ): DataFrame = {
-    val (costs, maxSubLen, maxWordLen) = (tok.costs, tok.maxSubLen, tok.maxWordLen)
-    val ids = vocabIds(tok)
-    val idsOfWord = udf { (w: String) =>
-      unigramViterbiPath(costs, maxSubLen, maxWordLen, w)
-        .fold(Seq(0L))(_.map(s => ids.getOrElse(s, 0L)))
-    }
-    encodeIdsFrame(docs, idCol, textCol, idsOfWord)
-  }
-
-  /** Family-dispatching [[bpeEncodeIds]]/[[wordPieceEncodeIds]]/
-    * [[unigramEncodeIds]] — encode under ANY tokenizer artifact (e.g.
-    * one [[loadTokenizer]] just reloaded) without the caller matching
-    * on the family. Same output contract as the per-family forms:
-    * `(idCol, input_ids, n_tokens)`, zero-word docs omitted.
-    */
-  def encodeIds(
-      tok: Tokenizer,
-      docs: DataFrame,
-      idCol: String,
-      textCol: String
-  ): DataFrame = tok match {
-    case t: BpeTokenizer       => bpeEncodeIds(t, docs, idCol, textCol)
-    case t: WordPieceTokenizer => wordPieceEncodeIds(t, docs, idCol, textCol)
-    case t: UnigramTokenizer   => unigramEncodeIds(t, docs, idCol, textCol)
   }
 
   def bpePairStats(docs: DataFrame, textCol: String, k: Int = 20): DataFrame = {

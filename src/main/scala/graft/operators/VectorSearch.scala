@@ -1249,10 +1249,9 @@ object VectorSearch {
   }
 
   /** Load the codebook sidecar of a persisted PQ artifact (inverse of
-    * [[writePq]]'s codebook half) — the frozen-codebook consumers
-    * ([[StreamingIngest]]'s per-batch encode, [[graft.pipeline.Retriever]]'s
-    * ADC mode) need the model; the code table is plain parquet under
-    * `codes/`.
+    * [[writePq]]'s codebook half) — the frozen-codebook consumer
+    * ([[graft.pipeline.Retriever]]'s ADC mode) needs the model; the code
+    * table is plain parquet under `codes/`.
     */
   def loadPqModel(spark: org.apache.spark.sql.SparkSession, path: String): PqModel = {
     val where = s"$path/codebook.json"

@@ -13,17 +13,17 @@ import graft.sources.{Catalog, MarkdownSource, PdfSource}
   * reference's `Pipeline.process_document` / `process_directory` /
   * `process_new_documents` (reference: src/pipeline.py:47-220).
   *
-  * One lazy DAG per batch:
+  * One lazy DAG per batch ([[ingestBatch]]):
   *   binaryFile scan -> incremental anti-join vs ledger (J1) -> validate
   *   (F1) -> extract (U1, mapPartitions provider) -> markdown checkpoint
-  *   (S4) -> chunk flatMap (U4+U5) -> embed (U6) -> load documents +
-  *   chunks tables -> rebuild FTS index (S7).
+  *   (S4) -> chunk flatMap (U4+U5) -> embed (U6) -> extend the resident
+  *   FTS index (S7) -> load chunks, then the documents ledger.
   *
   * Scale notes: every stage until the table writes is a narrow,
   * per-partition transformation — no shuffle. The only shuffles in the
-  * whole ingest are inside the FTS index build aggregations. Document ids
-  * are content-derived (sha2 of file hash), not UUIDs, so re-runs are
-  * idempotent and oracle-testable (SURVEY §7.4.7).
+  * whole ingest are inside the FTS index build aggregations, over the
+  * batch only. Document ids are content-derived (sha2 of file hash), not
+  * UUIDs, so re-runs are idempotent and oracle-testable (SURVEY §7.4.7).
   */
 final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.default) {
 
@@ -52,8 +52,34 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
       markdownDir: Option[String] = None,
       imagesDir: Option[String] = None
   ): Long = {
-    val scanned = PdfSource
-      .scan(spark, pdfDir)
+    val n = ingestBatch(PdfSource.scan(spark, pdfDir), s"directory:${java.util.UUID.randomUUID}",
+      markdownDir, imagesDir)
+    graft.util.JsonLog.info("ingest_directory", "dir" -> pdfDir, "ingested_docs" -> n)
+    n
+  }
+
+  /** Load one batch of scanned PDF files (the `binaryFile` columns: path,
+    * length, content, ...) into the `documents` and `chunks` tables and
+    * grow the resident FTS index by it. The one ingest body: both
+    * [[processDirectory]] and each micro-batch of
+    * [[graft.streaming.StreamingIngest]] run it. `batchToken` names the
+    * batch for the index's replay stamp (a stream's checkpoint plus its
+    * batch id). Returns the number of documents ingested.
+    *
+    * Crash-safe order: the chunks append goes first, skipping documents
+    * whose chunks already landed, and the `documents` ledger is written
+    * last. A crash between the two appends leaves chunks without ledger
+    * rows, so the rerun re-admits those files and appends only their
+    * ledger rows; the reverse order would leave `completed` rows with no
+    * chunks that no rerun re-admits.
+    */
+  private[graft] def ingestBatch(
+      scanned: DataFrame,
+      batchToken: String,
+      markdownDir: Option[String] = None,
+      imagesDir: Option[String] = None
+  ): Long = {
+    val hashed = scanned
       .withColumn("file_hash", TextFunctions.fileHash(col("content")))
       // same content under two names in ONE batch is one document (ids are
       // content-derived; without this the batch would write colliding ids)
@@ -63,12 +89,12 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
     // status=failed (re-admit). Ledger is small relative to the scan ->
     // broadcast anti-join, no shuffle of the scan side.
     val fresh =
-      if (!catalog.exists("documents")) scanned
+      if (!catalog.exists("documents")) hashed
       else {
         val ledger = broadcast(
           catalog.read("documents").select(col("file_hash"), col("status"))
         )
-        scanned
+        hashed
           .join(
             ledger.where(col("status") =!= DocumentStatus.Failed).select("file_hash"),
             Seq("file_hash"),
@@ -90,144 +116,173 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
         TextFunctions.qualityFallbackReason(col("markdown"), col("page_count"))
       )
 
-    // Materialize the batch ONCE and CUT its lineage before mutating the
-    // documents table: downstream writes refresh the ledger path's cache,
-    // and a recompute through the anti-join would see this batch's own
-    // rows (or the upsert-delete below) and corrupt results. When image
-    // extraction is requested the checkpoint keeps the raw bytes (so the
-    // scan+extract DAG still runs exactly once) and drops them right
-    // after; otherwise bytes are dropped before the checkpoint. (At
-    // cluster scale this checkpoint is a staging-table write instead.)
-    val batch =
-      if (imagesDir.isDefined) {
-        val withContent = extracted.localCheckpoint()
-        imagesDir.foreach { dir =>
-          // persist: the file-sink foreachPartition and the metadata append
-          // are two actions — without caching, the extraction fan-out
-          // would execute twice
-          val images = graft.sources.ImageExtraction
-            .extractImages(withContent.where(col("validation") === "valid"))
-            .persist()
-          // dedupImages runs INSIDE the try: a throw during its own
-          // actions must still unpersist the payload cache below (it
-          // releases its private scratch pins itself on throw)
-          var dedupRes: Option[Pipeline.ImageDedupResult] = None
-          try {
-            dedupRes =
-              if (config.imageDedup.enabled) Some(dedupImages(images)) else None
-            val kept = dedupRes.map(_.kept).getOrElse(images)
-            val meta = graft.sources.ImageExtraction
-              .writeImageFiles(kept, dir)
-              .withColumn("created_at", current_timestamp())
-            catalog.append(meta, "images")
-            // signatures and cluster labels land AFTER the images metadata:
-            // a crash in the window leaves a stored image that is merely
-            // unindexed/unlabeled (re-dedup later / labels-as-own-cluster,
-            // both harmless), never an index or label row referencing an
-            // image that was never stored — which would silently drop
-            // future copies (signatures) or double-label on re-ingest
-            // (clusters).
-            dedupRes.foreach { r =>
-              catalog.append(
-                r.keptSigs.withColumn("created_at", current_timestamp()), "image_signatures")
-              catalog.append(r.labels, "image_clusters")
-            }
-          } finally {
-            // released on EVERY exit: a throw mid-append must not leave the
-            // dedup scratch pins (or the payload cache) stranded in a
-            // driver that catches per-directory errors and continues
-            dedupRes.foreach(r => graft.util.Checkpoints.release(r.scratchPins, spark))
-            images.unpersist()
-          }
-        }
-        withContent.drop("content")
-      } else extracted.drop("content").localCheckpoint()
+    // The batch's two checkpoints. The scratch pin of the extracted rows is
+    // released when the batch ends, however it ends: it cuts the lineage
+    // of everything built on it, so its blocks are live until the last
+    // append. The chunks pin is not scratch: FtsIndex.handOverBatch gives
+    // it to the resident index when the index's batch postings read it.
+    var scratch: Option[DataFrame] = None
+    var batchChunks: Option[DataFrame] = None
+    try {
+      // Materialize the batch ONCE and CUT its lineage before mutating
+      // the tables: a recompute through the anti-join after the ledger
+      // append would see this batch's own rows and drop them. When image
+      // extraction is requested the checkpoint keeps the raw bytes (so
+      // the scan+extract DAG still runs exactly once) and drops them right
+      // after; otherwise bytes are dropped before the checkpoint.
+      val batch = {
+        val pinned = (if (imagesDir.isDefined) extracted else extracted.drop("content")).localCheckpoint()
+        scratch = Some(pinned)
+        imagesDir.foreach(dir => loadImages(pinned.where(col("validation") === "valid"), dir))
+        pinned.drop("content")
+      }
+      val valid = batch.where(col("validation") === "valid")
+      val invalid = batch.where(col("validation") =!= "valid")
+      val counts = batch.agg(count(lit(1)), count(when(col("validation") === "valid", 1))).head()
+      if (counts.getLong(0) == 0L) return 0L
+      val nIngested = counts.getLong(1)
 
-    val valid = batch.where(col("validation") === "valid")
-    val nIngested = valid.count()
-    val invalid = batch.where(col("validation") =!= "valid")
-
-    // Upsert semantics for re-admitted files (the reference UPDATEs the
-    // document row on reprocess, sqlite_store.py:153-172). Only
-    // previously-FAILED ledger rows can re-enter a batch (the anti-join
-    // excludes everything else), so the delete is restricted to that
-    // intersection, expressed structurally: deleteMatching keeps the
-    // doomed set a DataFrame (no driver collect, no isin literal tree)
-    // and skips the table rewrite when it is empty — the common all-new
-    // ingest path pays nothing.
-    if (catalog.exists("documents")) {
-      val readmitted = catalog.read("documents")
-        .where(col("status") === DocumentStatus.Failed)
-        .select("file_hash")
-        .join(batch.select("file_hash"), Seq("file_hash"), "left_semi")
-      catalog.deleteMatching("documents", readmitted, Seq("file_hash"))
-    }
-
-    // S4: markdown checkpoint (re-chunk without re-extract, pipeline.py:222-268)
-    markdownDir.foreach { dir =>
-      val rendered = valid.withColumn(
-        "md_text",
-        MarkdownSource.renderColumn(
-          col("id"),
-          element_at(split(col("path"), "/"), -1),
-          col("title"),
-          col("page_count"),
-          date_format(current_timestamp(), "yyyy-MM-dd'T'HH:mm:ss"),
-          lit(config.extraction.method),
-          col("file_hash"),
-          col("markdown")
+      // S4: markdown checkpoint (re-chunk without re-extract, pipeline.py:222-268)
+      markdownDir.foreach { dir =>
+        val rendered = valid.withColumn(
+          "md_text",
+          MarkdownSource.renderColumn(
+            col("id"),
+            element_at(split(col("path"), "/"), -1),
+            col("title"),
+            col("page_count"),
+            date_format(current_timestamp(), "yyyy-MM-dd'T'HH:mm:ss"),
+            lit(config.extraction.method),
+            col("file_hash"),
+            col("markdown")
+          )
         )
-      )
-      MarkdownSource.write(rendered.withColumnRenamed("id", "document_id"), dir)
+        MarkdownSource.write(rendered.withColumnRenamed("id", "document_id"), dir)
+      }
+
+      // U4+U5: chunk; U6: embed — both narrow, run once: the pinned rows
+      // feed the chunks append, the ledger's chunk counts and the FTS
+      // extension.
+      val chunks =
+        embedChunkRows(chunkDocs(valid.select(col("id"), col("title"), col("markdown")))).localCheckpoint()
+      batchChunks = Some(chunks)
+
+      // ids are unique in a batch (content-derived, hashes deduplicated)
+      val batchDocs = broadcast(valid.select(col("id").as("document_id")))
+      val tableChunks = if (catalog.exists("chunks")) catalog.read("chunks") else chunks.limit(0)
+
+      // S7: grow the resident index by the batch BEFORE the append (the
+      // reference indexes after load, pipeline.py:164-165; a concurrent
+      // search then sees the batch in the index no earlier than in the
+      // table). A build it falls back to reads the table without this
+      // batch's documents, which may already hold an earlier attempt's
+      // chunks.
+      FtsIndex.extendForBatch(ftsKey, batchToken, chunks, "id", "text",
+        preBatchCorpus = tableChunks.join(batchDocs, Seq("document_id"), "left_anti"))
+
+      // replay guard: skip documents whose chunks already landed (a crash
+      // after this append and before the ledger's); parquet appends commit
+      // whole, so a document's chunks are all there or none are. The
+      // broadcast side reads the listing resolved above and is built
+      // before the append writes.
+      val presentDocs = tableChunks.select("document_id").join(batchDocs, Seq("document_id"), "left_semi")
+      catalog.append(chunks.join(broadcast(presentDocs), Seq("document_id"), "left_anti"), "chunks")
+
+      // Upsert semantics for re-admitted files (the reference UPDATEs the
+      // document row on reprocess, sqlite_store.py:153-172). Only
+      // previously-FAILED ledger rows can re-enter a batch (the anti-join
+      // excludes everything else), so the delete is restricted to that
+      // intersection, expressed structurally: deleteMatching keeps the
+      // doomed set a DataFrame (no driver collect, no isin literal tree)
+      // and skips the table rewrite when it is empty — the common all-new
+      // ingest path pays nothing.
+      if (catalog.exists("documents")) {
+        val readmitted = catalog.read("documents")
+          .where(col("status") === DocumentStatus.Failed)
+          .select("file_hash")
+          .join(batch.select("file_hash"), Seq("file_hash"), "left_semi")
+        catalog.deleteMatching("documents", readmitted, Seq("file_hash"))
+      }
+
+      // Load the documents ledger last: rows for completed and failed files.
+      val totalByDoc = chunks.groupBy(col("document_id").as("id")).agg(count(lit(1)).as("total_chunks"))
+      val docRows = valid
+        .select(
+          col("id"), col("path").as("source_path"), col("title"), col("file_hash"),
+          col("length").as("file_size_bytes"), col("page_count"),
+          lit(config.extraction.method).as("extraction_method"),
+          col("quality_fallback")
+        )
+        .join(broadcast(totalByDoc), Seq("id"), "left")
+        .withColumn("total_chunks", coalesce(col("total_chunks"), lit(0L)))
+        .withColumn("status", lit(DocumentStatus.Completed))
+        .withColumn("error_message", lit(null).cast("string"))
+        .withColumn("uploaded_at", current_timestamp())
+        .withColumn("processed_at", current_timestamp())
+
+      val failedRows = invalid
+        .select(
+          col("id"), col("path").as("source_path"), col("title"), col("file_hash"),
+          col("length").as("file_size_bytes"), col("page_count"),
+          lit(config.extraction.method).as("extraction_method"),
+          col("quality_fallback"),
+          concat(lit("validation failed: "), col("validation")).as("error_message")
+        )
+        .withColumn("total_chunks", lit(0L))
+        .withColumn("status", lit(DocumentStatus.Failed))
+        .withColumn("uploaded_at", current_timestamp())
+        .withColumn("processed_at", lit(null).cast("timestamp"))
+
+      catalog.append(docRows.unionByName(failedRows), "documents")
+      nIngested
+    } catch {
+      case t: Throwable =>
+        // the index may hold a batch the tables never got: rebuild it
+        // from the tables on the next use
+        batchChunks.foreach(_ => FtsIndex.invalidate(ftsKey))
+        throw t
+    } finally {
+      batchChunks.foreach(FtsIndex.handOverBatch(ftsKey, _))
+      scratch.foreach(p => graft.util.Checkpoints.release(graft.util.Checkpoints.pinnedRddIds(p), spark))
     }
+  }
 
-    // U4+U5: chunk; U6: embed — both narrow.
-    val chunkRows = chunkDocs(valid.select(col("id"), col("title"), col("markdown")))
-    val chunks = embedChunkRows(chunkRows)
-
-    // Load: documents ledger rows (completed + failed) and chunks.
-    // Per-doc counts aggregate over the PRE-embedding chunk rows —
-    // aggregating over `chunks` would run the (expensive) embedding stage
-    // a second time just to count rows.
-    val totalByDoc = chunkRows.groupBy(col("document_id").as("id")).agg(count(lit(1)).as("total_chunks"))
-    val docRows = valid
-      .select(
-        col("id"), col("path").as("source_path"), col("title"), col("file_hash"),
-        col("length").as("file_size_bytes"), col("page_count"),
-        lit(config.extraction.method).as("extraction_method"),
-        col("quality_fallback")
-      )
-      .join(broadcast(totalByDoc), Seq("id"), "left")
-      .withColumn("total_chunks", coalesce(col("total_chunks"), lit(0L)))
-      .withColumn("status", lit(DocumentStatus.Completed))
-      .withColumn("error_message", lit(null).cast("string"))
-      .withColumn("uploaded_at", current_timestamp())
-      .withColumn("processed_at", current_timestamp())
-
-    val failedRows = invalid
-      .select(
-        col("id"), col("path").as("source_path"), col("title"), col("file_hash"),
-        col("length").as("file_size_bytes"), col("page_count"),
-        lit(config.extraction.method).as("extraction_method"),
-        col("quality_fallback"),
-        concat(lit("validation failed: "), col("validation")).as("error_message")
-      )
-      .withColumn("total_chunks", lit(0L))
-      .withColumn("status", lit(DocumentStatus.Failed))
-      .withColumn("uploaded_at", current_timestamp())
-      .withColumn("processed_at", lit(null).cast("timestamp"))
-
-    catalog.append(docRows.unionByName(failedRows), "documents")
-    catalog.append(chunks, "chunks")
-
-    // S7: rebuild the FTS index after load (write-then-index,
-    // pipeline.py:164-165)
-    FtsIndex.invalidate(ftsKey)
-    FtsIndex.buildCached(ftsKey, catalog.read("chunks"), "id", "text")
-
-    graft.util.JsonLog.info("ingest_directory",
-      "dir" -> pdfDir, "ingested_docs" -> nIngested)
-    nIngested
+  /** Extract, optionally dedup, store and record the images of a batch's
+    * valid files (`batch` keeps the raw `content`).
+    */
+  private def loadImages(batch: DataFrame, dir: String): Unit = {
+    // persist: the file-sink foreachPartition and the metadata append
+    // are two actions — without caching, the extraction fan-out would
+    // execute twice
+    val images = graft.sources.ImageExtraction.extractImages(batch).persist()
+    // dedupImages runs INSIDE the try: a throw during its own actions
+    // must still unpersist the payload cache below (it releases its
+    // private scratch pins itself on throw)
+    var dedupRes: Option[Pipeline.ImageDedupResult] = None
+    try {
+      dedupRes = if (config.imageDedup.enabled) Some(dedupImages(images)) else None
+      val kept = dedupRes.map(_.kept).getOrElse(images)
+      val meta = graft.sources.ImageExtraction
+        .writeImageFiles(kept, dir)
+        .withColumn("created_at", current_timestamp())
+      catalog.append(meta, "images")
+      // signatures and cluster labels land AFTER the images metadata: a
+      // crash in the window leaves a stored image that is merely
+      // unindexed/unlabeled (re-dedup later / labels-as-own-cluster, both
+      // harmless), never an index or label row referencing an image that
+      // was never stored — which would silently drop future copies
+      // (signatures) or double-label on re-ingest (clusters).
+      dedupRes.foreach { r =>
+        catalog.append(r.keptSigs.withColumn("created_at", current_timestamp()), "image_signatures")
+        catalog.append(r.labels, "image_clusters")
+      }
+    } finally {
+      // released on EVERY exit: a throw mid-append must not leave the
+      // dedup scratch pins (or the payload cache) stranded in a driver
+      // that catches per-directory errors and continues
+      dedupRes.foreach(r => graft.util.Checkpoints.release(r.scratchPins, spark))
+      images.unpersist()
+    }
   }
 
   /** Opt-in near-dup image dedup at ingest (keep-one-per-cluster),

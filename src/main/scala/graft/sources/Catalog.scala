@@ -26,8 +26,8 @@ import org.apache.spark.sql.functions._
   * returns the kept frame: no cache refresh, no schema inference, no
   * Spark job, so plans cached over the table (the resident FTS postings)
   * stay loaded across queries. Any write changes the listing, whoever
-  * makes it: an append, a swap, a flush, another `Catalog`,
-  * [[graft.streaming.StreamingIngest]] or another process. The next read
+  * makes it: an append, a swap, a flush, another `Catalog` or another
+  * process. The next read
   * then refreshes every cached plan over the path and resolves the table
   * again, so no reader is served a stale listing.
   */
@@ -177,8 +177,7 @@ final class Catalog(spark: SparkSession, warehouseDir: String) {
 /** The ONE commit-protocol seam for every atomic directory swap in the
   * engine (VERDICT r14 #3): [[Catalog.overwrite]], the training-shard
   * verbs ([[graft.operators.SequencePacking.retractFromShards]] /
-  * `recertifyShards` / `appendShards`' manifest splice) and
-  * [[graft.operators.TextAnalysis.compactWordHistogram]] all commit
+  * `compactShards` / `appendShards`' manifest splice) all commit
   * through [[swapIn]] instead of hand-rolling the temp-write + move
   * dance. [[swapIn]] delegates to the INSTALLED [[CommitProtocol]]
   * (default [[CommitProtocol.AtomicMove]], POSIX rename; selected by

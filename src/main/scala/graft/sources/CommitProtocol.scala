@@ -7,9 +7,8 @@ import java.nio.file.{Files, Path, StandardCopyOption}
   * old scaladoc promised "a cluster deployment overrides exactly this
   * method", which a Scala `object` method cannot deliver; this trait can).
   * [[Catalog.overwrite]], the training-shard verbs
-  * ([[graft.operators.SequencePacking]]'s append/retract/compact/recertify
-  * swaps) and [[graft.operators.TextAnalysis]]'s histogram compaction all
-  * commit through [[Catalog.swapIn]], which delegates to the installed
+  * ([[graft.operators.SequencePacking]]'s append/retract/compact swaps)
+  * all commit through [[Catalog.swapIn]], which delegates to the installed
   * protocol — swap the protocol and every verb inherits it with no other
   * changes.
   *
@@ -40,8 +39,8 @@ import java.nio.file.{Files, Path, StandardCopyOption}
   *     there to close.
   *   - CRASH WINDOWS: a crash mid-swap may leave `target` absent or
   *     partial. Every verb in the engine tolerates an absent target on
-  *     re-run (the recovery verbs — `recertifyShards`, a verb re-run —
-  *     swap a fresh directory in), so the protocol's only obligation is
+  *     re-run (a verb re-run swaps a fresh directory in), so the
+  *     protocol's only obligation is
   *     that debris is confined to dot-prefixed siblings plus, for
   *     non-atomic protocols, a possibly-partial `target` that the next
   *     successful swap fully replaces.
@@ -68,8 +67,8 @@ object CommitProtocol {
     *     debris (dot-prefixed; ignored by readers and by `Catalog.flush`);
     *   - between the two moves: `target` is ABSENT — which is why the
     *     seam TOLERATES a missing target (ADVICE r14): any swap verb
-    *     re-run (or `recertifyShards` as the recovery verb) can then swap
-    *     a fresh directory in instead of throwing NoSuchFileException at
+    *     re-run can then swap a fresh directory in instead of throwing
+    *     NoSuchFileException at
     *     its own first move;
     *   - after the second move: fully committed, only `.._old_..` debris
     *     remains (removed best-effort).

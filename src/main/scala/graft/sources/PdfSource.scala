@@ -70,6 +70,7 @@ object PdfSource {
       .when(!startsWithPdfMagic(content), lit(ValidationResult.Corrupted))
       .when(extractError === ValidationResult.PasswordProtected, lit(ValidationResult.PasswordProtected))
       .when(extractError === ValidationResult.Corrupted, lit(ValidationResult.Corrupted))
+      .when(extractError === ValidationResult.DecodeBudgetExceeded, lit(ValidationResult.DecodeBudgetExceeded))
       .when(pageCount.isNotNull && pageCount === 0, lit(ValidationResult.NoPages))
       .when(pageCount.isNotNull && pageCount > cfg.maxPageCount, lit(ValidationResult.TooManyPages))
       .otherwise(lit(ValidationResult.Valid))
@@ -153,6 +154,8 @@ object PdfSource {
     *   - %PDF-headed bytes with no object structure but a mostly-printable
     *     payload → text-salvage recovery (the [[StubExtractor]] behavior;
     *     this is the synthetic-fixture shape used throughout the specs)
+    *   - streams that decode past the parser's budget (a decompression
+    *     bomb) → `decode_budget_exceeded` via extract_error
     *   - %PDF-headed bytes with no recoverable structure AND a binary
     *     payload → `corrupted` via extract_error (the reference validator
     *     routes open failures to corrupted, src/extract/validator.py:67-75;
@@ -173,6 +176,8 @@ object PdfSource {
       } catch {
         case _: graft.sources.pdf.PdfParser.PdfEncryptedException =>
           Extraction("", 0, Some(ValidationResult.PasswordProtected))
+        case _: graft.sources.pdf.PdfParser.DecodeBudgetException =>
+          Extraction("", 0, Some(ValidationResult.DecodeBudgetExceeded))
         case _: graft.sources.pdf.PdfParser.PdfParseException =>
           salvageOrCorrupt(path, content)
         case scala.util.control.NonFatal(_) =>

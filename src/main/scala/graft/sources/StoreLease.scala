@@ -106,11 +106,10 @@ object LeaseProtocol {
 /** Writer LEASE for an on-disk store directory (r15 verdict #2): turns
   * the persisted stores' "single-writer" docstring convention into a
   * checked invariant. Every mutating store verb — the shard store's
-  * export/append/retract/compact/recertify
+  * export/append/retract/compact
   * ([[graft.operators.SequencePacking]]), the maintained word
-  * histogram's write/append/retract/compact
-  * ([[graft.operators.TextAnalysis]]), the drift reference profile
-  * ([[graft.streaming.IngestGuardrail.writeProfile]]), the persisted ANN
+  * histogram's write/append ([[graft.operators.TextAnalysis]]), the
+  * persisted ANN
   * indexes ([[graft.operators.VectorSearch]]'s
   * writeLsh/writeBandedLsh/writePq) and tokenizer artifacts
   * ([[graft.operators.TextAnalysis.writeTokenizer]]) — runs under
@@ -236,8 +235,8 @@ object StoreLease {
         s"StoreLease: refusing to proceed ($context) — this writer holds " +
           s"fence ${held.fence} (owner ${held.ownerId}) but a LATER lease " +
           s"(fence $newest) has been granted on the store: the hold was stolen " +
-          "or lapsed and reacquired. Abort without publishing; run " +
-          "recertifyShards and re-verify the store before trusting it.")
+          "or lapsed and reacquired. Abort without publishing; re-verify " +
+          "the store before trusting it.")
   }
 
   /** Prove `held` is still the NEWEST, LIVE lease on its store at this
@@ -275,8 +274,8 @@ object StoreLease {
     * loud steal (stderr) when the held lease is dead. After `f`, a clean
     * release requires the hold to still be live and ours — otherwise the
     * verb raises instead of returning success, because once the lease
-    * lapsed a second writer may have interleaved (run `recertifyShards`
-    * and re-check the store before trusting it; verbs that legitimately
+    * lapsed a second writer may have interleaved (re-check the store
+    * before trusting it; verbs that legitimately
     * outlive the ttl should renew via [[withRenewableLease]] instead of
     * raising it).
     */
@@ -314,8 +313,8 @@ object StoreLease {
             s"StoreLease: lease on $storePath lost mid-verb '$verb' — this writer's " +
               s"hold (owner ${held.ownerId}) is $what after exceeding its ${ttlMs}ms TTL. " +
               "A second writer may have interleaved with this verb's " +
-              "writes: run recertifyShards and re-verify the store before trusting " +
-              "it; long verbs should renew the lease at progress points."
+              "writes: re-verify the store before trusting it; long verbs " +
+              "should renew the lease at progress points."
           if (failed) System.err.println(s"[store-lease] $msg")
           else throw new IllegalStateException(msg)
       }
@@ -488,7 +487,7 @@ object FileLease extends LeaseProtocol {
           throw new IllegalStateException(
             s"StoreLease: cannot renew — the lease on $store was STOLEN by " +
               s"$o mid-verb '$verb' (this writer: $owner). Stop the verb; the store " +
-              "must be re-verified (recertifyShards) before trusting it.")
+              "must be re-verified before trusting it.")
         case Some(_) =>
           throw new IllegalStateException(
             s"StoreLease: cannot renew — this writer's lease on $store " +

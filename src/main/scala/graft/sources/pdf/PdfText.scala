@@ -149,9 +149,15 @@ object PdfText {
   }
 
   /** The page's font-resource → ToUnicode table (fonts without a CMap are
-    * absent — they decode via the Latin fallback).
+    * absent — they decode via the Latin fallback). `parsed` holds the
+    * document's ToUnicode streams parsed so far, so a font shared by every
+    * page is decoded once, not once per page against the decode budget.
     */
-  def fontCMaps(pdf: Pdf, page: PDict): Map[String, ToUnicode] =
+  def fontCMaps(
+      pdf: Pdf,
+      page: PDict,
+      parsed: java.util.IdentityHashMap[PStream, Option[ToUnicode]]
+  ): Map[String, ToUnicode] =
     (for {
       res <- pdf.get(page, "Resources").flatMap(pdf.dictOf).toSeq
       fonts <- pdf.get(res, "Font").flatMap(pdf.dictOf).toSeq
@@ -160,11 +166,12 @@ object PdfText {
         case fd: PDict =>
           pdf.get(fd, "ToUnicode") match {
             case Some(s: PStream) =>
-              try Some(parseToUnicode(pdf.decodedStream(s)))
-              catch {
-                case e: DecodeBudgetException => throw e
-                case _: Exception              => None
-              }
+              parsed.computeIfAbsent(s, _ =>
+                try Some(parseToUnicode(pdf.decodedStream(s)))
+                catch {
+                  case e: DecodeBudgetException => throw e
+                  case _: Exception              => None
+                })
             case _ => None
           }
         case _ => None
@@ -175,9 +182,10 @@ object PdfText {
   def extractMarkdown(pdf: Pdf): String = {
     val pages = pdf.pages
     val allLines = Vector.newBuilder[Vector[Line]]
+    val cmaps = new java.util.IdentityHashMap[PStream, Option[ToUnicode]]()
     pages.foreach { page =>
       val content = pdf.pageContent(page)
-      allLines += extractLines(content, fontCMaps(pdf, page))
+      allLines += extractLines(content, fontCMaps(pdf, page, cmaps))
     }
     val perPage = allLines.result()
     val body = modalBodySize(perPage.flatten)

@@ -68,13 +68,16 @@ object SessionIndices {
 
     /** Atomically replace the entry under `key` with `f(current)`. The new
       * entry must carry every piece of storage it still uses from the old
-      * one: the old entry is dropped, not released.
+      * one; the old entry's storage that it does not carry is released.
       */
     def update(key: String)(f: Option[Resident[A]] => Resident[A]): A = {
       val s = slotOf(key)
       s.synchronized {
-        val r = f(s.entry.asInstanceOf[Option[Resident[A]]])
+        val old = s.entry
+        val r = f(old.asInstanceOf[Option[Resident[A]]])
         s.entry = Some(r)
+        old.foreach(o => release(Resident(o.value,
+          o.persisted.filterNot(p => r.persisted.exists(_ eq p)), o.pinned -- r.pinned, o.pinnedIn)))
         r.value
       }
     }

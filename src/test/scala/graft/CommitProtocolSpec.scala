@@ -115,108 +115,6 @@ class CommitProtocolSpec extends AnyFunSuite {
     assert(!fake.windows.isEmpty, "no swap ran through the fake")
   }
 
-  test("maintained word histogram survives copy+delete compaction bit-exact") {
-    val corpus = Seq((1L, "alpha beta beta"), (2L, "beta gamma"), (3L, "alpha alpha delta"))
-      .toDF("doc_id", "text")
-    def lifecycle(path: String): Seq[Seq[Any]] = {
-      TextAnalysis.writeWordHistogram(
-        TextAnalysis.wordHistogram(corpus.where(col("doc_id") < 3L), "text"), path)
-      TextAnalysis.appendWordHistogram(
-        corpus.where(col("doc_id") === 3L), "text", path, batchKey = "cp#h1")
-      TextAnalysis.compactWordHistogram(spark, path)
-      TextAnalysis.loadWordHistogram(spark, path)
-        .hist.orderBy("word").collect().map(_.toSeq).toSeq
-    }
-    val want = lifecycle(java.nio.file.Files.createTempDirectory("graft_cp_hist_a").toString + "/h")
-    val root = java.nio.file.Files.createTempDirectory("graft_cp_hist_o").toString
-    val got = CommitProtocol.withProtocol(new ObservingCopyDelete(root))(lifecycle(s"$root/h"))
-    assert(got == want)
-  }
-
-  test("a crash inside the copy+delete window is recoverable: recertify restores a green store") {
-    val root = java.nio.file.Files.createTempDirectory("graft_cp_crash").toString
-    val dir = s"$root/store"
-    buildStore(dir)
-    val before = manifestOf(dir)
-    val crasher = new CrashingCopyDelete(root)
-    val boom = intercept[RuntimeException] {
-      CommitProtocol.withProtocol(crasher) {
-        SequencePacking.retractFromShards(spark, dir, Seq(3L))
-      }
-    }
-    assert(boom.getMessage.contains("injected crash"))
-    // the crashed swap left target-side damage a POSIX crash couldn't
-    // (old content deleted mid-copy is allowed by the contract); the
-    // recovery verb re-certifies from whatever the files now are, and the
-    // takedown re-run converges to the same end state as a clean run
-    SequencePacking.recertifyShards(spark, dir)
-    SequencePacking.retractFromShards(spark, dir, Seq(3L))
-    val healed = manifestOf(dir)
-    // the victim is gone and the store certifies green end to end
-    assert(SequencePacking.verifyShards(spark, dir).where(!col("ok")).isEmpty)
-    assert(healed != before, "retraction should have changed the manifest")
-    val survivors = spark.read.parquet(s"$dir/data")
-      .select(explode(col("doc_ids")).as("d")).where(col("d") === 3L)
-    assert(survivors.isEmpty, "victim resurrected across the crash-recovery path")
-  }
-
-  test("the STREAMING trainer-shard sink composes under copy+delete rename end to end") {
-    // r16 verdict #6: the batch verbs are proven above; this drives the
-    // COMPOSED path — foreachBatch ingest (founding export), a second
-    // micro-batch (append), a takedown (retract + catalog purge), then
-    // the certified read — with the non-atomic protocol installed, where
-    // micro-batch cadence makes the absent-target window likeliest.
-    import graft.streaming.StreamingIngest
-    import java.nio.file.{Files, Paths}
-
-    def runFlow(base: String): (Seq[Seq[Any]], Seq[Seq[Any]]) = {
-      val in = s"$base/in"; val wh = s"$base/wh"; val ckpt = s"$base/ckpt"
-      val sp = s"$base/shards"
-      Files.createDirectories(Paths.get(in))
-      val cfg = GraftConfig(warehouseDir = wh)
-      val tok = TextAnalysis.trainBpeTokenizer(
-        (1 to 24).map(i => (i.toLong, s"tokenizer fitting document number $i with words and tokens"))
-          .toDF("id", "text"), "text", rounds = 3)
-      Files.write(Paths.get(in, "a.md"), "# A\n\nthe founding batch creates the loader store.".getBytes)
-      Files.write(Paths.get(in, "b.md"), "# B\n\na sibling document rides the same founding batch.".getBytes)
-      val ingest = new StreamingIngest(spark, cfg, tokenizer = Some(tok),
-        shardStorePath = Some(sp), shardStoreShards = 2, shardStoreBudget = 64)
-      ingest.start(in, ckpt).awaitTermination() // founding batch -> exportShards
-      Files.write(Paths.get(in, "c.md"), "# C\n\na second batch extends the store incrementally.".getBytes)
-      ingest.start(in, ckpt).awaitTermination() // second batch -> appendShards
-      val cat = new Catalog(spark, wh)
-      val doomed = cat.read("documents_stream").collect()
-        .map(r => r.getAs[String]("source_path") -> r.getAs[String]("id"))
-        .find(_._1.endsWith("a.md")).get._2
-      assert(ingest.deleteStreamDocument(doomed) == 1L) // takedown -> retractFromShards
-      assert(SequencePacking.verifyShards(spark, sp).collect()
-        .forall(_.getAs[Boolean]("ok")), "streamed store must certify green")
-      val shards = spark.read.parquet(s"$sp/manifest")
-        .select("shard").collect().map(_.getLong(0)).sorted.toSeq
-      val rows = shards.flatMap(sh =>
-        SequencePacking.readShard(spark, sp, sh).orderBy("bin_id").collect().map(_.toSeq))
-      (manifestOf(sp), rows)
-    }
-
-    // reference run under the default atomic protocol (everything in the
-    // flow is content-derived, so two runs are bit-comparable)
-    val want = runFlow(java.nio.file.Files.createTempDirectory("graft_cp_stream_atomic").toString)
-
-    val root = java.nio.file.Files.createTempDirectory("graft_cp_stream_obj").toString
-    val fake = new ObservingCopyDelete(root)
-    val got = CommitProtocol.withProtocol(fake) { runFlow(root) }
-
-    assert(got._1 == want._1, "streamed store manifest diverged under copy-delete")
-    assert(got._2 == want._2, "streamed bin content diverged under copy-delete")
-    // not vacuous: the streaming path's own swaps ran through the fake
-    // and exposed a real absent-target window
-    import scala.jdk.CollectionConverters._
-    val ws = fake.windows.asScala.toSeq
-    assert(ws.nonEmpty, "no swap ran through the fake on the streaming path")
-    assert(ws.exists { case (phase, targetExists) => phase == "absent" && !targetExists },
-      s"expected an observable target-absent window on the streaming path, saw: ${ws.take(20)}")
-  }
-
   test("forName resolves the config names; unknown names fail loud") {
     assert(CommitProtocol.forName("atomic-move") eq CommitProtocol.AtomicMove)
     assert(CommitProtocol.forName("copy-delete").isInstanceOf[CopyDeleteProtocol])

@@ -322,7 +322,7 @@ class PdfParserSpec extends AnyFunSuite {
     val doc = PdfParser.parse(bomb)
     intercept[PdfParser.DecodeBudgetException](PdfText.extractMarkdown(doc))
     val e = PdfSource.JvmExtractor.extract("/bomb/stream.pdf", bomb)
-    assert(e.error.contains(graft.model.ValidationResult.Corrupted), e.toString)
+    assert(e.error.contains(graft.model.ValidationResult.DecodeBudgetExceeded), e.toString)
     // exactly at the cap still decodes
     val atCap = PdfGen.flateBomb(text, bombs = 1, inflated = PdfParser.MaxStreamBytes)
     assert(PdfSource.JvmExtractor.extract("/bomb/at-cap.pdf", atCap).error.isEmpty)
@@ -334,9 +334,21 @@ class PdfParserSpec extends AnyFunSuite {
     val bomb = PdfGen.flateBomb(Run("Balanced meals with protein."), bombs, perStream)
     intercept[PdfParser.DecodeBudgetException](PdfText.extractMarkdown(PdfParser.parse(bomb)))
     val e = PdfSource.JvmExtractor.extract("/bomb/document.pdf", bomb)
-    assert(e.error.contains(graft.model.ValidationResult.Corrupted), e.toString)
+    assert(e.error.contains(graft.model.ValidationResult.DecodeBudgetExceeded), e.toString)
     // one page fewer fits the budget
     val fits = PdfGen.flateBomb(Run("Balanced meals with protein."), bombs - 1, perStream)
     assert(PdfSource.JvmExtractor.extract("/bomb/fits.pdf", fits).error.isEmpty)
+  }
+
+  test("a ToUnicode CMap that every page shares is decoded once per document") {
+    // pages x padding passes the document budget: decoding the CMap once
+    // per page would reject the document
+    val padding = 45L << 20
+    val pages = (PdfParser.MaxDocumentBytes / padding + 1).toInt
+    val text = "shared subset font text"
+    val pdf = PdfGen.sharedCidFontPdf(text, pages, padding)
+    assert(pdf.length < (1 << 20), s"the CMap is small on disk: ${pdf.length} bytes")
+    val md = PdfText.extractMarkdown(PdfParser.parse(pdf))
+    assert(md.split("\n\n").toSeq == Seq.fill(pages)(text), md.take(200))
   }
 }

@@ -482,7 +482,8 @@ class PipelineSpec extends AnyFunSuite {
     val docs = pipe.catalog.read("documents").collect()
       .map(r => r.getAs[String]("title") -> r).toMap
     assert(docs("Bomb").getAs[String]("status") == "failed")
-    assert(docs("Bomb").getAs[String]("error_message").contains("corrupted"))
+    assert(docs("Bomb").getAs[String]("error_message") ==
+      s"validation failed: ${graft.model.ValidationResult.DecodeBudgetExceeded}")
     assert(Seq("Widget", "Gadget").forall(t => docs(t).getAs[String]("status") == "completed"))
     assert(pipe.catalog.read("chunks").select("document_title").distinct().count() == 2)
   }
@@ -513,5 +514,34 @@ class PipelineSpec extends AnyFunSuite {
     }
     val ctx = retriever.getContext("widget gears", 4000)
     assert(!ctx.contains("[Source: Widget]") && ctx.contains("[Source: Gadget]"), ctx)
+  }
+  test("the resident FTS index after a cold and two incremental ingests equals a fresh build") {
+    import graft.operators.FtsIndex
+    val (pdfDir, wh, _) = freshDirs()
+    val pipe = new Pipeline(spark, GraftConfig(warehouseDir = wh))
+    def batch(i: Int, docs: (String, String)*): Unit = {
+      val dir = s"$pdfDir/b$i"
+      Files.createDirectories(Paths.get(dir))
+      docs.foreach { case (t, body) => mkPdf(dir, s"EP00$i $t.pdf", s"# $t\n\n$body") }
+      assert(pipe.processDirectory(dir) == docs.length.toLong)
+    }
+    try {
+      batch(1, "Gears" -> "gears and sprockets turn the widget assembly in small steps.",
+        "Springs" -> "springs store energy; the widget releases it through a lever.")
+      batch(2, "Motors" -> "small motors drive the widget gears at a steady speed.")
+      batch(3, "Levers" -> "a lever multiplies force applied to the widget housing.",
+        "Bearings" -> "bearings keep gears aligned under load.")
+      val resident = pipe.ftsIndex
+      assert(resident.retained.length == 3, "one fragment per batch, no rebuild")
+      val fresh = FtsIndex.build(pipe.catalog.read("chunks"), "id", "text")
+      assert(resident.numDocs == fresh.numDocs)
+      assert(resident.avgDocLen == fresh.avgDocLen, s"${resident.avgDocLen} vs ${fresh.avgDocLen}")
+      def hits(idx: FtsIndex.Index, q: String): Seq[(String, Double)] =
+        FtsIndex.search(spark, idx, q, 10).collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+      Seq("widget gears", "lever force", "bearings").foreach { q =>
+        assert(hits(resident, q).map(_._1) == hits(fresh, q).map(_._1), q)
+      }
+      fresh.postings.unpersist()
+    } finally pipe.flush()
   }
 }

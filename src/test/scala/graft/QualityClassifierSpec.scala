@@ -181,53 +181,6 @@ class QualityClassifierSpec extends AnyFunSuite {
     assert(e.getMessage.contains("null label"))
   }
 
-  test("writeModel/loadModel round-trip: the reloaded model scores bit-identical gaps") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-qmodel").toString
-    val m = QualityClassifier.fitCentroid(docs, "doc_id", "text", col("y"), nFeatures = 64)
-    QualityClassifier.writeModel(m, dir, spark)
-    val r = QualityClassifier.loadModel(spark, dir)
-    assert(r.nFeatures == m.nFeatures && r.nPos == m.nPos && r.nNeg == m.nNeg)
-    assert(r.normPos2 == m.normPos2 && r.normNeg2 == m.normNeg2)
-    // zero-sum entries are representational, not semantic — compare modulo
-    assert(r.sumPos == m.sumPos.filter(_._2 != 0L) && r.sumNeg == m.sumNeg.filter(_._2 != 0L))
-    val unseen = Seq(
-      (10L, "prose with argument and sources"),
-      (11L, "click pills free buy"),
-      (12L, "")
-    ).toDF("doc_id", "text")
-    def scored(model: QualityClassifier.CentroidModel) =
-      QualityClassifier.classify(unseen, "doc_id", "text", model)
-        .select(col("doc_id"), col("gap").cast("string"), col("pred"))
-        .as[(Long, String, Int)].collect().sortBy(_._1).toSeq
-    assert(scored(r) == scored(m), "a reloaded model must score bit-identically")
-  }
-
-  test("loadModel is loud on a kind mismatch and on a foreign schema") {
-    // a k-class sidecar over k-class rows: the kind check refuses it
-    // before the schema is read
-    val dir = java.nio.file.Files.createTempDirectory("graft-qmodelk").toString
-    Seq((0L, "a", 1L)).toDF("feature", "y", "s")
-      .write.mode("overwrite").parquet(s"$dir/model")
-    val pk = new java.io.PrintWriter(s"$dir/params.json")
-    try pk.write("""{"kind":"centroidK","nFeatures":64,"classes":[{"label":"a","n":1}]}""")
-    finally pk.close()
-    val e = intercept[IllegalArgumentException] {
-      QualityClassifier.loadModel(spark, dir)
-    }
-    assert(e.getMessage.contains("not a 2-class centroid model"))
-    // schema check: a sidecar of the right kind over foreign rows is loud too
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-qmodel-bad").toString
-    Seq((1L, "x")).toDF("feature", "junk")
-      .write.mode("overwrite").parquet(s"$dir2/model")
-    val p = new java.io.PrintWriter(s"$dir2/params.json")
-    try p.write("""{"kind":"centroid2","nFeatures":64,"nPos":1,"nNeg":1}""")
-    finally p.close()
-    val e2 = intercept[IllegalArgumentException] {
-      QualityClassifier.loadModel(spark, dir2)
-    }
-    assert(e2.getMessage.contains("schema"))
-  }
-
   test("fitClassify trains only on the labeledWhere subset") {
     // labels OUTSIDE the subset are inverted garbage; if fit saw them the
     // separation would flip for the held-out half

@@ -101,6 +101,29 @@ class RetrievalSpec extends AnyFunSuite {
     extended.retained.foreach(df => assert(df.storageLevel == StorageLevel.NONE))
   }
 
+  test("extendForBatch folds the fragments into one build at its bound; stats stay exact") {
+    val key = "fts-fold-test"
+    FtsIndex.invalidate(key)
+    val corpus = (1 to 12).map(i => (i.toLong, s"doc$i " + Seq.fill(i % 4 + 1)("shared").mkString(" ")))
+      .toDF("doc_id", "text")
+    def upTo(n: Int) = corpus.where($"doc_id" <= n)
+    try {
+      val fragments = (1 to 12).map { i =>
+        FtsIndex.extendForBatch(key, s"run#$i", corpus.where($"doc_id" === i), "doc_id", "text", upTo(i - 1))
+          .retained.length
+      }
+      // absent over an empty corpus: the batch's own build (no retained
+      // list); one more per batch up to the bound of 8; the next batch
+      // folds back to a pinned build plus the batch
+      assert(fragments == Seq(0, 2, 3, 4, 5, 6, 7, 8, 2, 3, 4, 5), fragments)
+      val idx = FtsIndex.buildCached(key, corpus, "doc_id", "text")
+      val full = FtsIndex.build(corpus, "doc_id", "text")
+      assert(idx.numDocs == full.numDocs && idx.totalDocLen == full.totalDocLen && idx.avgDocLen == full.avgDocLen)
+      assert(idx.postings.count() == full.postings.count(), "no postings row counted twice")
+      full.postings.unpersist()
+    } finally FtsIndex.invalidate(key)
+  }
+
   test("BM25: term-matching docs rank first; scores positive and ordered") {
     val idx = FtsIndex.build(docs, "doc_id", "text")
     assert(idx.numDocs == 5)

@@ -301,10 +301,9 @@ class SequencePackingSpec extends AnyFunSuite {
     // unknown ids: nothing touched, zero returned
     assert(SequencePacking.retractFromShards(spark, dir, Seq(9999L)) == 0L)
 
-    // crash recovery: a stale manifest (the crash-between-swap-and-splice
-    // state) fails verification — and a retract re-run CANNOT fix it (the
-    // victim is already gone, nothing looks affected); recertifyShards is
-    // the recovery verb
+    // a stale manifest (the crash-between-swap-and-splice state) fails
+    // verification — and a retract re-run CANNOT fix it (the victim is
+    // already gone, nothing looks affected)
     val staleRow = spark.read.parquet(s"$dir/manifest")
       .withColumn("digest", col("digest") + 1L)
     val staleTmp = java.nio.file.Files.createTempDirectory("graft_stale_m").toString
@@ -320,9 +319,6 @@ class SequencePackingSpec extends AnyFunSuite {
       .exists(!_.getAs[Boolean]("ok")), "fixture: stale manifest must be red")
     assert(SequencePacking.retractFromShards(spark, dir, Seq(victim)) == 0L,
       "a retract re-run must not claim to fix staleness")
-    SequencePacking.recertifyShards(spark, dir)
-    assert(SequencePacking.verifyShards(spark, dir).collect()
-      .forall(_.getAs[Boolean]("ok")), "recertify must restore green")
 
     // lens/token accounting mismatch is refused loudly
     val bad = Seq((1L, 10L, Seq(1L, 2L))).toDF("id", "tok", "ids") // tok=10 but 2 ids
@@ -701,40 +697,6 @@ class SequencePackingSpec extends AnyFunSuite {
     }
   }
 
-  test("verifyDocsIndex: exact on a healthy store; misses and stale extras surface with direction") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_docs_audit").toString
-    val packed = SequencePacking.packSequences(
-      boundaryDocs.toDF("id", "tok", "ids"), "id", "tok", "ids", budget = 40, partitions = 1)
-    SequencePacking.exportShards(packed, dir, nShards = 4)
-    // healthy export + append + retraction: the index stays exact
-    val extra = SequencePacking.packSequences(
-      Seq((600L, 6L, (1L to 6L).map(_ + 60000L))).toDF("id", "tok", "ids"),
-      "id", "tok", "ids", budget = 40, partitions = 1)
-    SequencePacking.appendShards(extra, dir, batchKey = "audit#1")
-    SequencePacking.retractFromShards(spark, dir, Seq(2L))
-    assert(SequencePacking.verifyDocsIndex(spark, dir).isEmpty, "healthy store must audit clean")
-
-    // a MISSING index row (the dangerous direction: discovery would skip
-    // this doc's shard) — fabricate by appending an index-bypassing bin
-    val base = spark.read.parquet(s"$dir/meta").agg(max("next_after")).head().getLong(0)
-    Seq((base, 1L, 7L, (1L to 7L).map(_ + 70000L), Seq(700L), Seq(7L)))
-      .toDF("bin_id", "n_docs", "bin_tokens", "input_ids", "doc_ids", "doc_lens")
-      .withColumn("shard", pmod(col("bin_id"), lit(4L)))
-      .write.mode("append").partitionBy("shard").parquet(s"$dir/data")
-    val misses = SequencePacking.verifyDocsIndex(spark, dir).collect()
-    assert(misses.length == 1 && misses(0).getAs[Long]("doc_id") == 700L &&
-      !misses(0).getAs[Boolean]("in_index") && misses(0).getAs[Boolean]("in_data"),
-      s"expected one in_index=false miss for doc 700, got ${misses.mkString("; ")}")
-
-    // a STALE EXTRA index row (benign direction: superset discovery)
-    Seq((999L, (base % 4L))).toDF("doc_id", "shard")
-      .write.mode("append").partitionBy("shard").parquet(s"$dir/docs")
-    val both = SequencePacking.verifyDocsIndex(spark, dir).collect()
-    val extraRow = both.filter(_.getAs[Long]("doc_id") == 999L)
-    assert(extraRow.length == 1 && extraRow(0).getAs[Boolean]("in_index") &&
-      !extraRow(0).getAs[Boolean]("in_data"))
-  }
-
   test("epochSchedule sweep: permutation + running totals match an independent JVM reimplementation") {
     val rnd = new scala.util.Random(99173L)
     def md5hex(s: String): String =
@@ -834,26 +796,6 @@ class SequencePackingSpec extends AnyFunSuite {
     assert(SequencePacking.readShard(spark, dir, 0L).collect().nonEmpty)
     // an unknown shard (no manifest row) is refused, not silently empty
     intercept[IllegalArgumentException] { SequencePacking.readShard(spark, dir, 99L) }
-  }
-
-  test("recertifyShards recovers from a crash INSIDE the manifest swap window (manifest absent)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_shards_crash").toString
-    val df = boundaryDocs.toDF("id", "tok", "ids")
-    val packed = SequencePacking.packSequences(df, "id", "tok", "ids", budget = 40, partitions = 1)
-    SequencePacking.exportShards(packed, dir, nShards = 3)
-
-    // simulate the crash: the old manifest was moved aside, the new one
-    // never moved in — the store has NO manifest at all (ADVICE r14)
-    def rm(f: java.io.File): Unit = {
-      val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete()
-    }
-    rm(new java.io.File(s"$dir/manifest"))
-    assert(!new java.io.File(s"$dir/manifest").exists())
-
-    // the recovery verb must restore green instead of throwing on its own move
-    val recovered = SequencePacking.recertifyShards(spark, dir)
-    assert(recovered.count() == 3L)
-    assert(SequencePacking.verifyShards(spark, dir).collect().forall(_.getAs[Boolean]("ok")))
   }
 
   test("takedown discovery is index-resolved and the index survives retraction") {

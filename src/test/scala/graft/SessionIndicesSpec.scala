@@ -69,27 +69,51 @@ class SessionIndicesSpec extends AnyFunSuite {
     assert(batchIds.intersect(persistent).isEmpty, "released at hand-over, not leaked")
   }
 
+  private def mkPdf(dir: String, name: String, body: String): Unit = {
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, name), s"%PDF-1.4\n$body".getBytes("UTF-8"))
+  }
+
   test("a streaming micro-batch leaves no checkpoint RDD behind once its FTS key is invalidated") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-stream-release").resolve("wh").toString
-    val ingest = new graft.streaming.StreamingIngest(spark, GraftConfig(warehouseDir = wh))
+    val base = java.nio.file.Files.createTempDirectory("graft-stream-release").toString
+    val wh = s"$base/wh"
+    val pipe = new graft.pipeline.Pipeline(spark, GraftConfig(warehouseDir = wh))
+    val ftsKey = s"$wh/chunks"
     val before = persistent
-    def batch(i: Int) = Seq((s"# Doc $i\n\nrelease every pin of batch $i once the index goes.",
-      s"file:///release/d$i.md")).toDF("value", "path")
+    def batch(i: Int) = {
+      mkPdf(s"$base/in$i", s"d$i.pdf", s"# Doc $i\n\nrelease every pin of batch $i once the index goes.")
+      graft.sources.PdfSource.scan(spark, s"$base/in$i")
+    }
     try {
-      ingest.ingestBatch(batch(0), 0L, runToken = "ckptRel")
+      pipe.ingestBatch(batch(0), "ckptRel#0")
       assert((persistent -- before).nonEmpty, "precondition: the live index holds the batch's chunks")
-      // a takedown racing later batches: each invalidate lands while the
+      // a delete racing later batches: each invalidate lands while the
       // batch may still be reading its chunks, and must never fail it
       val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
       val invalidator = new Thread(() =>
-        while (!stop.get) { FtsIndex.invalidate(ingest.ftsKey); Thread.sleep(5) })
+        while (!stop.get) { FtsIndex.invalidate(ftsKey); Thread.sleep(5) })
       invalidator.start()
-      try (1 to 3).foreach(i => ingest.ingestBatch(batch(i), i.toLong, runToken = "ckptRel"))
+      try (1 to 3).foreach(i => pipe.ingestBatch(batch(i), s"ckptRel#$i"))
       finally { stop.set(true); invalidator.join() }
-      assert(new graft.sources.Catalog(spark, wh).read("chunks_stream")
-        .select("document_id").distinct().count() == 4L)
-    } finally FtsIndex.invalidate(ingest.ftsKey)
+      assert(pipe.catalog.read("chunks").select("document_id").distinct().count() == 4L)
+    } finally FtsIndex.invalidate(ftsKey)
     assert((persistent -- before).isEmpty, s"left pinned: ${persistent -- before}")
+  }
+
+  test("after processDirectory only the resident FTS index holds checkpoints; flush releases them") {
+    val base = java.nio.file.Files.createTempDirectory("graft-ingest-release").toString
+    val pipe = new graft.pipeline.Pipeline(spark, GraftConfig(warehouseDir = s"$base/wh"))
+    val before = persistent
+    mkPdf(s"$base/a", "a.pdf", "# A\n\nthe first batch builds the resident index.")
+    mkPdf(s"$base/b", "b.pdf", "# B\n\nthe second batch extends it by one fragment.")
+    pipe.processDirectory(s"$base/a")
+    pipe.processDirectory(s"$base/b")
+    val held = Checkpoints.pinnedRddIds(pipe.ftsIndex.postings)
+    assert(held.nonEmpty && held.subsetOf(persistent))
+    assert((persistent -- before).subsetOf(held),
+      s"checkpoints beyond the index's: ${(persistent -- before) -- held}")
+    pipe.flush()
+    assert((persistent -- before).isEmpty, s"left pinned after flush: ${persistent -- before}")
   }
 
   test("reliable-checkpoint mode: releasing a clustersCached entry deletes its checkpoint files") {
@@ -187,11 +211,12 @@ class SessionIndicesSpec extends AnyFunSuite {
     val labels = Dedup.clustersCached(ccKey, nodes, "id", pairs)
     val graph = GraphOps.prepareCached(graphKey, edges, "src", "dst")
     val pinned = Checkpoints.pinnedRddIds(labels, graph.withDeg, graph.nodes)
-    assert(fts.postings.storageLevel != StorageLevel.NONE && ivf.indexed.storageLevel != StorageLevel.NONE)
+    val ftsPinned = Checkpoints.pinnedRddIds(fts.postings)
+    assert(ftsPinned.nonEmpty && ftsPinned.subsetOf(persistent) && ivf.indexed.storageLevel != StorageLevel.NONE)
     assert(pinned.nonEmpty && pinned.subsetOf(persistent))
 
     SessionIndices.clear()
-    assert(fts.postings.storageLevel == StorageLevel.NONE, "FTS postings unpersisted")
+    assert(ftsPinned.intersect(persistent).isEmpty, "FTS postings released")
     assert(ivf.indexed.storageLevel == StorageLevel.NONE, "IVF cells unpersisted")
     assert(pinned.intersect(persistent).isEmpty, "CC labels and prepared-graph checkpoints released")
 

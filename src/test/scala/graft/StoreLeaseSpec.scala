@@ -36,7 +36,6 @@ class StoreLeaseSpec extends AnyFunSuite {
       "appendShards" -> (() => SequencePacking.appendShards(packed, dir, "lease#x")),
       "retractFromShards" -> (() => SequencePacking.retractFromShards(spark, dir, Seq(1L))),
       "compactShards" -> (() => SequencePacking.compactShards(spark, dir)),
-      "recertifyShards" -> (() => SequencePacking.recertifyShards(spark, dir)),
       "exportShards" -> (() => SequencePacking.exportShards(packed, dir, nShards = 2))
     )
     verbs.foreach { case (name, run) =>
@@ -68,14 +67,14 @@ class StoreLeaseSpec extends AnyFunSuite {
     Files.writeString(lock, "garbage-without-fields")
     // fresh mtime: never steal what can't be read unless it's too old to
     // still be being written — the verb fails loud and leaves the file
-    val ex = intercept[IllegalStateException](SequencePacking.recertifyShards(spark, dir))
+    val ex = intercept[IllegalStateException](SequencePacking.compactShards(spark, dir))
     assert(ex.getMessage.contains("unreadable but recently-written"), ex.getMessage)
     assert(Files.exists(lock), "a fresh torn lock must not be deleted")
     // backdate it past the ttl: now verifiably dead — stolen, verb completes
     Files.setLastModifiedTime(lock,
       java.nio.file.attribute.FileTime.fromMillis(
         System.currentTimeMillis() - StoreLease.DefaultTtlMs - 1000L))
-    SequencePacking.recertifyShards(spark, dir)
+    SequencePacking.compactShards(spark, dir)
     assert(!Files.exists(lock))
   }
 
@@ -85,7 +84,7 @@ class StoreLeaseSpec extends AnyFunSuite {
     // pid far above linux's default pid_max: verifiably not running; the
     // lease itself is still LIVE by expiry — only the liveness check frees it
     plantLock(dir, s"4194305@$host#dead", System.currentTimeMillis() + 600000L, "append")
-    SequencePacking.recertifyShards(spark, dir)
+    SequencePacking.compactShards(spark, dir)
     assert(!Files.exists(Paths.get(dir, StoreLease.LockFileName)))
   }
 
@@ -293,11 +292,7 @@ class StoreLeaseSpec extends AnyFunSuite {
       "writeWordHistogram" -> (() =>
         TextAnalysis.writeWordHistogram(TextAnalysis.wordHistogram(docs, "text"), dir)),
       "appendWordHistogram" -> (() =>
-        TextAnalysis.appendWordHistogram(docs, "text", dir, "h#1")),
-      "appendDocWordCounts" -> (() =>
-        TextAnalysis.appendDocWordCounts(docs, "doc_id", "text", dir, "h#1")),
-      "compactWordHistogram" -> (() =>
-        TextAnalysis.compactWordHistogram(spark, dir))
+        TextAnalysis.appendWordHistogram(docs, "text", dir, "h#1"))
     )
     verbs.foreach { case (name, run) =>
       val ex = intercept[IllegalStateException](run())
@@ -308,34 +303,7 @@ class StoreLeaseSpec extends AnyFunSuite {
     Files.deleteIfExists(Paths.get(dir, StoreLease.LockFileName))
     // with the rival gone, the same verbs complete and release
     TextAnalysis.appendWordHistogram(docs, "text", dir, "h#2")
-    TextAnalysis.compactWordHistogram(spark, dir)
     assert(!Files.exists(Paths.get(dir, StoreLease.LockFileName)))
-  }
-
-  test("drift-profile writes lease a SIBLING lock that survives the root overwrite") {
-    import graft.streaming.IngestGuardrail
-    import org.apache.spark.sql.functions.col
-    val root = Files.createTempDirectory("graft_lease_profile")
-    val dir = root.resolve("profile").toString
-    val corpus = Seq((1L, "a"), (2L, "b"), (3L, "b")).toDF("id", "category")
-    IngestGuardrail.writeProfile(corpus, col("category"), dir)
-    // the lock is NOT inside the dataset dir (overwrite would erase it
-    // mid-verb) and is gone after a clean release
-    val sibling = root.resolve(".profile_writer.lock")
-    assert(!Files.exists(Paths.get(dir, StoreLease.LockFileName)))
-    assert(!Files.exists(sibling), "sibling lock not released")
-    // a rival's live sibling lease refuses both profile writers
-    Files.writeString(sibling, s"rival@otherhost#s1|${System.currentTimeMillis() + 60000L}|write-profile")
-    val exW = intercept[IllegalStateException](IngestGuardrail.writeProfile(corpus, col("category"), dir))
-    assert(exW.getMessage.contains("held by writer rival@otherhost#s1"), exW.getMessage)
-    val observations = Seq(("run#1", "c", 5L, false, java.sql.Timestamp.valueOf("2026-01-01 00:00:00")))
-      .toDF("batch_key", "category", "n", "drifted", "observed_at")
-    val exR = intercept[IllegalStateException](IngestGuardrail.refreshProfile(observations, dir, lastN = 1))
-    assert(exR.getMessage.contains("held by writer rival@otherhost#s1"), exR.getMessage)
-    Files.deleteIfExists(sibling)
-    IngestGuardrail.refreshProfile(observations, dir, lastN = 1)
-    assert(spark.read.parquet(dir).count() == 1L, "refresh under the freed lease landed")
-    assert(!Files.exists(sibling), "sibling lock not released")
   }
 
   test("persisted-index writes fail loud while another writer holds the store") {
@@ -450,7 +418,7 @@ class StoreLeaseSpec extends AnyFunSuite {
       // trailing slash (a raw-string-keyed service would mint two leases)
       fake.locks.put(dir, ("other-driver", System.currentTimeMillis() + 60000L, "append"))
       val sp = intercept[IllegalStateException](
-        SequencePacking.recertifyShards(spark, dir + "/"))
+        SequencePacking.compactShards(spark, dir + "/"))
       assert(sp.getMessage.contains("held by writer other-driver"), sp.getMessage)
       fake.locks.remove(dir)
       // a lapsed service lease surfaces as the same loud lost-mid-verb

@@ -1,984 +1,154 @@
 package graft
 
+import java.net.URI
+import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.{Files, Paths}
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.FtsIndex
-import graft.streaming.StreamingIngest
-import graft.sources.Catalog
 
+import graft.operators.FtsIndex
+import graft.pipeline.Pipeline
+import graft.streaming.StreamingIngest
+
+/** The watch ingest (`Cli process --watch`) and the batch body it shares
+  * with `Pipeline.processDirectory`: exactly-once across restarts,
+  * per-batch FTS extension, crash replay, and search during extension.
+  */
 class StreamingSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
+  private def mkPdf(dir: String, name: String, body: String): Unit =
+    Files.write(Paths.get(dir, name), s"%PDF-1.4\n$body".getBytes("UTF-8"))
+
+  /** Run a watch on `in` until every file present is ingested, then stop
+    * it; returns the files its micro-batches read.
+    */
+  private def watchOnce(ingest: StreamingIngest, in: String): Long = {
+    val q = ingest.start(in)
+    try { q.processAllAvailable(); q.recentProgress.map(_.numInputRows).sum }
+    finally q.stop()
+  }
+
   test("streaming ingest: exactly-once across restarts via checkpoint") {
     val base = Files.createTempDirectory("graft-stream").toString
-    val in = s"$base/in"; val wh = s"$base/wh"; val ckpt = s"$base/ckpt"
-    Files.createDirectories(Paths.get(in))
-    Files.write(Paths.get(in, "d1.md"), "# One\n\nspark streaming processes data incrementally.".getBytes)
-    Files.write(Paths.get(in, "d2.md"), "# Two\n\nwatermarks bound state for late events.".getBytes)
-
-    val cfg = GraftConfig(warehouseDir = wh)
-    val ingest = new StreamingIngest(spark, cfg)
-    val q1 = ingest.start(in, ckpt)
-    q1.awaitTermination()
-
-    val cat = new Catalog(spark, wh)
-    assert(cat.read("documents_stream").count() == 2)
-    val chunks1 = cat.read("chunks_stream").count()
-    assert(chunks1 >= 2)
-
-    // restart with one new file: only it is processed (checkpoint = ledger)
-    Files.write(Paths.get(in, "d3.md"), "# Three\n\ntriggers control batch cadence.".getBytes)
-    val q2 = ingest.start(in, ckpt)
-    q2.awaitTermination()
-    assert(cat.read("documents_stream").count() == 3)
-    assert(cat.read("documents_stream").select("id").distinct().count() == 3)
-
-    // a NEW file carrying already-seen content: content-level dedup drops it
-    Files.write(Paths.get(in, "d1_copy.md"), "# One\n\nspark streaming processes data incrementally.".getBytes)
-    val q3 = ingest.start(in, ckpt)
-    q3.awaitTermination()
-    assert(cat.read("documents_stream").count() == 3, "duplicate content must not re-ingest")
-  }
-
-  test("ingest drift guardrail: a drifted batch fires an event, a conforming batch does not") {
-    import graft.streaming.IngestGuardrail
-    val base = Files.createTempDirectory("graft-guardrail").toString
-    val in = s"$base/in"; val wh = s"$base/wh"; val ckpt = s"$base/ckpt"
-    val profile = s"$base/profile"
-    Files.createDirectories(Paths.get(in))
-
-    // reference profile: a corpus of SHORT documents (bin 0)
-    val spark2 = spark
-    import spark2.implicits._
-    val refCorpus = (1 to 50).map(i => s"short doc $i with a few words").toDF("value")
-    IngestGuardrail.writeProfile(refCorpus, IngestGuardrail.lengthBin(col("value")), profile)
-
-    val ingest = new StreamingIngest(
-      spark, GraftConfig(warehouseDir = wh), driftProfilePath = Some(profile))
-
-    // batch 1 conforms to the profile: short docs -> no event
-    Files.write(Paths.get(in, "ok1.md"), "# Ok\n\na short conforming doc.".getBytes)
-    Files.write(Paths.get(in, "ok2.md"), "# Ok2\n\nanother short one here.".getBytes)
-    ingest.start(in, ckpt).awaitTermination()
-    assert(ingest.driftEvents.isEmpty,
-      s"conforming batch must not fire the guardrail: ${ingest.driftEvents}")
-
-    // batch 2 drifts hard: every doc lands in a length bin the reference
-    // has never seen -> TVD 1.0, tvd2_ppm 2e6 >> the 200k threshold
-    val long1 = "# Long\n\n" + ("lorem ipsum dolor sit amet " * 80)
-    val long2 = "# Long2\n\n" + ("consectetur adipiscing elit sed " * 80)
-    Files.write(Paths.get(in, "drift1.md"), long1.getBytes)
-    Files.write(Paths.get(in, "drift2.md"), long2.getBytes)
-    ingest.start(in, ckpt).awaitTermination()
-    assert(ingest.driftEvents.nonEmpty, "drifted batch must fire the guardrail")
-    val rep = ingest.driftEvents.head
-    assert(rep.tvd2Ppm > 200000L, s"expected a large shift, got $rep")
-    assert(rep.worstAbsPpmDiff > 0L, rep.toString)
-  }
-
-  test("quarantine policy: a drifted batch diverts whole to quarantine_stream, loading nothing") {
-    import graft.streaming.{IngestGuardrail, StreamingIngest => SI}
-    val base = Files.createTempDirectory("graft-quarantine").toString
-    val in = s"$base/in"; val wh = s"$base/wh"; val ckpt = s"$base/ckpt"
-    val profile = s"$base/profile"
-    Files.createDirectories(Paths.get(in))
-    val spark2 = spark
-    import spark2.implicits._
-    IngestGuardrail.writeProfile(
-      (1 to 50).map(i => s"short doc $i with a few words").toDF("value"),
-      IngestGuardrail.lengthBin(col("value")), profile)
-
-    val ingest = new StreamingIngest(
-      spark, GraftConfig(warehouseDir = wh),
-      driftProfilePath = Some(profile), driftPolicy = SI.Quarantine)
-
-    // conforming batch loads normally
-    Files.write(Paths.get(in, "ok.md"), "# Ok\n\na short conforming doc.".getBytes)
-    ingest.start(in, ckpt).awaitTermination()
-    val cat = new Catalog(spark, wh)
-    assert(cat.read("documents_stream").count() == 1)
-    assert(!cat.exists("quarantine_stream"))
-
-    // drifted batch: nothing reaches documents/chunks; the raw rows land
-    // in quarantine_stream, replayable after adjudication
-    Files.write(Paths.get(in, "drift.md"),
-      ("# Long\n\n" + ("lorem ipsum dolor sit amet " * 80)).getBytes)
-    ingest.start(in, ckpt).awaitTermination()
-    assert(cat.read("documents_stream").count() == 1, "drifted batch must not load")
-    val q = cat.read("quarantine_stream")
-    assert(q.count() == 1)
-    assert(q.select("batch_id", "file_hash", "value").collect().head.getString(2).contains("lorem"))
-    assert(ingest.driftEvents.nonEmpty)
-  }
-
-  test("quarantine replay: adjudicated batches load exactly once; second replay no-ops") {
-    import graft.streaming.{IngestGuardrail, StreamingIngest => SI}
-    val base = Files.createTempDirectory("graft-replay").toString
-    val in = s"$base/in"; val wh = s"$base/wh"; val ckpt = s"$base/ckpt"
-    val profile = s"$base/profile"
-    Files.createDirectories(Paths.get(in))
-    val spark2 = spark
-    import spark2.implicits._
-    IngestGuardrail.writeProfile(
-      (1 to 50).map(i => s"short doc $i with a few words").toDF("value"),
-      IngestGuardrail.lengthBin(col("value")), profile)
-
-    val ingest = new StreamingIngest(
-      spark, GraftConfig(warehouseDir = wh),
-      driftProfilePath = Some(profile), driftPolicy = SI.Quarantine)
-    Files.write(Paths.get(in, "drift1.md"),
-      ("# Long\n\n" + ("lorem ipsum dolor sit amet " * 80)).getBytes)
-    Files.write(Paths.get(in, "drift2.md"),
-      ("# Long2\n\n" + ("consectetur adipiscing elit sed " * 80)).getBytes)
-    ingest.start(in, ckpt).awaitTermination()
-    val cat = new Catalog(spark, wh)
-    assert(!cat.exists("documents_stream"), "quarantined batch must not load")
-    val qIds = cat.read("quarantine_stream")
-      .select("batch_id").distinct().collect().map(_.getLong(0)).toSeq
-    assert(cat.read("quarantine_stream").count() == 2)
-
-    // adjudication: replay the quarantined batch through the normal load
-    assert(ingest.replayQuarantined(qIds) == 2L)
-    assert(cat.read("documents_stream").count() == 2)
-    assert(cat.read("chunks_stream").count() >= 2, "replayed docs must be chunked+loaded")
-    // audit trail retained
-    assert(cat.read("quarantine_stream").count() == 2)
-
-    // exactly-once: a second replay of the same adjudication no-ops
-    assert(ingest.replayQuarantined(qIds) == 0L)
-    assert(cat.read("documents_stream").count() == 2)
-    // unknown batch ids no-op too
-    assert(ingest.replayQuarantined(Seq(99999L)) == 0L)
-
-    // cross-run ambiguity: a fresh checkpoint restarts batch ids at 0,
-    // so replay by batch id alone must REFUSE when rows span runs —
-    // silently loading another run's un-adjudicated batch past the
-    // drift gate is the failure mode being refused
-    Files.write(Paths.get(in, "drift3.md"),
-      ("# Long3\n\n" + ("amet sit dolor ipsum lorem " * 80)).getBytes)
-    val ckpt2 = s"$base/ckpt2"
-    ingest.start(in, ckpt2).awaitTermination()
-    assert(cat.read("quarantine_stream").count() == 3,
-      "the new run's drifted file joins the quarantine audit trail")
-    val e = intercept[IllegalArgumentException] { ingest.replayQuarantined(Seq(0L)) }
-    assert(e.getMessage.contains("span"), e.getMessage)
-    // scoped to the new run, exactly its one document loads
-    assert(ingest.replayQuarantined(Seq(0L), runToken = Some(ckpt2)) == 1L)
-    assert(cat.read("documents_stream").count() == 3)
-  }
-
-  test("guardrail profile refresh: an adjudicated mix shift stops alarming") {
-    import graft.streaming.IngestGuardrail
-    val base = Files.createTempDirectory("graft-refresh").toString
-    val in = s"$base/in"; val wh = s"$base/wh"; val ckpt = s"$base/ckpt"
-    val profile = s"$base/profile"
-    Files.createDirectories(Paths.get(in))
-    val spark2 = spark
-    import spark2.implicits._
-    IngestGuardrail.writeProfile(
-      (1 to 50).map(i => s"short doc $i with a few words").toDF("value"),
-      IngestGuardrail.lengthBin(col("value")), profile)
-
-    val ingest = new StreamingIngest(
-      spark, GraftConfig(warehouseDir = wh), driftProfilePath = Some(profile))
-
-    // the seasonal step: long docs now, Monitor policy loads them but
-    // alarms — and would alarm FOREVER against the frozen day-0 profile
-    Files.write(Paths.get(in, "long1.md"),
-      ("# Long\n\n" + ("lorem ipsum dolor sit amet " * 80)).getBytes)
-    ingest.start(in, ckpt).awaitTermination()
-    assert(ingest.driftEvents.nonEmpty, "the shifted mix must alarm against the stale profile")
-    val cat = new Catalog(spark, wh)
-    // every checked batch left an observation row for the refresher
-    val obs = cat.read("guardrail_observations")
-    assert(obs.where(col("drifted") === true).count() >= 1)
-
-    // healthy-only refresh refuses when no healthy batches exist yet
-    intercept[IllegalArgumentException] {
-      IngestGuardrail.refreshProfile(obs, profile, lastN = 5)
-    }
-
-    // adjudicated refresh: the alarming batches ARE the new normal
-    IngestGuardrail.refreshProfile(
-      cat.read("guardrail_observations"), profile, lastN = 5, includeDrifted = true)
-    ingest.driftEvents.clear()
-    Files.write(Paths.get(in, "long2.md"),
-      ("# MoreLong\n\n" + ("dolor amet lorem sit ipsum " * 80)).getBytes)
-    ingest.start(in, ckpt).awaitTermination()
-    assert(ingest.driftEvents.isEmpty,
-      s"the same mix must stop alarming after the refresh: ${ingest.driftEvents}")
-    assert(cat.read("documents_stream").count() == 2)
-  }
-
-  test("drift adjudication runbook: quarantine -> refreshProfile -> replay once -> next batch quiet") {
-    // The COMPOSED walkthrough an operator actually executes when the
-    // data mix steps (VERDICT r12 #6) — each piece is spec'd alone
-    // above; this pins that they compose in one warehouse without
-    // re-alarming, double-loading, or losing the audit trail.
-    import graft.streaming.{IngestGuardrail, StreamingIngest => SI}
-    val base = Files.createTempDirectory("graft-runbook").toString
-    val in = s"$base/in"; val wh = s"$base/wh"; val ckpt = s"$base/ckpt"
-    val profile = s"$base/profile"
-    Files.createDirectories(Paths.get(in))
-    val spark2 = spark
-    import spark2.implicits._
-    IngestGuardrail.writeProfile(
-      (1 to 50).map(i => s"short doc $i with a few words").toDF("value"),
-      IngestGuardrail.lengthBin(col("value")), profile)
-    val ingest = new StreamingIngest(
-      spark, GraftConfig(warehouseDir = wh),
-      driftProfilePath = Some(profile), driftPolicy = SI.Quarantine)
-    val cat = new Catalog(spark, wh)
-
-    // 1. the mix steps: long docs arrive, drift fires, the batch diverts
-    // all three long docs repeat a 27-char phrase 80x so the whole new
-    // mix shares ONE length bin — "same mix" must mean same bin for the
-    // post-refresh batch to read as drift-free
-    Files.write(Paths.get(in, "long1.md"),
-      ("# Long\n\n" + ("lorem ipsum dolor sit amet " * 80)).getBytes)
-    Files.write(Paths.get(in, "long2.md"),
-      ("# Long2\n\n" + ("sed elit amet dolorume sit " * 80)).getBytes)
-    ingest.start(in, ckpt).awaitTermination()
-    assert(ingest.driftEvents.nonEmpty, "the step change must alarm")
-    assert(!cat.exists("documents_stream"), "quarantine policy must load nothing")
-    assert(cat.read("quarantine_stream").count() == 2)
-    // the drifted batch left its observation row for the refresher
-    assert(cat.read("guardrail_observations").where(col("drifted") === true).count() >= 1)
-
-    // 2. operator adjudicates the new mix as the new normal
-    IngestGuardrail.refreshProfile(
-      cat.read("guardrail_observations"), profile, lastN = 5, includeDrifted = true)
-
-    // 3. replay loads the adjudicated batch exactly once (and keeps the
-    // audit trail); a second replay no-ops
-    val qIds = cat.read("quarantine_stream")
-      .select("batch_id").distinct().collect().map(_.getLong(0)).toSeq
-    assert(ingest.replayQuarantined(qIds) == 2L)
-    assert(cat.read("documents_stream").count() == 2)
-    assert(cat.read("quarantine_stream").count() == 2, "audit trail retained")
-    assert(ingest.replayQuarantined(qIds) == 0L)
-    assert(cat.read("documents_stream").count() == 2)
-
-    // 4. the next batch of the SAME new mix passes the gate quietly and
-    // loads directly — the refresh closed the loop
-    ingest.driftEvents.clear()
-    Files.write(Paths.get(in, "long3.md"),
-      ("# Long3\n\n" + ("amet sit dolor ipsum lorem " * 80)).getBytes)
-    ingest.start(in, ckpt).awaitTermination()
-    assert(ingest.driftEvents.isEmpty,
-      s"the adjudicated mix must not re-alarm: ${ingest.driftEvents}")
-    assert(cat.read("documents_stream").count() == 3)
-    assert(!cat.exists("quarantine_stream") ||
-      cat.read("quarantine_stream").count() == 2, "nothing new quarantined")
-  }
-
-  test("model-based quality gate: rejected docs divert to rejected_stream, accepted load") {
-    import graft.operators.QualityClassifier
-    val base = Files.createTempDirectory("graft-qgate").toString
-    val in = s"$base/in"; val wh = s"$base/wh"; val ckpt = s"$base/ckpt"
-    Files.createDirectories(Paths.get(in))
-    val spark2 = spark
-    import spark2.implicits._
-    val train = Seq(
-      (1L, "clear prose with careful argument and cited sources", 1),
-      (2L, "careful analysis and clear cited argument in prose", 1),
-      (3L, "buy now cheap pills click here free winner", -1),
-      (4L, "winner click free cheap pills buy here now now", -1)
-    ).toDF("doc_id", "text", "y")
-    val m = QualityClassifier.fitCentroid(train, "doc_id", "text", col("y"), nFeatures = 64)
-
-    val ingest = new StreamingIngest(
-      spark, GraftConfig(warehouseDir = wh), qualityModel = Some(m))
-    Files.write(Paths.get(in, "good.md"),
-      "# Good\n\nclear prose with careful argument and cited sources here".getBytes)
-    Files.write(Paths.get(in, "spam.md"),
-      "# Spam\n\nbuy now cheap pills click here free winner offer".getBytes)
-    ingest.start(in, ckpt).awaitTermination()
-
-    val cat = new Catalog(spark, wh)
-    val docs = cat.read("documents_stream")
-    assert(docs.count() == 1, "only the accepted doc loads")
-    val rej = cat.read("rejected_stream")
-    assert(rej.count() == 1)
-    val r = rej.select("source_path", "value", "gap").collect().head
-    assert(r.getString(0).endsWith("spam.md"))
-    assert(r.getString(1).contains("pills"))
-    assert(r.getDecimal(2).signum() > 0, "rejected rows carry the positive (far-from-good) gap")
-    // chunks exist only for the accepted doc
-    val chunkDocs = cat.read("chunks_stream").select("document_id").distinct().count()
-    assert(chunkDocs == 1)
-  }
-
-  test("LM gate: high-perplexity docs divert to lm_rejected_stream; replay-safe; persisted-path form") {
-    import graft.operators.TextAnalysis
-    val base = Files.createTempDirectory("graft-lmgate").toString
     val in = s"$base/in"; val wh = s"$base/wh"
     Files.createDirectories(Paths.get(in))
-    val spark2 = spark
-    import spark2.implicits._
-    val trusted = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog"),
-      (2L, "the quick brown fox runs past the lazy dog"),
-      (3L, "a lazy dog naps under the brown fox")
-    ).toDF("doc_id", "text")
-    val lm = TextAnalysis.trainBigramLm(trusted, "text")
-    val goodTxt = "# Good\n\nthe quick brown fox jumps over the lazy dog"
-    val noiseTxt = "# Noise\n\ndog the fox quick lazy the brown over jumps"
-    // self-calibrate the cut from the exact file contents the gate will see
-    val means = TextAnalysis.scoreWithLm(
-      lm, Seq((1L, goodTxt), (2L, noiseTxt)).toDF("doc_id", "text"),
-      "doc_id", "text")
-      .collect().map(r => r.getLong(0) -> r.getLong(5)).toMap
-    assert(means(2L) > means(1L), s"scrambled must score higher: $means")
-    val cut = (means(1L) + means(2L)) / 2
-
-    Files.write(Paths.get(in, "good.md"), goodTxt.getBytes)
-    Files.write(Paths.get(in, "noise.md"), noiseTxt.getBytes)
-    new StreamingIngest(spark, GraftConfig(warehouseDir = wh), lmGate = Some((lm, cut)))
-      .start(in, s"$base/ckpt1").awaitTermination()
-
-    val cat = new Catalog(spark, wh)
-    assert(cat.read("documents_stream").count() == 1, "only the fluent doc loads")
-    val rej = cat.read("lm_rejected_stream")
-    assert(rej.count() == 1)
-    val r = rej.select("source_path", "value", "mean_lm_fp").collect().head
-    assert(r.getString(0).endsWith("noise.md"))
-    assert(r.getLong(2) >= cut, "rejected rows carry the audit score")
-
-    // persisted-path form + replay: a FRESH checkpoint re-reads both
-    // files; the ledger anti-join skips the loaded doc and the reject
-    // table's content-key guard prevents a double-append
-    TextAnalysis.writeLm(lm, s"$base/lm")
-    new StreamingIngest(spark, GraftConfig(warehouseDir = wh),
-      lmGatePath = Some((s"$base/lm", cut)))
-      .start(in, s"$base/ckpt2").awaitTermination()
-    assert(cat.read("documents_stream").count() == 1, "replay must not double-load")
-    assert(cat.read("lm_rejected_stream").count() == 1, "replay must not double-append the reject")
-
-    intercept[IllegalArgumentException] {
-      new StreamingIngest(spark, GraftConfig(warehouseDir = wh),
-        lmGate = Some((lm, 0L)))
-    }
-  }
-
-  test("quality gate survives a restart when configured by persisted model PATH") {
-    import graft.operators.QualityClassifier
-    val base = Files.createTempDirectory("graft-qgate-path").toString
-    val in = s"$base/in"; val wh = s"$base/wh"; val ckpt = s"$base/ckpt"
-    val modelPath = s"$base/model"
-    Files.createDirectories(Paths.get(in))
-    val spark2 = spark
-    import spark2.implicits._
-    val train = Seq(
-      (1L, "clear prose with careful argument and cited sources", 1),
-      (2L, "careful analysis and clear cited argument in prose", 1),
-      (3L, "buy now cheap pills click here free winner", -1),
-      (4L, "winner click free cheap pills buy here now now", -1)
-    ).toDF("doc_id", "text", "y")
-    QualityClassifier.writeModel(
-      QualityClassifier.fitCentroid(train, "doc_id", "text", col("y"), nFeatures = 64),
-      modelPath, spark)
-
-    // session 1: gate loaded from the artifact
-    Files.write(Paths.get(in, "good.md"),
-      "# Good\n\nclear prose with careful argument and cited sources here".getBytes)
-    Files.write(Paths.get(in, "spam.md"),
-      "# Spam\n\nbuy now cheap pills click here free winner offer".getBytes)
-    new StreamingIngest(spark, GraftConfig(warehouseDir = wh), qualityModelPath = Some(modelPath))
-      .start(in, ckpt).awaitTermination()
-    val cat = new Catalog(spark, wh)
-    assert(cat.read("documents_stream").count() == 1)
-    assert(cat.read("rejected_stream").count() == 1)
-
-    // "restart": a FRESH StreamingIngest (the in-memory model is gone;
-    // only the path survives) must keep gating new batches identically
-    Files.write(Paths.get(in, "spam2.md"),
-      "# More\n\ncheap pills winner click free buy now here offer".getBytes)
-    new StreamingIngest(spark, GraftConfig(warehouseDir = wh), qualityModelPath = Some(modelPath))
-      .start(in, ckpt).awaitTermination()
-    assert(cat.read("documents_stream").count() == 1, "restarted ingest must still gate")
-    assert(cat.read("rejected_stream").count() == 2)
-
-    // misconfiguration is loud at construction, not at the first batch
-    intercept[IllegalArgumentException] {
-      new StreamingIngest(
-        spark, GraftConfig(warehouseDir = wh),
-        qualityModel = Some(QualityClassifier.loadModel(spark, modelPath)),
-        qualityModelPath = Some(modelPath))
-    }
-    intercept[Exception] {
-      new StreamingIngest(
-        spark, GraftConfig(warehouseDir = wh), qualityModelPath = Some(s"$base/nope"))
-    }
-  }
-
-  test("per-batch PQ encode: streamed codes == batch encode against the frozen codebook; replay-safe; path form; dim guard") {
-    import graft.operators.{Embedder, VectorSearch}
-    val spark2 = spark
-    import spark2.implicits._
-    val base = Files.createTempDirectory("graft-stream-pq").toString
-    val in = s"$base/in"; val wh = s"$base/wh"; val ckpt = s"$base/ckpt"
-    Files.createDirectories(Paths.get(in))
     val cfg = GraftConfig(warehouseDir = wh)
+    val ingest = new StreamingIngest(spark, cfg)
+    val pipe = new Pipeline(spark, cfg)
+    val mapper = new ObjectMapper()
+    try {
+      // the watch starts on an empty directory; a PDF dropped into it is
+      // ingested and served by /search in keyword and vector mode
+      val q = ingest.start(in)
+      val server = new RestServer(spark, cfg).start(0)
+      try {
+        mkPdf(in, "EP001 Zeppelin Manual.pdf",
+          "# Zeppelin Manual\n\nthe zeppelin hangar keeps airships moored between flights.")
+        q.processAllAvailable()
+        val client = HttpClient.newHttpClient()
+        def titles(mode: String): Seq[String] = {
+          val r = client.send(
+            HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${server.getAddress.getPort}/search"))
+              .POST(HttpRequest.BodyPublishers.ofString(
+                s"""{"query":"zeppelin hangar airships","mode":"$mode","limit":5}""")).build(),
+            HttpResponse.BodyHandlers.ofString())
+          assert(r.statusCode == 200, r.body)
+          val hits = mapper.readTree(r.body)
+          (0 until hits.size).map(i => hits.get(i).get("document_title").asText)
+        }
+        assert(titles("keyword") == Seq("Zeppelin Manual"))
+        assert(titles("vector").contains("Zeppelin Manual"))
+      } finally { server.stop(0); q.stop() }
+      val chunks1 = pipe.catalog.read("chunks").count()
+      assert(pipe.catalog.read("documents").count() == 1 && chunks1 >= 1)
 
-    // freeze a codebook fit on a trusted corpus embedded by the SAME
-    // embedder config the stream uses
-    val fitDocs = (1 to 24)
-      .map(i => (i.toLong, s"codebook fitting document $i with some words and a number $i"))
-      .toDF("id", "text")
-    val fitVecs = Embedder.withEmbedding(fitDocs, "text", "embedding", cfg.embedding)
-    val model = VectorSearch.pqFit(fitVecs, "id", "embedding", nSub = 8, k = 4, iters = 2)
+      // restart on the same checkpoint with one new file: the stream
+      // offers only that file (the checkpoint is the file ledger)
+      mkPdf(in, "EP002 Glider Notes.pdf", "# Glider Notes\n\nthermals lift gliders over the ridge.")
+      assert(watchOnce(ingest, in) == 1L, "a restart must read only the new file")
+      val docs = pipe.catalog.read("documents")
+      assert(docs.count() == 2 && docs.select("id").distinct().count() == 2)
+      assert(pipe.catalog.read("chunks").where(col("document_title") === "Zeppelin Manual")
+        .count() == chunks1, "the first file's chunks must not re-append")
 
-    Files.write(Paths.get(in, "a.md"), "# A\n\nstreaming chunks get encoded against the frozen codebook.".getBytes)
-    Files.write(Paths.get(in, "b.md"), "# B\n\nper batch maintenance keeps the vector index current.".getBytes)
-    val ingest = new StreamingIngest(spark, cfg, pqCodebook = Some(model))
-    ingest.start(in, ckpt).awaitTermination()
+      // a NEW file carrying already-seen bytes: read by the stream, then
+      // dropped by the ledger's content-hash anti-join
+      Files.copy(Paths.get(in, "EP001 Zeppelin Manual.pdf"), Paths.get(in, "copy.pdf"))
+      val chunks2 = pipe.catalog.read("chunks").count()
+      assert(watchOnce(ingest, in) == 1L)
+      assert(pipe.catalog.read("documents").count() == 2, "duplicate content must not re-ingest")
+      assert(pipe.catalog.read("chunks").count() == chunks2)
 
-    val cat = new Catalog(spark, wh)
-    val chunks = cat.read("chunks_stream")
-    val streamed = cat.read("pq_codes_stream")
-    assert(streamed.count() == chunks.count(), "every stored chunk must carry codes")
-    // streamed codes equal a batch encode over the stored chunks
-    def codeMap(df: org.apache.spark.sql.DataFrame) = df
-      .select("id", "pq_codes").collect()
-      .map(r => r.getString(0) -> r.getSeq[Any](1).toList).toMap
-    assert(codeMap(streamed) == codeMap(VectorSearch.pqEncode(model, chunks, "id", "embedding")))
-
-    // the streamed codes table is DIRECTLY searchable with the ADC
-    // surface (encode at ingest, search the codes later — no re-encode):
-    // a chunk's own embedding must rank that chunk first
-    val probe = chunks.select("id", "embedding").collect().head
-    val top = VectorSearch.pqSearch(
-        model, cat.read("pq_codes_stream"),
-        probe.getSeq[Float](1), k = 1)
-      .collect().head.getString(0)
-    assert(top == probe.getString(0), s"ADC over streamed codes returned $top")
-
-    // replay-safety: re-delivering already-ingested content appends no codes
-    Files.write(Paths.get(in, "a_copy.md"), "# A\n\nstreaming chunks get encoded against the frozen codebook.".getBytes)
-    ingest.start(in, ckpt).awaitTermination()
-    assert(cat.read("pq_codes_stream").count() == chunks.count(), "replayed content must not re-encode")
-
-    // a genuinely new doc encodes exactly its own chunks
-    Files.write(Paths.get(in, "c.md"), "# C\n\na third document arrives and only it is encoded.".getBytes)
-    ingest.start(in, ckpt).awaitTermination()
-    assert(cat.read("pq_codes_stream").count() == cat.read("chunks_stream").count())
-
-    // restart-safe path form: the persisted sidecar alone configures the encoder
-    val pqDir = s"$base/pq"
-    VectorSearch.writePq(model, VectorSearch.pqEncode(model, fitVecs, "id", "embedding"), pqDir)
-    val fromPath = new StreamingIngest(spark, cfg, pqCodebookPath = Some(pqDir))
-    Files.write(Paths.get(in, "d.md"), "# D\n\nthe path-configured ingest encodes this batch too.".getBytes)
-    fromPath.start(in, ckpt).awaitTermination()
-    assert(cat.read("pq_codes_stream").count() == cat.read("chunks_stream").count())
-
-    // a codebook of the wrong dimensionality is refused at construction
-    val tiny = (1 to 8).map(i => (i.toLong, Seq.fill(8)(i.toFloat))).toDF("id", "embedding")
-    val wrongDim = VectorSearch.pqFit(tiny, "id", "embedding", nSub = 4, k = 2, iters = 1)
-    val err = intercept[IllegalArgumentException] {
-      new StreamingIngest(spark, cfg, pqCodebook = Some(wrongDim))
-    }
-    assert(err.getMessage.contains("codebook encodes dim"), err.getMessage)
-  }
-
-  test("per-batch input_ids encode: streamed ids == batch encode under the frozen tokenizer; replay-safe; path form; packable") {
-    import graft.operators.{SequencePacking, TextAnalysis}
-    val spark2 = spark
-    import spark2.implicits._
-    val base = Files.createTempDirectory("graft-stream-ids").toString
-    val in = s"$base/in"; val wh = s"$base/wh"; val ckpt = s"$base/ckpt"
-    Files.createDirectories(Paths.get(in))
-    val cfg = GraftConfig(warehouseDir = wh)
-
-    // freeze a tokenizer trained on a trusted corpus
-    val fitDocs = (1 to 24)
-      .map(i => (i.toLong, s"tokenizer fitting document number $i with words and tokens"))
-      .toDF("id", "text")
-    val tok = TextAnalysis.trainBpeTokenizer(fitDocs, "text", rounds = 3)
-
-    Files.write(Paths.get(in, "a.md"), "# A\n\nstreaming chunks get encoded against the frozen tokenizer.".getBytes)
-    Files.write(Paths.get(in, "b.md"), "# B\n\nper batch maintenance keeps the training tensors current.".getBytes)
-    val ingest = new StreamingIngest(spark, cfg, tokenizer = Some(tok))
-    ingest.start(in, ckpt).awaitTermination()
-
-    val cat = new Catalog(spark, wh)
-    val chunks = cat.read("chunks_stream")
-    val streamed = cat.read("input_ids_stream")
-    assert(streamed.count() == chunks.count(), "every stored chunk must carry ids")
-    // streamed ids equal a batch encode over the stored chunks
-    def idMap(df: org.apache.spark.sql.DataFrame) = df
-      .select("id", "input_ids").collect()
-      .map(r => r.getString(0) -> r.getSeq[Long](1).toList).toMap
-    assert(idMap(streamed) == idMap(TextAnalysis.encodeIds(tok, chunks, "id", "text")))
-    // n_tokens is the sequence length, document_id rides along for takedown
-    streamed.collect().foreach { r =>
-      assert(r.getAs[Long]("n_tokens") == r.getSeq[Long](r.fieldIndex("input_ids")).length.toLong)
-      assert(Option(r.getAs[String]("document_id")).exists(_.nonEmpty))
-    }
-
-    // replay-safety: re-delivering already-ingested content appends no ids
-    Files.write(Paths.get(in, "a_copy.md"), "# A\n\nstreaming chunks get encoded against the frozen tokenizer.".getBytes)
-    ingest.start(in, ckpt).awaitTermination()
-    assert(cat.read("input_ids_stream").count() == chunks.count(), "replayed content must not re-encode")
-
-    // a genuinely new doc encodes exactly its own chunks
-    Files.write(Paths.get(in, "c.md"), "# C\n\na third document arrives and only it is encoded.".getBytes)
-    ingest.start(in, ckpt).awaitTermination()
-    assert(cat.read("input_ids_stream").count() == cat.read("chunks_stream").count())
-
-    // restart-safe path form: the persisted artifact alone configures the encoder
-    val tokDir = s"$base/tok"
-    TextAnalysis.writeTokenizer(spark, tok, tokDir)
-    val fromPath = new StreamingIngest(spark, cfg, tokenizerPath = Some(tokDir))
-    Files.write(Paths.get(in, "d.md"), "# D\n\nthe path-configured ingest encodes this batch too.".getBytes)
-    fromPath.start(in, ckpt).awaitTermination()
-    assert(cat.read("input_ids_stream").count() == cat.read("chunks_stream").count())
-
-    // both-forms misconfiguration is loud at construction
-    intercept[IllegalArgumentException] {
-      new StreamingIngest(spark, cfg, tokenizer = Some(tok), tokenizerPath = Some(tokDir))
-    }
-
-    // the streamed table feeds packing DIRECTLY: derive a deterministic
-    // numeric sequence key from the content hash and pack to a budget —
-    // the stream-to-training-shards composition with no re-encode
-    val packable = cat.read("input_ids_stream")
-      .withColumn("seq_id", xxhash64(col("id")))
-    val packed = SequencePacking
-      .packSequences(packable, "seq_id", "n_tokens", "input_ids", budget = 64, partitions = 1)
-      .collect()
-    assert(packed.map(_.getAs[Long]("n_docs")).sum == cat.read("input_ids_stream").count())
-    packed.foreach { r =>
-      assert(r.getAs[Long]("n_docs") == 1L || r.getAs[Long]("bin_tokens") <= 64L)
-      assert(r.getSeq[Long](r.fieldIndex("input_ids")).length.toLong == r.getAs[Long]("bin_tokens"))
-    }
-
-    // ... and lands as CERTIFIED training shards: the full stream -> encode
-    // -> pack -> export -> loader-verify composition, no re-encode anywhere
-    val shardDir = s"$base/shards"
-    SequencePacking.exportShards(
-      SequencePacking.packSequences(packable, "seq_id", "n_tokens", "input_ids", budget = 64, partitions = 1),
-      shardDir, nShards = 2)
-    assert(SequencePacking.verifyShards(spark, shardDir).collect()
-      .forall(_.getAs[Boolean]("ok")), "streamed corpus must export as a certified shard set")
-  }
-
-  test("per-batch word-histogram maintenance: counts match the ingested corpus; dedup'd content adds nothing; retrain is corpus-read-free") {
-    import graft.operators.TextAnalysis
-    val spark2 = spark
-    import spark2.implicits._
-    val base = Files.createTempDirectory("graft-stream-hist").toString
-    val in = s"$base/in"; val wh = s"$base/wh"; val ckpt = s"$base/ckpt"
-    val histDir = s"$base/hist"
-    Files.createDirectories(Paths.get(in))
-    val t1 = "the cat sat on the mat and the cat ate the fish"
-    val t2 = "a dog sat on a log and a dog ate a bone"
-    Files.write(Paths.get(in, "a.md"), t1.getBytes)
-    Files.write(Paths.get(in, "b.md"), t2.getBytes)
-    val ingest = new StreamingIngest(
-      spark, GraftConfig(warehouseDir = wh), wordHistPath = Some(histDir))
-    ingest.start(in, ckpt).awaitTermination()
-
-    def counts(h: TextAnalysis.WordHistogram): Map[String, Long] =
-      h.hist.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val expect = counts(TextAnalysis.wordHistogram(Seq(t1, t2).toDF("value"), "value"))
-    assert(counts(TextAnalysis.loadWordHistogram(spark, histDir)) == expect)
-
-    // re-delivered content is dedup'd before the gates, so it never
-    // reaches the histogram; a genuinely new doc adds exactly its words
-    Files.write(Paths.get(in, "a_copy.md"), t1.getBytes)
-    val t3 = "an owl flew over the quiet barn at night"
-    Files.write(Paths.get(in, "c.md"), t3.getBytes)
-    ingest.start(in, ckpt).awaitTermination()
-    val grown = counts(TextAnalysis.loadWordHistogram(spark, histDir))
-    assert(grown ==
-      counts(TextAnalysis.wordHistogram(Seq(t1, t2, t3).toDF("value"), "value")),
-      grown.toString)
-
-    // the maintained histogram trains without touching any document text
-    val tok = TextAnalysis.trainBpeTokenizer(
-      TextAnalysis.loadWordHistogram(spark, histDir), 3, 10000000L)
-    assert(tok.merges.length == 3)
-  }
-
-  test("stream takedown subtracts the doc's word counts from the maintained histogram; compaction keeps it that way") {
-    import graft.operators.TextAnalysis
-    val spark2 = spark
-    import spark2.implicits._
-    val base = Files.createTempDirectory("graft-stream-hist-del").toString
-    val in = s"$base/in"; val wh = s"$base/wh"; val ckpt = s"$base/ckpt"
-    val histDir = s"$base/hist"
-    Files.createDirectories(Paths.get(in))
-    val t1 = "the cat sat on the mat and the cat ate the fish"
-    val t2 = "a dog sat on a log and a dog ate a bone"
-    Files.write(Paths.get(in, "a.md"), t1.getBytes)
-    Files.write(Paths.get(in, "b.md"), t2.getBytes)
-    val ingest = new StreamingIngest(
-      spark, GraftConfig(warehouseDir = wh), wordHistPath = Some(histDir))
-    ingest.start(in, ckpt).awaitTermination()
-
-    def counts(h: TextAnalysis.WordHistogram): Map[String, Long] =
-      h.hist.where(col("freq") =!= 0L).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val cat = new Catalog(spark, wh)
-    val doomed = cat.read("documents_stream").collect()
-      .map(r => r.getAs[String]("source_path") -> r.getAs[String]("id"))
-      .find(_._1.endsWith("a.md")).get._2
-
-    // the delete's negative delta leaves exactly the survivor's counts —
-    // a tokenizer retrained from the histogram has forgotten the doc
-    assert(ingest.deleteStreamDocument(doomed) == 1L)
-    val afterDelete = counts(TextAnalysis.loadWordHistogram(spark, histDir))
-    assert(afterDelete == counts(TextAnalysis.wordHistogram(Seq(t2).toDF("value"), "value")),
-      afterDelete.toString)
-
-    // a crash-rerun of the SAME delete appends identical negative rows,
-    // which the (word, batch_key) replay key collapses — never a double
-    // subtraction
-    assert(TextAnalysis.retractWordHistogramDoc(spark, histDir, doomed) > 0L)
-    assert(counts(TextAnalysis.loadWordHistogram(spark, histDir)) == afterDelete)
-
-    // compaction folds the takedown delta into the base; a post-compact
-    // replay of the delete is a marker-guarded no-op
-    TextAnalysis.compactWordHistogram(spark, histDir)
-    assert(counts(TextAnalysis.loadWordHistogram(spark, histDir)) == afterDelete)
-    TextAnalysis.retractWordHistogramDoc(spark, histDir, doomed)
-    assert(counts(TextAnalysis.loadWordHistogram(spark, histDir)) == afterDelete)
-
-    // unknown doc: nothing appended
-    assert(TextAnalysis.retractWordHistogramDoc(spark, histDir, "no-such-doc") == 0L)
-  }
-
-  test("shard store as a FIRST-CLASS ingest sink: founding batch exports, later batches append, delete retracts, replay no-ops") {
-    import graft.operators.{SequencePacking, TextAnalysis}
-    val spark2 = spark
-    import spark2.implicits._
-    val base = Files.createTempDirectory("graft-stream-sink").toString
-    val in = s"$base/in"; val wh = s"$base/wh"; val ckpt = s"$base/ckpt"
-    val sp = s"$base/shards"
-    Files.createDirectories(Paths.get(in))
-    val cfg = GraftConfig(warehouseDir = wh)
-    val tok = TextAnalysis.trainBpeTokenizer(
-      (1 to 24).map(i => (i.toLong, s"tokenizer fitting document number $i with words and tokens"))
-        .toDF("id", "text"),
-      "text", rounds = 3)
-
-    // misconfiguration is loud at construction: a shard store without a tokenizer
-    intercept[IllegalArgumentException] {
-      new StreamingIngest(spark, cfg, shardStorePath = Some(sp))
-    }
-
-    val aBytes = "# A\n\nthe founding batch creates the loader store.".getBytes
-    Files.write(Paths.get(in, "a.md"), aBytes)
-    Files.write(Paths.get(in, "b.md"), "# B\n\na sibling document rides the same founding batch.".getBytes)
-    val ingest = new StreamingIngest(spark, cfg,
-      tokenizer = Some(tok), shardStorePath = Some(sp), shardStoreShards = 2, shardStoreBudget = 64)
-    ingest.start(in, ckpt).awaitTermination()
-    val cat = new Catalog(spark, wh)
-
-    def servedSeqIds(): Seq[Long] = spark.read.parquet(s"$sp/manifest")
-      .select("shard").collect().map(_.getLong(0)).sorted
-      .flatMap(sh => SequencePacking.readShard(spark, sp, sh).collect()
-        .flatMap(r => r.getSeq[Long](r.fieldIndex("doc_ids")))).sorted.toSeq
-    def tableSeqIds(): Seq[Long] = cat.read("input_ids_stream")
-      .select(xxhash64(col("id"))).collect().map(_.getLong(0)).sorted.toSeq
-    assert(SequencePacking.verifyShards(spark, sp).collect().forall(_.getAs[Boolean]("ok")))
-    assert(servedSeqIds() == tableSeqIds(), "founding export must cover the encoded corpus")
-
-    // a later micro-batch APPENDS (no re-export): the founding bins'
-    // files are untouched on disk
-    val filesBefore = new java.io.File(s"$sp/data").listFiles().flatMap(d =>
-      Option(d.listFiles()).getOrElse(Array.empty).map(f => f.getPath -> f.lastModified())).toMap
-    Files.write(Paths.get(in, "c.md"), "# C\n\na second batch extends the store incrementally.".getBytes)
-    ingest.start(in, ckpt).awaitTermination()
-    assert(SequencePacking.verifyShards(spark, sp).collect().forall(_.getAs[Boolean]("ok")))
-    assert(servedSeqIds() == tableSeqIds(), "append must keep loader == table")
-    val filesAfter = new java.io.File(s"$sp/data").listFiles().flatMap(d =>
-      Option(d.listFiles()).getOrElse(Array.empty).map(f => f.getPath -> f.lastModified())).toMap
-    filesBefore.foreach { case (p, m) =>
-      assert(filesAfter.get(p).contains(m), s"founding file $p was rewritten by an append")
-    }
-
-    // a checkpoint replay of already-committed content changes nothing
-    val storeSnapshot = servedSeqIds()
-    ingest.ingestBatch(
-      Seq((new String(aBytes, "UTF-8"), s"file://$in/a.md")).toDF("value", "path"),
-      0L, runToken = ckpt)
-    assert(servedSeqIds() == storeSnapshot, "replayed content must not re-pack")
-
-    // the delete verb reaches the store: the victim's sequences vanish,
-    // the rest stay served, certification stays green
-    val doomed = cat.read("documents_stream").collect()
-      .map(r => r.getAs[String]("source_path") -> r.getAs[String]("id"))
-      .find(_._1.endsWith("a.md")).get._2
-    assert(ingest.deleteStreamDocument(doomed) == 1L)
-    assert(SequencePacking.verifyShards(spark, sp).collect().forall(_.getAs[Boolean]("ok")))
-    assert(servedSeqIds() == tableSeqIds(), "post-delete loader must equal the purged table")
-    assert(servedSeqIds().nonEmpty, "survivors must keep serving")
-
-    // and the trainer schedules the streamed store DIRECTLY: the epoch
-    // permutation certifies against the post-append post-delete manifest
-    // and covers exactly the surviving bins with an exact token cursor
-    val sched = graft.operators.LoaderSchedule.epochSchedule(spark, sp, "stream-ep")
-      .orderBy("ord").collect()
-    val liveBins = spark.read.parquet(s"$sp/data")
-      .select("bin_id", "bin_tokens").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(sched.map(_.getAs[Long]("bin_id")).toSet == liveBins.keySet,
-      "the epoch schedule must cover exactly the streamed store's surviving bins")
-    assert(sched.last.getAs[Long]("cum_tokens") == liveBins.values.sum,
-      "the token cursor must account for every surviving token")
-  }
-
-  test("streamed corpus reaches the trainer shards INCREMENTALLY: export once, appendShards per batch, takedown reaches the shards") {
-    import graft.operators.{SequencePacking, TextAnalysis}
-    val spark2 = spark
-    import spark2.implicits._
-    val base = Files.createTempDirectory("graft-stream-append").toString
-    val in = s"$base/in"; val wh = s"$base/wh"; val ckpt = s"$base/ckpt"
-    val shardDir = s"$base/shards"
-    Files.createDirectories(Paths.get(in))
-    val cfg = GraftConfig(warehouseDir = wh)
-    val tok = TextAnalysis.trainBpeTokenizer(
-      (1 to 24).map(i => (i.toLong, s"tokenizer fitting document number $i with words and tokens"))
-        .toDF("id", "text"),
-      "text", rounds = 3)
-
-    Files.write(Paths.get(in, "a.md"), "# A\n\nstreaming chunks get encoded against the frozen tokenizer.".getBytes)
-    Files.write(Paths.get(in, "b.md"), "# B\n\nper batch maintenance keeps the training tensors current.".getBytes)
-    val ingest = new StreamingIngest(spark, cfg, tokenizer = Some(tok))
-    ingest.start(in, ckpt).awaitTermination()
-    val cat = new Catalog(spark, wh)
-
-    // initial export of the corpus so far (seq ids derived from content ids)
-    def packable(df: org.apache.spark.sql.DataFrame) = df
-      .withColumn("seq_id", xxhash64(col("id")))
-    def packOf(df: org.apache.spark.sql.DataFrame) = SequencePacking
-      .packSequences(packable(df), "seq_id", "n_tokens", "input_ids", budget = 64, partitions = 1)
-    SequencePacking.exportShards(packOf(cat.read("input_ids_stream")), shardDir, nShards = 2)
-    val binsBefore = spark.read.parquet(s"$shardDir/data").count()
-
-    // a new micro-batch arrives; ONLY its rows are packed and appended —
-    // the O(batch) refresh, no corpus re-export
-    Files.write(Paths.get(in, "c.md"), "# C\n\na third document arrives and extends the loader shards.".getBytes)
-    ingest.start(in, ckpt).awaitTermination()
-    val newDocId = cat.read("documents_stream").collect()
-      .map(r => r.getAs[String]("source_path") -> r.getAs[String]("id"))
-      .find(_._1.endsWith("c.md")).get._2
-    val batchRows = cat.read("input_ids_stream").where(col("document_id") === newDocId)
-    assert(batchRows.count() > 0)
-    assert(SequencePacking.appendShards(packOf(batchRows), shardDir, batchKey = "run#c") > 0L)
-
-    // the refreshed store certifies, and a loader reading every shard sees
-    // old AND new sequences exactly once
-    assert(SequencePacking.verifyShards(spark, shardDir).collect().forall(_.getAs[Boolean]("ok")))
-    val servedDocs = (0L to 1L).flatMap(sh =>
-      SequencePacking.readShard(spark, shardDir, sh).collect()
-        .flatMap(r => r.getSeq[Long](r.fieldIndex("doc_ids"))))
-    val wantDocs = packable(cat.read("input_ids_stream"))
-      .select("seq_id").collect().map(_.getLong(0))
-    assert(servedDocs.sorted == wantDocs.sorted.toSeq,
-      "the loader must see the full streamed corpus exactly once")
-    assert(spark.read.parquet(s"$shardDir/data").count() > binsBefore)
-
-    // replay of the same micro-batch appends nothing
-    assert(SequencePacking.appendShards(packOf(batchRows), shardDir, batchKey = "run#c") == 0L)
-    assert(SequencePacking.verifyShards(spark, shardDir).collect().forall(_.getAs[Boolean]("ok")))
-
-    // a takedown of a streamed chunk reaches the shards through the
-    // membership index — the streaming delete's last mile
-    val victimSeq = packable(batchRows).select("seq_id").head().getLong(0)
-    assert(SequencePacking.retractFromShards(spark, shardDir, Seq(victimSeq)) == 1L)
-    assert(SequencePacking.verifyShards(spark, shardDir).collect().forall(_.getAs[Boolean]("ok")))
+      // the checkpoint lives in the warehouse: flush resets it with the
+      // tables, and the next watch ingests the directory afresh
+      assert(pipe.flush().contains("watch"))
+      assert(watchOnce(ingest, in) == 3L)
+      assert(pipe.catalog.read("documents").count() == 2)
+    } finally pipe.flush()
   }
 
   test("streaming batches extend a live FTS index incrementally (no rebuild)") {
-    import graft.operators.FtsIndex
     val base = Files.createTempDirectory("graft-stream-fts").toString
-    val in = s"$base/in"; val wh = s"$base/wh"; val ckpt = s"$base/ckpt"
+    val in = s"$base/in"; val wh = s"$base/wh"
     Files.createDirectories(Paths.get(in))
-    Files.write(Paths.get(in, "a.md"), "# A\n\ncatalyst optimizes logical plans before execution.".getBytes)
-
+    mkPdf(in, "a.pdf", "# A\n\ncatalyst optimizes logical plans before execution.")
     val cfg = GraftConfig(warehouseDir = wh)
     val ingest = new StreamingIngest(spark, cfg)
-    ingest.start(in, ckpt).awaitTermination()
-
-    // batch 1 already created the live index (extendForBatch's absent
-    // path builds-then-extends during ingest); this buildCached is a
-    // cache HIT on that index, not a cold build
-    val cat = new Catalog(spark, wh)
-    val idx1 = FtsIndex.buildCached(ingest.ftsKey, cat.read("chunks_stream"), "id", "text")
-    assert(idx1.lastBatchToken.isDefined, "ingest-created index carries its batch stamp")
-    assert(FtsIndex.search(spark, idx1, "catalyst plans", 5).count() > 0)
-
-    // batch 2 must extend the LIVE index in place, so a search via the
-    // same cache key sees the new doc without any invalidate/rebuild
-    Files.write(Paths.get(in, "b.md"), "# B\n\ntungsten generates compact bytecode for expressions.".getBytes)
-    ingest.start(in, ckpt).awaitTermination()
-    val idx2 = FtsIndex.buildCached(ingest.ftsKey, cat.read("chunks_stream"), "id", "text")
-    assert(idx2.numDocs == idx1.numDocs + 1, "cached index extended in place")
-    assert(idx2.lastBatchToken != idx1.lastBatchToken, "batch-2 stamp replaced batch-1's")
-    assert(FtsIndex.search(spark, idx2, "tungsten bytecode", 5).count() > 0)
-
-    FtsIndex.invalidate(ingest.ftsKey)
-  }
-
-  test("stream takedown: delete purges every table, FTS/ADC stop serving, replay cannot resurrect") {
-    import graft.operators.{Embedder, VectorSearch}
-    val spark2 = spark
-    import spark2.implicits._
-    val base = Files.createTempDirectory("graft-stream-del").toString
-    val in = s"$base/in"; val wh = s"$base/wh"; val ckpt = s"$base/ckpt"
-    Files.createDirectories(Paths.get(in))
-    val cfg = GraftConfig(warehouseDir = wh)
-    val fitVecs = Embedder.withEmbedding(
-      (1 to 16).map(i => (i.toLong, s"codebook fitting document $i with words")).toDF("id", "text"),
-      "text", "embedding", cfg.embedding)
-    val model = VectorSearch.pqFit(fitVecs, "id", "embedding", nSub = 8, k = 4, iters = 1)
-
-    val aBytes = "# A\n\ncatalyst optimizes logical plans before execution.".getBytes
-    Files.write(Paths.get(in, "a.md"), aBytes)
-    Files.write(Paths.get(in, "b.md"), "# B\n\ntungsten generates compact bytecode for expressions.".getBytes)
-    val tok = graft.operators.TextAnalysis.trainBpeTokenizer(
-      (1 to 8).map(i => (i.toLong, s"tokenizer fitting document $i")).toDF("id", "text"),
-      "text", rounds = 2)
-    val ingest = new StreamingIngest(spark, cfg, pqCodebook = Some(model), tokenizer = Some(tok))
+    val pipe = new Pipeline(spark, cfg)
     try {
-      ingest.start(in, ckpt).awaitTermination()
-      val cat = new Catalog(spark, wh)
-      val byPath = cat.read("documents_stream").collect()
-        .map(r => r.getAs[String]("source_path") -> r.getAs[String]("id")).toMap
-      val doomed = byPath.find(_._1.endsWith("a.md")).get._2
-      val survivor = byPath.find(_._1.endsWith("b.md")).get._2
-      assert(FtsIndex.search(spark,
-        FtsIndex.buildCached(ingest.ftsKey, cat.read("chunks_stream"), "id", "text"),
-        "catalyst plans", 5).count() > 0)
-      assert(cat.read("input_ids_stream").where(col("document_id") === doomed).count() > 0,
-        "precondition: the doomed doc has streamed training ids to purge")
+      watchOnce(ingest, in)
+      // batch 1 created the live index (extendForBatch's absent path
+      // builds-then-extends during ingest); this is a cache HIT
+      val idx1 = pipe.ftsIndex
+      assert(idx1.lastBatchToken.isDefined, "ingest-created index carries its batch stamp")
+      assert(FtsIndex.search(spark, idx1, "catalyst plans", 5).count() > 0)
 
-      assert(ingest.deleteStreamDocument(doomed) == 1L)
-
-      // zero orphaned rows in ANY stream table
-      Seq("chunks_stream", "pq_codes_stream", "input_ids_stream").foreach { t =>
-        assert(cat.read(t).where(col("document_id") === doomed).count() == 0L, t)
-      }
-      assert(cat.read("documents_stream").where(col("id") === doomed).count() == 0L)
-      assert(cat.read("chunks_stream").where(col("document_id") === survivor).count() > 0,
-        "the survivor must keep its chunks")
-
-      // FTS: the key was invalidated; a rebuild over the rewritten table
-      // has no postings for the doomed doc ("catalyst" lived only in a.md)
-      assert(FtsIndex.search(spark,
-        FtsIndex.buildCached(ingest.ftsKey, cat.read("chunks_stream"), "id", "text"),
-        "catalyst", 5).count() == 0L, "FTS still serves the deleted doc")
-
-      // ADC: the codes table was rewritten, so every hit is a survivor chunk
-      val survivorChunks = cat.read("chunks_stream")
-        .select("id").collect().map(_.getString(0)).toSet
-      val probe = cat.read("chunks_stream").select("embedding").collect().head.getSeq[Float](0)
-      val hits = VectorSearch.pqSearch(model, cat.read("pq_codes_stream"), probe, k = 10)
-        .collect().map(_.getString(0)).toSet
-      assert(hits.nonEmpty && hits.subsetOf(survivorChunks), hits.toString)
-
-      // a checkpoint REPLAY of the original batch cannot resurrect it: the
-      // ledger row is gone, so only the tombstone stands between the
-      // replayed rows and re-admission
-      ingest.ingestBatch(
-        Seq((new String(aBytes, "UTF-8"), s"file://$in/a.md")).toDF("value", "path"),
-        0L, runToken = ckpt)
-      assert(cat.read("documents_stream").where(col("id") === doomed).count() == 0L,
-        "replay resurrected a deleted document")
-      assert(cat.read("chunks_stream").where(col("document_id") === doomed).count() == 0L)
-
-      // ...nor can the same bytes arriving as a brand-new file
-      Files.write(Paths.get(in, "a_again.md"), aBytes)
-      ingest.start(in, ckpt).awaitTermination()
-      assert(cat.read("documents_stream").count() == 1L,
-        "re-arrived deleted content must stay out")
-
-      // the raw-text holding pens are purged too (by the DERIVED id —
-      // a quarantined doc never reached the ledger)
-      cat.append(
-        Seq(("file:///q.md", "deadbeef", "withheld text", 0L, "tok"))
-          .toDF("source_path", "file_hash", "value", "batch_id", "run_token")
-          .withColumn("quarantined_at", current_timestamp()),
-        "quarantine_stream")
-      val qid = spark.sql("SELECT sha2('deadbeef', 256)").head().getString(0)
-      assert(ingest.deleteStreamDocument(qid) == 1L)
-      assert(cat.read("quarantine_stream").where(col("file_hash") === "deadbeef").count() == 0L)
-
-      // unknown id: nothing touched, loud zero
-      assert(ingest.deleteStreamDocument("no-such-doc") == 0L)
-    } finally FtsIndex.invalidate(ingest.ftsKey)
-  }
-
-  test("quality-gate replay: a re-run batch does not double-append its rejects") {
-    import graft.operators.QualityClassifier
-    import spark.implicits._
-    val base = Files.createTempDirectory("graft-qgate-replay").toString
-    val wh = s"$base/wh"
-    val train = Seq(
-      (1L, "clear prose with careful argument and cited sources", 1),
-      (2L, "careful analysis and clear cited argument in prose", 1),
-      (3L, "buy now cheap pills click here free winner", -1),
-      (4L, "winner click free cheap pills buy here now now", -1)
-    ).toDF("doc_id", "text", "y")
-    val m = QualityClassifier.fitCentroid(train, "doc_id", "text", col("y"), nFeatures = 64)
-    val ingest = new StreamingIngest(
-      spark, GraftConfig(warehouseDir = wh), qualityModel = Some(m))
-    val cat = new Catalog(spark, wh)
-    val batch = Seq(
-      ("# Spam\n\nbuy now cheap pills click here free winner offer", "file:///r/spam.md"),
-      ("# Good\n\nclear prose with careful argument and cited sources", "file:///r/good.md")
-    ).toDF("value", "path")
-    try {
-      // attempt 1 records the reject, then "crashes" before the ledger
-      // append becomes visible (drop documents_stream, cold FTS cache)
-      ingest.ingestBatch(batch, 0L, runToken = "ckptR")
-      assert(cat.read("rejected_stream").count() == 1)
-      FtsIndex.invalidate(ingest.ftsKey)
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        Paths.get(wh, "documents_stream").toFile)
-      // the replay re-scores the batch; the reject append must be a no-op
-      ingest.ingestBatch(batch, 0L, runToken = "ckptR")
-      assert(cat.read("rejected_stream").count() == 1,
-        "replayed batch double-appended its rejects")
-    } finally FtsIndex.invalidate(ingest.ftsKey)
+      // batch 2 extends the LIVE index in place: a search through the same
+      // key sees the new document without any invalidate/rebuild
+      mkPdf(in, "b.pdf", "# B\n\ntungsten generates compact bytecode for expressions.")
+      watchOnce(ingest, in)
+      val idx2 = pipe.ftsIndex
+      assert(idx2.numDocs == idx1.numDocs + 1, "cached index extended in place")
+      assert(idx2.lastBatchToken != idx1.lastBatchToken, "batch-2 stamp replaced batch-1's")
+      assert(idx1.retained.isEmpty && idx2.retained.length == 2, "one new fragment, no rebuild")
+      assert(FtsIndex.search(spark, idx2, "tungsten bytecode", 5).count() > 0)
+    } finally pipe.flush()
   }
 
   test("crash-replay (chunks landed, ledger didn't, cold cache) does not double-count the FTS index") {
-    import spark.implicits._
     val base = Files.createTempDirectory("graft-stream-crash").toString
-    val wh = s"$base/wh"
-    val cfg = GraftConfig(warehouseDir = wh)
-    val ingest = new StreamingIngest(spark, cfg)
-    val cat = new Catalog(spark, wh)
-    val batch = Seq(
-      ("# Crash\n\nexactly once semantics survive a replay after partial commit.", "file:///crash/c1.md")
-    ).toDF("value", "path")
+    val in = s"$base/in"; val wh = s"$base/wh"
+    Files.createDirectories(Paths.get(in))
+    mkPdf(in, "c1.pdf", "# Crash\n\nexactly once semantics survive a replay after partial commit.")
+    mkPdf(in, "c2.pdf", "# Replay\n\nthe ledger is written last so a rerun re-admits the batch.")
+    val pipe = new Pipeline(spark, GraftConfig(warehouseDir = wh))
     try {
-      // attempt 1 commits the chunk append...
-      ingest.ingestBatch(batch, 0L, runToken = "ckptX")
-      val chunkCount = cat.read("chunks_stream").count()
-      assert(chunkCount > 0)
+      // attempt 1 commits the chunks...
+      assert(pipe.processDirectory(in) == 2)
+      val chunkCount = pipe.catalog.read("chunks").count()
       // ...then the crash window: the ledger append is not visible (drop
       // the table) and the process died (cold FTS cache, no replay stamp)
-      FtsIndex.invalidate(ingest.ftsKey)
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        Paths.get(wh, "documents_stream").toFile)
-      // restart replays the SAME micro-batch
-      ingest.ingestBatch(batch, 0L, runToken = "ckptX")
-      assert(cat.read("chunks_stream").count() == chunkCount,
+      FtsIndex.invalidate(s"$wh/chunks")
+      org.apache.commons.io.FileUtils.deleteDirectory(Paths.get(wh, "documents").toFile)
+      // the rerun re-admits both files
+      assert(pipe.processDirectory(in) == 2)
+      assert(pipe.catalog.read("chunks").count() == chunkCount,
         "replayed chunks must not re-append to the table")
-      // the replay's cold-cache build corpus must have EXCLUDED this
-      // batch's docs (they were already in the table from attempt 1), so
-      // stats are exact and every (doc, term) has exactly one postings row
-      val idx = FtsIndex.buildCached(ingest.ftsKey, cat.read("chunks_stream"), "id", "text")
+      assert(pipe.catalog.read("chunks").select("id").distinct().count() == chunkCount)
+      val ledger = pipe.catalog.read("documents")
+      assert(ledger.count() == 2 && ledger.select("id").distinct().count() == 2)
+      // the replay's cold build corpus EXCLUDED this batch's documents
+      // (their chunks were already in the table), so stats are exact and
+      // every (doc, term) has exactly one postings row
+      val idx = pipe.ftsIndex
       assert(idx.numDocs == chunkCount,
         s"index numDocs ${idx.numDocs} != table rows $chunkCount: batch double-counted on replay")
       val dup = idx.postings.groupBy("doc_id", "term").count().where(col("count") > 1).count()
       assert(dup == 0, "duplicated postings rows after crash-replay")
-    } finally FtsIndex.invalidate(ingest.ftsKey)
+    } finally pipe.flush()
   }
 
   test("a search during streaming extension never observes a half-extended index") {

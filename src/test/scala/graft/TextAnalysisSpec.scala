@@ -484,38 +484,6 @@ class TextAnalysisSpec extends AnyFunSuite {
     assert(got(13L) == ((1L, 0L, 0L, 2L, 20000L)))
   }
 
-  test("bigram LM persists: load(write(lm)) scores identically to train(A++B)") {
-    import java.nio.file.Files
-    val a = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog"),
-      (2L, "a lazy dog naps under the brown fox")
-    ).toDF("doc_id", "text")
-    val b = Seq(
-      (3L, "the quick fox runs past a sleeping dog"),
-      (4L, "brown dogs jump over quick foxes")
-    ).toDF("doc_id", "text")
-    val probes = Seq(
-      (10L, "the quick brown fox naps"),
-      (11L, "sleeping foxes jump past lazy dogs"),
-      (12L, "zzz unseen words qqq")
-    ).toDF("doc_id", "text")
-    def scores(lm: TextAnalysis.BigramLm): Map[Long, (Long, Long, Long, Long)] =
-      TextAnalysis.scoreWithLm(lm, probes, "doc_id", "text")
-        .collect()
-        .map(r => r.getLong(0) ->
-          ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))).toMap
-    val full = scores(TextAnalysis.trainBigramLm(a.unionByName(b), "text"))
-    val dir = Files.createTempDirectory("graft_lm_").toString
-    TextAnalysis.writeLm(TextAnalysis.trainBigramLm(a.unionByName(b), "text"), dir)
-    val loaded = scores(TextAnalysis.loadLm(spark, dir))
-    assert(loaded == full, s"load(write(lm)) must score identically: $loaded vs $full")
-    // and the LM genuinely discriminates: the unseen-word probe scores highest
-    val fullMeans = TextAnalysis.scoreWithLm(
-      TextAnalysis.trainBigramLm(a.unionByName(b), "text"), probes, "doc_id", "text")
-      .collect().map(r => r.getLong(0) -> r.getLong(5)).toMap
-    assert(fullMeans(12L) > fullMeans(10L) && fullMeans(12L) > fullMeans(11L), s"$fullMeans")
-  }
-
   test("lmBuckets: contiguous rank thirds, sizes differ by at most one, ties broken by id") {
     // 7 rows, scores with a tie at 30 -> rank by (score, id);
     // bucket = ((rk-1)*3) div 7 -> sizes (3, 2, 2)
@@ -578,26 +546,32 @@ class TextAnalysisSpec extends AnyFunSuite {
       (10L, "the cat and the dog sat"),
       (11L, "quizzical vexing jumps"), // q/z/x/j unseen in training
       (12L, "mats and logs")).toDF("doc_id", "text")
+    def rowsOf(df: org.apache.spark.sql.DataFrame): Map[Long, org.apache.spark.sql.Row] =
+      df.collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
     def countsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
-      df.collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("n_tokens")).toMap
+      rowsOf(df).map { case (id, r) => id -> r.getAs[Long]("n_tokens") }
     def sizesOf(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
-      df.collect().map(r =>
-        r.getAs[Long]("doc_id") -> r.getSeq[Long](r.fieldIndex("input_ids")).length.toLong).toMap
+      rowsOf(df).map { case (id, r) => id -> r.getSeq[Long](r.fieldIndex("input_ids")).length.toLong }
 
     val bpe = TextAnalysis.trainBpeTokenizer(train, "text", rounds = 4)
     assert(sizesOf(TextAnalysis.bpeEncodeIds(bpe, apply, "doc_id", "text")) ==
       countsOf(TextAnalysis.bpeEncode(bpe, apply, "doc_id", "text")))
 
+    // WordPiece and unigram have count encoders only (BPE is the one id
+    // encoder with a caller); their n_tokens on the same OOV apply set:
+    // every doc scored, at least one token per word, and the q/z/x/j
+    // words are whole-word UNK under WordPiece: one token each
     val wp = TextAnalysis.trainWordPieceTokenizer(train, "text", rounds = 4)
-    assert(sizesOf(TextAnalysis.wordPieceEncodeIds(wp, apply, "doc_id", "text")) ==
-      countsOf(TextAnalysis.wordPieceEncode(wp, apply, "doc_id", "text")))
-    // the q/z/x/j words are whole-word UNK: one id 0 each
-    val unkDoc = TextAnalysis.wordPieceEncodeIds(wp, apply, "doc_id", "text")
-      .where(col("doc_id") === 11L).collect().head
-    assert(unkDoc.getSeq[Long](unkDoc.fieldIndex("input_ids")) == Seq(0L, 0L, 0L), unkDoc.toString)
+    val wpRows = rowsOf(TextAnalysis.wordPieceEncode(wp, apply, "doc_id", "text"))
+    assert(wpRows.keySet == Set(10L, 11L, 12L), wpRows.toString)
+    assert(wpRows.values.forall(r => r.getAs[Long]("n_tokens") >= r.getAs[Long]("n_words")))
+    val unkDoc = wpRows(11L)
+    assert(unkDoc.getAs[Long]("n_tokens") == 3L && unkDoc.getAs[Long]("n_unk") == 3L, unkDoc.toString)
 
     val uni = TextAnalysis.trainUnigramTokenizer(train, "text", emRounds = 1)
-    assert(sizesOf(TextAnalysis.unigramEncodeIds(uni, apply, "doc_id", "text")) ==
-      countsOf(TextAnalysis.unigramTokenCounts(uni, apply, "doc_id", "text")))
+    val uniRows = rowsOf(TextAnalysis.unigramTokenCounts(uni, apply, "doc_id", "text"))
+    assert(uniRows.keySet == Set(10L, 11L, 12L), uniRows.toString)
+    assert(uniRows.values.forall(r => r.getAs[Long]("n_tokens") >= r.getAs[Long]("n_words")),
+      uniRows.toString)
   }
 }

@@ -146,9 +146,6 @@ object PdfGen {
   def flateBomb(run: Run, bombs: Int, inflated: Long): Array[Byte] = {
     val n = bombs + 1
     val kids = (0 until n).map(i => s"${4 + 2 * i} 0 R").mkString(" ")
-    def stream(payload: Array[Byte], filter: String): Array[Byte] =
-      s"<< /Length ${payload.length}$filter >>\nstream\n".getBytes("ISO-8859-1") ++
-        payload ++ "\nendstream".getBytes("ISO-8859-1")
     val zeros = deflatedZeros(inflated)
     val objects = Seq(
       1 -> "<< /Type /Catalog /Pages 2 0 R >>".getBytes("ISO-8859-1"),
@@ -168,12 +165,21 @@ object PdfGen {
     layout(objects, "")
   }
 
-  /** `n` zero bytes deflated, without holding them in memory. */
-  private def deflatedZeros(n: Long): Array[Byte] = {
+  /** A stream object body: dictionary (`filter` appended) plus payload. */
+  private def stream(payload: Array[Byte], filter: String): Array[Byte] =
+    s"<< /Length ${payload.length}$filter >>\nstream\n".getBytes("ISO-8859-1") ++
+      payload ++ "\nendstream".getBytes("ISO-8859-1")
+
+  /** `prefix` then `n` zero bytes deflated, without holding the zeros in
+    * memory.
+    */
+  private def deflatedZeros(n: Long, prefix: Array[Byte] = Array.empty): Array[Byte] = {
     val d = new Deflater(Deflater.BEST_COMPRESSION)
     val zeros = new Array[Byte](1 << 20)
     val out = new ByteArrayOutputStream()
     val buf = new Array[Byte](8192)
+    d.setInput(prefix)
+    while (!d.needsInput()) out.write(buf, 0, d.deflate(buf))
     var left = n
     while (left > 0) {
       val k = math.min(left, zeros.length.toLong).toInt
@@ -223,26 +229,7 @@ object PdfGen {
     * garbage; with it, exactly `text`.
     */
   def cidPdf(text: String): Array[Byte] = {
-    val distinct = text.distinct
-    val codeOf = distinct.zipWithIndex.map { case (c, i) => c -> (i + 1) }.toMap
-    val hexCodes = text.map(c => f"${codeOf(c)}%04X").mkString
-    val bfchars = distinct
-      .map(c => f"<${codeOf(c)}%04X> <${c.toInt}%04X>")
-      .mkString("\n")
-    val cmap =
-      s"""/CIDInit /ProcSet findresource begin
-         |12 dict begin
-         |begincmap
-         |1 begincodespacerange
-         |<0000> <FFFF>
-         |endcodespacerange
-         |${distinct.length} beginbfchar
-         |$bfchars
-         |endbfchar
-         |endcmap
-         |CMapName currentdict /CMap defineresource pop
-         |end
-         |end""".stripMargin.getBytes("ISO-8859-1")
+    val (cmap, hexCodes) = cidFont(text)
     val content = s"BT\n/F1 12 Tf\n72 720 Td\n<$hexCodes> Tj\nET\n".getBytes("ISO-8859-1")
 
     val out = new ByteArrayOutputStream()
@@ -270,6 +257,56 @@ object PdfGen {
     (1 to 6).foreach(n => ascii(f"${offsets(n)}%010d 00000 n \n"))
     ascii(s"trailer\n<< /Size 7 /Root 1 0 R >>\nstartxref\n$xrefPos\n%%EOF\n")
     out.toByteArray
+  }
+
+  /** [[cidPdf]]'s font on every one of `pages` pages, each showing `text`;
+    * its one ToUnicode CMap is Flate-compressed with `padding` NUL bytes
+    * (PDF whitespace) after it, so each decode inflates past `padding`.
+    */
+  def sharedCidFontPdf(text: String, pages: Int, padding: Long): Array[Byte] = {
+    val (cmap, hexCodes) = cidFont(text)
+    val content = s"BT\n/F1 12 Tf\n72 720 Td\n<$hexCodes> Tj\nET\n".getBytes("ISO-8859-1")
+    val cmapZ = deflatedZeros(padding, cmap)
+    val kids = (0 until pages).map(i => s"${6 + i} 0 R").mkString(" ")
+    val objects = Seq(
+      1 -> "<< /Type /Catalog /Pages 2 0 R >>".getBytes("ISO-8859-1"),
+      2 -> s"<< /Type /Pages /Kids [ $kids ] /Count $pages >>".getBytes("ISO-8859-1"),
+      3 -> ("<< /Type /Font /Subtype /Type0 /BaseFont /ABCDEF+Subset " +
+        "/Encoding /Identity-H /ToUnicode 4 0 R >>").getBytes("ISO-8859-1"),
+      4 -> stream(cmapZ, " /Filter /FlateDecode"),
+      5 -> stream(content, "")
+    ) ++ (0 until pages).map { i =>
+      (6 + i) -> ("<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 612 792 ] " +
+        "/Resources << /Font << /F1 3 0 R >> >> /Contents 5 0 R >>").getBytes("ISO-8859-1")
+    }
+    layout(objects, "")
+  }
+
+  /** A ToUnicode CMap mapping arbitrary 2-byte codes to `text`'s
+    * characters, and `text` as a hex string of those codes.
+    */
+  private def cidFont(text: String): (Array[Byte], String) = {
+    val distinct = text.distinct
+    val codeOf = distinct.zipWithIndex.map { case (c, i) => c -> (i + 1) }.toMap
+    val hexCodes = text.map(c => f"${codeOf(c)}%04X").mkString
+    val bfchars = distinct
+      .map(c => f"<${codeOf(c)}%04X> <${c.toInt}%04X>")
+      .mkString("\n")
+    val cmap =
+      s"""/CIDInit /ProcSet findresource begin
+         |12 dict begin
+         |begincmap
+         |1 begincodespacerange
+         |<0000> <FFFF>
+         |endcodespacerange
+         |${distinct.length} beginbfchar
+         |$bfchars
+         |endbfchar
+         |endcmap
+         |CMapName currentdict /CMap defineresource pop
+         |end
+         |end""".stripMargin.getBytes("ISO-8859-1")
+    (cmap, hexCodes)
   }
 
   /** A real JPEG payload (JFIF) of the given size, via ImageIO. */

@@ -24,7 +24,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 MAIN = os.path.join(ROOT, "src", "main", "scala")
 
 # The product surface: its public defs are the entry points themselves.
-SURFACE = {"Pipeline", "Retriever", "Cli", "RestServer", "api", "StreamingIngest", "SparkEntry"}
+SURFACE = {"Pipeline", "Retriever", "Cli", "RestServer", "api", "SparkEntry"}
 
 ALLOWED = {
     # ingest: PdfSource / Catalog behind Pipeline.processDirectory
@@ -33,15 +33,6 @@ ALLOWED = {
     "Catalog.updateWhere": "the reference's status-flip UPDATE over the documents table Pipeline writes",
     "Catalog.writeBucketedTable":
         "bucketed layout for the chunks/documents tables Pipeline writes; PlanShapeSpec pins its no-shuffle join",
-    # writers of the artifacts StreamingIngest loads
-    "TextAnalysis.writeLm": "writes the LM that StreamingIngest(lmGatePath) loads with loadLm",
-    "QualityClassifier.writeModel": "writes the model that StreamingIngest(qualityModelPath) loads with loadModel",
-    "IngestGuardrail.writeProfile": "writes the drift reference profile that StreamingIngest(driftProfilePath) checks",
-    "IngestGuardrail.refreshProfile": "rebuilds that profile from guardrail_observations, which ingestBatch writes",
-    "TextAnalysis.compactWordHistogram": "folds the deltas that StreamingIngest(wordHistPath) appends",
-    # recovery and audit of the shard store StreamingIngest(shardStorePath) grows
-    "SequencePacking.recertifyShards": "recovers the shard store that deleteStreamDocument retracts from",
-    "SequencePacking.verifyDocsIndex": "audits the shard store that deleteStreamDocument retracts from",
     # readouts and twins of SparkEntry query paths
     "Sketches.hllCardinality": "small-range readout of the (n_zero, sum_scaled) columns the q_hll_* queries return",
     "Dedup.simhash": "the text signature for hammingPairsFromSigs, which Pipeline's image dedup bands",
