@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
+import graft.util.Checkpoints
 import graft.util.SessionIndices.Resident
 
 /** Full-text search: inverted-index build + BM25 scoring as pure DataFrame
@@ -11,18 +12,22 @@ import graft.util.SessionIndices.Resident
   * src/load/lancedb_store.py:192-222).
   *
   * Scale design:
-  *   - The postings list is a DataFrame partitioned by `term` — the single
-  *     shuffle of the build (`groupBy(doc, term)` then stats). At 100 TB the
-  *     postings table is written bucketed by term so query-time term lookups
-  *     touch only matching buckets.
+  *   - The session-resident postings ([[buildCached]], [[extendForBatch]])
+  *     are hash-partitioned by `term` into the session's shuffle-partition
+  *     count — the single shuffle of the build, placed before the
+  *     `groupBy(doc, term)` tf count — and pinned eagerly with that
+  *     partitioning stated ([[graft.util.Checkpoints.pinPartitioned]]).
+  *     Every batch fragment is laid out the same way, so their union
+  *     keeps it too. At 100 TB the postings table is written bucketed by
+  *     term so query-time term lookups touch only matching buckets.
   *   - Corpus stats (N, avgdl) are two scalars; per-term document
   *     frequencies are derived at QUERY time over the query's terms only
-  *     (a window count on the isin-filtered postings) — never a
-  *     full-corpus shuffle, and the index itself stays df-free so batch
-  *     extension is a pure append.
-  *   - Query-side scoring is: semi-join postings on the query's terms
-  *     (partition-pruned), per-(doc,term) BM25 term score, then a single
-  *     `groupBy(doc)` sum — one narrow shuffle over candidate docs only.
+  *     (a window count on the isin-filtered postings, which reads each
+  *     term's rows where they sit — no Exchange), and the index itself
+  *     stays df-free so batch extension is a pure append.
+  *   - Query-side scoring is: filter postings to the query's terms, the
+  *     per-term df window, per-(doc,term) BM25 term score, then a single
+  *     `groupBy(doc)` sum — one shuffle, over candidate docs only.
   */
 object FtsIndex {
 
@@ -44,9 +49,10 @@ object FtsIndex {
       postings: DataFrame,
       numDocs: Long,
       totalDocLen: Long,
-      // the persisted postings fragments `postings` unions (empty for a
-      // single build): invalidate must unpersist ALL of them, or a
-      // long-lived session leaks one block-manager entry per batch
+      // the pinned postings fragments `postings` unions (empty for a
+      // single build); a resident entry owns their checkpoint RDDs and
+      // releases ALL of them on invalidate, or a long-lived session
+      // would leak one pin per batch
       retained: Seq[DataFrame] = Nil,
       // RUN-SCOPED token of the last batch unioned in — the idempotence
       // stamp that lets a replayed batch skip re-extension (see
@@ -61,17 +67,34 @@ object FtsIndex {
 
   /** Build the index over `textCol` of `docs` keyed by `idCol`.
     * Equivalent of S7 `create_fts_index` (src/load/lancedb_store.py:104-112).
-    * The postings DataFrame is persisted: the build is an ingest-time step
-    * (the reference rebuilds its FTS index once per batch, *after* load,
-    * src/pipeline.py:164-165) and query-time search must only read it. At
-    * cluster scale, substitute `postings.write.bucketBy(n, "term")` for
-    * `persist` — same contract.
+    * The postings DataFrame is persisted lazily: the build is an
+    * ingest-time step (the reference rebuilds its FTS index once per
+    * batch, *after* load, src/pipeline.py:164-165) and query-time search
+    * must only read it. The session-resident index is pinned eagerly
+    * instead (see [[pinnedIndex]]). At cluster scale, substitute
+    * `postings.write.bucketBy(n, "term")` for `persist` — same contract.
     */
   def build(docs: DataFrame, idCol: String, textCol: String): Index =
-    indexWith(docs, idCol, textCol)(_.persist())
+    indexWith(docs, idCol, textCol)(termFreq(_).persist())
 
-  /** `keep` stores the postings: a lazy `persist` for [[build]], an eager
-    * pin for the session-resident builds.
+  /** Resident postings: hash-partitioned by `term` into the session's
+    * shuffle-partition count before the tf count, and pinned eagerly with
+    * that partitioning stated, so the query-side df window needs no
+    * Exchange. Every fragment of one session gets the same partition
+    * count, so a union of fragments keeps the partitioning.
+    */
+  private def pinnedIndex(docs: DataFrame, idCol: String, textCol: String): Index =
+    indexWith(docs, idCol, textCol) { tokens =>
+      val n = docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+      Checkpoints.pinPartitioned(termFreq(tokens.repartition(n, col("term"))))
+    }
+
+  private def termFreq(tokens: DataFrame): DataFrame =
+    tokens.groupBy("doc_id", "doc_len", "term").agg(count(lit(1)).as("tf"))
+
+  /** `keep` turns the (doc_id, doc_len, term) token rows into the stored
+    * postings: a lazy `persist` for [[build]], an eager pin for the
+    * session-resident builds.
     */
   private def indexWith(docs: DataFrame, idCol: String, textCol: String)(
       keep: DataFrame => DataFrame): Index = {
@@ -79,12 +102,7 @@ object FtsIndex {
       .select(col(idCol).as("doc_id"), TextFunctions.ftsTokens(col(textCol)).as("tokens"))
       .withColumn("doc_len", size(col("tokens")))
 
-    val termFreq = tokenized
-      .select(col("doc_id"), col("doc_len"), explode(col("tokens")).as("term"))
-      .groupBy("doc_id", "doc_len", "term")
-      .agg(count(lit(1)).as("tf"))
-
-    val postings = keep(termFreq)
+    val postings = keep(tokenized.select(col("doc_id"), col("doc_len"), explode(col("tokens")).as("term")))
 
     val stats = tokenized.agg(count(lit(1)).as("n"), sum(col("doc_len").cast("long")).as("total")).head()
     // sum over an empty corpus is NULL — an empty index must still search
@@ -96,10 +114,12 @@ object FtsIndex {
     * stats update, vs the reference's O(corpus) per-batch index rebuild.
     * Sound for append-only ingest; a deletion/upsert batch still wants a
     * rebuild (df would be stale nowhere — df is query-derived — but
-    * removed docs' postings must go).
+    * removed docs' postings must go). The batch's postings are pinned
+    * like a resident build's; [[extendForBatch]] hands that pin to the
+    * resident entry.
     */
   def append(index: Index, newDocs: DataFrame, idCol: String, textCol: String): Index = {
-    val batch = build(newDocs, idCol, textCol)
+    val batch = pinnedIndex(newDocs, idCol, textCol)
     Index(
       index.postings.unionByName(batch.postings),
       index.numDocs + batch.numDocs,
@@ -155,24 +175,16 @@ object FtsIndex {
     */
   private val MaxFragments = 8
 
-  /** A resident build: its postings are materialized and pinned at once.
-    * A lazily persisted plan over a catalog table would be re-listed when
-    * a later append refreshes that path (`Catalog.read`), and then count
-    * the rows the per-batch fragments already carry a second time.
+  /** A resident entry owns the pins of every fragment its postings
+    * union. Every fragment is pinned at once: a lazily persisted plan over
+    * a catalog table would be re-listed when a later append refreshes
+    * that path (`Catalog.read`), and then count the rows the per-batch
+    * fragments already carry a second time.
     */
-  private def pinnedBuild(docs: DataFrame, idCol: String, textCol: String): Resident[Index] = {
-    val idx = indexWith(docs, idCol, textCol)(graft.util.Checkpoints.pin)
-    Resident.pinning(idx, idx.postings)
-  }
-
-  /** An extended index: it keeps every fragment of the entry it extends
-    * and the storage that entry was handed.
-    */
-  private def extended(r: Resident[Index], idx: Index): Resident[Index] =
-    Resident(idx, fragments(idx), r.pinned, r.pinnedIn)
+  private def owned(idx: Index): Resident[Index] = Resident.pinning(idx, idx.postings)
 
   def buildCached(key: String, docs: => DataFrame, idCol: String, textCol: String): Index =
-    resident.getOrBuild(key)(pinnedBuild(docs, idCol, textCol))
+    resident.getOrBuild(key)(owned(pinnedIndex(docs, idCol, textCol)))
 
   /** Batch-safe incremental maintenance: atomically ensure the cached
     * index under `key` includes the batch identified by `batchToken` (a
@@ -196,9 +208,9 @@ object FtsIndex {
     * is the one this critical section produced or preceded) nor lose it
     * (the table only gains the batch after the index already has it).
     *
-    * Ownership: the checkpoint storage under `newDocs` stays the
-    * caller's while it still reads the batch; it passes to the index
-    * only through [[handOverBatch]], once the caller is done with it.
+    * Ownership: the batch's postings are pinned here, so the index never
+    * reads `newDocs` again; any checkpoint under `newDocs` stays the
+    * caller's to release.
     */
   def extendForBatch(
       key: String,
@@ -208,33 +220,18 @@ object FtsIndex {
       textCol: String,
       preBatchCorpus: => DataFrame
   ): Index = {
-    def extend(r: Resident[Index]): Resident[Index] =
-      extended(r, append(r.value, newDocs, idCol, textCol).copy(lastBatchToken = Some(batchToken)))
+    def stamped(idx: Index): Resident[Index] = owned(idx.copy(lastBatchToken = Some(batchToken)))
     resident.update(key) {
       case Some(r) if r.value.lastBatchToken.contains(batchToken) => r
-      case Some(r) if r.value.retained.length < MaxFragments => extend(r)
+      case Some(r) if r.value.retained.length < MaxFragments => stamped(append(r.value, newDocs, idCol, textCol))
       case _ =>
         val corpus = preBatchCorpus
-        if (corpus.isEmpty) {
-          val idx = build(newDocs, idCol, textCol).copy(lastBatchToken = Some(batchToken))
-          Resident(idx, Seq(idx.postings))
-        } else extend(pinnedBuild(corpus, idCol, textCol))
+        if (corpus.isEmpty) stamped(pinnedIndex(newDocs, idCol, textCol))
+        else stamped(append(pinnedIndex(corpus, idCol, textCol), newDocs, idCol, textCol))
     }
   }
 
-  /** Close a batch passed to [[extendForBatch]]: call once the caller has
-    * finished reading `batchDocs`, on success and failure alike. The
-    * index under `key` takes the batch's checkpoint storage if its
-    * postings still read it, and [[invalidate]] releases it from then on;
-    * otherwise (a replayed batch the index skipped, or the key invalidated
-    * while the batch was still in use) it is released here.
-    */
-  def handOverBatch(key: String, batchDocs: DataFrame): Unit =
-    resident.handOver(key, batchDocs)(idx => Seq(idx.postings))
-
-  /** Drop the index under `key` and release its fragments and handed-over
-    * batch checkpoints.
-    */
+  /** Drop the index under `key` and release the pins of its fragments. */
   def invalidate(key: String): Unit = resident.invalidate(key)
 
   /** BM25 score expression for one (tf, df, docLen) posting.
@@ -291,8 +288,12 @@ object FtsIndex {
         "term_score",
         bm25TermScore(col("tf"), col("df"), col("doc_len"), index.numDocs, index.avgDocLen, k1, b)
       )
+      // a document's term scores add up in TERM order, so its score does
+      // not depend on how the postings are partitioned (a plain `sum`
+      // adds partial sums in partition order)
       .groupBy("doc_id")
-      .agg(sum("term_score").as("score"))
+      .agg(aggregate(array_sort(collect_list(struct(col("term"), col("term_score")))), lit(0.0),
+        (acc, t) => acc + t.getField("term_score")).as("score"))
   }
 
   /** Top-k BM25 search. The query is tokenized driver-side (it is one short

@@ -116,11 +116,10 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
         TextFunctions.qualityFallbackReason(col("markdown"), col("page_count"))
       )
 
-    // The batch's two checkpoints. The scratch pin of the extracted rows is
-    // released when the batch ends, however it ends: it cuts the lineage
+    // The batch's two checkpoints, the extracted rows and the chunks, are
+    // released when the batch ends, however it ends: each cuts the lineage
     // of everything built on it, so its blocks are live until the last
-    // append. The chunks pin is not scratch: FtsIndex.handOverBatch gives
-    // it to the resident index when the index's batch postings read it.
+    // append. The resident FTS index pins its own batch postings.
     var scratch: Option[DataFrame] = None
     var batchChunks: Option[DataFrame] = None
     try {
@@ -242,8 +241,8 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
         batchChunks.foreach(_ => FtsIndex.invalidate(ftsKey))
         throw t
     } finally {
-      batchChunks.foreach(FtsIndex.handOverBatch(ftsKey, _))
-      scratch.foreach(p => graft.util.Checkpoints.release(graft.util.Checkpoints.pinnedRddIds(p), spark))
+      (scratch ++ batchChunks).foreach(p =>
+        graft.util.Checkpoints.release(graft.util.Checkpoints.pinnedRddIds(p), spark))
     }
   }
 

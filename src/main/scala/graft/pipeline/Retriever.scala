@@ -176,20 +176,29 @@ final class Retriever(
   }
 
   /** Hybrid = RRF fusion of vector + keyword rankings (Q3/W4), with
-    * vector fallback on keyword failure (lancedb_store.py:187-190).
+    * vector fallback on keyword failure (lancedb_store.py:187-190), as
+    * one bounded plan: both legs and the fused list are top-k
+    * (`TakeOrderedAndProject`), so the caller's action runs no sort
+    * exchange.
     */
   def hybridSearch(query: String, k: Int, titleFilter: Option[String] = None): DataFrame = {
     val v = vectorSearch(query, k, titleFilter).select(col("id"), col("score"))
-    // Force the keyword branch to EXECUTE inside the try: a lazy plan
-    // would defer failures past this fallback to the caller's action
-    // (reference falls back to pure vector on FTS failure,
-    // lancedb_store.py:187-190). localCheckpoint (eager) materializes on
-    // the executors — no driver round-trip for the k rows.
+    // The keyword branch can fail where the fallback still sees it:
+    // `pipeline.ftsIndex` builds the resident index eagerly (its reads,
+    // tokenization and pin all run there), and plan construction
+    // analyzes eagerly. What is left to the caller's action reads only
+    // pinned postings and the chunks table that the vector leg reads too.
+    // Without a title filter the leg is the index's own top-k: the
+    // resident index covers the chunks table, so keywordSearch's chunk
+    // join would only drop the ids of a batch whose chunks append is still
+    // in flight (such an id can take a fused slot; the join with chunks
+    // below drops it from the answer).
     val kw =
-      try {
-        keywordSearch(query, k, titleFilter)
-          .select(col("id"), col("score"))
-          .localCheckpoint()
+      try titleFilter match {
+        case None =>
+          FtsIndex.search(spark, pipeline.ftsIndex, query, k, config.search.bm25K1, config.search.bm25B)
+            .select(col("doc_id").as("id"), col("score"))
+        case Some(_) => keywordSearch(query, k, titleFilter).select(col("id"), col("score"))
       } catch {
         // NonFatal only: an OOM/fatal JVM error must propagate, not
         // masquerade as a silent mode switch; log the branch failure so
@@ -204,6 +213,7 @@ final class Retriever(
       .select(col("id"), col("rrf_score").as("score"))
       .join(chunks, "id")
       .orderBy(desc("score"), col("id"))
+      .limit(k)
       .select(HitColumns: _*)
   }
 
@@ -232,18 +242,19 @@ final class Retriever(
 
   /** LLM-context assembly (Q6, hybrid_retriever.py:167-206): over-fetch,
     * select the longest prefix within the token budget, format with
-    * source attribution.
+    * source attribution. One action: every search mode ends in a top-k,
+    * so the budget windows and the order run over its single partition.
     */
   def getContext(
       query: String,
       maxTokens: Int = 4000,
       mode: SearchMode.Value = SearchMode.Hybrid
-  ): String = {
-    val hits = search(query, mode, config.search.contextOverfetchK)
-    val selected = ContextAssembly
-      .selectWithinBudget(hits, "score", "id", maxTokens.toDouble)
+  ): String =
+    ContextAssembly.formatContext(contextHits(query, maxTokens, mode).collect(), "document_title", "text")
+
+  /** The hits [[getContext]] formats, in context order. */
+  private[graft] def contextHits(query: String, maxTokens: Int, mode: SearchMode.Value): DataFrame =
+    ContextAssembly
+      .selectWithinBudget(search(query, mode, config.search.contextOverfetchK), "score", "id", maxTokens.toDouble)
       .orderBy(desc("score"), col("id"))
-      .collect()
-    ContextAssembly.formatContext(selected, "document_title", "text")
-  }
 }

@@ -82,31 +82,6 @@ object SessionIndices {
       }
     }
 
-    /** Hand the checkpoint storage pinned under `frame` to the entry under
-      * `key` once the caller is done reading `frame`: the ids that the
-      * entry's `reads` frames still reference become the entry's to
-      * release; the rest (all of them, if the entry was invalidated or
-      * replaced meanwhile) are released at once. Deferring the hand-over
-      * to this call means an [[invalidate]] racing the caller's own reads
-      * can never free storage under them.
-      */
-    def handOver(key: String, frame: DataFrame)(reads: A => Seq[DataFrame]): Unit = {
-      val ids = Checkpoints.pinnedRddIds(frame)
-      val s = slotOf(key)
-      val kept = s.synchronized {
-        s.entry.asInstanceOf[Option[Resident[A]]] match {
-          case Some(r) =>
-            val used = ids.intersect(Checkpoints.pinnedRddIds(reads(r.value): _*))
-            if (used.nonEmpty)
-              s.entry = Some(r.copy(pinned = r.pinned ++ used,
-                pinnedIn = r.pinnedIn.orElse(Some(frame.sparkSession))))
-            used
-          case None => Set.empty[Int]
-        }
-      }
-      Checkpoints.release(ids -- kept, frame.sparkSession)
-    }
-
     /** Drop the entry under `key` and release its storage. */
     def invalidate(key: String): Unit = SessionIndices.invalidate(s"$name:$key")
   }

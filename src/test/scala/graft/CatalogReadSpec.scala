@@ -5,7 +5,6 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.AnalysisException
-import org.apache.spark.sql.classic.ClassicConversions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -93,15 +92,20 @@ class CatalogReadSpec extends AnyFunSuite {
     val pipe = new Pipeline(spark, cfg)
     pipe.processDirectory(pdfDir)
     val retriever = new Retriever(spark, pipe, cfg)
-    def postings = spark.sharedState.cacheManager
-      .lookupCachedData(ClassicConversions.castToImpl(pipe.ftsIndex.postings))
-      .getOrElse(fail("the FTS postings are not cached")).cachedRepresentation.cacheBuilder
+    // resident postings are pinned: every partition of each pinned RDD
+    // holds its blocks
+    def pins = graft.util.Checkpoints.pinnedRddIds(pipe.ftsIndex.postings)
+    def loaded(ids: Set[Int]): Boolean = {
+      val stored = spark.sparkContext.getRDDStorageInfo.filter(i => ids(i.id))
+      ids.nonEmpty && stored.length == ids.size && stored.forall(i => i.numCachedPartitions == i.numPartitions)
+    }
 
     assert(retriever.keywordSearch("widget gears", 3).count() > 0)
-    val built = postings
-    assert(built.isCachedColumnBuffersLoaded)
+    val built = pipe.ftsIndex
+    val pinned = pins
+    assert(loaded(pinned), "the FTS postings are not loaded")
     assert(retriever.keywordSearch("gadget springs", 3).count() > 0)
-    assert(postings eq built, "the second search rebuilt the postings")
-    assert(postings.isCachedColumnBuffersLoaded)
+    assert((pipe.ftsIndex eq built) && pins == pinned, "the second search rebuilt the postings")
+    assert(loaded(pinned))
   }
 }

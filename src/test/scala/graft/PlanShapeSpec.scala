@@ -559,4 +559,70 @@ class PlanShapeSpec extends AnyFunSuite {
       s"planForTokensMixture windows must partition on _pid, got $bmSpecs: ${bm.take(1000)}")
     assert(!bm.contains("input_ids"), "packed ids must never enter the budget mixture plan")
   }
+
+  // A warehouse of one cold ingest plus one incremental batch: its
+  // resident FTS index is a cold build plus one batch fragment.
+  private lazy val served = {
+    val base = java.nio.file.Files.createTempDirectory("graft-serving-plan").toString
+    def pdf(dir: String, name: String, body: String): Unit = {
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+      java.nio.file.Files.write(java.nio.file.Paths.get(dir, name), s"%PDF-1.4\n$body".getBytes("UTF-8"))
+    }
+    pdf(s"$base/cold", "a.pdf", "# Alpha\n\nkeyword search reads the resident postings of the cold build.")
+    pdf(s"$base/cold", "b.pdf", "# Bravo\n\nhybrid search fuses the vector and keyword rankings.")
+    pdf(s"$base/batch", "c.pdf", "# Charlie\n\na batch fragment extends the keyword index by one search.")
+    val cfg = GraftConfig(warehouseDir = s"$base/wh")
+    val pipe = new graft.pipeline.Pipeline(spark, cfg)
+    pipe.processDirectory(s"$base/cold")
+    pipe.processDirectory(s"$base/batch")
+    assert(pipe.ftsIndex.retained.length == 2, "precondition: a cold build plus one batch fragment")
+    new graft.pipeline.Retriever(spark, pipe, cfg)
+  }
+
+  /** Every node of `df`'s final plan once it has run, inside AQE's query
+    * stages and subqueries too.
+    */
+  private def executedNodes(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    df.collect()
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case other => other +: (other.children ++ other.subqueries).flatMap(nodes)
+    }
+    nodes(df.queryExecution.executedPlan)
+  }
+
+  private def exchanges(nodes: Seq[org.apache.spark.sql.execution.SparkPlan]) =
+    nodes.collect { case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e }
+
+  test("resident keyword search reads pinned, term-partitioned postings: no cache relation, no term exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    val df = served.keywordSearch("keyword search", 5)
+    val nodes = executedNodes(df)
+    val p = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    assert(nodes.nonEmpty && !p.contains("InMemoryRelation") && !p.contains("TableCacheQueryStage"),
+      "resident postings must be pinned, not cached plans:\n" + p)
+    assert(!nodes.exists(_.nodeName.startsWith("InMemoryTableScan")), p)
+    val termExchanges = exchanges(nodes).filter(_.outputPartitioning match {
+      case h: HashPartitioning => h.references.exists(_.name == "term")
+      case _ => false
+    })
+    assert(termExchanges.isEmpty, "the df window must read each term's postings in place:\n" + p)
+    assert(df.count() > 0)
+  }
+
+  test("hybrid and context plans end in bounded top-k: no range-partitioning exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    for ((name, df) <- Seq(
+        "hybrid" -> served.hybridSearch("keyword search", 5),
+        "context" -> served.contextHits("keyword search", 600, graft.pipeline.SearchMode.Hybrid))) {
+      val nodes = executedNodes(df)
+      val ranged = exchanges(nodes).filter(_.outputPartitioning.isInstanceOf[RangePartitioning])
+      assert(ranged.isEmpty,
+        s"$name must not range-partition a sort:\n" + df.queryExecution.explainString(ExplainMode.fromString("formatted")))
+      assert(nodes.exists(_.nodeName == "TakeOrderedAndProject"), s"$name keeps its top-k")
+    }
+  }
 }

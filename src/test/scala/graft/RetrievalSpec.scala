@@ -83,22 +83,26 @@ class RetrievalSpec extends AnyFunSuite {
   }
 
   test("extendForBatch extends the cached index; invalidate unpersists every fragment") {
-    import org.apache.spark.storage.StorageLevel
+    import graft.util.Checkpoints
+    def persistent = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val key = "fts-leak-test"
     FtsIndex.invalidate(key)
     val pre = docs.where($"doc_id" <= 3)
     val base = FtsIndex.buildCached(key, pre, "doc_id", "text")
     val extended = FtsIndex.extendForBatch(key, "run#1", docs.where($"doc_id" > 3), "doc_id", "text", pre)
     assert(extended.numDocs == 5)
-    assert(extended.retained.nonEmpty, "extended index must track persisted fragments")
+    assert(extended.retained.length == 2, "extended index must track its pinned fragments")
+    // each fragment is its own pin, held while the index lives
+    val pins = extended.retained.map(Checkpoints.pinnedRddIds(_))
+    assert(pins.forall(_.nonEmpty) && pins.reduce(_ ++ _).subsetOf(persistent) && pins.distinct.length == 2)
+    assert(Checkpoints.pinnedRddIds(base.postings) == pins.head, "the base fragment is the cold build")
     // searching through the cache sees the extended corpus
     val hits = FtsIndex.search(spark, FtsIndex.buildCached(key, docs, "doc_id", "text"),
       "streaming", 5).collect()
     assert(hits.map(_.getLong(0)).contains(5L), "doc 5 arrived via the batch extension")
 
     FtsIndex.invalidate(key)
-    assert(base.postings.storageLevel == StorageLevel.NONE, "base fragment unpersisted")
-    extended.retained.foreach(df => assert(df.storageLevel == StorageLevel.NONE))
+    pins.foreach(ids => assert(ids.intersect(persistent).isEmpty, s"fragment pin $ids not released"))
   }
 
   test("extendForBatch folds the fragments into one build at its bound; stats stay exact") {
@@ -365,4 +369,78 @@ class RetrievalSpec extends AnyFunSuite {
       .orderBy("query_id", "rank").collect().toSeq
     assert(a == b)
   }
+
+  test("hybrid falls back to the vector hits when the resident FTS build fails; a fatal error propagates") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val base = java.nio.file.Files.createTempDirectory("graft-hybrid-fallback").toString
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$base/in"))
+    Seq("a" -> "# Alpha\n\nspark keyword ranking of resident postings.",
+        "b" -> "# Bravo\n\nvector ranking of spark chunk embeddings.").foreach { case (n, body) =>
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$base/in", s"$n.pdf"), s"%PDF-1.4\n$body".getBytes("UTF-8"))
+    }
+    val cfg = GraftConfig(warehouseDir = s"$base/wh")
+    val pipe = new graft.pipeline.Pipeline(spark, cfg)
+    pipe.processDirectory(s"$base/in")
+    val retriever = new graft.pipeline.Retriever(spark, pipe, cfg)
+    val vectorOnly = retriever.vectorSearch("spark ranking", 5).collect().toSeq
+    assert(vectorOnly.nonEmpty)
+
+    val logged = scala.collection.mutable.ArrayBuffer.empty[String]
+    val capture = new AbstractAppender("hybrid-fallback", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = logged.synchronized(logged += e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val logger = LogManager.getLogger("graft").asInstanceOf[Logger]
+    val level = logger.getLevel
+    logger.addAppender(capture)
+    logger.setLevel(Level.WARN)
+    // resident builds pin through the checkpoint directory; one on a file
+    // system that fails makes the next resident FTS build fail
+    val sc = spark.sparkContext
+    sc.hadoopConfiguration.set("fs.failing.impl", classOf[FailingFs].getName)
+    sc.hadoopConfiguration.set("fs.failing.impl.disable.cache", "true")
+    sc.setCheckpointDir(s"failing://$base/ckpt")
+    try {
+      FailingFs.failure = new java.io.IOException("checkpoint store unavailable")
+      FtsIndex.invalidate(s"$base/wh/chunks")
+      assert(retriever.hybridSearch("spark ranking", 5).collect().toSeq == vectorOnly,
+        "hybrid must return the vector-only hits")
+      assert(logged.exists(l => l.contains("hybrid_keyword_fallback") && l.contains("checkpoint store unavailable")),
+        s"the fallback must be logged: $logged")
+
+      FailingFs.failure = new OutOfMemoryError("simulated")
+      FtsIndex.invalidate(s"$base/wh/chunks")
+      intercept[OutOfMemoryError](retriever.hybridSearch("spark ranking", 5))
+    } finally {
+      FailingFs.failure = null
+      classOf[org.apache.spark.SparkContext]
+        .getMethod("checkpointDir_$eq", classOf[Option[_]])
+        .invoke(sc, None)
+      logger.removeAppender(capture)
+      logger.setLevel(level)
+      FtsIndex.invalidate(s"$base/wh/chunks")
+    }
+    // with the store back, the keyword leg serves again
+    assert(retriever.hybridSearch("spark ranking", 5).collect().length == vectorOnly.length)
+  }
+}
+
+/** The local file system under the `failing:` scheme; while `failure` is
+  * set, creating a directory throws it (a reliable checkpoint creates its
+  * RDD directory on the driver before writing).
+  */
+class FailingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("failing:///")
+  override def getScheme: String = "failing"
+  override def mkdirs(f: org.apache.hadoop.fs.Path): Boolean = {
+    Option(FailingFs.failure).foreach(t => throw t)
+    super.mkdirs(f)
+  }
+}
+
+object FailingFs {
+  @volatile var failure: Throwable = null
 }

@@ -35,38 +35,40 @@ class SessionIndicesSpec extends AnyFunSuite {
     val batchIds = Checkpoints.pinnedRddIds(batch)
     assert(batchIds.nonEmpty && batchIds.subsetOf(persistent), "precondition: the batch is pinned")
     val idx = FtsIndex.extendForBatch(key, "run#0", batch, "id", "text", docs)
-    FtsIndex.handOverBatch(key, batch)
-    assert(batchIds.subsetOf(persistent), "the index reads the batch, so it keeps it")
+    // the index pins its own postings fragments and never reads the batch
+    // again, so the batch's checkpoint stays its caller's to release
+    val fragmentPins = idx.retained.map(Checkpoints.pinnedRddIds(_))
+    assert(fragmentPins.length == 2 && fragmentPins.forall(ids => ids.nonEmpty && ids.subsetOf(persistent)))
+    assert(fragmentPins.reduce(_ ++ _).intersect(batchIds).isEmpty)
+    Checkpoints.release(batchIds, spark)
     assert(FtsIndex.search(spark, idx, "foxtrot", 5).count() == 1L)
-    // a replayed batch is skipped by the index, so its fresh pin is
-    // released at hand-over rather than held
+    // a replayed batch is skipped by the index: it pins no new fragment
     val replay = Seq((4L, "foxtrot golf")).toDF("id", "text").localCheckpoint()
     val replayIds = Checkpoints.pinnedRddIds(replay)
+    val beforeReplay = persistent
     assert(FtsIndex.extendForBatch(key, "run#0", replay, "id", "text", docs).numDocs == 4L)
-    FtsIndex.handOverBatch(key, replay)
-    assert(replayIds.intersect(persistent).isEmpty, "an unread replay batch is released at once")
+    assert(persistent == beforeReplay, "a replayed batch adds no pin")
+    Checkpoints.release(replayIds, spark)
 
     FtsIndex.invalidate(key)
-    assert(batchIds.intersect(persistent).isEmpty,
-      "the batch's checkpoint RDDs must be released with the index")
-    assert(idx.retained.forall(_.storageLevel == StorageLevel.NONE))
+    fragmentPins.foreach(ids => assert(ids.intersect(persistent).isEmpty,
+      s"fragment pin $ids must be released with the index"))
   }
 
   test("an invalidate between extendForBatch and the batch's appends frees nothing the batch still reads") {
     val key = uniq("handover-race")
     val batch = Seq((5L, "hotel india")).toDF("id", "text").localCheckpoint()
     val batchIds = Checkpoints.pinnedRddIds(batch)
-    FtsIndex.extendForBatch(key, "run#1", batch, "id", "text", docs)
-    // a takedown (deleteStreamDocument) or Pipeline.flush lands mid-batch
+    val fragmentPins = Checkpoints.pinnedRddIds(FtsIndex.extendForBatch(key, "run#1", batch, "id", "text", docs).postings)
+    // a takedown (Pipeline.deleteDocument) or Pipeline.flush lands mid-batch
     FtsIndex.invalidate(key)
     assert(batchIds.subsetOf(persistent), "the batch's blocks survive the invalidate")
+    assert(fragmentPins.nonEmpty && fragmentPins.intersect(persistent).isEmpty, "the index's own pins go with it")
     // the batch's table append still reads its chunks
     val out = java.nio.file.Files.createTempDirectory("graft-handover-race").resolve("chunks").toString
     batch.write.parquet(out)
     assert(spark.read.parquet(out).count() == 1L)
-    // the batch ends: the index it extended is gone, so nothing takes the pin
-    FtsIndex.handOverBatch(key, batch)
-    assert(batchIds.intersect(persistent).isEmpty, "released at hand-over, not leaked")
+    Checkpoints.release(batchIds, spark)
   }
 
   private def mkPdf(dir: String, name: String, body: String): Unit = {
