@@ -16,7 +16,7 @@ import graft.util.SessionIndices.Resident
   *     are hash-partitioned by `term` into the session's shuffle-partition
   *     count — the single shuffle of the build, placed before the
   *     `groupBy(doc, term)` tf count — and pinned eagerly with that
-  *     partitioning stated ([[graft.util.Checkpoints.pinPartitioned]]).
+  *     partitioning stated (`graftbridge.keepHashPartitioning`).
   *     Every batch fragment is laid out the same way, so their union
   *     keeps it too. At 100 TB the postings table is written bucketed by
   *     term so query-time term lookups touch only matching buckets.
@@ -37,7 +37,8 @@ object FtsIndex {
     * count on the already-filtered postings). That keeps index
     * maintenance a pure APPEND: a new batch's postings union in without
     * touching (or staleing) any existing row, which is what makes
-    * incremental ingest O(batch) instead of O(corpus) — see [[append]].
+    * incremental ingest O(batch) instead of O(corpus) — see
+    * [[extendForBatch]].
     *
     * The corpus stats carry the integer doc-length total, not a running
     * mean: `avgDocLen` is `totalDocLen / numDocs`, which is bit-equal to
@@ -86,7 +87,8 @@ object FtsIndex {
   private def pinnedIndex(docs: DataFrame, idCol: String, textCol: String): Index =
     indexWith(docs, idCol, textCol) { tokens =>
       val n = docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-      Checkpoints.pinPartitioned(termFreq(tokens.repartition(n, col("term"))))
+      val postings = termFreq(tokens.repartition(n, col("term")))
+      org.apache.spark.sql.graftbridge.keepHashPartitioning(Checkpoints.pin(postings), postings)
     }
 
   private def termFreq(tokens: DataFrame): DataFrame =
@@ -115,10 +117,10 @@ object FtsIndex {
     * Sound for append-only ingest; a deletion/upsert batch still wants a
     * rebuild (df would be stale nowhere — df is query-derived — but
     * removed docs' postings must go). The batch's postings are pinned
-    * like a resident build's; [[extendForBatch]] hands that pin to the
-    * resident entry.
+    * like a resident build's, so only a resident entry may hold the
+    * result: its [[invalidate]] releases the pins.
     */
-  def append(index: Index, newDocs: DataFrame, idCol: String, textCol: String): Index = {
+  private def append(index: Index, newDocs: DataFrame, idCol: String, textCol: String): Index = {
     val batch = pinnedIndex(newDocs, idCol, textCol)
     Index(
       index.postings.unionByName(batch.postings),

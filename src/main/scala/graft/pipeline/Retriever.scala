@@ -183,23 +183,16 @@ final class Retriever(
     */
   def hybridSearch(query: String, k: Int, titleFilter: Option[String] = None): DataFrame = {
     val v = vectorSearch(query, k, titleFilter).select(col("id"), col("score"))
-    // The keyword branch can fail where the fallback still sees it:
-    // `pipeline.ftsIndex` builds the resident index eagerly (its reads,
-    // tokenization and pin all run there), and plan construction
-    // analyzes eagerly. What is left to the caller's action reads only
-    // pinned postings and the chunks table that the vector leg reads too.
-    // Without a title filter the leg is the index's own top-k: the
-    // resident index covers the chunks table, so keywordSearch's chunk
-    // join would only drop the ids of a batch whose chunks append is still
-    // in flight (such an id can take a fused slot; the join with chunks
-    // below drops it from the answer).
+    // The fallback covers what the keyword leg does before the caller's
+    // action: `pipeline.ftsIndex` builds the resident index eagerly (its
+    // reads, tokenization and pin all run there), and plan construction
+    // analyzes eagerly. The action itself reads the resident index's
+    // pinned postings, so an `invalidate` of that index (a document
+    // delete, `flush`, a failed batch, a fold) between this call and the
+    // caller's action fails the request instead of falling back.
     val kw =
-      try titleFilter match {
-        case None =>
-          FtsIndex.search(spark, pipeline.ftsIndex, query, k, config.search.bm25K1, config.search.bm25B)
-            .select(col("doc_id").as("id"), col("score"))
-        case Some(_) => keywordSearch(query, k, titleFilter).select(col("id"), col("score"))
-      } catch {
+      try keywordSearch(query, k, titleFilter).select(col("id"), col("score"))
+      catch {
         // NonFatal only: an OOM/fatal JVM error must propagate, not
         // masquerade as a silent mode switch; log the branch failure so
         // genuine FTS bugs stay visible.

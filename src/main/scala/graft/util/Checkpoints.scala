@@ -42,14 +42,6 @@ object Checkpoints {
       out
     } else df.localCheckpoint()
 
-  /** [[pin]] that keeps the hash partitioning `df`'s plan wrote its rows
-    * with, so a query keyed on those columns reads the pinned rows
-    * without an Exchange (a plain pin of an adaptive plan states no
-    * partitioning).
-    */
-  def pinPartitioned(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graftbridge.keepHashPartitioning(pin(df), df)
-
   /** The RDD ids a pinned DataFrame holds its storage under — persisted
     * blocks in local mode, checkpoint files in reliable mode. Used by
     * session-resident indices to release exactly their own storage on

@@ -73,13 +73,21 @@ class RetrievalSpec extends AnyFunSuite {
   test("incremental append == full rebuild (scores bit-identical, stats exact)") {
     val batchA = docs.where($"doc_id" <= 3)
     val batchB = docs.where($"doc_id" > 3)
-    val incremental = FtsIndex.append(FtsIndex.build(batchA, "doc_id", "text"), batchB, "doc_id", "text")
-    val full = FtsIndex.build(docs, "doc_id", "text")
-    assert(incremental.numDocs == full.numDocs)
-    assert(math.abs(incremental.avgDocLen - full.avgDocLen) < 1e-12)
-    val a = FtsIndex.search(spark, incremental, "spark data", 5).collect().map(r => (r.getLong(0), r.getDouble(1)))
-    val b = FtsIndex.search(spark, full, "spark data", 5).collect().map(r => (r.getLong(0), r.getDouble(1)))
-    assert(a.toSeq == b.toSeq, "append-maintained index must score identically to a rebuild")
+    val key = "fts-append-test"
+    FtsIndex.invalidate(key)
+    try {
+      // absent entry over a non-empty pre-batch corpus: a build of batchA
+      // with batchB appended
+      val incremental = FtsIndex.extendForBatch(key, "run#1", batchB, "doc_id", "text", batchA)
+      assert(incremental.retained.length == 2, "the batch must be appended, not folded into one build")
+      val full = FtsIndex.build(docs, "doc_id", "text")
+      assert(incremental.numDocs == full.numDocs)
+      assert(math.abs(incremental.avgDocLen - full.avgDocLen) < 1e-12)
+      val a = FtsIndex.search(spark, incremental, "spark data", 5).collect().map(r => (r.getLong(0), r.getDouble(1)))
+      val b = FtsIndex.search(spark, full, "spark data", 5).collect().map(r => (r.getLong(0), r.getDouble(1)))
+      assert(a.toSeq == b.toSeq, "append-maintained index must score identically to a rebuild")
+      full.postings.unpersist()
+    } finally FtsIndex.invalidate(key)
   }
 
   test("extendForBatch extends the cached index; invalidate unpersists every fragment") {
@@ -425,6 +433,28 @@ class RetrievalSpec extends AnyFunSuite {
     }
     // with the store back, the keyword leg serves again
     assert(retriever.hybridSearch("spark ranking", 5).collect().length == vectorOnly.length)
+  }
+
+  test("hybrid between a batch's index extension and its chunks append ranks only stored chunks") {
+    val base = java.nio.file.Files.createTempDirectory("graft-hybrid-inflight").toString
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$base/in"))
+    (1 to 6).foreach { i =>
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$base/in", s"d$i.pdf"),
+        s"%PDF-1.4\n# Doc $i\n\nspark ranking note number $i about topic $i.".getBytes("UTF-8"))
+    }
+    val cfg = GraftConfig(warehouseDir = s"$base/wh")
+    val pipe = new graft.pipeline.Pipeline(spark, cfg)
+    pipe.processDirectory(s"$base/in")
+    val retriever = new graft.pipeline.Retriever(spark, pipe, cfg)
+    val stored = pipe.catalog.read("chunks").select("id").as[String].collect().toSet
+    // a batch whose postings are in the resident index but whose chunks
+    // have not landed yet; its ids top the keyword ranking
+    val ghosts = (1 to 3).map(i => (s"ghost-$i", "spark ranking spark ranking spark ranking")).toDF("id", "text")
+    try {
+      FtsIndex.extendForBatch(s"$base/wh/chunks", "inflight#1", ghosts, "id", "text", pipe.catalog.read("chunks"))
+      val hits = retriever.hybridSearch("spark ranking", 3).select("id").as[String].collect().toSeq
+      assert(hits.length == 3 && hits.forall(stored), s"every fused slot must hold a stored chunk: $hits")
+    } finally FtsIndex.invalidate(s"$base/wh/chunks")
   }
 }
 
