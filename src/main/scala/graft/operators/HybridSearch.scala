@@ -17,7 +17,9 @@ import org.apache.spark.sql.functions._
 object HybridSearch {
 
   /** Fuse two (id, score) lists by RRF. `tieBreakAsc` orders equal fused
-    * scores deterministically.
+    * scores deterministically. Every other column both lists carry rides
+    * along, taken from whichever list holds the id, so lists that carry
+    * their rows' payload need no join to fetch it after fusion.
     */
   def rrf(
       byVector: DataFrame,
@@ -32,21 +34,22 @@ object HybridSearch {
     // (A constant partitionBy key doesn't help — Catalyst folds literals
     // out of the partition spec and WindowExec still warns.)
     val wV = Window.orderBy(desc(scoreCol), col(idCol))
-    val ranksV = byVector.select(col(idCol), col(scoreCol))
-      .withColumn("rank_vec", row_number().over(wV))
-      .select(col(idCol).as("id"), col("rank_vec"))
-    val ranksK = byKeyword.select(col(idCol), col(scoreCol))
-      .withColumn("rank_kw", row_number().over(wV))
-      .select(col(idCol).as("id"), col("rank_kw"))
+    val payload = byVector.columns.filter(c =>
+      byKeyword.columns.contains(c) && !Set(idCol, scoreCol, "id", "rank_vec", "rank_kw", "rrf_score")(c))
+    def ranked(list: DataFrame, rank: String) =
+      list.select(col(idCol) +: col(scoreCol) +: payload.map(col): _*)
+        .withColumn(rank, row_number().over(wV))
+        .select(col(idCol).as("id") +: col(rank) +: payload.map(c => col(c).as(s"${rank}_$c")): _*)
 
-    ranksV
-      .join(ranksK, Seq("id"), "full_outer")
+    ranked(byVector, "rank_vec")
+      .join(ranked(byKeyword, "rank_kw"), Seq("id"), "full_outer")
       .withColumn(
         "rrf_score",
         coalesce(lit(1.0) / (lit(rrfK) + col("rank_vec")), lit(0.0)) +
           coalesce(lit(1.0) / (lit(rrfK) + col("rank_kw")), lit(0.0))
       )
-      .select(col("id").as(idCol), col("rank_vec"), col("rank_kw"), col("rrf_score"))
+      .select(Seq(col("id").as(idCol), col("rank_vec"), col("rank_kw"), col("rrf_score")) ++
+        payload.map(c => coalesce(col(s"rank_vec_$c"), col(s"rank_kw_$c")).as(c)): _*)
       .orderBy(desc("rrf_score"), col(idCol))
       .limit(k)
   }

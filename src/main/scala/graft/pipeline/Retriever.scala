@@ -179,10 +179,11 @@ final class Retriever(
     * vector fallback on keyword failure (lancedb_store.py:187-190), as
     * one bounded plan: both legs and the fused list are top-k
     * (`TakeOrderedAndProject`), so the caller's action runs no sort
-    * exchange.
+    * exchange. Both legs carry their chunk rows, so the fused list needs
+    * no further read of the chunks table.
     */
   def hybridSearch(query: String, k: Int, titleFilter: Option[String] = None): DataFrame = {
-    val v = vectorSearch(query, k, titleFilter).select(col("id"), col("score"))
+    val v = vectorSearch(query, k, titleFilter)
     // The fallback covers what the keyword leg does before the caller's
     // action: `pipeline.ftsIndex` builds the resident index eagerly (its
     // reads, tokenization and pin all run there), and plan construction
@@ -191,7 +192,7 @@ final class Retriever(
     // delete, `flush`, a failed batch, a fold) between this call and the
     // caller's action fails the request instead of falling back.
     val kw =
-      try keywordSearch(query, k, titleFilter).select(col("id"), col("score"))
+      try keywordSearch(query, k, titleFilter)
       catch {
         // NonFatal only: an OOM/fatal JVM error must propagate, not
         // masquerade as a silent mode switch; log the branch failure so
@@ -201,10 +202,8 @@ final class Retriever(
             "error" -> e.toString, "mode" -> "vector_only")
           return vectorSearch(query, k, titleFilter)
       }
-    val fused = HybridSearch.rrf(v, kw, "id", "score", k, config.search.rrfK)
-    fused
-      .select(col("id"), col("rrf_score").as("score"))
-      .join(chunks, "id")
+    HybridSearch.rrf(v, kw, "id", "score", k, config.search.rrfK)
+      .withColumnRenamed("rrf_score", "score")
       .orderBy(desc("score"), col("id"))
       .limit(k)
       .select(HitColumns: _*)
