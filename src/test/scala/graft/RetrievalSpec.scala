@@ -208,6 +208,12 @@ class RetrievalSpec extends AnyFunSuite {
     assert(fused.head.getAs[Long]("id") == 10L)
     val s10 = fused.head.getAs[Double]("rrf_score")
     assert(math.abs(s10 - (1.0 / 61 + 1.0 / 61)) < 1e-12)
+    // a column both lists carry rides along from whichever list holds the id
+    val titled = HybridSearch.rrf(v.withColumn("title", concat(lit("t"), $"id")),
+      k.withColumn("title", concat(lit("t"), $"id")), "id", "score", 5).collect()
+    assert(titled.map(r => (r.getAs[Long]("id"), r.getAs[Double]("rrf_score"))).toSeq ==
+      fused.map(r => (r.getAs[Long]("id"), r.getAs[Double]("rrf_score"))).toSeq)
+    assert(titled.forall(r => r.getAs[String]("title") == s"t${r.getAs[Long]("id")}"))
   }
 
   test("context budget: longest prefix within budget, formatting matches reference shape") {
