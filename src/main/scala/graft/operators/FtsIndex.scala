@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.util.Checkpoints
@@ -75,41 +75,42 @@ object FtsIndex {
     * instead (see [[pinnedIndex]]). At cluster scale, substitute
     * `postings.write.bucketBy(n, "term")` for `persist` — same contract.
     */
-  def build(docs: DataFrame, idCol: String, textCol: String): Index =
-    indexWith(docs, idCol, textCol)(termFreq(_).persist())
+  def build(docs: DataFrame, idCol: String, textCol: String): Index = {
+    val tokens = tokenized(docs, idCol, textCol)
+    val stats = tokens.agg(count(lit(1)), sum(col("doc_len").cast("long"))).head()
+    // sum over an empty corpus is NULL — an empty index must still search
+    Index(termFreq(tokens).persist(), stats.getLong(0), if (stats.isNullAt(1)) 0L else stats.getLong(1))
+  }
 
   /** Resident postings: hash-partitioned by `term` into the session's
     * shuffle-partition count before the tf count, and pinned eagerly with
     * that partitioning stated, so the query-side df window needs no
     * Exchange. Every fragment of one session gets the same partition
-    * count, so a union of fragments keeps the partitioning.
+    * count, so a union of fragments keeps the partitioning. The corpus
+    * stats are observed on the token rows inside the pin job.
     */
-  private def pinnedIndex(docs: DataFrame, idCol: String, textCol: String): Index =
-    indexWith(docs, idCol, textCol) { tokens =>
-      val n = docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-      val postings = termFreq(tokens.repartition(n, col("term")))
-      org.apache.spark.sql.graftbridge.keepHashPartitioning(Checkpoints.pin(postings), postings)
-    }
+  private def pinnedIndex(docs: DataFrame, idCol: String, textCol: String): Index = {
+    val stats = new Observation()
+    val tokens = tokenized(docs, idCol, textCol)
+      .observe(stats, count(lit(1)).as("n"), sum(col("doc_len").cast("long")).as("total"))
+    val n = docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val postings = termFreq(tokens, _.repartition(n, col("term")))
+    val pinned = org.apache.spark.sql.graftbridge.keepHashPartitioning(Checkpoints.pin(postings), postings)
+    Index(pinned, Checkpoints.observed(stats, "n"), Checkpoints.observed(stats, "total"))
+  }
 
-  private def termFreq(tokens: DataFrame): DataFrame =
-    tokens.groupBy("doc_id", "doc_len", "term").agg(count(lit(1)).as("tf"))
-
-  /** `keep` turns the (doc_id, doc_len, term) token rows into the stored
-    * postings: a lazy `persist` for [[build]], an eager pin for the
-    * session-resident builds.
-    */
-  private def indexWith(docs: DataFrame, idCol: String, textCol: String)(
-      keep: DataFrame => DataFrame): Index = {
-    val tokenized = docs
+  /** One (doc_id, tokens, doc_len) row per document. */
+  private def tokenized(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs
       .select(col(idCol).as("doc_id"), TextFunctions.ftsTokens(col(textCol)).as("tokens"))
       .withColumn("doc_len", size(col("tokens")))
 
-    val postings = keep(tokenized.select(col("doc_id"), col("doc_len"), explode(col("tokens")).as("term")))
-
-    val stats = tokenized.agg(count(lit(1)).as("n"), sum(col("doc_len").cast("long")).as("total")).head()
-    // sum over an empty corpus is NULL — an empty index must still search
-    Index(postings, stats.getLong(0), if (stats.isNullAt(1)) 0L else stats.getLong(1))
-  }
+  /** The postings of `tokens`: (doc_id, doc_len, term, tf); `layout`
+    * places the exploded token rows before the tf count.
+    */
+  private def termFreq(tokens: DataFrame, layout: DataFrame => DataFrame = identity): DataFrame =
+    layout(tokens.select(col("doc_id"), col("doc_len"), explode(col("tokens")).as("term")))
+      .groupBy("doc_id", "doc_len", "term").agg(count(lit(1)).as("tf"))
 
   /** Incremental maintenance: extend `index` with `newDocs` WITHOUT
     * touching the existing postings — an O(batch) union plus a constant

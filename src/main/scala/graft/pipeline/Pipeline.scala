@@ -79,28 +79,25 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
       markdownDir: Option[String] = None,
       imagesDir: Option[String] = None
   ): Long = {
-    val hashed = scanned
+    import spark.implicits._
+    // J1: join the scan to one broadcast of the ledger's (file_hash,
+    // status), then one aggregate per hash keeps one file of it (same
+    // content under two names in ONE batch is one document: ids are
+    // content-derived), drops a hash the ledger holds with any status but
+    // failed, and flags one it holds only as failed as re-admitted.
+    val ledger =
+      if (catalog.exists("documents")) catalog.read("documents").select("file_hash", "status")
+      else Seq.empty[(String, String)].toDF("file_hash", "status")
+    def ledgerHas(status: org.apache.spark.sql.Column) = max(coalesce(status, lit(false)))
+    val fresh = scanned
       .withColumn("file_hash", TextFunctions.fileHash(col("content")))
-      // same content under two names in ONE batch is one document (ids are
-      // content-derived; without this the batch would write colliding ids)
-      .dropDuplicates("file_hash")
-
-    // J1: keep files whose hash is absent from the ledger, or present with
-    // status=failed (re-admit). Ledger is small relative to the scan ->
-    // broadcast anti-join, no shuffle of the scan side.
-    val fresh =
-      if (!catalog.exists("documents")) hashed
-      else {
-        val ledger = broadcast(
-          catalog.read("documents").select(col("file_hash"), col("status"))
-        )
-        hashed
-          .join(
-            ledger.where(col("status") =!= DocumentStatus.Failed).select("file_hash"),
-            Seq("file_hash"),
-            "left_anti"
-          )
-      }
+      .join(broadcast(ledger), Seq("file_hash"), "left")
+      .groupBy("file_hash")
+      .agg(ledgerHas(col("status") =!= DocumentStatus.Failed).as("_done"),
+        (ledgerHas(col("status") === DocumentStatus.Failed).as("readmitted") +:
+          scanned.columns.toSeq.map(c => first(c).as(c))): _*)
+      .where(!col("_done"))
+      .drop("_done")
 
     val extracted = PdfSource
       .withExtraction(fresh, config.extraction)
@@ -128,18 +125,26 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
       // append would see this batch's own rows and drop them. When image
       // extraction is requested the checkpoint keeps the raw bytes (so
       // the scan+extract DAG still runs exactly once) and drops them right
-      // after; otherwise bytes are dropped before the checkpoint.
+      // after; otherwise bytes are dropped before the checkpoint. The pin
+      // job also counts the batch, through an Observation (no extra job).
+      val counted = new org.apache.spark.sql.Observation()
+      val isValid = col("validation") === "valid"
       val batch = {
-        val pinned = (if (imagesDir.isDefined) extracted else extracted.drop("content")).localCheckpoint()
+        val pinned = (if (imagesDir.isDefined) extracted else extracted.drop("content"))
+          .observe(counted, count(lit(1)).as("n"), count(when(isValid, 1)).as("valid"),
+            count(when(col("readmitted"), 1)).as("readmitted"))
+          .localCheckpoint()
         scratch = Some(pinned)
-        imagesDir.foreach(dir => loadImages(pinned.where(col("validation") === "valid"), dir))
+        imagesDir.foreach(dir => loadImages(pinned.where(isValid), dir))
         pinned.drop("content")
       }
-      val valid = batch.where(col("validation") === "valid")
-      val invalid = batch.where(col("validation") =!= "valid")
-      val counts = batch.agg(count(lit(1)), count(when(col("validation") === "valid", 1))).head()
-      if (counts.getLong(0) == 0L) return 0L
-      val nIngested = counts.getLong(1)
+      val valid = batch.where(isValid)
+      val invalid = batch.where(!isValid)
+      val observed = graft.util.Checkpoints.observed(counted, _: String)
+      val (n, nIngested, nReadmitted) = (observed("n"), observed("valid"), observed("readmitted"))
+      graft.util.JsonLog.info("ingest_batch", "batch" -> batchToken, "offered" -> n, "valid" -> nIngested,
+        "failed" -> (n - nIngested), "readmitted" -> nReadmitted)
+      if (n == 0L) return 0L
 
       // S4: markdown checkpoint (re-chunk without re-extract, pipeline.py:222-268)
       markdownDir.foreach { dir =>
@@ -187,24 +192,10 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
       val presentDocs = tableChunks.select("document_id").join(batchDocs, Seq("document_id"), "left_semi")
       catalog.append(chunks.join(broadcast(presentDocs), Seq("document_id"), "left_anti"), "chunks")
 
-      // Upsert semantics for re-admitted files (the reference UPDATEs the
-      // document row on reprocess, sqlite_store.py:153-172). Only
-      // previously-FAILED ledger rows can re-enter a batch (the anti-join
-      // excludes everything else), so the delete is restricted to that
-      // intersection, expressed structurally: deleteMatching keeps the
-      // doomed set a DataFrame (no driver collect, no isin literal tree)
-      // and skips the table rewrite when it is empty — the common all-new
-      // ingest path pays nothing.
-      if (catalog.exists("documents")) {
-        val readmitted = catalog.read("documents")
-          .where(col("status") === DocumentStatus.Failed)
-          .select("file_hash")
-          .join(batch.select("file_hash"), Seq("file_hash"), "left_semi")
-        catalog.deleteMatching("documents", readmitted, Seq("file_hash"))
-      }
-
-      // Load the documents ledger last: rows for completed and failed files.
-      val totalByDoc = chunks.groupBy(col("document_id").as("id")).agg(count(lit(1)).as("total_chunks"))
+      // Load the documents ledger last: rows for completed and failed
+      // files. A document's chunk count rides on each of its chunks.
+      val totalByDoc = chunks.where(col("chunk_index") === 0)
+        .select(col("document_id").as("id"), col("total_chunks").cast("long"))
       val docRows = valid
         .select(
           col("id"), col("path").as("source_path"), col("title"), col("file_hash"),
@@ -232,7 +223,13 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
         .withColumn("uploaded_at", current_timestamp())
         .withColumn("processed_at", lit(null).cast("timestamp"))
 
-      catalog.append(docRows.unionByName(failedRows), "documents")
+      val rows = docRows.unionByName(failedRows)
+      // Upsert for re-admitted files (the reference UPDATEs the document
+      // row on reprocess, sqlite_store.py:153-172): one swap of the ledger
+      // without their failed rows, plus the batch's rows.
+      if (nReadmitted == 0L) catalog.append(rows, "documents")
+      else catalog.overwrite(rows.unionByName(catalog.read("documents").join(
+        broadcast(batch.where(col("readmitted")).select("file_hash")), Seq("file_hash"), "left_anti")), "documents")
       nIngested
     } catch {
       case t: Throwable =>

@@ -42,6 +42,13 @@ object Checkpoints {
       out
     } else df.localCheckpoint()
 
+  /** A long metric an `Observation` took in the job that pinned its
+    * frame. An observation over no rows holds no metrics at all, and a
+    * `sum` over none is null: both read 0.
+    */
+  def observed(obs: org.apache.spark.sql.Observation, name: String): Long =
+    obs.get.get(name).collect { case n: Long => n }.getOrElse(0L)
+
   /** The RDD ids a pinned DataFrame holds its storage under — persisted
     * blocks in local mode, checkpoint files in reliable mode. Used by
     * session-resident indices to release exactly their own storage on

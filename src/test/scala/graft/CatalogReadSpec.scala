@@ -1,9 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,25 +13,8 @@ import graft.sources.Catalog
   */
 class CatalogReadSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
+  import SparkTestBase.jobsDuring
   import SparkTestBase.spark.implicits._
-
-  private def jobsDuring(body: => Unit): Long = {
-    val jobs = new AtomicLong
-    val counter = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(counter)
-    try body
-    finally {
-      // drain the async listener bus (private API, so reflective) first
-      try {
-        val bus = spark.sparkContext.getClass.getMethod("listenerBus").invoke(spark.sparkContext)
-        bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      } catch { case _: ReflectiveOperationException => Thread.sleep(500) }
-      spark.sparkContext.removeSparkListener(counter)
-    }
-    jobs.get()
-  }
 
   private def ids(c: Catalog): Seq[Long] =
     c.read("t").select("id").as[Long].collect().toSeq.sorted

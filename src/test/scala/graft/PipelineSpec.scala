@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
@@ -515,7 +516,11 @@ class PipelineSpec extends AnyFunSuite {
     val ctx = retriever.getContext("widget gears", 4000)
     assert(!ctx.contains("[Source: Widget]") && ctx.contains("[Source: Gadget]"), ctx)
   }
-  test("the resident FTS index after a cold and two incremental ingests equals a fresh build") {
+
+  /** A cold and two incremental ingests, then the resident FTS index
+    * against a fresh build over the chunks table.
+    */
+  private def residentIndexEqualsFreshBuild(): Unit = {
     import graft.operators.FtsIndex
     val (pdfDir, wh, _) = freshDirs()
     val pipe = new Pipeline(spark, GraftConfig(warehouseDir = wh))
@@ -542,6 +547,101 @@ class PipelineSpec extends AnyFunSuite {
         assert(hits(resident, q).map(_._1) == hits(fresh, q).map(_._1), q)
       }
       fresh.postings.unpersist()
+    } finally pipe.flush()
+  }
+
+  test("the resident FTS index after a cold and two incremental ingests equals a fresh build") {
+    residentIndexEqualsFreshBuild()
+  }
+
+  test("the resident FTS index equals a fresh build with reliable checkpoints too") {
+    val sc = spark.sparkContext
+    sc.setCheckpointDir(Files.createTempDirectory("graft-e2e-ckpt").toString)
+    try residentIndexEqualsFreshBuild()
+    finally {
+      // restore block-based mode for the rest of the shared-session suite
+      classOf[org.apache.spark.SparkContext]
+        .getMethod("checkpointDir_$eq", classOf[Option[_]])
+        .invoke(sc, None)
+    }
+  }
+
+  /** 40 sentences: a document of several chunks. */
+  private def longBody(topic: String): String =
+    s"# $topic\n\n" + (1 to 40).map(i => s"the $topic manual step $i turns gears and sprockets in order.").mkString(" ")
+
+  test("a file failed under a small maxFileSizeMb is re-admitted into one completed ledger row") {
+    val (pdfDir, wh, _) = freshDirs()
+    mkPdf(pdfDir, "EP001 Widget.pdf", longBody("widget"))
+    val tight = GraftConfig(warehouseDir = wh, extraction = ExtractionConfig(maxFileSizeMb = 0))
+    assert(new Pipeline(spark, tight).processDirectory(pdfDir) == 0)
+    val pipe = new Pipeline(spark, GraftConfig(warehouseDir = wh))
+    val hash = pipe.catalog.read("documents").where(col("status") === "failed")
+      .select("file_hash").collect().map(_.getString(0)).toSeq match { case Seq(h) => h }
+    def ledger = pipe.catalog.read("documents").where(col("file_hash") === hash)
+    try {
+      assert(pipe.processDirectory(pdfDir) == 1)
+      val row = ledger.collect() match { case Array(r) => r }
+      assert(row.getAs[String]("status") == "completed")
+      val chunks = pipe.catalog.read("chunks").where(col("document_id") === row.getAs[String]("id")).count()
+      assert(chunks > 1 && row.getAs[Long]("total_chunks") == chunks)
+
+      // a hash the ledger holds as failed AND completed is not re-admitted
+      pipe.catalog.append(ledger.withColumn("status", lit("failed")).localCheckpoint(), "documents")
+      assert(pipe.processDirectory(pdfDir) == 0)
+      assert(ledger.select("status").as[String](org.apache.spark.sql.Encoders.STRING)
+        .collect().sorted.toSeq == Seq("completed", "failed"))
+      assert(pipe.catalog.read("chunks").count() == chunks)
+    } finally pipe.flush()
+  }
+
+  test("a batch of known files writes nothing; an all-failed batch writes only failed rows") {
+    val (pdfDir, wh, _) = freshDirs()
+    mkPdf(pdfDir, "EP001 Widget.pdf", longBody("widget"))
+    val pipe = new Pipeline(spark, GraftConfig(warehouseDir = wh))
+    def files(table: String): Seq[String] = {
+      val ls = Files.list(Paths.get(wh, table))
+      try ls.iterator().asScala.map(_.getFileName.toString).toSeq.sorted finally ls.close()
+    }
+    try {
+      assert(pipe.processDirectory(pdfDir) == 1)
+      val tables = Seq("documents", "chunks")
+      val before = tables.map(files)
+      assert(pipe.processDirectory(pdfDir) == 0)
+      assert(tables.map(files) == before, "a batch of known files wrote to a table")
+
+      val index = pipe.ftsIndex
+      val chunks = pipe.catalog.read("chunks").count()
+      val bad = s"$pdfDir/bad"
+      Files.createDirectories(Paths.get(bad))
+      Seq("a.pdf", "b.pdf").foreach(f => Files.write(Paths.get(bad, f), Array.fill[Byte](64)(f.head.toByte)))
+      assert(pipe.processDirectory(bad) == 0)
+      val statuses = pipe.catalog.read("documents").groupBy("status").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(statuses == Map("completed" -> 1L, "failed" -> 2L))
+      assert(pipe.catalog.read("chunks").count() == chunks)
+      assert(pipe.ftsIndex.numDocs == index.numDocs && pipe.ftsIndex.totalDocLen == index.totalDocLen)
+    } finally pipe.flush()
+  }
+
+  test("an incremental batch that re-admits a failed file runs at most 14 Spark jobs") {
+    val (pdfDir, wh, _) = freshDirs()
+    def dir(name: String, docs: String*): String = {
+      val d = s"$pdfDir/$name"
+      Files.createDirectories(Paths.get(d))
+      docs.foreach(t => mkPdf(d, s"EP $t.pdf", longBody(t)))
+      d
+    }
+    val pipe = new Pipeline(spark, GraftConfig(warehouseDir = wh))
+    try {
+      assert(pipe.processDirectory(dir("cold", "widget", "gadget")) == 2)
+      val tight = GraftConfig(warehouseDir = wh, extraction = ExtractionConfig(maxFileSizeMb = 0))
+      assert(new Pipeline(spark, tight).processDirectory(dir("failed", "sprocket")) == 0)
+      val batch = dir("batch", "sprocket", "lever")
+      var n = 0L
+      val jobs = SparkTestBase.jobsDuring { n = pipe.processDirectory(batch) }
+      assert(n == 2L)
+      assert(jobs <= 14, s"$jobs Spark jobs")
     } finally pipe.flush()
   }
 }
