@@ -14,16 +14,25 @@ import graft.sources.{Catalog, MarkdownSource, PdfSource}
   * `process_new_documents` (reference: src/pipeline.py:47-220).
   *
   * One lazy DAG per batch ([[ingestBatch]]):
-  *   binaryFile scan -> incremental anti-join vs ledger (J1) -> validate
+  *   binaryFile scan -> per-hash check against the ledger (J1) -> validate
   *   (F1) -> extract (U1, mapPartitions provider) -> markdown checkpoint
   *   (S4) -> chunk flatMap (U4+U5) -> embed (U6) -> extend the resident
   *   FTS index (S7) -> load chunks, then the documents ledger.
   *
+  * Spark jobs of an incremental batch (13): the schema of the changed
+  * `documents` and `chunks` listings (2); the batch pin: ledger
+  * broadcast, J1's shuffle, pin (3); the chunks pin (1); the FTS
+  * fragment pin: term shuffle, pin (2); the chunks append: batch-id and
+  * replay-guard broadcasts, write (3); the ledger append: chunk-count
+  * broadcast, write (2), or, when the batch re-admits failed files, one
+  * swap with a third broadcast (3). The batch's counts and the
+  * fragment's corpus stats are observed on the pin jobs.
+  *
   * Scale notes: every stage until the table writes is a narrow,
-  * per-partition transformation — no shuffle. The only shuffles in the
-  * whole ingest are inside the FTS index build aggregations, over the
-  * batch only. Document ids are content-derived (sha2 of file hash), not
-  * UUIDs, so re-runs are idempotent and oracle-testable (SURVEY §7.4.7).
+  * per-partition transformation except J1's per-hash aggregate and the
+  * FTS postings' term shuffle, both over the batch only. Document ids
+  * are content-derived (sha2 of file hash), not UUIDs, so re-runs are
+  * idempotent and oracle-testable (SURVEY §7.4.7).
   */
 final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.default) {
 
@@ -142,7 +151,7 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
       val invalid = batch.where(!isValid)
       val observed = graft.util.Checkpoints.observed(counted, _: String)
       val (n, nIngested, nReadmitted) = (observed("n"), observed("valid"), observed("readmitted"))
-      graft.util.JsonLog.info("ingest_batch", "batch" -> batchToken, "offered" -> n, "valid" -> nIngested,
+      graft.util.JsonLog.info("ingest_batch", "batch_token" -> batchToken, "offered" -> n, "valid" -> nIngested,
         "failed" -> (n - nIngested), "readmitted" -> nReadmitted)
       if (n == 0L) return 0L
 
