@@ -105,9 +105,7 @@ object FtsIndex {
       .select(col(idCol).as("doc_id"), TextFunctions.ftsTokens(col(textCol)).as("tokens"))
       .withColumn("doc_len", size(col("tokens")))
 
-  /** The postings of `tokens`: (doc_id, doc_len, term, tf); `layout`
-    * places the exploded token rows before the tf count.
-    */
+  /** (doc_id, doc_len, term, tf) postings; `layout` places the token rows first. */
   private def termFreq(tokens: DataFrame, layout: DataFrame => DataFrame = identity): DataFrame =
     layout(tokens.select(col("doc_id"), col("doc_len"), explode(col("tokens")).as("term")))
       .groupBy("doc_id", "doc_len", "term").agg(count(lit(1)).as("tf"))

@@ -19,14 +19,11 @@ import graft.sources.{Catalog, MarkdownSource, PdfSource}
   *   (S4) -> chunk flatMap (U4+U5) -> embed (U6) -> extend the resident
   *   FTS index (S7) -> load chunks, then the documents ledger.
   *
-  * Spark jobs of an incremental batch (13): the schema of the changed
-  * `documents` and `chunks` listings (2); the batch pin: ledger
-  * broadcast, J1's shuffle, pin (3); the chunks pin (1); the FTS
-  * fragment pin: term shuffle, pin (2); the chunks append: batch-id and
-  * replay-guard broadcasts, write (3); the ledger append: chunk-count
-  * broadcast, write (2), or, when the batch re-admits failed files, one
-  * swap with a third broadcast (3). The batch's counts and the
-  * fragment's corpus stats are observed on the pin jobs.
+  * Spark jobs of an incremental batch (13): 2 schema reads of the changed
+  * tables; the batch pin (ledger broadcast, J1 shuffle, pin; it counts the
+  * batch); the chunks pin; the FTS fragment pin (term shuffle, pin); the
+  * chunks append (2 broadcasts, write); the ledger append (broadcast,
+  * write), or one swap with a third broadcast if the batch re-admits files.
   *
   * Scale notes: every stage until the table writes is a narrow,
   * per-partition transformation except J1's per-hash aggregate and the
@@ -89,21 +86,19 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
       imagesDir: Option[String] = None
   ): Long = {
     import spark.implicits._
-    // J1: join the scan to one broadcast of the ledger's (file_hash,
-    // status), then one aggregate per hash keeps one file of it (same
-    // content under two names in ONE batch is one document: ids are
-    // content-derived), drops a hash the ledger holds with any status but
-    // failed, and flags one it holds only as failed as re-admitted.
+    // J1: the scan joins one broadcast of the ledger, then one aggregate
+    // per hash keeps one file of it (same content under two names is one
+    // document: ids are content-derived), drops a hash the ledger holds
+    // with any status but failed, and flags one held only as failed.
     val ledger =
       if (catalog.exists("documents")) catalog.read("documents").select("file_hash", "status")
       else Seq.empty[(String, String)].toDF("file_hash", "status")
-    def ledgerHas(status: org.apache.spark.sql.Column) = max(coalesce(status, lit(false)))
     val fresh = scanned
       .withColumn("file_hash", TextFunctions.fileHash(col("content")))
       .join(broadcast(ledger), Seq("file_hash"), "left")
       .groupBy("file_hash")
-      .agg(ledgerHas(col("status") =!= DocumentStatus.Failed).as("_done"),
-        (ledgerHas(col("status") === DocumentStatus.Failed).as("readmitted") +:
+      .agg(max(coalesce(col("status") =!= DocumentStatus.Failed, lit(false))).as("_done"),
+        (max(coalesce(col("status") === DocumentStatus.Failed, lit(false))).as("readmitted") +:
           scanned.columns.toSeq.map(c => first(c).as(c))): _*)
       .where(!col("_done"))
       .drop("_done")
@@ -135,7 +130,7 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
       // extraction is requested the checkpoint keeps the raw bytes (so
       // the scan+extract DAG still runs exactly once) and drops them right
       // after; otherwise bytes are dropped before the checkpoint. The pin
-      // job also counts the batch, through an Observation (no extra job).
+      // job counts the batch too (an Observation).
       val counted = new org.apache.spark.sql.Observation()
       val isValid = col("validation") === "valid"
       val batch = {
@@ -148,9 +143,7 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
         pinned.drop("content")
       }
       val valid = batch.where(isValid)
-      val invalid = batch.where(!isValid)
-      val observed = graft.util.Checkpoints.observed(counted, _: String)
-      val (n, nIngested, nReadmitted) = (observed("n"), observed("valid"), observed("readmitted"))
+      val Seq(n, nIngested, nReadmitted) = Seq("n", "valid", "readmitted").map(graft.util.Checkpoints.observed(counted, _))
       graft.util.JsonLog.info("ingest_batch", "batch_token" -> batchToken, "offered" -> n, "valid" -> nIngested,
         "failed" -> (n - nIngested), "readmitted" -> nReadmitted)
       if (n == 0L) return 0L
@@ -219,7 +212,7 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
         .withColumn("uploaded_at", current_timestamp())
         .withColumn("processed_at", current_timestamp())
 
-      val failedRows = invalid
+      val failedRows = batch.where(!isValid)
         .select(
           col("id"), col("path").as("source_path"), col("title"), col("file_hash"),
           col("length").as("file_size_bytes"), col("page_count"),
@@ -233,9 +226,8 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
         .withColumn("processed_at", lit(null).cast("timestamp"))
 
       val rows = docRows.unionByName(failedRows)
-      // Upsert for re-admitted files (the reference UPDATEs the document
-      // row on reprocess, sqlite_store.py:153-172): one swap of the ledger
-      // without their failed rows, plus the batch's rows.
+      // re-admitted files replace their failed rows in one ledger swap (the
+      // reference UPDATEs the row on reprocess, sqlite_store.py:153-172)
       if (nReadmitted == 0L) catalog.append(rows, "documents")
       else catalog.overwrite(rows.unionByName(catalog.read("documents").join(
         broadcast(batch.where(col("readmitted")).select("file_hash")), Seq("file_hash"), "left_anti")), "documents")

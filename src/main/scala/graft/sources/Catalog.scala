@@ -87,8 +87,7 @@ final class Catalog(spark: SparkSession, warehouseDir: String) {
     * DataFrame end to end, so a bulk delete of millions of ids is one
     * anti-join instead of a collected `isin` literal tree (which would be
     * driver-bounded and stall Catalyst on a million-term expression).
-    * No-op (no table rewrite) when `ids` is empty — the common all-new
-    * ingest path must not pay an overwrite cycle.
+    * No-op (no table rewrite) when `ids` is empty.
     */
   def deleteMatching(name: String, ids: DataFrame, keys: Seq[String]): Unit =
     if (exists(name)) {

@@ -42,10 +42,7 @@ object Checkpoints {
       out
     } else df.localCheckpoint()
 
-  /** A long metric an `Observation` took in the job that pinned its
-    * frame. An observation over no rows holds no metrics at all, and a
-    * `sum` over none is null: both read 0.
-    */
+  /** A long metric an `Observation` took; absent (no rows seen) or null reads 0. */
   def observed(obs: org.apache.spark.sql.Observation, name: String): Long =
     obs.get.get(name).collect { case n: Long => n }.getOrElse(0L)
 
