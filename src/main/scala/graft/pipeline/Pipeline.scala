@@ -125,8 +125,8 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
     var batchChunks: Option[DataFrame] = None
     try {
       // Materialize the batch ONCE and CUT its lineage before mutating
-      // the tables: a recompute through the anti-join after the ledger
-      // append would see this batch's own rows and drop them. When image
+      // the tables: a recompute through J1 after the ledger append would
+      // see this batch's own rows and drop them. When image
       // extraction is requested the checkpoint keeps the raw bytes (so
       // the scan+extract DAG still runs exactly once) and drops them right
       // after; otherwise bytes are dropped before the checkpoint. The pin

@@ -589,8 +589,7 @@ class PipelineSpec extends AnyFunSuite {
       // a hash the ledger holds as failed AND completed is not re-admitted
       pipe.catalog.append(ledger.withColumn("status", lit("failed")).localCheckpoint(), "documents")
       assert(pipe.processDirectory(pdfDir) == 0)
-      assert(ledger.select("status").as[String](org.apache.spark.sql.Encoders.STRING)
-        .collect().sorted.toSeq == Seq("completed", "failed"))
+      assert(ledger.select("status").collect().map(_.getString(0)).sorted.toSeq == Seq("completed", "failed"))
       assert(pipe.catalog.read("chunks").count() == chunks)
     } finally pipe.flush()
   }
