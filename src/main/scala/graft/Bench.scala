@@ -15,14 +15,15 @@ object Bench {
     * inventory grows. Chosen to span scan/filter, shuffle agg, broadcast
     * join, window, top-k, text, dedup, and the retrieval composites.
     */
-  val Headline: Seq[String] = Seq(
-    "q_pricing_summary", "q_filter_range", "q_join_revenue_by_region",
-    "q_anti_join", "q_window_topn_per_cust", "q_running_total",
-    "q_topk_orders", "q_sessionize", "q_event_tumbling", "q_json_extract",
-    "q_quality_metrics", "q_token_estimate", "q_dedup_exact", "q_minhash_lsh",
-    "q_ngram_jaccard", "q_ann_cosine", "q_bm25", "q_rrf_hybrid",
-    "q_context_budget", "q_chunker"
-  )
+  val Headline: Seq[String] = SparkEntry.tagged(SparkEntry.QuerySpec.Headline)
+
+  /** Steady-state re-measure: these queries bill one-time index builds /
+    * first-touch caches (FTS postings, IVF cells) to their first run. A
+    * second run with indexes warm is the honest per-query latency;
+    * headline_total keeps the FIRST-run numbers so the metric stays
+    * comparable across rounds (the build cost is real ingest work).
+    */
+  private[graft] val Steady: Seq[String] = SparkEntry.tagged(SparkEntry.QuerySpec.Steady)
 
   /** The engine's only remaining unpartitioned windows run over BOUNDED
     * inputs (<= k-row top-k lists in HybridSearch.rrf / ContextAssembly;
@@ -140,15 +141,7 @@ object Bench {
       val ok = Seq(first, rerunA(name), rerunB(name)).filter(_ >= 0).sorted
       name -> (if (ok.isEmpty) -1.0 else ok(ok.length / 2))
     }
-    // Steady-state re-measure: these queries bill one-time index builds /
-    // first-touch caches (FTS postings, IVF cells) to their first run
-    // above. A second run with indexes warm is the honest per-query
-    // latency; headline_total keeps the FIRST-run numbers so the metric
-    // stays comparable across rounds (the build cost is real ingest work).
-    val steadySet = Seq("q_bm25", "q_ann_ivf", "q_rrf_hybrid", "q_context_budget")
-    require(steadySet.forall(SparkEntry.queries.contains),
-      s"steady set names must resolve: ${steadySet.filterNot(SparkEntry.queries.contains)}")
-    val steady = steadySet.map(name => timeQuery("steady", name, SparkEntry.queries(name)))
+    val steady = Steady.map(name => timeQuery("steady", name, SparkEntry.queries(name)))
     def jmap(m: Seq[(String, Double)]): String =
       m.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
     // End-of-run retime of the heaviest queries (VERDICT r9 #1): each

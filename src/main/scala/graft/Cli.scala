@@ -21,9 +21,7 @@ object Cli {
     Seq("documents", "chunks", "images").foreach { t =>
       if (cat.exists(t)) cat.read(t).createOrReplaceTempView(t)
     }
-    graft.functions.VectorFunctions.register(spark)
-    graft.plans.ChunkText.register(spark, config.chunking)
-    graft.plans.TopKBy.register(spark)
+    GraftExtensions.register(spark, config.chunking)
   }
 
   def main(args: Array[String]): Unit = {
@@ -50,12 +48,7 @@ object Cli {
         pipe.listDocuments(rest.headOption).show(50, truncate = false)
       case "search" =>
         // only consume the first word as a mode when it actually IS one
-        val parsedMode = rest.headOption.collect {
-          case "vector"  => SearchMode.Vector
-          case "keyword" => SearchMode.Keyword
-          case "hybrid"  => SearchMode.Hybrid
-          case "adc"     => SearchMode.Adc // needs search.pqIndexPath configured
-        }
+        val parsedMode = rest.headOption.flatMap(SearchMode.named)
         val queryWords = if (parsedMode.isDefined) rest.drop(1) else rest
         require(queryWords.nonEmpty, "usage: search [vector|keyword|hybrid|adc] <query...>")
         retriever

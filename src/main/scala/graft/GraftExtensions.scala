@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -20,48 +20,33 @@ import graft.plans.{ChunkText, TopKBy}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(
-      (
-        FunctionIdentifier("cosine_sim"),
-        new ExpressionInfo(classOf[VectorFunctions.CosineSimilarity].getName, "cosine_sim"),
-        (children: Seq[Expression]) => VectorFunctions.CosineSimilarity(children(0), children(1))
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("long_dot"),
-        new ExpressionInfo(classOf[VectorFunctions.LongDot].getName, "long_dot"),
-        (children: Seq[Expression]) => VectorFunctions.LongDot(children(0), children(1))
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("long_sq_dist"),
-        new ExpressionInfo(classOf[VectorFunctions.LongSqDist].getName, "long_sq_dist"),
-        (children: Seq[Expression]) => VectorFunctions.LongSqDist(children(0), children(1))
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("top_k_by"),
-        new ExpressionInfo(classOf[TopKBy].getName, "top_k_by"),
-        TopKBy.sqlBuilder
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("chunk_text"),
-        new ExpressionInfo(classOf[ChunkText].getName, "chunk_text"),
-        ChunkText.builder(ChunkingConfig())
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("zorder2"),
-        new ExpressionInfo(graft.operators.Layout.getClass.getName, "zorder2"),
-        (children: Seq[Expression]) => graft.operators.Layout.zorder2Expr(children(0), children(1))
-      )
-    )
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions(ChunkingConfig()).foreach(ext.injectFunction)
+}
+
+object GraftExtensions {
+
+  /** Every graft SQL function; `chunk_text`'s 1-arg form chunks with
+    * `chunking`.
+    */
+  private def functions(chunking: ChunkingConfig): Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = {
+    def fn(name: String, cls: Class[_], builder: Seq[Expression] => Expression) =
+      (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
+    Seq(
+      fn("cosine_sim", classOf[VectorFunctions.CosineSimilarity],
+        c => VectorFunctions.CosineSimilarity(c(0), c(1))),
+      fn("long_dot", classOf[VectorFunctions.LongDot], c => VectorFunctions.LongDot(c(0), c(1))),
+      fn("long_sq_dist", classOf[VectorFunctions.LongSqDist], c => VectorFunctions.LongSqDist(c(0), c(1))),
+      fn("top_k_by", classOf[TopKBy], TopKBy.sqlBuilder),
+      fn("chunk_text", classOf[ChunkText], ChunkText.builder(chunking)),
+      fn("zorder2", graft.operators.Layout.getClass, c => graft.operators.Layout.zorder2Expr(c(0), c(1))))
   }
+
+  /** Register [[functions]] on one session (a session built without the
+    * extension, e.g. `GraftSession.getOrCreate` or the CLI's).
+    */
+  def register(spark: SparkSession, chunking: ChunkingConfig = ChunkingConfig()): Unit =
+    functions(chunking).foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+    }
 }

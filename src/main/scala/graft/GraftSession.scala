@@ -41,9 +41,7 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     // the engine's SQL surface is always available on a graft session
     // (cluster-wide deployments use GraftExtensions via spark.sql.extensions)
-    graft.functions.VectorFunctions.register(spark)
-    graft.plans.ChunkText.register(spark)
-    graft.plans.TopKBy.register(spark)
+    GraftExtensions.register(spark)
     spark
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
-/** DuckDB-equivalent SQL for every SQL-expressible query in
-  * [[SparkEntry.queries]]. Each statement mirrors its Spark plan's value
+/** DuckDB-equivalent SQL for every query of [[SparkEntry.registry]] that
+  * declares its own statement. Each statement mirrors its Spark plan's value
   * semantics *exactly*: decimal casts for FP-exact aggregation, identical
   * expression association order, identical tokenization, deterministic
   * ORDER BY with unique tie-breaks, and BIGINT/DOUBLE output casts matching
@@ -529,35 +529,13 @@ object OracleSql {
        |eg AS (SELECT DISTINCT gram FROM (${shingleSql("(SELECT * FROM documents WHERE doc_id < 5)", 8)}))
        |SELECT DISTINCT cg.doc_id FROM cg JOIN eg USING (gram) ORDER BY doc_id""".stripMargin
 
-  /** Persisted-tokenizer lifecycle twins: each query routes the exact
-    * computation of its direct twin through the writeTokenizer →
-    * loadTokenizer roundtrip, so a FAITHFUL roundtrip makes the result
-    * identical and the direct twin's oracle pins it verbatim (the
-    * q_lsh_persisted convention, whose oracle is q_ann_cosine's).
-    */
-  lazy val all: Map[String, String] = base ++ Map(
-    "q_bpe_persisted" -> base("q_bpe_encode_oov"),
-    // maintained-histogram lifecycle: a faithful write→append→replay→load
-    // makes training identical to the full corpus, so the oracle is the
-    // q_bpe_merges rounds trimmed to the merge list the artifact carries
-    "q_bpe_hist" -> {
-      val rounds = (1 to 4).map(r => bpeRound(s"w${r - 1}", r)).mkString(",\n")
-      val sel = (1 to 4)
-        .map(r => s"SELECT CAST($r AS BIGINT) AS round, b$r.pa AS pair_a, b$r.pb AS pair_b FROM b$r")
-        .mkString("\nUNION ALL\n")
-      s"""WITH $bpeW0,
-         |$rounds
-         |$sel
-         |ORDER BY round""".stripMargin
-    },
-    "q_wordpiece_persisted" -> base("q_wordpiece_infer"),
-    "q_unigram_persisted" -> base("q_unigram_tok"),
-    // compaction is content-identity by contract: the folded store's
-    // manifest must equal the one-shot export of the union bit-for-bit,
-    // which is exactly q_shard_append's oracle
-    "q_shard_compact" -> base("q_shard_append"))
+  /** [[SparkEntry.oracleSql]] under its older name. */
+  lazy val all: Map[String, String] = SparkEntry.oracleSql
 
-  private lazy val base: Map[String, String] = Map(
+  /** The statement of every query whose registry row declares its own
+    * SQL (`SparkEntry.QuerySpec.OwnSql`), keyed by query name.
+    */
+  private[graft] lazy val base: Map[String, String] = Map(
     "q_pricing_summary" ->
       """SELECT l_returnflag, l_linestatus,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
@@ -3074,6 +3052,20 @@ object OracleSql {
       val sel = (1 to 4)
         .map(r =>
           s"SELECT CAST($r AS BIGINT) AS round, b$r.pa AS pair_a, b$r.pb AS pair_b, b$r.n, ns$r.n_symbols FROM b$r, ns$r")
+        .mkString("\nUNION ALL\n")
+      s"""WITH $bpeW0,
+         |$rounds
+         |$sel
+         |ORDER BY round""".stripMargin
+    },
+
+    // maintained-histogram lifecycle: a faithful write→append→replay→load
+    // makes training identical to the full corpus, so the oracle is the
+    // q_bpe_merges rounds trimmed to the merge list the artifact carries
+    "q_bpe_hist" -> {
+      val rounds = (1 to 4).map(r => bpeRound(s"w${r - 1}", r)).mkString(",\n")
+      val sel = (1 to 4)
+        .map(r => s"SELECT CAST($r AS BIGINT) AS round, b$r.pa AS pair_a, b$r.pb AS pair_b FROM b$r")
         .mkString("\nUNION ALL\n")
       s"""WITH $bpeW0,
          |$rounds

@@ -191,14 +191,9 @@ final class RestServer(spark: SparkSession, config: GraftConfig = GraftConfig.de
           val query = textField(req, "query").getOrElse("")
           if (query.isEmpty) { error(ex, 400, "query is required"); return }
           val modeName = textField(req, "mode").getOrElse("hybrid")
-          val mode = modeName match {
-            case "vector"  => SearchMode.Vector
-            case "keyword" => SearchMode.Keyword
-            case "hybrid"  => SearchMode.Hybrid
-            case "adc"     => SearchMode.Adc // needs search.pqIndexPath configured
-            case other =>
-              error(ex, 400, s"Invalid search mode: $other. Use: vector, hybrid, keyword, adc")
-              return
+          val mode = SearchMode.named(modeName).getOrElse {
+            error(ex, 400, s"Invalid search mode: $modeName. Use: vector, hybrid, keyword, adc")
+            return
           }
           val k = boundedInt(req, "limit", config.search.defaultK, 1, config.search.maxK) match {
             case Left(msg) => error(ex, 400, msg); return

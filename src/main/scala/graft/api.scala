@@ -69,12 +69,14 @@ object api {
     }
 
   /** [[curateCorpus]] with fuzzy (MinHash-LSH) document dedup instead of
-    * exact — the full published pre-training recipe.
+    * exact — the full published pre-training recipe. The result is the
+    * handle's `curated`; close the handle once it is consumed to release
+    * the checkpoint blocks the pass pins.
     */
   def curateCorpusNear(docs: DataFrame, idCol: String, textCol: String,
       langs: Set[String] = Set("en"), minQuality: Double = 0.5,
-      jaccardThreshold: Double = 0.8): DataFrame =
-    graft.operators.Curation.curateNear(docs, idCol, textCol, langs, minQuality, jaccardThreshold)
+      jaccardThreshold: Double = 0.8): graft.operators.Curation.CurationHandle =
+    graft.operators.Curation.curateNearManaged(docs, idCol, textCol, langs, minQuality, jaccardThreshold)
 
   /** Distinct-count estimate (KMV sketch; deterministic, cross-engine
     * checkable — see Sketches for the grouped and quantile variants).

@@ -280,11 +280,4 @@ object VectorFunctions {
       DotProduct(graftbridge.expression(a), graftbridge.expression(b))
     )
 
-  /** Register SQL function `cosine_sim` on a session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim",
-      exprs => CosineSimilarity(exprs(0), exprs(1)),
-      "scala_udf"
-    )
 }

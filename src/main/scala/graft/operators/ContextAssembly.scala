@@ -37,11 +37,8 @@ object ContextAssembly {
       .withColumn("est_tokens", TextFunctions.wordCount(col("text")).cast("double") * 1.3)
       .withColumn("cum_tokens", sum(col("est_tokens")).over(w))
     // longest prefix: stop at first overflow
-    val wAll = Window
-      .orderBy(desc(scoreCol), col(tieBreak))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     withCum
-      .withColumn("overflowed", max(when(col("cum_tokens") > maxTokens, 1).otherwise(0)).over(wAll))
+      .withColumn("overflowed", max(when(col("cum_tokens") > maxTokens, 1).otherwise(0)).over(w))
       .where(col("overflowed") === 0)
       .drop("overflowed")
   }

@@ -14,7 +14,7 @@ import graft.functions.TextFunctions
   *                 ranking shuffles only a short hash key — the cheapest
   *                 possible full-corpus dedup)
   *   - minhash:    shingle -> minhash signature -> band -> bucket join
-  *   - simhash:    64-bit simhash + banded Hamming blocking
+  *   - hamming:    banded Hamming blocking over a 64-bit signature
   *   - ngramJaccard: word n-gram Jaccard via explode + semi-blocked join
   */
 object Dedup {
@@ -249,30 +249,6 @@ object Dedup {
       .select("id_a", "id_b", "est_jaccard")
   }
 
-  /** 64-bit SimHash over word unigrams: per-bit majority vote of token
-    * hashes. Pure column algebra: explode tokens, xxhash64, per-bit +/-1
-    * contributions summed per doc.
-    */
-  def simhash(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // (id, token, count) pre-aggregation: one hash per distinct token and
-    // a smaller input to the 64-column aggregate; weighting the per-bit
-    // vote by cnt is integer-identical to voting once per occurrence
-    val toks = docs
-      .select(col(idCol).as("id"), explode(TextFunctions.ftsTokens(col(textCol))).as("tok"))
-      .groupBy("id", "tok")
-      .agg(count(lit(1)).as("cnt"))
-    val hashed = toks.withColumn("h", xxhash64(col("tok")))
-    // sum of per-bit contributions: bit set -> +cnt else -cnt
-    val bitCols = (0 until 64).map { bit =>
-      sum(when(shiftright(col("h"), bit).bitwiseAND(lit(1L)) === 1L, col("cnt")).otherwise(-col("cnt"))).as(s"b$bit")
-    }
-    val bitSums = hashed.groupBy("id").agg(bitCols.head, bitCols.tail: _*)
-    val sigExpr = (0 until 64)
-      .map(bit => when(col(s"b$bit") > 0, lit(1L << bit)).otherwise(lit(0L)))
-      .reduce((x, y) => x.bitwiseOR(y))
-    bitSums.select(col("id"), sigExpr.as("simhash"))
-  }
-
   /** Partition [0, 64) into exactly `numBands` contiguous non-empty bit
     * ranges as (lo, width) pairs. Even distribution (`lo = bi*64/numBands`)
     * — NOT ceil-width strides, which over-shoot 64 for many band counts,
@@ -310,7 +286,7 @@ object Dedup {
     )
 
   /** Near-dup pairs within `maxHamming` bits over an ALREADY-COMPUTED
-    * 64-bit signature column — text [[simhash]] or image dHash (the
+    * 64-bit signature column — a text simhash or image dHash (the
     * Pipeline's image dedup) — so every 64-bit perceptual signature
     * shares one audited pair generator. Pigeonhole banding into
     * `maxHamming + 1` chunks keeps recall complete for any radius in

@@ -132,38 +132,6 @@ object FtsIndex {
   private def fragments(index: Index): Seq[DataFrame] =
     if (index.retained.isEmpty) Seq(index.postings) else index.retained
 
-  /** Persist an index as a parquet postings table + stats sidecar — the
-    * durable form of the build (query clusters load this instead of
-    * rebuilding). At real scale write with
-    * `.bucketBy(n, "term").sortBy("term")` into a catalog table so
-    * query-time term lookups read only matching buckets.
-    */
-  def write(index: Index, path: String): Unit =
-    graft.sources.StoreLease.withRenewableLease(path, "write-fts") { lease =>
-    index.postings.write.mode("overwrite").parquet(s"$path/postings")
-    lease.renew() // the postings write is the long pole; protect the tail
-    // stats sidecar goes through the Hadoop FileSystem of the target path
-    // (not java.nio), so hdfs:// and s3a:// index locations work
-    val stats = s"""{"numDocs":${index.numDocs},"totalDocLen":${index.totalDocLen}}"""
-    val p = new org.apache.hadoop.fs.Path(s"$path/stats.json")
-    val fs = p.getFileSystem(index.postings.sparkSession.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(stats.getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  /** Load a persisted index. */
-  def load(spark: SparkSession, path: String): Index = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/stats.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val stats =
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-      finally in.close()
-    def field(name: String): Long = s"\"$name\":(\\d+)".r.findFirstMatchIn(stats).get.group(1).toLong
-    Index(spark.read.parquet(s"$path/postings"), field("numDocs"), field("totalDocLen"))
-  }
-
   // Session-resident index per corpus key, so the query side (BM25 /
   // hybrid / context assembly) reads rather than rebuilds — mirroring the
   // reference's write-then-index lifecycle.

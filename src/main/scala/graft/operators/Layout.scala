@@ -57,13 +57,4 @@ object Layout {
     BitwiseOr(spread(a), ShiftLeft(spread(b), Literal(1)))
   }
 
-  /** Session-local SQL registration (cluster-wide deployment goes through
-    * [[graft.GraftExtensions]]).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "zorder2",
-      exprs => zorder2Expr(exprs(0), exprs(1)),
-      "scala_udf"
-    )
 }

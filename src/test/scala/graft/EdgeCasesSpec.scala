@@ -26,7 +26,7 @@ class EdgeCasesSpec extends AnyFunSuite {
 
   test("dedup operators over empty and single-row corpora") {
     def hammingPairs(df: org.apache.spark.sql.DataFrame) =
-      Dedup.hammingPairsFromSigs(Dedup.simhash(df, "doc_id", "text"), "id", "simhash", 3)
+      Dedup.hammingPairsFromSigs(DedupSpec.simhash(df, "doc_id", "text"), "id", "simhash", 3)
     assert(Dedup.exactDedup(emptyDocs, "doc_id", "text").count() == 0)
     assert(Dedup.minhashLshPairs(emptyDocs, "doc_id", "text").count() == 0)
     assert(hammingPairs(emptyDocs).count() == 0)

@@ -46,7 +46,7 @@ class EventStreamsSpec extends AnyFunSuite {
         spark.table("hll_out"), p = 8)
         .where(col("window_start") === new Timestamp(w0start))
         .head()
-      val est = graft.operators.Sketches.hllCardinality(
+      val est = SketchesSpec.hllCardinality(
         row.getAs[Long]("n_zero"), row.getAs[Long]("sum_scaled"), p = 8)
       assert(math.abs(est - 30.0) < 5.0, s"corrected estimate $est too far from 30")
     } finally q.stop()

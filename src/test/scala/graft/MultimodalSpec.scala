@@ -75,20 +75,6 @@ class MultimodalSpec extends AnyFunSuite {
     assert(ImageExtraction.extractImages(docs, minPx = 0).count() >= rows.length)
   }
 
-  test("quality-routed extraction falls back to the OCR provider only for low-quality docs") {
-    val good = ("%PDF-1.4\n" + ("reasonable english words in a sentence. " * 20)).getBytes
-    val sparse = "%PDF-1.4\nhi".getBytes // low char density -> quality gate fails
-    val df = Seq(("/x/good.pdf", good, good.length.toLong), ("/x/sparse.pdf", sparse, sparse.length.toLong))
-      .toDF("path", "content", "length")
-    val out = graft.sources.PdfSource.withFallbackExtraction(df)
-      .select("path", "extraction_method_used", "markdown")
-      .collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
-    assert(out("/x/good.pdf")._1 == "jvm")
-    assert(out("/x/sparse.pdf")._1 == "ocr_stub")
-    assert(out("/x/sparse.pdf")._2.contains("<!-- Page 1 -->"))
-    assert(!out("/x/good.pdf")._2.contains("<!-- Page"))
-  }
-
   test("dHash: deterministic, perceptually local, loud on tiny images") {
     val base = realPng(120, 80)
     // determinism on identical bytes

@@ -365,8 +365,6 @@ class PipelineSpec extends AnyFunSuite {
     val cat = new graft.sources.Catalog(spark, base)
     import spark.implicits._
     cat.append(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"), "t")
-    cat.updateWhere("t", col("id") === 2, Map("v" -> lit("B")))
-    assert(cat.read("t").where(col("v") === "B").count() == 1)
     cat.deleteWhere("t", col("id") === 1)
     assert(cat.read("t").count() == 2)
     cat.append(Seq((4L, "d")).toDF("id", "v"), "t")

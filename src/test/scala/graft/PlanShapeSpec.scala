@@ -72,35 +72,6 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"), p.take(1200))
   }
 
-  test("co-bucketed tables join with no shuffle exchange (pre-paid at write)") {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import spark.implicits._
-    val cat = new graft.sources.Catalog(spark, java.nio.file.Files.createTempDirectory("graft-bkt").toString)
-    val left = (1 to 1000).map(i => (i.toLong % 97, i.toLong)).toDF("k", "v")
-    val right = (1 to 500).map(i => (i.toLong % 97, s"n$i")).toDF("k", "name")
-    cat.writeBucketedTable(left, "bkt_left", 8, Seq("k"))
-    cat.writeBucketedTable(right, "bkt_right", 8, Seq("k"))
-    try {
-      val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force a shuffle-class join
-      spark.conf.set("spark.sql.adaptive.enabled", "false") // static plan exposes exchanges
-      try {
-        val joined = spark.table("bkt_left").join(spark.table("bkt_right"), "k")
-        val exchanges = joined.queryExecution.executedPlan.collect { case e: ShuffleExchangeExec => e }
-        assert(exchanges.isEmpty,
-          s"co-bucketed join must not shuffle, found ${exchanges.length} exchange(s)")
-        assert(joined.count() > 0)
-      } finally {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
-        spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      }
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS bkt_left")
-      spark.sql("DROP TABLE IF EXISTS bkt_right")
-    }
-  }
-
   test("decontamination broadcasts the eval grams; corpus text never crosses an exchange") {
     val p = plan("q_decontaminate")
     assert(p.contains("BroadcastHashJoin"), p.take(1200))

@@ -111,37 +111,6 @@ class ProviderContractSpec extends AnyFunSuite {
       s"page framing altered the content: ${reassembled.take(80)}... vs ${plain.markdown.take(80)}...")
   }
 
-  test("F3 fallback routing: only the low-quality doc switches to the OCR provider end-to-end") {
-    val spark = SparkTestBase.spark
-    import spark.implicits._
-    // 'good' clears every density threshold; 'sparse' extracts fine but at
-    // ~30 chars on its single page -> low_char_density -> re-extracted by
-    // the OCR provider (the reference's F3 -> U2 flow)
-    val goodBytes = ("%PDF-1.4\n# Rich Document\n\n" +
-      (1 to 40).map(i => s"Sentence number $i carries plenty of readable words.").mkString(" "))
-      .getBytes("UTF-8")
-    val sparseBytes = "%PDF-1.4\nalmost no text here\n".getBytes("UTF-8")
-    val scanned = Seq(
-      ("/in/good.pdf", goodBytes),
-      ("/in/sparse.pdf", sparseBytes)
-    ).toDF("path", "content")
-
-    val out = PdfSource
-      .withFallbackExtraction(scanned, ExtractionConfig(method = "stub"))
-      .select("path", "markdown", "extraction_method_used")
-      .collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
-
-    val (goodMd, goodMethod) = out("/in/good.pdf")
-    val (sparseMd, sparseMethod) = out("/in/sparse.pdf")
-    assert(goodMethod == "stub", s"healthy doc must keep the primary provider, got $goodMethod")
-    assert(!goodMd.contains("<!-- Page"), "healthy doc must keep the primary extraction")
-    assert(sparseMethod == "ocr_stub", s"low-quality doc must be re-routed, got $sparseMethod")
-    assert(sparseMd.contains("<!-- Page 1 -->"),
-      "re-routed doc must carry the OCR provider's page-marker output")
-    assert(sparseMd.contains("almost no text here"),
-      "the OCR re-extraction must still surface the document's text")
-  }
-
   test("unknown provider names fail loudly, not silently") {
     val err = intercept[IllegalArgumentException] {
       PdfSource.extractor(ExtractionConfig(method = "pymupdf"))

@@ -148,18 +148,6 @@ class RetrievalSpec extends AnyFunSuite {
     assert(scores.sameElements(scores.sorted.reverse))
   }
 
-  test("BM25 index round-trips through parquet persistence") {
-    val idx = FtsIndex.build(docs, "doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-fts").toString
-    FtsIndex.write(idx, dir)
-    val loaded = FtsIndex.load(spark, dir)
-    assert(loaded.numDocs == idx.numDocs)
-    assert(loaded.avgDocLen == idx.avgDocLen)
-    val a = FtsIndex.search(spark, idx, "spark data", 5).collect().map(r => (r.getLong(0), r.getDouble(1)))
-    val b = FtsIndex.search(spark, loaded, "spark data", 5).collect().map(r => (r.getLong(0), r.getDouble(1)))
-    assert(a.toSeq == b.toSeq)
-  }
-
   test("scoreAll returns EVERY matching doc — the prefilter contract a truncating search can't give") {
     // Retriever.keywordSearch with a title filter depends on this: the
     // filter must see all scored candidates, or selective filters lose

@@ -93,7 +93,7 @@ class SketchesSpec extends AnyFunSuite {
     val row = Sketches.hllDistinct(df, "v", p = 12).head()
     val raw = row.getAs[Double]("hll_estimate")
     assert(raw > 1000.0, s"raw estimator should floor near alpha*m here, got $raw")
-    val corrected = Sketches.hllCardinality(
+    val corrected = SketchesSpec.hllCardinality(
       row.getAs[Long]("n_zero"), row.getAs[Long]("sum_scaled"), p = 12)
     assert(math.abs(corrected - 100.0) < 10.0, s"corrected $corrected too far from 100")
   }
@@ -245,5 +245,19 @@ class SketchesSpec extends AnyFunSuite {
       .map(r => (r.getAs[String]("g_a"), r.getAs[String]("g_b")) -> r.getAs[Long]("jaccard_fp"))
       .toMap
     assert(rep == got)
+  }
+}
+
+object SketchesSpec {
+
+  /** The small-range-corrected HLL cardinality of one estimate row
+    * (Flajolet et al. 2007): the raw harmonic-mean estimate, unless it
+    * falls below 2.5m with untouched registers — then linear counting
+    * `m * ln(m / n_zero)`.
+    */
+  def hllCardinality(nZero: Long, sumScaled: Long, p: Int): Double = {
+    val m = (1L << p).toDouble
+    val raw = Sketches.hllAlphaNumerator(p) / sumScaled
+    if (raw <= 2.5 * m && nZero > 0L) m * math.log(m / nZero) else raw
   }
 }

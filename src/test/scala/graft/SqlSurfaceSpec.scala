@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.plans.ChunkText
 import graft.operators.Skew
 
 class SqlSurfaceSpec extends AnyFunSuite {
@@ -10,7 +9,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("chunk_text generator works via LATERAL VIEW and matches flatMap chunking") {
-    ChunkText.register(spark, ChunkingConfig(chunkSize = 128, chunkOverlap = 16))
+    GraftExtensions.register(spark, ChunkingConfig(chunkSize = 128, chunkOverlap = 16))
     val md = "# Title\n\n" + (1 to 60).map(i => s"sentence number $i here. ").mkString
     Seq((1L, md), (2L, "# Tiny\nshort body")).toDF("doc_id", "text")
       .createOrReplaceTempView("docs_sql")
@@ -33,7 +32,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
   }
 
   test("chunk_text 3-arg form honors size/overlap literals") {
-    ChunkText.register(spark)
+    GraftExtensions.register(spark)
     Seq((1L, ("word " * 300).trim)).toDF("doc_id", "text").createOrReplaceTempView("docs_sql3")
     val n128 = spark.sql("SELECT c.* FROM docs_sql3 LATERAL VIEW chunk_text(text, 128, 16) c").count()
     val n512 = spark.sql("SELECT c.* FROM docs_sql3 LATERAL VIEW chunk_text(text, 512, 50) c").count()
@@ -41,7 +40,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
   }
 
   test("top_k_by is registered on the session surface (parity with GraftExtensions)") {
-    graft.plans.TopKBy.register(spark)
+    GraftExtensions.register(spark)
     (1 to 50).map(i => (i % 5L, i.toDouble, i.toLong)).toDF("g", "s", "i")
       .createOrReplaceTempView("topk_sql")
     val rows = spark.sql(

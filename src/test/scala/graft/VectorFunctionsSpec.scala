@@ -298,7 +298,7 @@ class VectorFunctionsSpec extends AnyFunSuite {
   }
 
   test("SQL registration works") {
-    VectorFunctions.register(spark)
+    GraftExtensions.register(spark)
     val r = spark.sql("SELECT cosine_sim(array(1.0F, 0.0F), array(1.0F, 0.0F)) AS c").head()
     assert(math.abs(r.getDouble(0) - 1.0) < 1e-12)
   }

@@ -26,21 +26,7 @@ MAIN = os.path.join(ROOT, "src", "main", "scala")
 # The product surface: its public defs are the entry points themselves.
 SURFACE = {"Pipeline", "Retriever", "Cli", "RestServer", "api", "SparkEntry"}
 
-ALLOWED = {
-    # ingest: PdfSource / Catalog behind Pipeline.processDirectory
-    "PdfSource.withFallbackExtraction":
-        "re-extracts with OCR the rows that fail the quality gate of withExtraction, which Pipeline ingest runs",
-    "Catalog.updateWhere": "the reference's status-flip UPDATE over the documents table Pipeline writes",
-    "Catalog.writeBucketedTable":
-        "bucketed layout for the chunks/documents tables Pipeline writes; PlanShapeSpec pins its no-shuffle join",
-    # readouts and twins of SparkEntry query paths
-    "Sketches.hllCardinality": "small-range readout of the (n_zero, sum_scaled) columns the q_hll_* queries return",
-    "Dedup.simhash": "the text signature for hammingPairsFromSigs, which Pipeline's image dedup bands",
-    "LoaderSchedule.mintCursor": "mints the cursor resumeFromChecked takes, the stale-checked twin of resumeFrom",
-    "LoaderSchedule.resumeFromChecked": "the stale-checked twin of resumeFrom, which q_epoch_resume runs",
-    # leak safety of an api entry point
-    "Curation.curateNearManaged": "releases the checkpoint pins that curateNear (api.curateNear) leaves",
-}
+ALLOWED = {}
 
 IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 DEF = re.compile(
