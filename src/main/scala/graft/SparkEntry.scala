@@ -7,11 +7,12 @@ import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions, VectorFunctions}
 import graft.operators._
 
-/** Driver contract: one `queries` entry per implemented operator from
-  * SURVEY.md §2 (+ the LLM-data-pipeline additions), with DuckDB-equivalent
-  * `oracleSql` for everything SQL-expressible. Column names and value
-  * semantics are kept byte-identical between the Spark plan and the oracle
-  * SQL (decimal-exact aggregation, deterministic ordering, explicit casts).
+/** Driver contract: one [[SparkEntry.registry]] row per implemented
+  * operator from SURVEY.md §2 (+ the LLM-data-pipeline additions); the
+  * `queries` map and the DuckDB-equivalent `oracleSql` derive from it.
+  * Column names and value semantics are kept byte-identical between the
+  * Spark plan and the oracle SQL (decimal-exact aggregation, deterministic
+  * ordering, explicit casts).
   */
 object SparkEntry {
 
@@ -3654,6 +3655,7 @@ object SparkEntry {
   private[graft] def tagged(tag: QuerySpec.Tag): Seq[String] =
     registry.filter(_.tags(tag)).map(_.name)
 
+  /** The DuckDB statement of every query with an oracle: its own, or its twin's. */
   lazy val oracleSql: Map[String, String] = {
     import QuerySpec._
     val own = registry.filter(_.oracle == OwnSql).map(_.name).toSet
