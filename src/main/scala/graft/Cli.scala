@@ -50,7 +50,8 @@ object Cli {
         // only consume the first word as a mode when it actually IS one
         val parsedMode = rest.headOption.flatMap(SearchMode.named)
         val queryWords = if (parsedMode.isDefined) rest.drop(1) else rest
-        require(queryWords.nonEmpty, "usage: search [vector|keyword|hybrid|adc] <query...>")
+        require(queryWords.nonEmpty, s"usage: search [vector|keyword|hybrid] <query...> (${SearchMode.NoPqIndex})")
+        require(!parsedMode.contains(SearchMode.Adc) || config.search.pqIndexPath.isDefined, SearchMode.NoPqIndex)
         retriever
           .search(queryWords.mkString(" "), parsedMode.getOrElse(SearchMode.Hybrid), config.search.defaultK)
           .show(20, 60)

@@ -13,12 +13,6 @@ final case class ExtractionConfig(
       * the reference is likewise gated behind availability).
       */
     method: String = "jvm",
-    // Quality thresholds for text-density heuristics (src/config.py:52-57)
-    minCharsPerPage: Int = 100,
-    minWordsPerPage: Int = 20,
-    maxNonAsciiRatio: Double = 0.15,
-    minAvgWordLength: Double = 2.0,
-    maxAvgWordLength: Double = 15.0,
     // File limits (src/config.py:60-61)
     maxFileSizeMb: Int = 50,
     maxPageCount: Int = 500

@@ -195,6 +195,9 @@ final class RestServer(spark: SparkSession, config: GraftConfig = GraftConfig.de
             error(ex, 400, s"Invalid search mode: $modeName. Use: vector, hybrid, keyword, adc")
             return
           }
+          if (mode == SearchMode.Adc && config.search.pqIndexPath.isEmpty) {
+            error(ex, 400, SearchMode.NoPqIndex); return
+          }
           val k = boundedInt(req, "limit", config.search.defaultK, 1, config.search.maxK) match {
             case Left(msg) => error(ex, 400, msg); return
             case Right(v)  => v

@@ -1431,37 +1431,17 @@ object SparkEntry {
   /** ntile bucketing (quartiles by account balance). */
   private def qNtile(s: SparkSession, dir: String): DataFrame = {
     // Scale-safe global NTILE: an unpartitioned window funnels the whole
-    // table through ONE task (the WindowExec warning). Two-pass
-    // distributed rank instead: range-partition on the sort key, rank
-    // within partitions, offset by the per-partition counts (a
-    // #partitions-sized driver cumsum), then apply the NTILE bucket
-    // formula to the global 0-based position. localCheckpoint pins the
-    // range partitioning so the counts pass and the rank pass see the
-    // exact same partitions.
+    // table through ONE task (the WindowExec warning). The distributed
+    // global rank ([[Ranks.withGlobalRank]]) gives each row its 0-based
+    // position; the NTILE bucket formula applies to that.
     val nBuckets = 4L
-    val parts = t(s, dir, "customer")
-      .select("c_custkey", "c_acctbal")
-      .repartitionByRange(8, desc("c_acctbal"), col("c_custkey"))
-      .withColumn("_pid", spark_partition_id())
-      .localCheckpoint()
-    val counts = parts.groupBy("_pid").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val n = counts.values.sum
-    val offsets = {
-      var acc = 0L
-      counts.keys.toSeq.sorted.map { pid =>
-        val o = pid -> acc; acc += counts(pid); o
-      }
-    }
-    val offsetDf = s.createDataFrame(offsets).toDF("_pid", "_offset")
-    val localW = Window.partitionBy("_pid").orderBy(desc("c_acctbal"), col("c_custkey"))
+    val (ranked, n) = Ranks.withGlobalRank(t(s, dir, "customer").select("c_custkey", "c_acctbal"),
+      Seq(desc("c_acctbal"), col("c_custkey")), partitions = 8)
     val base = n / nBuckets
     val rem = n % nBuckets
     val cut = rem * (base + 1) // first `rem` buckets carry base+1 rows
-    parts
-      .withColumn("_rn", row_number().over(localW))
-      .join(broadcast(offsetDf), "_pid")
-      .withColumn("_p", col("_offset") + col("_rn") - 1)
+    ranked
+      .withColumn("_p", col("_rk") - 1)
       .select(
         col("c_custkey"),
         when(col("_p") < cut, floor(col("_p") / (base + 1)) + 1)

@@ -120,23 +120,22 @@ object TextFunctions {
 
   /** Quality gate: null when acceptable, else the failure reason — the
     * OCR-fallback routing decision (reference:
-    * src/extract/pymupdf_extractor.py:207-236; thresholds src/config.py:52-57).
+    * src/extract/pymupdf_extractor.py:207-236), at the reference's
+    * default thresholds (src/config.py:52-57).
     */
-  def qualityFallbackReason(
-      text: Column,
-      pageCount: Column,
-      minCharsPerPage: Double = 100,
-      minWordsPerPage: Double = 20,
-      minAvgWordLength: Double = 2.0,
-      maxAvgWordLength: Double = 15.0,
-      maxNonAsciiRatio: Double = 0.15
-  ): Column =
-    when(charsPerPage(text, pageCount) < minCharsPerPage, lit("low_char_density"))
-      .when(wordsPerPage(text, pageCount) < minWordsPerPage, lit("low_word_count"))
-      .when(avgWordLength(text) < minAvgWordLength, lit("short_words"))
-      .when(avgWordLength(text) > maxAvgWordLength, lit("no_word_boundaries"))
-      .when(nonAsciiRatio(text) > maxNonAsciiRatio, lit("high_non_ascii"))
+  def qualityFallbackReason(text: Column, pageCount: Column): Column =
+    when(charsPerPage(text, pageCount) < MinCharsPerPage, lit("low_char_density"))
+      .when(wordsPerPage(text, pageCount) < MinWordsPerPage, lit("low_word_count"))
+      .when(avgWordLength(text) < MinAvgWordLength, lit("short_words"))
+      .when(avgWordLength(text) > MaxAvgWordLength, lit("no_word_boundaries"))
+      .when(nonAsciiRatio(text) > MaxNonAsciiRatio, lit("high_non_ascii"))
       .otherwise(lit(null).cast("string"))
+
+  private val MinCharsPerPage = 100.0
+  private val MinWordsPerPage = 20.0
+  private val MinAvgWordLength = 2.0
+  private val MaxAvgWordLength = 15.0
+  private val MaxNonAsciiRatio = 0.15
 
   /** Extract the YAML frontmatter body from a markdown checkpoint file
     * (reference regex `^---\s*\n(.*?)\n---\s*\n` DOTALL,

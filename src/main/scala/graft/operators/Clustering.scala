@@ -87,10 +87,9 @@ object Clustering {
     require(iters >= 1, s"need iters >= 1, got $iters")
     require(quantScale >= 1, s"need quantScale >= 1, got $quantScale")
 
-    val q: DataFrame = graft.util.Checkpoints.pin(
-      df.select(col(idCol).as("_km_id"), quantized(vecCol, quantScale).as("_km_q"))
-    )
-    try {
+    graft.util.Checkpoints.scoped(df.sparkSession) { scratch =>
+      val q = scratch.pin(
+        df.select(col(idCol).as("_km_id"), quantized(vecCol, quantScale).as("_km_q")))
       val seeds = q.orderBy("_km_id").limit(k).collect()
       require(seeds.length == k, s"need at least k=$k rows, got ${seeds.length}")
       var centroids: Array[Array[Long]] =
@@ -122,8 +121,6 @@ object Clustering {
         }
       }
       KmeansModel(centroids, quantScale)
-    } finally {
-      graft.util.Checkpoints.release(graft.util.Checkpoints.pinnedRddIds(q), df.sparkSession)
     }
   }
 

@@ -180,10 +180,10 @@ object CorpusHygiene {
       fpp: Double = 0.01
   ): DataFrame = {
     val spark = corpus.sparkSession
-    val evalGrams = evalSet
+    // pinned: sized once, reused by build + confirm join
+    val evalGrams = graft.util.Checkpoints.pin(evalSet
       .select(explode(Dedup.shingles(col(evalTextCol), n)).as("gram"))
-      .distinct()
-      .localCheckpoint() // sized once, reused by build + confirm join
+      .distinct())
     val nGrams = math.max(evalGrams.count(), 1L)
     val bloom = evalGrams.stat.bloomFilter("gram", nGrams, fpp)
     val bloomBc = spark.sparkContext.broadcast(bloom)

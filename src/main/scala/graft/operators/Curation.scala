@@ -177,7 +177,7 @@ object Curation {
       // leg — and construction itself stays action-free. The checkpointed
       // blocks live until the application ends unless the caller goes
       // through [[curateNearManaged]], whose handle releases them.
-      val pinned = filtered.localCheckpoint(eager = false)
+      val pinned = graft.util.Checkpoints.pin(filtered, eager = false)
       val pairs = Dedup.minhashLshPairs(pinned, idCol, textCol, threshold = jaccardThreshold)
       Dedup.nearDedup(pinned, idCol, pairs)
   }

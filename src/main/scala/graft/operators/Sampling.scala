@@ -266,11 +266,10 @@ object Sampling {
     *
     * Draw j for anchor a: `target = hash32(id_a # j) mod (N-1)`, then
     * targets at or past a's own position shift up by one — a uniform
-    * draw over the N-1 non-self positions. Positions come from a
-    * DISTRIBUTED two-pass rank over `idCol` order (range-partition,
-    * rank within partitions, add per-partition offsets — the
-    * SequencePacking/qNtile shape, never an unpartitioned window's
-    * single-task sort). Returns (anchor, j, negative).
+    * draw over the N-1 non-self positions. Positions come from the
+    * DISTRIBUTED global rank over `idCol` order ([[Ranks.withGlobalRank]],
+    * never an unpartitioned window's single-task sort). Returns (anchor,
+    * j, negative).
     *
     * Scale shape: the rank table is (id, rank) only; the k-fold explode
     * carries (anchor rank, j, target rank) and equi-joins back on the
@@ -284,34 +283,11 @@ object Sampling {
       partitions: Int = 0
   ): DataFrame = {
     require(k >= 1, s"need k >= 1, got $k")
-    val spark = df.sparkSession
-    val nParts =
-      if (partitions > 0) partitions
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val ranged = graft.util.Checkpoints.pin(
-      df.select(col(idCol).as("_np_id"))
-        .repartitionByRange(nParts, col("_np_id"))
-        .withColumn("_np_pid", spark_partition_id())
-    )
-    val partCounts = ranged.groupBy("_np_pid").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val n = partCounts.values.sum
+    val (ranked, n) =
+      Ranks.withGlobalRank(df.select(col(idCol).as("_np_id")), Seq(col("_np_id")), "_np_rk", partitions)
     require(n >= 2, s"need at least 2 rows, got $n")
-    val offsets = {
-      var acc = 0L
-      (0 until nParts).map { p =>
-        val o = acc; acc += partCounts.getOrElse(p, 0L); p -> o
-      }.toMap
-    }
-    val offsetCol = offsets.foldLeft(lit(0L)) { case (acc, (p, o)) =>
-      when(col("_np_pid") === p, lit(o)).otherwise(acc)
-    }
-    val pw = org.apache.spark.sql.expressions.Window
-      .partitionBy("_np_pid").orderBy("_np_id")
     // 0-based global position in id order
-    val ranks = ranged
-      .withColumn("_np_pos", row_number().over(pw).cast("long") + offsetCol - 1L)
-      .select(col("_np_id"), col("_np_pos"))
+    val ranks = ranked.select(col("_np_id"), (col("_np_rk") - 1L).as("_np_pos"))
     val draws = ranks
       .select(
         col("_np_id").as("anchor"), col("_np_pos").as("_np_apos"),

@@ -604,8 +604,8 @@ object SequencePacking {
     // the whole affected slice is bounded by the shards being rewritten;
     // pin it so the per-shard writes below don't re-run the UDF pass and
     // don't re-read directories mid-swap
-    val pinned = rebuilt.localCheckpoint()
-    try {
+    graft.util.Checkpoints.scoped(spark) { scratch =>
+      val pinned = scratch.pin(rebuilt)
       // coalesce: a re-run healing a crashed takedown can find the affected
       // shard's rows already gone (the crash lost or already-rewrote them) —
       // an empty slice sums to null, and the heal must report 0, not NPE
@@ -637,11 +637,12 @@ object SequencePacking {
         // listing and a materialization job per shard for rows the swap
         // below still publishes one bounded directory at a time
         spark.catalog.refreshByPath(s"$path/docs")
-        val keptAll = spark.read.parquet(s"$path/docs")
-          .where(col("shard").isin(affectedShards: _*) &&
-            !col("doc_id").isin(docIds.distinct: _*))
-          .localCheckpoint() // materialize before the swaps unlink the sources
-        try {
+        // its own scope: released before the manifest splice pins
+        graft.util.Checkpoints.scoped(spark) { docsScratch =>
+          // materialize before the swaps unlink the sources
+          val keptAll = docsScratch.pin(spark.read.parquet(s"$path/docs")
+            .where(col("shard").isin(affectedShards: _*) &&
+              !col("doc_id").isin(docIds.distinct: _*)))
           forEachShardConcurrently(affectedShards) { sh =>
             lease.renew()
             graft.sources.Catalog.swapIn(
@@ -650,9 +651,6 @@ object SequencePacking {
                 .write.mode("overwrite").parquet(tmp.toString)
             }
           }
-        } finally {
-          graft.util.Checkpoints.release(
-            graft.util.Checkpoints.pinnedRddIds(keptAll), spark)
         }
       }
 
@@ -660,9 +658,6 @@ object SequencePacking {
       // (partition-pruned scan) and splicing over the stored manifest
       spliceManifest(spark, path, affectedShards, lease)
       removed
-    } finally {
-      graft.util.Checkpoints.release(
-        graft.util.Checkpoints.pinnedRddIds(pinned), spark)
     }
   }
 
@@ -759,15 +754,12 @@ object SequencePacking {
       if (!spark.read.parquet(s"$path/meta").columns.contains("n_shards")) {
         // one-time ledger upgrade: rewrite the (tiny) ledger with the
         // layout column so later rows never mix schemas in the directory
-        val legacy = spark.read.parquet(s"$path/meta")
-          .withColumn("n_shards", lit(occupiedShards())).localCheckpoint()
-        try {
+        graft.util.Checkpoints.scoped(spark) { scratch =>
+          val legacy = scratch.pin(spark.read.parquet(s"$path/meta")
+            .withColumn("n_shards", lit(occupiedShards())))
           graft.sources.Catalog.swapIn(java.nio.file.Paths.get(s"$path/meta"), Seq(lease)) { tmp =>
             legacy.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
           }
-        } finally {
-          graft.util.Checkpoints.release(
-            graft.util.Checkpoints.pinnedRddIds(legacy), spark)
         }
       }
     }
@@ -863,16 +855,16 @@ object SequencePacking {
           spark.catalog.refreshByPath(s"$path/tombstones")
           sliceDoomed(scrubSrc, spark.read.parquet(s"$path/tombstones"))
         } else scrubSrc
-      // pin: the append below extends the very directory this anti-join
-      // reads — materialize before writing, never re-read mid-append
-      val toAppend = scrubbed.localCheckpoint()
-      // toAppend's eager checkpoint cut the lineage to withGlobalRank's
-      // internal range-partition pin — release it NOW: this verb runs
-      // once per micro-batch on a stream, and a weeks-long deployment
-      // must not accumulate one pinned RDD per append
-      graft.util.Checkpoints.release(
-        graft.util.Checkpoints.pinnedRddIds(ranked), spark)
-      try {
+      graft.util.Checkpoints.scoped(spark) { scratch =>
+        // pin: the append below extends the very directory this anti-join
+        // reads — materialize before writing, never re-read mid-append
+        val toAppend = scratch.pin(scrubbed)
+        // toAppend's eager checkpoint cut the lineage to withGlobalRank's
+        // internal range-partition pin — release it NOW: this verb runs
+        // once per micro-batch on a stream, and a weeks-long deployment
+        // must not accumulate one pinned RDD per append
+        graft.util.Checkpoints.release(
+          graft.util.Checkpoints.pinnedRddIds(ranked), spark)
         appended = toAppend.count()
         toAppend.write.mode("append").partitionBy("shard").parquet(s"$path/data")
         // per-batch heartbeat after the data append (the batch's long
@@ -940,21 +932,13 @@ object SequencePacking {
           (sh, row._1, row._2, row._3, row._4)
         }
         import spark.implicits._
-        val untouched = storedAll.where(!col("shard").isin(affected: _*)).localCheckpoint()
-        try {
-          graft.sources.Catalog.swapIn(java.nio.file.Paths.get(s"$path/manifest"), Seq(lease)) { tmp =>
-            untouched
-              .unionByName(spliced.toDF("shard", "n_bins", "n_docs", "n_tokens", "digest"))
-              .write.mode("overwrite").parquet(tmp.toString)
-          }
-        } finally {
-          graft.util.Checkpoints.release(
-            graft.util.Checkpoints.pinnedRddIds(untouched), spark)
+        val untouched = scratch.pin(storedAll.where(!col("shard").isin(affected: _*)))
+        graft.sources.Catalog.swapIn(java.nio.file.Paths.get(s"$path/manifest"), Seq(lease)) { tmp =>
+          untouched
+            .unionByName(spliced.toDF("shard", "n_bins", "n_docs", "n_tokens", "digest"))
+            .write.mode("overwrite").parquet(tmp.toString)
         }
         spark.catalog.refreshByPath(s"$path/manifest")
-      } finally {
-        graft.util.Checkpoints.release(
-          graft.util.Checkpoints.pinnedRddIds(toAppend), spark)
       }
     } else {
       // nothing to append, but the rank helper's internal pin still exists
@@ -1074,11 +1058,10 @@ object SequencePacking {
         s"compactShards: no data directory for shard $sh")
     }
     spark.catalog.refreshByPath(s"$path/data")
-    val allRows = spark.read.parquet(s"$path/data")
-      .where(col("shard").isin(targets: _*))
-      .localCheckpoint() // materialize before the swaps unlink the sources
     val removedAcc = new java.util.concurrent.atomic.AtomicLong(0L)
-    try {
+    graft.util.Checkpoints.scoped(spark) { scratch =>
+      // materialize before the swaps unlink the sources
+      val allRows = scratch.pin(spark.read.parquet(s"$path/data").where(col("shard").isin(targets: _*)))
       // overlapped per-shard jobs (r19, guide §2.6): each shard's
       // swap+proof is independent — its own swap lease, its own scoped
       // proof scan — and the sequential loop's wall was driver
@@ -1112,19 +1095,14 @@ object SequencePacking {
         val after = dataDir.listFiles().count(_.getName.endsWith(".parquet"))
         removedAcc.addAndGet((before - after).toLong)
       }
-    } finally {
-      graft.util.Checkpoints.release(
-        graft.util.Checkpoints.pinnedRddIds(allRows), spark)
     }
     // the membership index's matching partitions get the same treatment
     // (and the same one-pinned-read shape as the data side)
     val docsTargets = targets.filter(sh => new java.io.File(s"$path/docs/shard=$sh").isDirectory)
     if (docsTargets.nonEmpty) {
       spark.catalog.refreshByPath(s"$path/docs")
-      val allIdx = spark.read.parquet(s"$path/docs")
-        .where(col("shard").isin(docsTargets: _*))
-        .localCheckpoint()
-      try {
+      graft.util.Checkpoints.scoped(spark) { scratch =>
+        val allIdx = scratch.pin(spark.read.parquet(s"$path/docs").where(col("shard").isin(docsTargets: _*)))
         forEachShardConcurrently(docsTargets) { sh =>
           lease.renew()
           graft.sources.Catalog.swapIn(
@@ -1133,22 +1111,16 @@ object SequencePacking {
               .repartition(filesPerShard).write.mode("overwrite").parquet(tmp.toString)
           }
         }
-      } finally {
-        graft.util.Checkpoints.release(
-          graft.util.Checkpoints.pinnedRddIds(allIdx), spark)
       }
     }
     // fold the append ledger into one file (all rows retained)
     if (java.nio.file.Files.exists(java.nio.file.Paths.get(s"$path/meta"))) {
       spark.catalog.refreshByPath(s"$path/meta")
-      val ledger = spark.read.parquet(s"$path/meta").localCheckpoint()
-      try {
+      graft.util.Checkpoints.scoped(spark) { scratch =>
+        val ledger = scratch.pin(spark.read.parquet(s"$path/meta"))
         graft.sources.Catalog.swapIn(java.nio.file.Paths.get(s"$path/meta"), Seq(lease)) { tmp =>
           ledger.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
         }
-      } finally {
-        graft.util.Checkpoints.release(
-          graft.util.Checkpoints.pinnedRddIds(ledger), spark)
       }
     }
     // and the tombstone table: retractions (and scrub re-appends) add one
@@ -1157,14 +1129,11 @@ object SequencePacking {
     // rows carry no information.
     if (java.nio.file.Files.exists(java.nio.file.Paths.get(s"$path/tombstones"))) {
       spark.catalog.refreshByPath(s"$path/tombstones")
-      val tomb = spark.read.parquet(s"$path/tombstones").distinct().localCheckpoint()
-      try {
+      graft.util.Checkpoints.scoped(spark) { scratch =>
+        val tomb = scratch.pin(spark.read.parquet(s"$path/tombstones").distinct())
         graft.sources.Catalog.swapIn(java.nio.file.Paths.get(s"$path/tombstones"), Seq(lease)) { tmp =>
           tomb.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
         }
-      } finally {
-        graft.util.Checkpoints.release(
-          graft.util.Checkpoints.pinnedRddIds(tomb), spark)
       }
       spark.catalog.refreshByPath(s"$path/tombstones")
     }
@@ -1296,14 +1265,11 @@ object SequencePacking {
     spark.catalog.refreshByPath(s"$path/manifest")
     val untouched = spark.read.parquet(s"$path/manifest")
       .where(!col("shard").isin(shards: _*))
-    val merged = untouched.unionByName(recert).localCheckpoint()
-    try {
+    graft.util.Checkpoints.scoped(spark) { scratch =>
+      val merged = scratch.pin(untouched.unionByName(recert))
       graft.sources.Catalog.swapIn(java.nio.file.Paths.get(s"$path/manifest"), Seq(lease)) { tmp =>
         merged.write.mode("overwrite").parquet(tmp.toString)
       }
-    } finally {
-      graft.util.Checkpoints.release(
-        graft.util.Checkpoints.pinnedRddIds(merged), spark)
     }
     spark.catalog.refreshByPath(s"$path/manifest")
   }

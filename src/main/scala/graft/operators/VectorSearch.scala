@@ -966,13 +966,13 @@ object VectorSearch {
     }
     if (iters == 0) return PqModel(codebook, quantScale)
 
-    val exploded = graft.util.Checkpoints.pin(
-      df.select(qCol.as("_pq_q"))
-        .select(explode(transform(sequence(lit(0), lit(nSub - 1)), s =>
-          struct(s.as("s"), slice(col("_pq_q"), s * subDim + 1, lit(subDim)).as("sub"))))
-          .as("e"))
-        .select(col("e.s").as("_pq_s"), col("e.sub").as("_pq_sub")))
-    try {
+    graft.util.Checkpoints.scoped(df.sparkSession) { scratch =>
+      val exploded = scratch.pin(
+        df.select(qCol.as("_pq_q"))
+          .select(explode(transform(sequence(lit(0), lit(nSub - 1)), s =>
+            struct(s.as("s"), slice(col("_pq_q"), s * subDim + 1, lit(subDim)).as("sub"))))
+            .as("e"))
+          .select(col("e.s").as("_pq_s"), col("e.sub").as("_pq_sub")))
       for (_ <- 1 to iters) {
         val cb = typedLit(codebook.map(_.map(_.toSeq).toSeq).toSeq)
         val sums = exploded
@@ -996,9 +996,6 @@ object VectorSearch {
         }
       }
       PqModel(codebook, quantScale)
-    } finally {
-      graft.util.Checkpoints.release(
-        graft.util.Checkpoints.pinnedRddIds(exploded), df.sparkSession)
     }
   }
 

@@ -121,9 +121,7 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
     // released when the batch ends, however it ends: each cuts the lineage
     // of everything built on it, so its blocks are live until the last
     // append. The resident FTS index pins its own batch postings.
-    var scratch: Option[DataFrame] = None
-    var batchChunks: Option[DataFrame] = None
-    try {
+    graft.util.Checkpoints.scoped(spark) { scratch =>
       // Materialize the batch ONCE and CUT its lineage before mutating
       // the tables: a recompute through J1 after the ledger append would
       // see this batch's own rows and drop them. When image
@@ -134,11 +132,9 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
       val counted = new org.apache.spark.sql.Observation()
       val isValid = col("validation") === "valid"
       val batch = {
-        val pinned = (if (imagesDir.isDefined) extracted else extracted.drop("content"))
+        val pinned = scratch.pin((if (imagesDir.isDefined) extracted else extracted.drop("content"))
           .observe(counted, count(lit(1)).as("n"), count(when(isValid, 1)).as("valid"),
-            count(when(col("readmitted"), 1)).as("readmitted"))
-          .localCheckpoint()
-        scratch = Some(pinned)
+            count(when(col("readmitted"), 1)).as("readmitted")))
         imagesDir.foreach(dir => loadImages(pinned.where(isValid), dir))
         pinned.drop("content")
       }
@@ -146,101 +142,99 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
       val Seq(n, nIngested, nReadmitted) = Seq("n", "valid", "readmitted").map(graft.util.Checkpoints.observed(counted, _))
       graft.util.JsonLog.info("ingest_batch", "batch_token" -> batchToken, "offered" -> n, "valid" -> nIngested,
         "failed" -> (n - nIngested), "readmitted" -> nReadmitted)
-      if (n == 0L) return 0L
-
-      // S4: markdown checkpoint (re-chunk without re-extract, pipeline.py:222-268)
-      markdownDir.foreach { dir =>
-        val rendered = valid.withColumn(
-          "md_text",
-          MarkdownSource.renderColumn(
-            col("id"),
-            element_at(split(col("path"), "/"), -1),
-            col("title"),
-            col("page_count"),
-            date_format(current_timestamp(), "yyyy-MM-dd'T'HH:mm:ss"),
-            lit(config.extraction.method),
-            col("file_hash"),
-            col("markdown")
+      if (n == 0L) 0L
+      else {
+        // S4: markdown checkpoint (re-chunk without re-extract, pipeline.py:222-268)
+        markdownDir.foreach { dir =>
+          val rendered = valid.withColumn(
+            "md_text",
+            MarkdownSource.renderColumn(
+              col("id"),
+              element_at(split(col("path"), "/"), -1),
+              col("title"),
+              col("page_count"),
+              date_format(current_timestamp(), "yyyy-MM-dd'T'HH:mm:ss"),
+              lit(config.extraction.method),
+              col("file_hash"),
+              col("markdown")
+            )
           )
-        )
-        MarkdownSource.write(rendered.withColumnRenamed("id", "document_id"), dir)
+          MarkdownSource.write(rendered.withColumnRenamed("id", "document_id"), dir)
+        }
+
+        // U4+U5: chunk; U6: embed — both narrow, run once: the pinned rows
+        // feed the chunks append, the ledger's chunk counts and the FTS
+        // extension.
+        val chunks =
+          scratch.pin(embedChunkRows(chunkDocs(valid.select(col("id"), col("title"), col("markdown")))))
+        try {
+          // ids are unique in a batch (content-derived, hashes deduplicated)
+          val batchDocs = broadcast(valid.select(col("id").as("document_id")))
+          val tableChunks = if (catalog.exists("chunks")) catalog.read("chunks") else chunks.limit(0)
+
+          // S7: grow the resident index by the batch BEFORE the append (the
+          // reference indexes after load, pipeline.py:164-165; a concurrent
+          // search then sees the batch in the index no earlier than in the
+          // table). A build it falls back to reads the table without this
+          // batch's documents, which may already hold an earlier attempt's
+          // chunks.
+          FtsIndex.extendForBatch(ftsKey, batchToken, chunks, "id", "text",
+            preBatchCorpus = tableChunks.join(batchDocs, Seq("document_id"), "left_anti"))
+
+          // replay guard: skip documents whose chunks already landed (a crash
+          // after this append and before the ledger's); parquet appends commit
+          // whole, so a document's chunks are all there or none are. The
+          // broadcast side reads the listing resolved above and is built
+          // before the append writes.
+          val presentDocs = tableChunks.select("document_id").join(batchDocs, Seq("document_id"), "left_semi")
+          catalog.append(chunks.join(broadcast(presentDocs), Seq("document_id"), "left_anti"), "chunks")
+
+          // Load the documents ledger last: rows for completed and failed
+          // files. A document's chunk count rides on each of its chunks.
+          val totalByDoc = chunks.where(col("chunk_index") === 0)
+            .select(col("document_id").as("id"), col("total_chunks").cast("long"))
+          val docRows = valid
+            .select(
+              col("id"), col("path").as("source_path"), col("title"), col("file_hash"),
+              col("length").as("file_size_bytes"), col("page_count"),
+              lit(config.extraction.method).as("extraction_method"),
+              col("quality_fallback")
+            )
+            .join(broadcast(totalByDoc), Seq("id"), "left")
+            .withColumn("total_chunks", coalesce(col("total_chunks"), lit(0L)))
+            .withColumn("status", lit(DocumentStatus.Completed))
+            .withColumn("error_message", lit(null).cast("string"))
+            .withColumn("uploaded_at", current_timestamp())
+            .withColumn("processed_at", current_timestamp())
+
+          val failedRows = batch.where(!isValid)
+            .select(
+              col("id"), col("path").as("source_path"), col("title"), col("file_hash"),
+              col("length").as("file_size_bytes"), col("page_count"),
+              lit(config.extraction.method).as("extraction_method"),
+              col("quality_fallback"),
+              concat(lit("validation failed: "), col("validation")).as("error_message")
+            )
+            .withColumn("total_chunks", lit(0L))
+            .withColumn("status", lit(DocumentStatus.Failed))
+            .withColumn("uploaded_at", current_timestamp())
+            .withColumn("processed_at", lit(null).cast("timestamp"))
+
+          val rows = docRows.unionByName(failedRows)
+          // re-admitted files replace their failed rows in one ledger swap (the
+          // reference UPDATEs the row on reprocess, sqlite_store.py:153-172)
+          if (nReadmitted == 0L) catalog.append(rows, "documents")
+          else catalog.overwrite(rows.unionByName(catalog.read("documents").join(
+            broadcast(batch.where(col("readmitted")).select("file_hash")), Seq("file_hash"), "left_anti")), "documents")
+          nIngested
+        } catch {
+          case t: Throwable =>
+            // the index may hold a batch the tables never got: rebuild it
+            // from the tables on the next use
+            FtsIndex.invalidate(ftsKey)
+            throw t
+        }
       }
-
-      // U4+U5: chunk; U6: embed — both narrow, run once: the pinned rows
-      // feed the chunks append, the ledger's chunk counts and the FTS
-      // extension.
-      val chunks =
-        embedChunkRows(chunkDocs(valid.select(col("id"), col("title"), col("markdown")))).localCheckpoint()
-      batchChunks = Some(chunks)
-
-      // ids are unique in a batch (content-derived, hashes deduplicated)
-      val batchDocs = broadcast(valid.select(col("id").as("document_id")))
-      val tableChunks = if (catalog.exists("chunks")) catalog.read("chunks") else chunks.limit(0)
-
-      // S7: grow the resident index by the batch BEFORE the append (the
-      // reference indexes after load, pipeline.py:164-165; a concurrent
-      // search then sees the batch in the index no earlier than in the
-      // table). A build it falls back to reads the table without this
-      // batch's documents, which may already hold an earlier attempt's
-      // chunks.
-      FtsIndex.extendForBatch(ftsKey, batchToken, chunks, "id", "text",
-        preBatchCorpus = tableChunks.join(batchDocs, Seq("document_id"), "left_anti"))
-
-      // replay guard: skip documents whose chunks already landed (a crash
-      // after this append and before the ledger's); parquet appends commit
-      // whole, so a document's chunks are all there or none are. The
-      // broadcast side reads the listing resolved above and is built
-      // before the append writes.
-      val presentDocs = tableChunks.select("document_id").join(batchDocs, Seq("document_id"), "left_semi")
-      catalog.append(chunks.join(broadcast(presentDocs), Seq("document_id"), "left_anti"), "chunks")
-
-      // Load the documents ledger last: rows for completed and failed
-      // files. A document's chunk count rides on each of its chunks.
-      val totalByDoc = chunks.where(col("chunk_index") === 0)
-        .select(col("document_id").as("id"), col("total_chunks").cast("long"))
-      val docRows = valid
-        .select(
-          col("id"), col("path").as("source_path"), col("title"), col("file_hash"),
-          col("length").as("file_size_bytes"), col("page_count"),
-          lit(config.extraction.method).as("extraction_method"),
-          col("quality_fallback")
-        )
-        .join(broadcast(totalByDoc), Seq("id"), "left")
-        .withColumn("total_chunks", coalesce(col("total_chunks"), lit(0L)))
-        .withColumn("status", lit(DocumentStatus.Completed))
-        .withColumn("error_message", lit(null).cast("string"))
-        .withColumn("uploaded_at", current_timestamp())
-        .withColumn("processed_at", current_timestamp())
-
-      val failedRows = batch.where(!isValid)
-        .select(
-          col("id"), col("path").as("source_path"), col("title"), col("file_hash"),
-          col("length").as("file_size_bytes"), col("page_count"),
-          lit(config.extraction.method).as("extraction_method"),
-          col("quality_fallback"),
-          concat(lit("validation failed: "), col("validation")).as("error_message")
-        )
-        .withColumn("total_chunks", lit(0L))
-        .withColumn("status", lit(DocumentStatus.Failed))
-        .withColumn("uploaded_at", current_timestamp())
-        .withColumn("processed_at", lit(null).cast("timestamp"))
-
-      val rows = docRows.unionByName(failedRows)
-      // re-admitted files replace their failed rows in one ledger swap (the
-      // reference UPDATEs the row on reprocess, sqlite_store.py:153-172)
-      if (nReadmitted == 0L) catalog.append(rows, "documents")
-      else catalog.overwrite(rows.unionByName(catalog.read("documents").join(
-        broadcast(batch.where(col("readmitted")).select("file_hash")), Seq("file_hash"), "left_anti")), "documents")
-      nIngested
-    } catch {
-      case t: Throwable =>
-        // the index may hold a batch the tables never got: rebuild it
-        // from the tables on the next use
-        batchChunks.foreach(_ => FtsIndex.invalidate(ftsKey))
-        throw t
-    } finally {
-      (scratch ++ batchChunks).foreach(p =>
-        graft.util.Checkpoints.release(graft.util.Checkpoints.pinnedRddIds(p), spark))
     }
   }
 
@@ -252,12 +246,11 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
     // are two actions — without caching, the extraction fan-out would
     // execute twice
     val images = graft.sources.ImageExtraction.extractImages(batch).persist()
-    // dedupImages runs INSIDE the try: a throw during its own actions
-    // must still unpersist the payload cache below (it releases its
-    // private scratch pins itself on throw)
-    var dedupRes: Option[Pipeline.ImageDedupResult] = None
-    try {
-      dedupRes = if (config.imageDedup.enabled) Some(dedupImages(images)) else None
+    // released on EVERY exit: a throw mid-append must not leave the
+    // dedup scratch pins (or the payload cache) stranded in a driver
+    // that catches per-directory errors and continues
+    try graft.util.Checkpoints.scoped(spark) { scratch =>
+      val dedupRes = if (config.imageDedup.enabled) Some(dedupImages(images, scratch)) else None
       val kept = dedupRes.map(_.kept).getOrElse(images)
       val meta = graft.sources.ImageExtraction
         .writeImageFiles(kept, dir)
@@ -273,13 +266,7 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
         catalog.append(r.keptSigs.withColumn("created_at", current_timestamp()), "image_signatures")
         catalog.append(r.labels, "image_clusters")
       }
-    } finally {
-      // released on EVERY exit: a throw mid-append must not leave the
-      // dedup scratch pins (or the payload cache) stranded in a driver
-      // that catches per-directory errors and continues
-      dedupRes.foreach(r => graft.util.Checkpoints.release(r.scratchPins, spark))
-      images.unpersist()
-    }
+    } finally images.unpersist()
   }
 
   /** Opt-in near-dup image dedup at ingest (keep-one-per-cluster),
@@ -307,23 +294,14 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
     * re-decoding history.
     */
   private def dedupImages(
-      images: org.apache.spark.sql.DataFrame
+      images: org.apache.spark.sql.DataFrame,
+      scratch: graft.util.Checkpoints.Scope
   ): Pipeline.ImageDedupResult = {
     import graft.operators.{Dedup, Multimodal}
     val maxHamming = config.imageDedup.maxHamming
-    // scratch pins accumulate as they are created so a throw MID-BUILD
-    // (bad payload, executor loss) releases whatever already
-    // materialized — the caller only learns the pin set on success
-    val pinned = scala.collection.mutable.ArrayBuffer.empty[Int]
-    def pinScratch(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-      val p = df.localCheckpoint()
-      pinned ++= graft.util.Checkpoints.pinnedRddIds(p)
-      p
-    }
-    try {
     // decode once; 8-byte (id, dhash) rows pinned for the three consumers
     // (in-batch pairs, cross-batch probe, meta persistence)
-    val sigs = pinScratch(Multimodal
+    val sigs = scratch.pin(Multimodal
       .withImageDHash(images.select("id", "bytes"), "bytes", "dhash", Multimodal.FallbackDHashCodec)
       .select("id", "dhash")
       .where(col("dhash").isNotNull))
@@ -331,7 +309,7 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
     // in-batch keep-one (labels NOT appended yet — cross-batch resolution
     // below may re-attribute whole in-batch clusters to a stored cluster)
     val pairs = Dedup.hammingPairsFromSigs(sigs, "id", "dhash", maxHamming)
-    val labels = pinScratch(Dedup
+    val labels = scratch.pin(Dedup
       .nearDupClusters(images.select("id"), "id", pairs))
     val canon = labels.groupBy("cluster").agg(min("id").as("_canon"))
     val keptInBatch = Dedup.nearDedupFromClusters(images, "id", labels)
@@ -355,7 +333,7 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
           if (catalog.exists("image_clusters"))
             catalog.read("image_clusters").select(col("id").as("id_index"), col("cluster_id"))
           else cross.select(col("id_index"), col("id_index").as("cluster_id")).limit(0)
-        pinScratch(cross
+        scratch.pin(cross
           .join(existingClusters, Seq("id_index"), "left")
           .select(
             col("id_batch").as("_canon"),
@@ -394,13 +372,7 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
     Pipeline.ImageDedupResult(
       kept = kept,
       keptSigs = sigs.join(kept.select("id"), Seq("id"), "left_semi"),
-      labels = labelRows,
-      scratchPins = pinned.toSet)
-    } catch {
-      case t: Throwable =>
-        graft.util.Checkpoints.release(pinned.toSet, spark)
-        throw t
-    }
+      labels = labelRows)
   }
 
   /** Chunk a (doc_id, title, markdown)-shaped frame into chunk rows —
@@ -460,44 +432,43 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
     * written at labeling time), so dropped-duplicate labels — which have
     * no images-table row — clean up with their document too.
     */
-  private def cascadeImages(doomedDocs: org.apache.spark.sql.DataFrame): Unit = {
-    val hasClusters = catalog.exists("image_clusters")
-    val ownedClusters =
-      hasClusters && catalog.read("image_clusters").columns.contains("document_id")
-    val keepShared: org.apache.spark.sql.DataFrame =
-      if (ownedClusters) {
-        val clusters = catalog.read("image_clusters")
-        // pin: lineage reads the table being rewritten below
-        val doomedRows = clusters
-          .join(doomedDocs, Seq("document_id"), "left_semi").localCheckpoint()
-        val others = clusters.join(doomedDocs, Seq("document_id"), "left_anti")
-        val keep = doomedRows
-          .where(col("is_canonical"))
-          .join(others.select("cluster_id"), Seq("cluster_id"), "left_semi")
-          .select("id")
-          .localCheckpoint()
-        catalog.deleteMatching("image_clusters", doomedRows.select("id"), Seq("id"))
-        keep
-      } else {
-        if (hasClusters && catalog.exists("images")) {
-          // legacy label rows (no document_id): best-effort by image id
-          val doomedImages = catalog.read("images")
-            .join(doomedDocs, Seq("document_id"), "left_semi").select("id")
-          catalog.deleteMatching("image_clusters", doomedImages, Seq("id"))
+  private def cascadeImages(doomedDocs: org.apache.spark.sql.DataFrame): Unit =
+    graft.util.Checkpoints.scoped(spark) { scratch =>
+      val hasClusters = catalog.exists("image_clusters")
+      val ownedClusters =
+        hasClusters && catalog.read("image_clusters").columns.contains("document_id")
+      val keepShared: org.apache.spark.sql.DataFrame =
+        if (ownedClusters) {
+          val clusters = catalog.read("image_clusters")
+          // pin: lineage reads the table being rewritten below
+          val doomedRows = scratch.pin(clusters.join(doomedDocs, Seq("document_id"), "left_semi"))
+          val others = clusters.join(doomedDocs, Seq("document_id"), "left_anti")
+          val keep = scratch.pin(doomedRows
+            .where(col("is_canonical"))
+            .join(others.select("cluster_id"), Seq("cluster_id"), "left_semi")
+            .select("id"))
+          catalog.deleteMatching("image_clusters", doomedRows.select("id"), Seq("id"))
+          keep
+        } else {
+          if (hasClusters && catalog.exists("images")) {
+            // legacy label rows (no document_id): best-effort by image id
+            val doomedImages = catalog.read("images")
+              .join(doomedDocs, Seq("document_id"), "left_semi").select("id")
+            catalog.deleteMatching("image_clusters", doomedImages, Seq("id"))
+          }
+          doomedDocs.select(col("document_id").as("id")).limit(0)
         }
-        doomedDocs.select(col("document_id").as("id")).limit(0)
+      if (catalog.exists("images")) {
+        // pin: lineage reads the images table being rewritten
+        val doomedImages = scratch.pin(catalog.read("images")
+          .join(doomedDocs, Seq("document_id"), "left_semi")
+          .select("id")
+          .join(keepShared, Seq("id"), "left_anti"))
+        catalog.deleteMatching("images", doomedImages, Seq("id"))
+        if (catalog.exists("image_signatures"))
+          catalog.deleteMatching("image_signatures", doomedImages, Seq("id"))
       }
-    if (catalog.exists("images")) {
-      val doomedImages = catalog.read("images")
-        .join(doomedDocs, Seq("document_id"), "left_semi")
-        .select("id")
-        .join(keepShared, Seq("id"), "left_anti")
-        .localCheckpoint() // lineage reads the images table being rewritten
-      catalog.deleteMatching("images", doomedImages, Seq("id"))
-      if (catalog.exists("image_signatures"))
-        catalog.deleteMatching("image_signatures", doomedImages, Seq("id"))
     }
-  }
 
   /** Garbage-collect ORPHAN stored images: a shared canonical outlives
     * its uploading document while other documents' duplicates resolve to
@@ -525,16 +496,18 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
       else catalog.read("image_clusters")
         .join(liveDocs, Seq("document_id"), "left_semi")
         .select(col("cluster_id").as("id"))
-    // pin: lineage reads the images table being rewritten
-    val doomed = orphans.join(referenced, Seq("id"), "left_anti").localCheckpoint()
-    val n = doomed.count()
-    if (n > 0) {
-      catalog.deleteMatching("images", doomed, Seq("id"))
-      if (catalog.exists("image_signatures"))
-        catalog.deleteMatching("image_signatures", doomed, Seq("id"))
-      graft.util.JsonLog.info("gc_images", "collected" -> n)
+    graft.util.Checkpoints.scoped(spark) { scratch =>
+      // pin: lineage reads the images table being rewritten
+      val doomed = scratch.pin(orphans.join(referenced, Seq("id"), "left_anti"))
+      val n = doomed.count()
+      if (n > 0) {
+        catalog.deleteMatching("images", doomed, Seq("id"))
+        if (catalog.exists("image_signatures"))
+          catalog.deleteMatching("image_signatures", doomed, Seq("id"))
+        graft.util.JsonLog.info("gc_images", "collected" -> n)
+      }
+      n
     }
-    n
   }
 
   def deleteDocument(documentId: String): Unit = {
@@ -583,12 +556,13 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
       // batch the cascade: ONE anti-join rewrite per table for the whole
       // matching set, instead of per-id deleteDocument calls that rewrite
       // all 3 tables O(n) times (VERDICT r4 #5)
-      // pin: the cascade rewrites tables this frame's lineage reads
-      val doomed = catalog.read("documents")
-        .where(col("file_hash") === hash).select("id").localCheckpoint()
-      cascadeImages(doomed.withColumnRenamed("id", "document_id"))
-      catalog.deleteMatching("chunks", doomed.withColumnRenamed("id", "document_id"), Seq("document_id"))
-      catalog.deleteMatching("documents", doomed, Seq("id"))
+      graft.util.Checkpoints.scoped(spark) { scratch =>
+        // pin: the cascade rewrites tables this frame's lineage reads
+        val doomed = scratch.pin(catalog.read("documents").where(col("file_hash") === hash).select("id"))
+        cascadeImages(doomed.withColumnRenamed("id", "document_id"))
+        catalog.deleteMatching("chunks", doomed.withColumnRenamed("id", "document_id"), Seq("document_id"))
+        catalog.deleteMatching("documents", doomed, Seq("id"))
+      }
       FtsIndex.invalidate(ftsKey)
       graft.util.JsonLog.info("force_replace_delete", "file_hash" -> hash)
     }
@@ -647,40 +621,42 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
   def reprocessFromMarkdown(markdownDir: String): Long = {
     import spark.implicits._
     if (!catalog.exists("documents")) return 0L
-    // trust the LEDGER, not the directory: a checkpoint file left behind
-    // by deleteDocument must not resurrect orphan chunks
-    val parsed = MarkdownSource.read(spark, markdownDir)
-      .select(col("document_id"), col("title"), col("content"))
-      .join(
-        catalog.read("documents").select(col("id").as("document_id")),
-        Seq("document_id"),
-        "left_semi"
-      )
-      .localCheckpoint() // cut lineage before mutating the chunks table
-    val nDocs = parsed.count()
-    if (nDocs == 0) return 0L
+    graft.util.Checkpoints.scoped(spark) { scratch =>
+      // trust the LEDGER, not the directory: a checkpoint file left behind
+      // by deleteDocument must not resurrect orphan chunks; pinned to cut
+      // lineage before mutating the chunks table
+      val parsed = scratch.pin(MarkdownSource.read(spark, markdownDir)
+        .select(col("document_id"), col("title"), col("content"))
+        .join(
+          catalog.read("documents").select(col("id").as("document_id")),
+          Seq("document_id"),
+          "left_semi"
+        ))
+      val nDocs = parsed.count()
+      if (nDocs > 0) {
+        val chunkRows = chunkDocs(parsed)
+        val chunks = embedChunkRows(chunkRows)
 
-    val chunkRows = chunkDocs(parsed)
-    val chunks = embedChunkRows(chunkRows)
+        // structural delete: a bulk reprocess of millions of checkpoints stays
+        // one anti-join — no collected id list, no giant isin expression tree
+        catalog.deleteMatching("chunks", parsed.select("document_id"), Seq("document_id"))
+        catalog.append(chunks, "chunks")
 
-    // structural delete: a bulk reprocess of millions of checkpoints stays
-    // one anti-join — no collected id list, no giant isin expression tree
-    catalog.deleteMatching("chunks", parsed.select("document_id"), Seq("document_id"))
-    catalog.append(chunks, "chunks")
+        // keep the ledger's total_chunks consistent with the new chunking
+        val newTotals = chunkRows
+          .groupBy(col("document_id").as("id"))
+          .agg(count(lit(1)).as("_new_total"))
+        // pin: lineage reads the documents table being replaced
+        val updatedDocs = scratch.pin(catalog.read("documents")
+          .join(broadcast(newTotals), Seq("id"), "left")
+          .withColumn("total_chunks", coalesce(col("_new_total"), col("total_chunks")))
+          .drop("_new_total"))
+        catalog.overwrite(updatedDocs, "documents")
 
-    // keep the ledger's total_chunks consistent with the new chunking
-    val newTotals = chunkRows
-      .groupBy(col("document_id").as("id"))
-      .agg(count(lit(1)).as("_new_total"))
-    val updatedDocs = catalog.read("documents")
-      .join(broadcast(newTotals), Seq("id"), "left")
-      .withColumn("total_chunks", coalesce(col("_new_total"), col("total_chunks")))
-      .drop("_new_total")
-      .localCheckpoint() // lineage reads the documents table being replaced
-    catalog.overwrite(updatedDocs, "documents")
-
-    FtsIndex.invalidate(ftsKey)
-    nDocs
+        FtsIndex.invalidate(ftsKey)
+      }
+      nDocs
+    }
   }
 
   /** Point lookups (F6, src/load/sqlite_store.py:174-211). */
@@ -705,12 +681,11 @@ object Pipeline {
   /** What one batch's image dedup produced, with appends DEFERRED to the
     * caller so the crash-ordering invariant holds for every derived
     * table: images metadata first, then signatures, then cluster labels.
-    * `scratchPins` are the dedup's intra-batch checkpoint RDD ids —
-    * release them once the label append (the last consumer) completes.
+    * The frames read the dedup's scratch pins, so the caller consumes them
+    * inside the scope those pins were taken in.
     */
   private[pipeline] final case class ImageDedupResult(
       kept: org.apache.spark.sql.DataFrame,
       keptSigs: org.apache.spark.sql.DataFrame,
-      labels: org.apache.spark.sql.DataFrame,
-      scratchPins: Set[Int])
+      labels: org.apache.spark.sql.DataFrame)
 }

@@ -16,6 +16,9 @@ object SearchMode extends Enumeration {
 
   /** The mode a request names in lower case: "vector", "keyword", "hybrid" or "adc". */
   def named(name: String): Option[Value] = values.find(_.toString.toLowerCase == name)
+
+  /** Why a session configured without `search.pqIndexPath` refuses `Adc`. */
+  private[graft] val NoPqIndex = "mode adc needs a PQ index (search.pqIndexPath), and none is configured"
 }
 
 /** @param pqIndexPath a [[graft.operators.VectorSearch.writePq]] artifact
@@ -205,10 +208,9 @@ final class Retriever(
             "error" -> e.toString, "mode" -> "vector_only")
           return vectorSearch(query, k, titleFilter)
       }
+    // rrf returns its fused list in rank order, already cut to k
     HybridSearch.rrf(v, kw, "id", "score", k, config.search.rrfK)
       .withColumnRenamed("rrf_score", "score")
-      .orderBy(desc("score"), col("id"))
-      .limit(k)
       .select(HitColumns: _*)
   }
 

@@ -96,15 +96,12 @@ final class Catalog(spark: SparkSession, warehouseDir: String) {
       // derived FROM the documents table being rewritten); released on
       // every exit — a caller deleting from several tables per takedown
       // must not accumulate one pinned RDD per call
-      val doomed = ids.select(keys.map(col): _*).distinct().localCheckpoint()
-      try {
+      graft.util.Checkpoints.scoped(spark) { scratch =>
+        val doomed = scratch.pin(ids.select(keys.map(col): _*).distinct())
         if (!doomed.isEmpty) {
           val remaining = read(name).join(doomed, keys, "left_anti")
           overwrite(remaining, name)
         }
-      } finally {
-        graft.util.Checkpoints.release(
-          graft.util.Checkpoints.pinnedRddIds(doomed), spark)
       }
     }
 

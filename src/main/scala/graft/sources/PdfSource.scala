@@ -38,20 +38,6 @@ object PdfSource {
       .load(dir)
   }
 
-  /** 6-way validation verdict as a column (F1). `pageCount` is provided by
-    * the extraction provider; pass null for not-yet-parsed.
-    */
-  def validationVerdict(
-      length: Column,
-      content: Column,
-      pageCount: Column,
-      cfg: ExtractionConfig
-  ): Column =
-    validationVerdict(length, content, pageCount, lit(null).cast("string"), cfg)
-
-  def validationVerdict(length: Column, content: Column, pageCount: Column): Column =
-    validationVerdict(length, content, pageCount, lit(null).cast("string"), ExtractionConfig())
-
   /** Verdict including parse-level outcomes surfaced by the extraction
     * provider (`extract_error`): password protection and unrecoverable
     * corruption (reference src/extract/validator.py:58-75 checks

@@ -641,4 +641,37 @@ class PipelineSpec extends AnyFunSuite {
       assert(jobs <= 14, s"$jobs Spark jobs")
     } finally pipe.flush()
   }
+
+  test("delete, force re-ingest, reprocess and gcImages leave no checkpoint but the resident index's") {
+    import graft.pdf.PdfGen
+    import graft.pdf.PdfGen.{Img, Run}
+    val (pdfDir, wh, md) = freshDirs()
+    // one shared figure: with image dedup on, the three documents' images
+    // form one cluster whose stored canonical outlives its first owner
+    def figurePdf(title: String): Array[Byte] = PdfGen.pdf(
+      Seq(Seq(Run(title, 24.0),
+        Run("Body text long enough to pass validation thresholds for sure."),
+        Run("More words about gradients, rasters, and figure encodings."))),
+      images = Seq(Img(page = 0, width = 160, height = 120, bytes = PdfGen.rawRgb(160, 120), jpeg = false)))
+    Seq("a", "b", "c").foreach(n => Files.write(Paths.get(pdfDir, s"$n.pdf"), figurePdf(s"Figure Document $n")))
+    val pipe = new Pipeline(spark,
+      GraftConfig(warehouseDir = wh, imageDedup = graft.ImageDedupConfig(enabled = true)))
+    def persistent: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    /** The checkpoints `op` leaves held, other than the resident FTS index's. */
+    def leftBy(op: => Any): Set[Int] = {
+      val before = persistent
+      op
+      val after = persistent
+      after -- before -- graft.util.Checkpoints.pinnedRddIds(pipe.ftsIndex.postings)
+    }
+    try {
+      assert(pipe.processDirectory(pdfDir, Some(md), Some(s"$pdfDir-images")) == 3)
+      assert(pipe.catalog.read("images").count() == 1)
+      val docA = pipe.catalog.read("documents").where(col("source_path").endsWith("/a.pdf")).head().getAs[String]("id")
+      assert(leftBy(pipe.deleteDocument(docA)).isEmpty, "deleteDocument")
+      assert(leftBy(pipe.processFile(s"$pdfDir/b.pdf", force = true)).isEmpty, "processFile(force = true)")
+      assert(leftBy(assert(pipe.reprocessFromMarkdown(md) == 2L)).isEmpty, "reprocessFromMarkdown")
+      assert(leftBy(pipe.gcImages()).isEmpty, "gcImages")
+    } finally pipe.flush()
+  }
 }

@@ -163,6 +163,19 @@ class RestServerSpec extends AnyFunSuite {
     }
   }
 
+  test("REST adc search without a configured PQ index is a 400 that names the index, not a 500") {
+    val base = Files.createTempDirectory("graft-rest-adc").toString
+    val pdfDir = s"$base/pdfs"; Files.createDirectories(Paths.get(pdfDir))
+    mkPdf(pdfDir, "EP001 Spark Guide.pdf", "# Spark Guide\n\nspark processes distributed data.")
+    val cfg = GraftConfig(warehouseDir = s"$base/warehouse")
+    new Pipeline(spark, cfg).processDirectory(pdfDir)
+    withServer(cfg) { (_, post) =>
+      val r = post("/search", """{"query":"spark","mode":"adc"}""")
+      assert(r.statusCode == 400, s"${r.statusCode}: ${r.body}")
+      assert(r.body.contains("PQ index"), r.body)
+    }
+  }
+
   test("REST image listing is an empty 200 on a warehouse ingested without imagesDir") {
     val base = Files.createTempDirectory("graft-rest-noimg").toString
     val pdfDir = s"$base/pdfs"; Files.createDirectories(Paths.get(pdfDir))
