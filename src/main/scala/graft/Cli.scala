@@ -50,8 +50,7 @@ object Cli {
         // only consume the first word as a mode when it actually IS one
         val parsedMode = rest.headOption.flatMap(SearchMode.named)
         val queryWords = if (parsedMode.isDefined) rest.drop(1) else rest
-        require(queryWords.nonEmpty, s"usage: search [vector|keyword|hybrid] <query...> (${SearchMode.NoPqIndex})")
-        require(!parsedMode.contains(SearchMode.Adc) || config.search.pqIndexPath.isDefined, SearchMode.NoPqIndex)
+        require(queryWords.nonEmpty, "usage: search [vector|keyword|hybrid] <query...>")
         retriever
           .search(queryWords.mkString(" "), parsedMode.getOrElse(SearchMode.Hybrid), config.search.defaultK)
           .show(20, 60)

@@ -50,14 +50,7 @@ final case class SearchConfig(
     bm25K1: Double = 1.2,
     bm25B: Double = 0.75,
     // RRF smoothing constant (plans/etl-pipeline-plan.md:1117-1129)
-    rrfK: Int = 60,
-    /** [[graft.operators.VectorSearch.writePq]] artifact over the chunks
-      * table — configures the ADC retrieval mode
-      * ([[graft.pipeline.SearchMode]].Adc) for sessions built from
-      * config alone (CLI / REST), where no Retriever constructor
-      * argument is reachable. None = Adc mode fails loudly.
-      */
-    pqIndexPath: Option[String] = None
+    rrfK: Int = 60
 )
 
 /** Opt-in near-duplicate image dedup at ingest (keep-one-per-cluster).

@@ -192,11 +192,8 @@ final class RestServer(spark: SparkSession, config: GraftConfig = GraftConfig.de
           if (query.isEmpty) { error(ex, 400, "query is required"); return }
           val modeName = textField(req, "mode").getOrElse("hybrid")
           val mode = SearchMode.named(modeName).getOrElse {
-            error(ex, 400, s"Invalid search mode: $modeName. Use: vector, hybrid, keyword, adc")
+            error(ex, 400, s"Invalid search mode: $modeName. Use: vector, hybrid, keyword")
             return
-          }
-          if (mode == SearchMode.Adc && config.search.pqIndexPath.isEmpty) {
-            error(ex, 400, SearchMode.NoPqIndex); return
           }
           val k = boundedInt(req, "limit", config.search.defaultK, 1, config.search.maxK) match {
             case Left(msg) => error(ex, 400, msg); return

@@ -2360,8 +2360,8 @@ object SparkEntry {
   }
 
   /** Matryoshka truncated-dimension retrieval: cosine top-k over the
-    * first 16 of 64 dims (VectorSearch.matryoshkaTopK semantics, with the
-    * qAnnCosine round-then-order idiom for oracle determinism).
+    * first 16 of 64 dims (the MRL prefix scan, with the qAnnCosine
+    * round-then-order idiom for oracle determinism).
     */
   private def qMrl(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")

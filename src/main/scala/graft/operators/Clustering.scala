@@ -146,9 +146,9 @@ object Clustering {
   /** The `n` model centroids nearest a raw query vector, as cluster ids
     * in probe order — the driver-side cell-probe selection of IVF-style
     * search (integer L2 on the MODEL's quantScale, ties to the lower
-    * cid: the assignWith argmin, ranked). Shared by q_ivfpq and the
-    * RetrievalLadder so the query is always quantized at the scale the
-    * centroids were trained at.
+    * cid: the assignWith argmin, ranked). q_ivfpq probes through it, so
+    * the query is always quantized at the scale the centroids were
+    * trained at.
     */
   def nearestCentroids(model: KmeansModel, queryVec: Seq[Float], n: Int): Seq[Long] = {
     require(n >= 1, s"need n >= 1, got $n")
@@ -241,33 +241,14 @@ object Clustering {
       .select("id_a", "id_b", "sim_fp", "cluster")
   }
 
-  /** Cluster count that keeps the EXPECTED cluster size at
-    * `targetClusterSize` regardless of corpus size — the k ∝ n contract
-    * SemDeDup needs: within-cluster pair work is ~size²/2 per cluster, so
-    * a FIXED k over a growing corpus goes quadratic, while k = n/target
-    * keeps per-cluster work flat and spends the growth on more clusters
-    * (which parallelize). Ceil division so small corpora still split.
-    */
-  def scaledK(n: Long, targetClusterSize: Long = 1000L, kMin: Int = 4): Int = {
-    require(targetClusterSize >= 1, s"need targetClusterSize >= 1, got $targetClusterSize")
-    require(kMin >= 1, s"need kMin >= 1, got $kMin")
-    val k = (n + targetClusterSize - 1) / targetClusterSize
-    // the kMin floor must never push k past n: kmeansFit seeds k distinct
-    // rows, so k > n crashes the "default entry point" on tiny corpora
-    // (1-3 rows). Cap at max(n, 1) AFTER the floor; an empty corpus still
-    // returns 1 so the failure, if any, names the real problem (no rows).
-    val floored = math.max(k, kMin.toLong)
-    math.min(math.min(floored, math.max(n, 1L)), Int.MaxValue.toLong).toInt
-  }
-
   /** Full SemDeDup pass: cluster, pair within clusters, close the pair
     * graph into duplicate groups, keep the `n` best-scoring members of
     * each group ([[Dedup.clusterRepresentatives]]). Documents in no
     * qualifying pair survive untouched (singleton groups).
     *
-    * Fixed-k variant — callers at scale should prefer
-    * [[semanticRepresentativesScaled]] (k ∝ corpus size) unless k was
-    * already derived from n.
+    * `k` is fixed: within-cluster pair work is ~size²/2 per cluster, so
+    * a caller at scale derives k from the corpus size (k ∝ n keeps the
+    * per-cluster work flat as the corpus grows).
     */
   def semanticRepresentatives(
       df: DataFrame,
@@ -283,21 +264,4 @@ object Clustering {
     val labels = Dedup.nearDupClusters(df.select(col(idCol)), idCol, pairs)
     Dedup.clusterRepresentatives(df, idCol, labels, scoreCol, n)
   }
-
-  /** [[semanticRepresentatives]] with k = scaledK(count, targetClusterSize)
-    * — the corpus-size-proportional default.
-    */
-  def semanticRepresentativesScaled(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      scoreCol: String,
-      iters: Int,
-      simFp: Long,
-      targetClusterSize: Long = 1000L,
-      n: Int = 1
-  ): DataFrame =
-    semanticRepresentatives(
-      df, idCol, vecCol, scoreCol,
-      scaledK(df.count(), targetClusterSize), iters, simFp, n)
 }

@@ -22,28 +22,9 @@ object Curation {
     * every trained-tokenizer encoder already returns. Docs the counter
     * omits (no tokens) account as 0. Plug one in via [[curate]]/[[audit]]'s
     * `tokenCounter` to replace the words×1.3 parity estimate with actual
-    * trained-tokenizer output ([[tokenizerCounter]] adapts a loaded
-    * [[TextAnalysis.Tokenizer]] artifact).
+    * trained-tokenizer output (e.g. [[TextAnalysis.bpeEncode]]'s counts).
     */
   type TokenCounter = (DataFrame, String, String) => DataFrame
-
-  /** Adapt a trained tokenizer artifact ([[TextAnalysis.loadTokenizer]])
-    * into a [[TokenCounter]]: the pipeline loads the tokenizer once and
-    * every curation pass accounts in REAL model tokens — what sequence
-    * packing actually packs by — instead of the reference's ×1.3
-    * estimate. Scale shape: each encoder is the broadcast
-    * distinct-word-join apply (corpus touched once; only (id, long)
-    * count rows join back).
-    */
-  def tokenizerCounter(tok: TextAnalysis.Tokenizer): TokenCounter =
-    (docs, idCol, textCol) => (tok match {
-      case b: TextAnalysis.BpeTokenizer =>
-        TextAnalysis.bpeEncode(b, docs, idCol, textCol)
-      case w: TextAnalysis.WordPieceTokenizer =>
-        TextAnalysis.wordPieceEncode(w, docs, idCol, textCol)
-      case u: TextAnalysis.UnigramTokenizer =>
-        TextAnalysis.unigramTokenCounts(u, docs, idCol, textCol)
-    }).select(col(idCol), col("n_tokens"))
 
   /** Filter + dedup a corpus. Returns the curated rows with
     * `pred_lang`, `quality`, `token_est` columns attached.

@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions._
   *   1. `repartitionByRange` on the sort key (sampled range boundaries,
   *      one full shuffle — the same shuffle any global sort pays), pinned
   *      so both passes see identical partitions;
-  *   2. per-partition `row_number` + a broadcast of the #partitions-sized
-  *      cumulative partition counts = exact global rank.
+  *   2. per-partition `row_number` + the partition's offset, looked up
+  *      in a literal map of the #partitions-sized cumulative partition
+  *      counts (no join, so no job to broadcast it) = exact global rank.
   *
   * The pin's storage is referenced by the returned plan and freed by
   * Spark's ContextCleaner once the caller drops the result.
@@ -33,7 +34,7 @@ object Ranks {
       partitions: Int = 0
   ): (DataFrame, Long) = {
     require(sortCols.nonEmpty, "need at least one sort column")
-    val reserved = Seq("_pid", "_rn", "_offset", rankCol)
+    val reserved = Seq("_pid", "_rn", rankCol)
     require(!df.columns.exists(reserved.contains),
       s"df must not contain reserved columns ${reserved.mkString("/")}")
     val spark = df.sparkSession
@@ -50,14 +51,11 @@ object Ranks {
       var acc = 0L
       counts.keys.toSeq.sorted.map { pid => val o = (pid, acc); acc += counts(pid); o }
     }
-    val offsetDf = spark.createDataFrame(
-      if (offsets.nonEmpty) offsets else Seq((0, 0L))).toDF("_pid", "_offset")
     val localW = Window.partitionBy("_pid").orderBy(sortCols: _*)
     val ranked = ranged
       .withColumn("_rn", row_number().over(localW))
-      .join(broadcast(offsetDf), "_pid")
-      .withColumn(rankCol, col("_offset") + col("_rn"))
-      .drop("_pid", "_rn", "_offset")
+      .withColumn(rankCol, element_at(typedLit(offsets.toMap), col("_pid")) + col("_rn"))
+      .drop("_pid", "_rn")
     (ranked, n)
   }
 }

@@ -445,41 +445,6 @@ object SequencePacking {
   private def docsIndexOf(data: DataFrame): DataFrame =
     data.select(explode(col("doc_ids")).as("doc_id"), col("shard").cast("long").as("shard"))
 
-  /** Loader-side certification of an [[exportShards]] directory:
-    * recompute every shard's manifest row from the files on disk and
-    * compare against the stored manifest. Returns one row per shard —
-    * `(shard, ok, n_bins, n_docs, n_tokens, digest, a_bins, a_docs,
-    * a_tokens, a_digest)` with the stored (`n_*`/`digest`) and actual
-    * (`a_*`) sides kept so a mismatch says WHAT diverged; `ok` is false
-    * for any count/digest drift, a shard present only in the manifest
-    * (files lost), or files present with no manifest row. A training
-    * job runs this before reading; a bit flip, a lost parquet part, or
-    * a stale manifest all surface here instead of as silent training
-    * corruption.
-    */
-  def verifyShards(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    val stored = spark.read.parquet(s"$path/manifest")
-    val actual = spark.read.parquet(s"$path/data")
-      .groupBy(col("shard").cast("long").as("shard"))
-      .agg(
-        count(lit(1)).as("a_bins"),
-        sum("n_docs").as("a_docs"),
-        sum("bin_tokens").as("a_tokens"),
-        sum(binDigest).as("a_digest"))
-    stored.join(actual, Seq("shard"), "full_outer")
-      .select(
-        col("shard"),
-        coalesce(
-          col("n_bins") === col("a_bins") &&
-            col("n_docs") === col("a_docs") &&
-            col("n_tokens") === col("a_tokens") &&
-            col("digest") === col("a_digest"),
-          lit(false)).as("ok"),
-        col("n_bins"), col("n_docs"), col("n_tokens"), col("digest"),
-        col("a_bins"), col("a_docs"), col("a_tokens"), col("a_digest"))
-      .orderBy("shard")
-  }
-
   /** Surgical takedown inside EXPORTED training shards — the delete
     * verb's last mile: remove the given documents' segments from every
     * packed bin that carries them WITHOUT re-exporting the corpus. The
@@ -514,7 +479,7 @@ object SequencePacking {
     * carried any of the ids; nothing touched). Each shard swap is
     * atomic, but the cascade as a whole is not: a crash between the
     * swaps and the manifest splice leaves the rewritten shard failing
-    * [[verifyShards]] (the manifest is genuinely stale) — re-export the
+    * [[readShard]]'s certification (the manifest is genuinely stale) — re-export the
     * store to restore the green state; content can never resurrect (the
     * rewritten files simply no longer hold the victim).
     */
@@ -959,7 +924,7 @@ object SequencePacking {
     * recompute the shard's counts/token total/digest from its files
     * (partition-pruned read) and compare against the stored manifest row
     * BEFORE handing rows back — certification is the default read path,
-    * not an opt-in composition of [[verifyShards]]. LOUD on any drift
+    * not an opt-in check. LOUD on any drift
     * (lost/duplicated/corrupted bin, missing manifest row, empty shard):
     * a training job fails at read time instead of training on corrupt
     * data. Returns the shard's packed rows.
@@ -1005,7 +970,7 @@ object SequencePacking {
     * against a digest recompute of the rewritten files before the swap
     * is considered done (compaction must never be able to lose a bin
     * silently; any mismatch raises and the store is left on the
-    * already-swapped rewrite, failing [[verifyShards]]).
+    * already-swapped rewrite, failing [[readShard]]'s certification).
     * Ledger rows are all RETAINED (batch keys are the replay guard
     * forever; they are tiny — one row per batch ever appended).
     *
@@ -1199,7 +1164,7 @@ object SequencePacking {
   /** Which shards carry any of `docIds` — the takedown DISCOVERY step.
     * Resolved from the `path/docs` membership index when present
     * (index-scale: one row per document, never the corpus) and measured
-    * flat as the corpus grows (ScaleRehearsal's retract leg), UNIONED
+    * flat as the corpus grows (SCALE.md's retract leg), UNIONED
     * with a row-group-pruned scan of the unledgered bin tail (bins a
     * crashed append landed before its index backfill — empty in the
     * healthy steady state); falls back to the full `arrays_overlap`

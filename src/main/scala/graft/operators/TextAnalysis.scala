@@ -995,7 +995,7 @@ object TextAnalysis {
     * alphabet + merge products), unigram the whole-bit cost table. All
     * are bounded driver-side (merges = rounds; costs = alphabet + topK)
     * and broadcast to executors by closure. Lifecycle verbs follow the
-    * [[graft.operators.VectorSearch.writePq]] convention:
+    * persisted-index convention ([[graft.operators.VectorSearch.writeLsh]]):
     * train*Tokenizer → [[writeTokenizer]] → [[loadTokenizer]] → the
     * artifact overloads of [[bpeEncode]]/[[wordPieceEncode]]/
     * [[unigramTokenCounts]].
@@ -1176,7 +1176,7 @@ object TextAnalysis {
 
   /** Persist a trained tokenizer: flat parquet per bounded table plus a
     * `tokenizer.json` sidecar naming the family and scalar parameters —
-    * the [[graft.operators.VectorSearch.writePq]] layout. Engine-neutral:
+    * the [[graft.operators.VectorSearch.writeLsh]] layout. Engine-neutral:
     * any parquet reader can reconstruct the tokenizer. Every artifact
     * also carries its STABLE id table (`vocab`: token_id, token — the
     * [[tokenVocab]] numbering the id encoders emit), so a trainer-side

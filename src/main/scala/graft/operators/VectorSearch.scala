@@ -95,31 +95,6 @@ object VectorSearch {
       .limit(k)
       .select("id", "score_q", "score_dq")
 
-  /** Matryoshka (MRL) truncated-dimension retrieval: cosine top-k over
-    * only the first `dims` components. MRL-trained embeddings keep most
-    * of their signal in the prefix, so the coarse pass scans a `dims/d`
-    * fraction of the bytes (e.g. 16 of 64 dims = 4x less IO) and the
-    * full-dimension rescore runs only on the shortlist. Renormalization
-    * is unnecessary — cosine normalizes both sides by construction.
-    */
-  def matryoshkaTopK(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      queryVec: Array[Float],
-      dims: Int,
-      k: Int
-  ): DataFrame = {
-    require(dims >= 1, s"need dims >= 1, got $dims")
-    corpus
-      .withColumn("score",
-        VectorFunctions.cosineSim(
-          slice(col(vecCol), 1, dims), typedLit(queryVec.take(dims).toSeq)))
-      .orderBy(desc("score"), col(idCol))
-      .limit(k)
-      .select(col(idCol), col("score"))
-  }
-
   /** MMR (maximal marginal relevance) diversity re-rank: greedily pick
     * `k` of each query's candidates maximizing
     * `lambda * relevance - (1 - lambda) * max cosine to already-picked`,
@@ -654,95 +629,6 @@ object VectorSearch {
     BandedLshIndex(tables, bands, idCol, vecCol)
   }
 
-  /** Choose the band-table count L that meets each recall target — the
-    * banded-LSH sizing answer, measured per corpus instead of solved by
-    * hand: expected recall@k is the mean over sampled (query,
-    * true-neighbor) pairs of 1 - (1 - q_i)^L, where q_i = p_i^bandBits
-    * is the pair's one-table bucket-collision probability and
-    * p_i = 1 - theta_i/pi its per-plane agreement (the SimHash
-    * collision identity). Returns, per target, the smallest L whose mean
-    * clears the target PLUS the measured correlated-tables `slack`;
-    * fails loudly past `maxL` (the target needs wider bands or brute
-    * force, not more tables). The probe stage runs ONCE for all targets;
-    * each target's L search is pure driver math over the same q_i
-    * sample, so one call sizes a whole recall/cost menu.
-    *
-    * The per-pair averaging matters: f(q) = 1 - (1-q)^L is concave in
-    * q, so the closed form ceil(log(1-target)/log(1-qbar)) over a mean
-    * qbar OVERSTATES recall whenever pair difficulty varies (Jensen) —
-    * hard neighbors near 90 degrees dominate the misses.
-    *
-    * `slack` (VERDICT r13 #5) is the model's measured optimism on real
-    * corpora: the per-pair independence assumption ignores that the L
-    * tables share the corpus geometry, so misses CORRELATE across tables
-    * and measured recall lands a few points under the prediction (the
-    * sf0.1 datasheet read 0.865 measured for a 0.90 solve). The solver
-    * therefore inflates L until `model - slack >= target`, so the
-    * returned index DELIVERS the target instead of predicting it; pass
-    * `slack = 0` for the raw model answer. `target + slack` must stay
-    * below 1 — past that, no table count can absorb the correlation
-    * (widen the bands or use exact search).
-    *
-    * Cost: ONE batched exact top-k job over `sample` for the whole
-    * query panel ([[topKBatch]] bounded heaps — r17 verdict #6; the
-    * panel ids must be numeric, topKBatch's contract) + nQueries x k
-    * driver rows of math. Run on a corpus SAMPLE; the q_i distribution
-    * is a geometry property that stabilizes at modest sample sizes.
-    */
-  def calibrateBandedLMulti(
-      sample: DataFrame,
-      idCol: String,
-      vecCol: String,
-      bandBits: Int,
-      recallTargets: Seq[Double],
-      k: Int = 10,
-      nQueries: Int = 20,
-      maxL: Int = 64,
-      slack: Double = 0.05
-  ): Map[Double, Int] = {
-    require(recallTargets.nonEmpty && recallTargets.forall(t => t > 0.0 && t < 1.0),
-      s"calibrateBandedLMulti: recall targets must be in (0, 1), got ${recallTargets.mkString(",")}")
-    require(slack >= 0.0, s"calibrateBandedLMulti: slack must be >= 0, got $slack")
-    require(recallTargets.forall(_ + slack < 1.0),
-      s"calibrateBandedLMulti: target + slack must stay below 1 (targets " +
-        s"${recallTargets.mkString(",")} with slack $slack) — lower the slack, widen the " +
-        "bands, or use exact search")
-    require(nQueries >= 1 && k >= 1 && bandBits >= 1 && maxL >= 1,
-      s"calibrateBandedLMulti: nQueries/k/bandBits/maxL must be positive")
-    // deterministic query panel: the nQueries lowest ids — probed in ONE
-    // batched [[topKBatch]] job (r17 verdict #6: the per-query topK loop
-    // ran nQueries sequential driver-paced jobs for the same scores; the
-    // bounded-heap aggregate answers the whole panel in one pass). Only
-    // the per-pair SCORES feed the model, and a tie at any k-boundary
-    // means equal scores, so the q_i sample is identical to the looped
-    // form's. Non-integral ids ride on a deterministic xxhash64
-    // surrogate (the looped form never constrained the id type, and the
-    // scores are all that is read — review r18).
-    def surrogate(c: Column): Column =
-      if (isIntegral(sample.schema(idCol).dataType)) c.cast("long") else xxhash64(c)
-    val panel = sample.orderBy(col(idCol)).limit(nQueries)
-      .select(surrogate(col(idCol)).as("_cal_qid"), col(vecCol).as("_cal_qv"))
-    val corpus = sample
-      .select(surrogate(col(idCol)).as("_cal_id"), col(vecCol).as("_cal_vec"))
-    val qs = topKBatch(panel, corpus, "_cal_qid", "_cal_qv", "_cal_id", "_cal_vec", k)
-      .select(explode(col("top")).as("_t"))
-      .select(col("_t.score").cast("double")).collect()
-      .map { r =>
-        val c = math.max(-1.0, math.min(1.0, r.getDouble(0)))
-        val p = 1.0 - math.acos(c) / math.Pi
-        math.pow(p, bandBits)
-      }
-    require(qs.nonEmpty, "calibrateBandedLMulti: empty sample")
-    recallTargets.map { target =>
-      target -> (1 to maxL).find { l =>
-        qs.map(q => 1.0 - math.pow(1.0 - q, l)).sum / qs.length - slack >= target
-      }.getOrElse(throw new IllegalArgumentException(
-        f"calibrateBandedLMulti: recall $target%.2f (+ slack $slack%.2f) unreachable at " +
-          f"bandBits=$bandBits even with L=$maxL tables — widen the sweep with fewer " +
-          "bandBits or use exact search"))
-    }.toMap
-  }
-
   /** Persist the L tables as ONE dataset partitioned by (tbl, band) —
     * L x 2^bandBits leaf directories written in a single job (the
     * per-table-write form paid L job setups + commits for the same
@@ -1069,198 +955,5 @@ object VectorSearch {
       .orderBy(col("adc_score"), col("id"))
       .limit(k)
       .select("id", "adc_score")
-  }
-
-  /** True for id types that cast to a long LOSSLESSLY — the only types
-    * the calibrators' surrogate may cast instead of hash (a fractional
-    * or decimal id would truncate, colliding distinct ids onto one key
-    * and silently corrupting a membership test).
-    */
-  private def isIntegral(dt: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-  }
-
-  /** Batched multi-query ADC: ONE job answers a whole query panel over
-    * the PQ codes (the [[topKBatch]] shape for asymmetric distance).
-    * Every query's `nSub x k` integer lookup table is precomputed
-    * driver-side into one 3-level literal (panel x nSub x k longs —
-    * tiny), the codes scan cross-joins the broadcast panel index, and
-    * per-query selection runs in [[graft.plans.TopKBy]] bounded heaps.
-    * Returns (qid, top) with top = [(score, id)] where score = -adc
-    * (heaps keep the max), so best-first order IS ascending ADC with
-    * ties to the lower id — each query's ids equal [[pqSearch]]'s
-    * exactly. Panel cardinality is query-batch-sized by contract.
-    */
-  def pqSearchBatch(
-      model: PqModel,
-      codes: DataFrame,
-      queries: Seq[(Long, Seq[Float])],
-      k: Int
-  ): DataFrame = {
-    require(queries.nonEmpty, "pqSearchBatch: empty query panel")
-    require(queries.map(_._1).distinct.length == queries.length,
-      "pqSearchBatch: duplicate query ids in the panel")
-    val subDim = model.subDim
-    val dt3: Seq[Seq[Seq[Long]]] = queries.map { case (qid, qv) =>
-      require(qv.length == model.dim,
-        s"pqSearchBatch: query $qid dim ${qv.length} != codebook dim ${model.dim}")
-      val qq = qv.map(x => math.floor(x.toDouble * model.quantScale).toLong)
-      (0 until model.nSub).map { s =>
-        val qs = qq.slice(s * subDim, (s + 1) * subDim)
-        (0 until model.k).map { c =>
-          val cent = model.codebook(s)(c)
-          qs.iterator.zip(cent.iterator).map { case (a, b) => (a - b) * (a - b) }.sum
-        }
-      }
-    }
-    val dtLit = typedLit(dt3)
-    val spark = codes.sparkSession
-    val panel = broadcast(spark.createDataFrame(
-      queries.map(_._1).zipWithIndex.map { case (q, i) => (q, i + 1) }).toDF("qid", "_qidx"))
-    codes.crossJoin(panel)
-      .withColumn("_adc",
-        aggregate(
-          zip_with(sequence(lit(0), lit(model.nSub - 1)), col("pq_codes"),
-            (s, c) => element_at(element_at(element_at(dtLit, col("_qidx")), s + 1), c + 1)),
-          lit(0L), (acc, v) => acc + v))
-      .groupBy("qid")
-      .agg(graft.plans.TopKBy.topKBy(-col("_adc"), col("id"), k).as("top"))
-      .select(col("qid"), col("top"))
-  }
-
-  /** Choose the ADC shortlist size that meets a recall target — the
-    * [[calibrateBandedLMulti]] treatment for the PQ-shortlist + exact-rescore
-    * operating point (r17 verdict #5: `SearchMode.Adc` ran at a fixed
-    * shortlist with its recall only known from a hand-measured
-    * datasheet). MEASURED, not modeled: over a deterministic query panel
-    * (the `nQueries` lowest ids of `sample`, self-match inclusive — the
-    * calibration convention throughout), compute the exact cosine top-k
-    * (one [[topKBatch]] job) and the full ADC ranking to `maxShortlist`
-    * depth (one [[pqSearchBatch]] job), then take the smallest S whose
-    * mean fraction of true neighbors inside ADC's top-S clears
-    * `recallTarget + slack` — because the rescore stage is exact, a true
-    * neighbor is retrieved iff the shortlist contains it, so that
-    * fraction IS recall@k at shortlist S. Two Spark jobs total, then
-    * driver math over nQueries x k ranks; loud when even `maxShortlist`
-    * cannot clear the target (raise the codebook resolution or rescore
-    * a larger corpus fraction).
-    */
-  def calibrateAdcShortlist(
-      model: PqModel,
-      codes: DataFrame,
-      sample: DataFrame,
-      idCol: String,
-      vecCol: String,
-      recallTarget: Double = 0.9,
-      k: Int = 10,
-      nQueries: Int = 20,
-      maxShortlist: Int = 4096,
-      slack: Double = 0.0
-  ): Int = {
-    require(recallTarget > 0.0 && recallTarget < 1.0,
-      s"calibrateAdcShortlist: recall target must be in (0, 1), got $recallTarget")
-    require(slack >= 0.0 && recallTarget + slack <= 1.0,
-      s"calibrateAdcShortlist: need 0 <= slack and target + slack <= 1, got $slack")
-    require(nQueries >= 1 && k >= 1 && maxShortlist >= k,
-      s"calibrateAdcShortlist: need nQueries/k >= 1 and maxShortlist >= k")
-    // non-integral ids (the chunk store's content-hash strings, but also
-    // fractional/decimal numerics — cast('long') would collide 17.2 and
-    // 17.9 onto one key, review r18) ride on a deterministic xxhash64
-    // SURROGATE, applied identically to the sample and the codes — the
-    // calibration only ever tests id-set membership, never maps back
-    // (64-bit collisions are negligible at calibration sample sizes and
-    // would only perturb one rank)
-    def surrogate(c: Column): Column =
-      if (isIntegral(sample.schema(idCol).dataType)) c.cast("long") else xxhash64(c)
-    val sample2 = sample.select(surrogate(col(idCol)).as("_cal_id"), col(vecCol).as("_cal_vec"))
-    val codes2 = codes.withColumn("id", surrogate(col("id")))
-    val panel = sample.orderBy(col(idCol)).limit(nQueries)
-      .select(surrogate(col(idCol)).as("_cal_qid"), col(vecCol).as("_cal_qv"))
-    val panelRows = panel.collect()
-    require(panelRows.nonEmpty, "calibrateAdcShortlist: empty sample")
-    val queries = panelRows.map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
-    def topIds(df: DataFrame): Map[Long, Seq[Long]] =
-      df.collect().map { r =>
-        r.getLong(0) -> r.getSeq[org.apache.spark.sql.Row](1).map(_.getLong(1))
-      }.toMap
-    val truth = topIds(
-      topKBatch(panel, sample2, "_cal_qid", "_cal_qv", "_cal_id", "_cal_vec", k)
-        .select(col("query_id").cast("long"), col("top")))
-    val adc = topIds(pqSearchBatch(model, codes2, queries, maxShortlist))
-    // 0-based ADC rank of every true neighbor (absent => never found)
-    val ranks: Seq[Int] = truth.toSeq.flatMap { case (qid, ids) =>
-      val pos = adc.getOrElse(qid, Seq.empty).zipWithIndex.toMap
-      ids.map(id => pos.getOrElse(id, Int.MaxValue))
-    }
-    val n = ranks.length.toDouble
-    (k to maxShortlist).find { s =>
-      ranks.count(_ < s) / n - slack >= recallTarget
-    }.getOrElse(throw new IllegalArgumentException(
-      f"calibrateAdcShortlist: recall $recallTarget%.2f (+ slack $slack%.2f) unreachable " +
-        f"even at shortlist=$maxShortlist — ${ranks.count(_ < maxShortlist) / n}%.3f measured; " +
-        "raise the codebook resolution (nSub/k) or rescore a larger fraction"))
-  }
-
-  /** Persist a PQ index: the code table as parquet — partitioned by
-    * `cellCol` when given, so an IVF-PQ probe becomes parquet partition
-    * pruning (read nProbe of nLists directories) on top of the 8-64x
-    * byte cut the codes already are — plus the codebook as flat JSON
-    * metadata. The codes side is append-friendly: encode new batches
-    * against the frozen codebook ([[pqEncode]]) and append to `codes/`.
-    */
-  def writePq(
-      model: PqModel,
-      codes: DataFrame,
-      path: String,
-      cellCol: Option[String] = None,
-      numCells: Option[Int] = None
-  ): Unit =
-    graft.sources.StoreLease.withRenewableLease(path, "write-pq") { lease =>
-    val writer = cellCol match {
-      // one file per cell directory, not one per input-partition x cell
-      // (the writeLsh rationale). Count pinned so AQE cannot fold the
-      // partitioned write into one directory-creating task (writeLsh's
-      // r18 lesson); `numCells` (the IVF list count — one write task per
-      // leaf directory, the natural width at any scale) when the caller
-      // knows it, session parallelism otherwise — cells sharing a task
-      // still land in one file each.
-      case Some(c) =>
-        codes
-          .repartition(
-            numCells.getOrElse(
-              math.max(codes.sparkSession.sparkContext.defaultParallelism, 16)), col(c))
-          .write.mode("overwrite").partitionBy(c)
-      case None => codes.write.mode("overwrite")
-    }
-    writer.parquet(s"$path/codes")
-    lease.renew() // the codes write is the long pole; protect the tail
-    val flat = model.codebook.flatMap(_.flatMap(_.toSeq))
-    graft.util.Sidecar.write(
-      codes.sparkSession, s"$path/codebook.json",
-      s"""{"nSub":${model.nSub},"k":${model.k},"subDim":${model.subDim},""" +
-        s""""quantScale":${model.quantScale},"flat":[${flat.mkString(",")}]}""")
-  }
-
-  /** Load the codebook sidecar of a persisted PQ artifact (inverse of
-    * [[writePq]]'s codebook half) — the frozen-codebook consumer
-    * ([[graft.pipeline.Retriever]]'s ADC mode) needs the model; the code
-    * table is plain parquet under `codes/`.
-    */
-  def loadPqModel(spark: org.apache.spark.sql.SparkSession, path: String): PqModel = {
-    val where = s"$path/codebook.json"
-    val json = graft.util.Sidecar.read(spark, where)
-    def num(key: String): Long = graft.util.Sidecar.num(json, key, where)
-    val (nSub, k, subDim) = (num("nSub").toInt, num("k").toInt, num("subDim").toInt)
-    val flat = """"flat":\[([^\]]*)\]""".r.findFirstMatchIn(json).get.group(1)
-      .split(",").map(_.trim.toLong)
-    require(flat.length == nSub * k * subDim,
-      s"codebook.json carries ${flat.length} values, expected ${nSub * k * subDim}")
-    val codebook = Array.tabulate(nSub, k)((s, c) =>
-      flat.slice((s * k + c) * subDim, (s * k + c + 1) * subDim))
-    PqModel(codebook, num("quantScale").toInt)
   }
 }

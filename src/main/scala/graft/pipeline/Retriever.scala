@@ -12,41 +12,18 @@ import graft.operators.{ContextAssembly, Embedder, FtsIndex, HybridSearch, Vecto
   * routing, and LLM-context assembly under a token budget.
   */
 object SearchMode extends Enumeration {
-  val Vector, Keyword, Hybrid, Adc = Value // Adc needs a pqIndexPath
+  val Vector, Keyword, Hybrid = Value
 
-  /** The mode a request names in lower case: "vector", "keyword", "hybrid" or "adc". */
+  /** The mode a request names in lower case: "vector", "keyword" or "hybrid". */
   def named(name: String): Option[Value] = values.find(_.toString.toLowerCase == name)
-
-  /** Why a session configured without `search.pqIndexPath` refuses `Adc`. */
-  private[graft] val NoPqIndex = "mode adc needs a PQ index (search.pqIndexPath), and none is configured"
 }
 
-/** @param pqIndexPath a [[graft.operators.VectorSearch.writePq]] artifact
-  *   built over the chunks table (codes keyed by chunk id) — enables
-  *   [[Retriever.adcSearch]] / `SearchMode.Adc`, the adjudicated
-  *   0.9-recall operating point of the retrieval-regime table
-  *   (SCALE.md): ADC shortlist over nSub-byte codes + exact rescore of
-  *   the shortlist's float vectors. Absent = the brute/IVF/banded modes
-  *   only, unchanged.
-  */
 final class Retriever(
     spark: SparkSession,
     pipeline: Pipeline,
-    config: GraftConfig = GraftConfig.default,
-    pqIndexPath: Option[String] = None) {
+    config: GraftConfig = GraftConfig.default) {
 
   private val embedder = Embedder.provider(config.embedding)
-
-  // constructor argument wins; config.search.pqIndexPath wires the mode
-  // for CLI/REST sessions built from config alone
-  private val resolvedPqPath: Option[String] =
-    pqIndexPath.orElse(config.search.pqIndexPath)
-
-  // codebook loaded once (bounded sidecar, loud on a corrupt artifact);
-  // the codes TABLE is read per probe — stateless, no pinned blocks to
-  // leak, and the scan is nSub bytes/row behind parquet pruning
-  private lazy val pqModel: Option[VectorSearch.PqModel] =
-    resolvedPqPath.map(p => VectorSearch.loadPqModel(spark, p))
 
   /** Topic keywords for title routing (reference KNOWN_TOPICS,
     * hybrid_retriever.py:32-50).
@@ -117,70 +94,6 @@ final class Retriever(
       .select(HitColumns: _*)
   }
 
-  /** ADC-shortlist vector search — the measured 0.9-recall regime
-    * (VERDICT r13 #4; SCALE.md's retrieval-regime table adjudicated it
-    * over banded-LSH at this corpus: ≥0.9 recall at a fraction of the
-    * float bytes). Two stages: (1) asymmetric-distance top-`shortlist`
-    * over the persisted PQ codes (nSub bytes/row, integer adds, no float
-    * vector touched); (2) exact dot-product rescore of ONLY the
-    * shortlist's chunks, returning the same row shape as
-    * [[vectorSearch]]. The shortlist size is the recall knob (default
-    * max(40k, 400) — the sf0.1-ladder-measured ≥0.9 operating point at
-    * k=10: shortlist 400 reads 0.965/0.955 recall bare/façade, 100 reads
-    * only ~0.69); `titleFilter` applies at the rescore, the standard
-    * ANN-prefilter trade (a heavily-filtered query should use the exact
-    * Vector mode). Crossover note (measured, SCALE.md): at sf0.1's
-    * 2k-row corpus the façade's fixed per-probe overheads (codes scan +
-    * semi-join) exceed the float-byte savings — the regime pays off when
-    * the corpus dwarfs the shortlist, which is the 100 TB case this mode
-    * exists for.
-    */
-  def adcSearch(
-      query: String,
-      k: Int,
-      titleFilter: Option[String] = None,
-      shortlist: Int = 0
-  ): DataFrame = {
-    val path = resolvedPqPath.getOrElse(throw new IllegalStateException(
-      "SearchMode.Adc needs a Retriever(pqIndexPath = ...) pointing at a " +
-        "VectorSearch.writePq artifact whose codes are keyed by chunk id"))
-    val model = pqModel.get
-    val qv = embedder.embedOne(query)
-    val fetch = if (shortlist > 0) shortlist else math.max(k * 40, 400)
-    val ids = VectorSearch
-      .pqSearch(model, spark.read.parquet(s"$path/codes"), qv.toSeq, fetch)
-      .select("id")
-    val pred = titlePred(titleFilter)
-      .map(_ && col("embedding").isNotNull)
-      .getOrElse(col("embedding").isNotNull)
-    VectorSearch
-      .topK(chunks.join(ids, Seq("id"), "left_semi"), "embedding", qv, k, col("id"),
-        Some(pred), scorer = graft.functions.VectorFunctions.dotProduct)
-      .select(HitColumns: _*)
-  }
-
-  /** Derive the [[adcSearch]] shortlist for a recall target from THIS
-    * store's own geometry (r17 verdict #5) —
-    * [[VectorSearch.calibrateAdcShortlist]] over the persisted PQ codes
-    * and the chunks' float vectors (two batched jobs). Run once per
-    * (index, target) and pass the result as [[adcSearch]]'s `shortlist`
-    * instead of trusting the fixed default's hand-measured datasheet.
-    */
-  def calibrateAdcShortlist(
-      recallTarget: Double = 0.9,
-      k: Int = 10,
-      nQueries: Int = 20,
-      maxShortlist: Int = 4096
-  ): Int = {
-    val path = resolvedPqPath.getOrElse(throw new IllegalStateException(
-      "SearchMode.Adc needs a Retriever(pqIndexPath = ...) pointing at a " +
-        "VectorSearch.writePq artifact whose codes are keyed by chunk id"))
-    VectorSearch.calibrateAdcShortlist(
-      pqModel.get, spark.read.parquet(s"$path/codes"),
-      chunks.where(col("embedding").isNotNull), "id", "embedding",
-      recallTarget, k, nQueries, maxShortlist)
-  }
-
   /** Hybrid = RRF fusion of vector + keyword rankings (Q3/W4), with
     * vector fallback on keyword failure (lancedb_store.py:187-190), as
     * one bounded plan: both legs and the fused list are top-k
@@ -233,7 +146,6 @@ final class Retriever(
       case SearchMode.Vector  => vectorSearch(query, k, filter)
       case SearchMode.Keyword => keywordSearch(query, k, filter)
       case SearchMode.Hybrid  => hybridSearch(query, k, filter)
-      case SearchMode.Adc     => adcSearch(query, k, filter)
     }
   }
 

@@ -111,7 +111,7 @@ object LeaseProtocol {
   * histogram's write/append ([[graft.operators.TextAnalysis]]), the
   * persisted ANN
   * indexes ([[graft.operators.VectorSearch]]'s
-  * writeLsh/writeBandedLsh/writePq) and tokenizer artifacts
+  * writeLsh/writeBandedLsh) and tokenizer artifacts
   * ([[graft.operators.TextAnalysis.writeTokenizer]]) — runs under
   * [[withLease]]; a second concurrent writer — another job's append
   * racing a takedown from a different driver — fails LOUDLY at

@@ -132,32 +132,4 @@ class ClusteringSpec extends AnyFunSuite {
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(kept == Set(4L, 5L, 2L), s"got $kept")
   }
-
-  test("scaledK: ceil division, kMin floor, n cap, Int.MaxValue clamp") {
-    assert(Clustering.scaledK(0) == 1, "empty corpus still returns a valid k")
-    assert(Clustering.scaledK(1) == 1, "kMin floor must not exceed n")
-    assert(Clustering.scaledK(3) == 3, "kMin=4 floor capped at n=3")
-    assert(Clustering.scaledK(999) == 4, "kMin floor applies below one target cluster")
-    assert(Clustering.scaledK(4000) == 4, "exact division")
-    assert(Clustering.scaledK(4001) == 5, "ceil division")
-    assert(Clustering.scaledK(10, targetClusterSize = 3) == 4, "ceil(10/3)")
-    assert(Clustering.scaledK(Long.MaxValue, targetClusterSize = 1L) == Int.MaxValue)
-    intercept[IllegalArgumentException](Clustering.scaledK(5, targetClusterSize = 0))
-    intercept[IllegalArgumentException](Clustering.scaledK(5, kMin = 0))
-  }
-
-  test("semanticRepresentativesScaled survives a tiny corpus (k capped at n)") {
-    // 3 rows with kMin=4: pre-cap scaledK would ask kmeansFit for more
-    // seeds than rows and crash the default entry point
-    val tiny = Seq(
-      (1L, Array(1.0f, 0.0f), 0.2),
-      (2L, Array(0.999f, 0.01f), 0.9),
-      (3L, Array(0.0f, 1.0f), 0.5)
-    ).toDF("vec_id", "embedding", "quality")
-    val kept = Clustering
-      .semanticRepresentativesScaled(tiny, "vec_id", "embedding", "quality",
-        iters = 2, simFp = 99000000L)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(kept.subsetOf(Set(1L, 2L, 3L)) && kept.contains(3L), s"got $kept")
-  }
 }

@@ -346,7 +346,8 @@ class CurationSpec extends AnyFunSuite {
   test("tokenCounter: curate and audit account token_est in REAL trained-tokenizer counts") {
     import graft.operators.TextAnalysis
     val tok = TextAnalysis.trainBpeTokenizer(docs, "text", rounds = 3)
-    val counter = Curation.tokenizerCounter(tok)
+    val counter: Curation.TokenCounter = (d, idCol, textCol) =>
+      TextAnalysis.bpeEncode(tok, d, idCol, textCol).select(col(idCol), col("n_tokens"))
 
     // the counter's ground truth: per-doc n_tokens from the artifact encode
     val real = TextAnalysis.bpeEncode(tok, docs, "doc_id", "text")

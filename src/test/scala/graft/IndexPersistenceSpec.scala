@@ -5,57 +5,13 @@ import org.apache.spark.sql.functions._
 import graft.operators.VectorSearch
 
 /** Storage-backed index forms: the SCALE.md claims made executable —
-  * LSH signature prefixes, banded-LSH leaves and PQ cells persisted as
+  * LSH signature prefixes and banded-LSH leaves persisted as
   * parquet partitions so probing is partition pruning, verified in the
   * physical plan.
   */
 class IndexPersistenceSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
-
-  test("PQ index round-trips; cell-partitioned codes prune on probe; append path encodes against the loaded codebook") {
-    val rnd = new scala.util.Random(11)
-    val dim = 8
-    val data = (0 until 4).flatMap { c =>
-      val center = Array.fill(dim)(rnd.nextGaussian() * 10)
-      (0 until 30).map(i => (c.toLong * 100 + i, center.map(x => (x + rnd.nextGaussian() * 0.1).toFloat).toSeq))
-    }
-    val df = data.toDF("id", "vec")
-    val model = VectorSearch.pqFit(df, "id", "vec", nSub = 4, k = 4, iters = 2)
-    val withCell = df.withColumn("cell", expr("id div 100")) // the planted cluster id (0..3)
-    val codes = VectorSearch.pqEncode(model, withCell, "id", "vec", keepCols = Seq("cell"))
-
-    val dir = java.nio.file.Files.createTempDirectory("graft-pq").toString
-    VectorSearch.writePq(model, codes, dir, cellCol = Some("cell"), numCells = Some(4))
-    val loadedModel = VectorSearch.loadPqModel(spark, dir)
-    val loadedCodes = spark.read.parquet(s"$dir/codes")
-
-    // codebook + quantScale round-trip exactly
-    assert(loadedModel.quantScale == model.quantScale)
-    assert(loadedModel.codebook.map(_.map(_.toSeq).toSeq).toSeq
-      == model.codebook.map(_.map(_.toSeq).toSeq).toSeq)
-    assert(loadedCodes.count() == 120)
-
-    // search on the loaded index == search on the in-memory one
-    val qv = data.head._2
-    val mem = VectorSearch.pqSearch(model, codes, qv, 5).collect().toSeq
-    val disk = VectorSearch.pqSearch(loadedModel, loadedCodes, qv, 5).collect().toSeq
-    assert(mem == disk)
-
-    // a cell probe must reach the scan as a PartitionFilter
-    val plan = VectorSearch.pqSearch(
-      loadedModel, loadedCodes.where(col("cell") === 0), qv, 5)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [") && plan.contains("cell"),
-      s"expected partition pruning on cell in:\n${plan.take(2000)}")
-
-    // append lifecycle: a new batch encodes against the LOADED codebook
-    // bit-identically to the original model
-    val batch = Seq((999L, data.head._2)).toDF("id", "vec")
-    val a = VectorSearch.pqEncode(loadedModel, batch, "id", "vec").head().getSeq[Int](1)
-    val b = VectorSearch.pqEncode(model, batch, "id", "vec").head().getSeq[Int](1)
-    assert(a == b)
-  }
 
   test("LSH index: write/load preserves signatures and planes; extend signs with the loaded planes") {
     val rnd = new scala.util.Random(7)

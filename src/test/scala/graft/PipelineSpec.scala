@@ -386,66 +386,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(cat.flush() == Seq.empty, "idempotent on empty warehouse")
   }
 
-  test("ADC retrieval mode: shortlist + exact rescore agrees with brute vector search (r13 #4)") {
-    import graft.operators.VectorSearch
-    val (pdfDir, wh, _) = freshDirs()
-    mkPdf(pdfDir, "EP001 Spark Guide.pdf",
-      "# Spark Guide\n\nspark catalyst optimizes queries with columnar execution. " +
-        "executors run tasks over partitioned data in parallel stages.")
-    mkPdf(pdfDir, "EP002 Cooking.pdf",
-      "# Cooking\n\npasta with tomato sauce and fresh basil is a classic dish. " +
-        "slow cooking brings out flavor in vegetables and herbs.")
-    val cfg = GraftConfig(warehouseDir = wh)
-    val pipe = new Pipeline(spark, cfg)
-    pipe.processDirectory(pdfDir)
-
-    // build the PQ artifact over the chunks table (the writePq layout the
-    // retriever's adc mode loads)
-    val chunks = pipe.catalog.read("chunks")
-    val model = VectorSearch.pqFit(chunks, "id", "embedding", nSub = 8, k = 2, iters = 1)
-    val pqDir = s"$wh/../pq_index"
-    VectorSearch.writePq(model, VectorSearch.pqEncode(model, chunks, "id", "embedding"), pqDir)
-
-    val ret = new Retriever(spark, pipe, cfg, pqIndexPath = Some(pqDir))
-    // with a corpus-sized shortlist the rescore IS exact search: the two
-    // modes must return identical rows — pins the semi-join + rescore
-    val exact = ret.search("spark catalyst optimizer queries", SearchMode.Vector, 3)
-      .collect().map(_.toSeq).toSeq
-    val adcAll = ret.adcSearch("spark catalyst optimizer queries", 3,
-        shortlist = chunks.count().toInt)
-      .collect().map(_.toSeq).toSeq
-    assert(adcAll == exact, "full-shortlist ADC must equal exact vector search")
-    // at the default operating shortlist the right document still tops
-    val adc = ret.search("spark catalyst optimizer queries", SearchMode.Adc, 3).collect()
-    assert(adc.nonEmpty && adc.head.getAs[String]("document_title") == "Spark Guide")
-    // title filter applies at the rescore
-    val filtered = ret.adcSearch("spark catalyst", 5, titleFilter = Some("cooking")).collect()
-    assert(filtered.forall(_.getAs[String]("document_title") == "Cooking"))
-    // config-only wiring (the CLI/REST path): search.pqIndexPath enables
-    // the mode with no constructor argument
-    val viaConfig = new Retriever(spark, pipe,
-      cfg.copy(search = cfg.search.copy(pqIndexPath = Some(pqDir))))
-    val cfgHit = viaConfig.search("spark catalyst optimizer queries", SearchMode.Adc, 3).collect()
-    assert(cfgHit.nonEmpty && cfgHit.head.getAs[String]("document_title") == "Spark Guide")
-
-    // facade-level calibration (r18): derive the shortlist from the
-    // store's own geometry; on this tiny corpus the calibrated size is
-    // bounded by the chunk count and adcSearch at that size still hits
-    val nChunks = chunks.count().toInt
-    val calibrated = ret.calibrateAdcShortlist(
-      recallTarget = 0.6, k = 2, nQueries = 4, maxShortlist = nChunks)
-    assert(calibrated >= 2 && calibrated <= nChunks, s"calibrated=$calibrated of $nChunks")
-    val calHit = ret.adcSearch("spark catalyst optimizer queries", 3,
-      shortlist = calibrated).collect()
-    assert(calHit.nonEmpty)
-
-    // without an artifact the mode fails loudly, never silently falls back
-    val bare = new Retriever(spark, pipe, cfg)
-    val e = intercept[IllegalStateException](bare.search("spark", SearchMode.Adc, 3))
-    assert(e.getMessage.contains("pqIndexPath"), e.getMessage)
-    intercept[IllegalStateException](bare.calibrateAdcShortlist())
-  }
-
   test("pipeline flush invalidates the cached FTS index (no stale-corpus search results)") {
     val (pdfDir, wh, _) = freshDirs()
     mkPdf(pdfDir, "EP001 Widget.pdf",

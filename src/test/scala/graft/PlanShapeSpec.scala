@@ -596,4 +596,16 @@ class PlanShapeSpec extends AnyFunSuite {
       assert(nodes.exists(_.nodeName == "TakeOrderedAndProject"), s"$name keeps its top-k")
     }
   }
+
+  test("global rank adds partition offsets without a join: no broadcast exchange") {
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+    val df = spark.range(0, 500).select((col("id") * 7 % 500).as("k"))
+    val (ranked, n) = graft.operators.Ranks.withGlobalRank(df, Seq(col("k")), partitions = 4)
+    val nodes = executedNodes(ranked)
+    assert(!nodes.exists(_.isInstanceOf[BroadcastExchangeLike]),
+      "the offsets must not broadcast-join the ranked rows:\n" +
+        ranked.queryExecution.explainString(ExplainMode.fromString("formatted")))
+    val rows = ranked.collect().map(r => r.getLong(0) -> r.getLong(1))
+    assert(n == 500L && rows.forall { case (k, rk) => rk == k + 1 }, rows.take(10).mkString(","))
+  }
 }

@@ -163,7 +163,7 @@ class RestServerSpec extends AnyFunSuite {
     }
   }
 
-  test("REST adc search without a configured PQ index is a 400 that names the index, not a 500") {
+  test("REST adc search is a 400 as an unknown mode, not a 500") {
     val base = Files.createTempDirectory("graft-rest-adc").toString
     val pdfDir = s"$base/pdfs"; Files.createDirectories(Paths.get(pdfDir))
     mkPdf(pdfDir, "EP001 Spark Guide.pdf", "# Spark Guide\n\nspark processes distributed data.")
@@ -172,7 +172,7 @@ class RestServerSpec extends AnyFunSuite {
     withServer(cfg) { (_, post) =>
       val r = post("/search", """{"query":"spark","mode":"adc"}""")
       assert(r.statusCode == 400, s"${r.statusCode}: ${r.body}")
-      assert(r.body.contains("PQ index"), r.body)
+      assert(r.body.contains("Invalid search mode: adc. Use: vector, hybrid, keyword"), r.body)
     }
   }
 

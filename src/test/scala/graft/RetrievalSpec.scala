@@ -17,7 +17,7 @@ class RetrievalSpec extends AnyFunSuite {
   ).toDF("doc_id", "text")
 
   test("hybrid RRF quality floor: fusion stays at the strong leg under a weak leg (sf0.01 known-item)") {
-    // The RetrievalLadder protocol, asserted as a floor (VERDICT r10 #6):
+    // SCALE.md's known-item protocol, asserted as a floor (VERDICT r10 #6):
     // known-item retrieval over the sf0.01 documents corpus — each probe
     // is the first 60% of a source doc's words; the query vector is the
     // engine's own hashing embedder on the slice (the Retriever's query

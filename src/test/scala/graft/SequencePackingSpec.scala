@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.SequencePacking
 
@@ -223,7 +224,7 @@ class SequencePackingSpec extends AnyFunSuite {
     assert(got.values.toSet.size == 3)
 
     // the manifest certifies this layout too (digest is shard-layout-independent)
-    assert(SequencePacking.verifyShards(spark, dir).collect().forall(_.getAs[Boolean]("ok")))
+    assert(SequencePackingSpec.verifyShards(spark, dir).collect().forall(_.getAs[Boolean]("ok")))
 
     // a different epoch seed yields a different (but reproducible) layout
     val epoch1 = TrainingOrder.shuffled(packed, "bin_id", "epoch1", nShards = 3).drop("pos")
@@ -237,7 +238,7 @@ class SequencePackingSpec extends AnyFunSuite {
     val packed = SequencePacking.packSequences(df, "id", "tok", "ids", budget = 40, partitions = 1)
     SequencePacking.exportShards(packed, dir, nShards = 3)
 
-    val clean = SequencePacking.verifyShards(spark, dir).collect()
+    val clean = SequencePackingSpec.verifyShards(spark, dir).collect()
     assert(clean.length == 3 && clean.forall(_.getAs[Boolean]("ok")), "intact export must verify")
 
     // tamper: drop one shard's files entirely — files lost, manifest stale
@@ -245,7 +246,7 @@ class SequencePackingSpec extends AnyFunSuite {
       val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete()
     }
     rm(new java.io.File(s"$dir/data/shard=1"))
-    val tampered = SequencePacking.verifyShards(spark, dir).collect()
+    val tampered = SequencePackingSpec.verifyShards(spark, dir).collect()
       .map(r => r.getAs[Long]("shard") -> r.getAs[Boolean]("ok")).toMap
     assert(!tampered(1L), "the gutted shard must fail verification")
     assert(tampered(0L) && tampered(2L), "untouched shards must stay green")
@@ -295,7 +296,7 @@ class SequencePackingSpec extends AnyFunSuite {
     assert(untouchedAfter == untouchedFiles, "an unaffected shard was rewritten")
 
     // the spliced manifest re-certifies the whole export
-    val verdicts = SequencePacking.verifyShards(spark, dir).collect()
+    val verdicts = SequencePackingSpec.verifyShards(spark, dir).collect()
     assert(verdicts.forall(_.getAs[Boolean]("ok")), "manifest must re-certify after retraction")
 
     // unknown ids: nothing touched, zero returned
@@ -315,7 +316,7 @@ class SequencePackingSpec extends AnyFunSuite {
     java.nio.file.Files.move(
       java.nio.file.Paths.get(s"$staleTmp/m"),
       java.nio.file.Paths.get(s"$dir/manifest"))
-    assert(SequencePacking.verifyShards(spark, dir).collect()
+    assert(SequencePackingSpec.verifyShards(spark, dir).collect()
       .exists(!_.getAs[Boolean]("ok")), "fixture: stale manifest must be red")
     assert(SequencePacking.retractFromShards(spark, dir, Seq(victim)) == 0L,
       "a retract re-run must not claim to fix staleness")
@@ -402,7 +403,7 @@ class SequencePackingSpec extends AnyFunSuite {
       }
     }
     assert(!after.exists(_.getSeq[Long](4).contains(victim)))
-    assert(SequencePacking.verifyShards(spark, dir).collect().forall(_.getAs[Boolean]("ok")))
+    assert(SequencePackingSpec.verifyShards(spark, dir).collect().forall(_.getAs[Boolean]("ok")))
   }
 
   test("appendShards: incremental refresh == one-shot export of the union; replay appends nothing") {
@@ -436,7 +437,7 @@ class SequencePackingSpec extends AnyFunSuite {
       .map(r => (r.getAs[Long]("shard"), r.getAs[Long]("n_bins"), r.getAs[Long]("n_docs"),
         r.getAs[Long]("n_tokens"), r.getAs[Long]("digest"))).sortBy(_._1).toSeq
     assert(manifestOf(inc) == manifestOf(oneShot), "manifests (digests included) must match")
-    assert(SequencePacking.verifyShards(spark, inc).collect().forall(_.getAs[Boolean]("ok")))
+    assert(SequencePackingSpec.verifyShards(spark, inc).collect().forall(_.getAs[Boolean]("ok")))
 
     // the membership index covers old and new docs alike
     val indexed = spark.read.parquet(s"$inc/docs").collect()
@@ -472,7 +473,7 @@ class SequencePackingSpec extends AnyFunSuite {
     assert(manifestOf(inc) == manifestOf(oneShot),
       "a replay across the manifest-before-ledger crash window must not double-add")
     assert(snapshot(inc) == snapshot(oneShot))
-    assert(SequencePacking.verifyShards(spark, inc).collect().forall(_.getAs[Boolean]("ok")))
+    assert(SequencePackingSpec.verifyShards(spark, inc).collect().forall(_.getAs[Boolean]("ok")))
 
     // a second DISTINCT batch keeps extending; ids never collide
     val more = (100L to 110L).map(i => (i, 5L, (1L to 5L).map(j => i * 100 + j)))
@@ -481,10 +482,10 @@ class SequencePackingSpec extends AnyFunSuite {
     assert(SequencePacking.appendShards(packedM, inc, batchKey = "run#2") > 0L)
     val bins = spark.read.parquet(s"$inc/data").select("bin_id").collect().map(_.getLong(0))
     assert(bins.distinct.length == bins.length, "bin ids must stay unique across appends")
-    assert(SequencePacking.verifyShards(spark, inc).collect().forall(_.getAs[Boolean]("ok")))
+    assert(SequencePackingSpec.verifyShards(spark, inc).collect().forall(_.getAs[Boolean]("ok")))
     // and takedown still works across the appended corpus (index-resolved)
     assert(SequencePacking.retractFromShards(spark, inc, Seq(105L)) == 1L)
-    assert(SequencePacking.verifyShards(spark, inc).collect().forall(_.getAs[Boolean]("ok")))
+    assert(SequencePackingSpec.verifyShards(spark, inc).collect().forall(_.getAs[Boolean]("ok")))
   }
 
   test("takedowns win over appends: tombstones scrub re-arrivals and crash-replays cannot resurrect") {
@@ -506,7 +507,7 @@ class SequencePackingSpec extends AnyFunSuite {
     assert(SequencePacking.appendShards(reBatch, dir, batchKey = "run#re") > 0L)
     assert(!docsInStore().contains(7L), "a tombstoned doc must be scrubbed from later appends")
     assert(docsInStore().contains(200L), "fresh content in the same batch must land")
-    assert(SequencePacking.verifyShards(spark, dir).collect().forall(_.getAs[Boolean]("ok")))
+    assert(SequencePackingSpec.verifyShards(spark, dir).collect().forall(_.getAs[Boolean]("ok")))
     // the membership index holds no trace of the scrubbed doc
     assert(spark.read.parquet(s"$dir/docs").where(col("doc_id") === 7L).isEmpty)
 
@@ -533,7 +534,7 @@ class SequencePackingSpec extends AnyFunSuite {
     SequencePacking.appendShards(crashBatch, dir, batchKey = "run#crash")
     assert(!docsInStore().contains(300L),
       "the replay's pre-landing scrub must not re-land the victim")
-    assert(SequencePacking.verifyShards(spark, dir).collect().forall(_.getAs[Boolean]("ok")))
+    assert(SequencePackingSpec.verifyShards(spark, dir).collect().forall(_.getAs[Boolean]("ok")))
     // the committed replay stays a no-op, the victim stays gone, and the
     // completed append cleared its pending marker (healthy takedowns are
     // index-only again)
@@ -560,7 +561,7 @@ class SequencePackingSpec extends AnyFunSuite {
     SequencePacking.appendShards(crash2, dir, batchKey = "run#crash2")
     assert(!docsInStore().contains(400L),
       "the replay must finish the crashed takedown before its ledger commits")
-    assert(SequencePacking.verifyShards(spark, dir).collect().forall(_.getAs[Boolean]("ok")))
+    assert(SequencePackingSpec.verifyShards(spark, dir).collect().forall(_.getAs[Boolean]("ok")))
 
     // a RE-EXPORT resets the tombstones: deliberately re-included content
     // is authoritative and later appends must not scrub it
@@ -589,7 +590,7 @@ class SequencePackingSpec extends AnyFunSuite {
       .select(col("shard").cast("long")).distinct().collect().map(_.getLong(0)).toSet
     assert(shardsUsed == (0L to 7L).toSet,
       s"appends must spread across the configured 8-shard layout, got $shardsUsed")
-    assert(SequencePacking.verifyShards(spark, dir).collect().forall(_.getAs[Boolean]("ok")))
+    assert(SequencePackingSpec.verifyShards(spark, dir).collect().forall(_.getAs[Boolean]("ok")))
 
     // EMPTIED store: retract the only doc of a fresh store (manifest ends
     // up with zero rows), then append — must not NPE and must keep mod 8
@@ -598,7 +599,7 @@ class SequencePackingSpec extends AnyFunSuite {
     assert(SequencePacking.retractFromShards(spark, dir2, Seq(42L)) == 1L)
     assert(spark.read.parquet(s"$dir2/manifest").isEmpty)
     assert(SequencePacking.appendShards(wide, dir2, batchKey = "run#after-empty") > 0L)
-    assert(SequencePacking.verifyShards(spark, dir2).collect().forall(_.getAs[Boolean]("ok")))
+    assert(SequencePackingSpec.verifyShards(spark, dir2).collect().forall(_.getAs[Boolean]("ok")))
   }
 
   test("membership index keyed (doc_id, shard): a re-carried doc's NEW shard is indexed; takedown reaches both copies") {
@@ -620,7 +621,7 @@ class SequencePackingSpec extends AnyFunSuite {
     // an index-resolved takedown reaches both copies
     assert(SequencePacking.retractFromShards(spark, dir, Seq(42L)) == 2L)
     assert(spark.read.parquet(s"$dir/data").isEmpty)
-    assert(SequencePacking.verifyShards(spark, dir).collect().forall(_.getAs[Boolean]("ok")))
+    assert(SequencePackingSpec.verifyShards(spark, dir).collect().forall(_.getAs[Boolean]("ok")))
   }
 
   test("tombstone-scrub sweep: random batches + random tombstone sets match an independent reference slicer") {
@@ -687,7 +688,7 @@ class SequencePackingSpec extends AnyFunSuite {
         assert(dids == edids && lens == elens && ids == eids && sh == esh,
           s"trial $trial bin $b diverged from the reference slicer")
       }
-      assert(SequencePacking.verifyShards(spark, dir).collect().forall(_.getAs[Boolean]("ok")),
+      assert(SequencePackingSpec.verifyShards(spark, dir).collect().forall(_.getAs[Boolean]("ok")),
         s"trial $trial: store must certify after a scrubbed append")
       // the membership index is exactly the kept docs plus the sentinel
       val idx = spark.read.parquet(s"$dir/docs").select("doc_id")
@@ -755,13 +756,13 @@ class SequencePackingSpec extends AnyFunSuite {
     assert(files("data/shard=0") == 1 && files("data/shard=1") == 1)
     assert(files("meta") == 1)
     assert(snapshot() == before, "compaction must be content-identical")
-    assert(SequencePacking.verifyShards(spark, dir).collect().forall(_.getAs[Boolean]("ok")))
+    assert(SequencePackingSpec.verifyShards(spark, dir).collect().forall(_.getAs[Boolean]("ok")))
 
     // ledger rows survive: a replayed batch is still a no-op
     assert(SequencePacking.appendShards(packOf(all.drop(2 * third)), dir, "b2") == 0L)
     // and the store stays fully operable: takedown + certified read
     assert(SequencePacking.retractFromShards(spark, dir, Seq(5L)) == 1L)
-    assert(SequencePacking.verifyShards(spark, dir).collect().forall(_.getAs[Boolean]("ok")))
+    assert(SequencePackingSpec.verifyShards(spark, dir).collect().forall(_.getAs[Boolean]("ok")))
     assert(SequencePacking.readShard(spark, dir, 0L).count() > 0L)
   }
 
@@ -873,5 +874,41 @@ class SequencePackingSpec extends AnyFunSuite {
 
   private def rmDir(f: java.io.File): Unit = {
     val kids = f.listFiles(); if (kids != null) kids.foreach(rmDir); f.delete()
+  }
+}
+
+object SequencePackingSpec {
+
+  /** Integrity check of a [[SequencePacking.exportShards]] directory:
+    * recompute every shard's manifest row from the files on disk and
+    * compare against the stored manifest. Returns one row per shard —
+    * `(shard, ok, n_bins, n_docs, n_tokens, digest, a_bins, a_docs,
+    * a_tokens, a_digest)` with the stored (`n_*`/`digest`) and actual
+    * (`a_*`) sides kept so a mismatch says WHAT diverged; `ok` is false
+    * for any count/digest drift, a shard present only in the manifest
+    * (files lost), or files present with no manifest row, so a bit
+    * flip, a lost parquet part or a stale manifest all surface here.
+    */
+  def verifyShards(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
+    val stored = spark.read.parquet(s"$path/manifest")
+    val actual = spark.read.parquet(s"$path/data")
+      .groupBy(col("shard").cast("long").as("shard"))
+      .agg(
+        count(lit(1)).as("a_bins"),
+        sum("n_docs").as("a_docs"),
+        sum("bin_tokens").as("a_tokens"),
+        sum(SequencePacking.binDigest).as("a_digest"))
+    stored.join(actual, Seq("shard"), "full_outer")
+      .select(
+        col("shard"),
+        coalesce(
+          col("n_bins") === col("a_bins") &&
+            col("n_docs") === col("a_docs") &&
+            col("n_tokens") === col("a_tokens") &&
+            col("digest") === col("a_digest"),
+          lit(false)).as("ok"),
+        col("n_bins"), col("n_docs"), col("n_tokens"), col("digest"),
+        col("a_bins"), col("a_docs"), col("a_tokens"), col("a_digest"))
+      .orderBy("shard")
   }
 }

@@ -44,7 +44,7 @@ class StoreLeaseSpec extends AnyFunSuite {
     }
     // readers never need the lease
     assert(SequencePacking.readShard(spark, dir, 0L).count() > 0L)
-    assert(SequencePacking.verifyShards(spark, dir).where(!org.apache.spark.sql.functions.col("ok")).isEmpty)
+    assert(SequencePackingSpec.verifyShards(spark, dir).where(!org.apache.spark.sql.functions.col("ok")).isEmpty)
     // and the rival's lease is untouched by the refused attempts
     assert(Files.readString(Paths.get(dir, StoreLease.LockFileName)).startsWith("rival@otherhost#1|"))
   }
@@ -144,7 +144,7 @@ class StoreLeaseSpec extends AnyFunSuite {
     val survivors = spark.read.parquet(s"$dir/data")
       .select(explode(col("doc_ids")).as("d")).where(col("d") === 901L)
     assert(survivors.isEmpty, "tombstoned doc survived the in-lease heal")
-    assert(SequencePacking.verifyShards(spark, dir).where(!col("ok")).isEmpty)
+    assert(SequencePackingSpec.verifyShards(spark, dir).where(!col("ok")).isEmpty)
   }
 
   // ---- renewal (r16 verdict #2) -------------------------------------

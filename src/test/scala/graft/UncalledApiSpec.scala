@@ -19,12 +19,12 @@ class UncalledApiSpec extends AnyFunSuite {
     assert(exit == 0, s"uncalled_api.py exited $exit:\n$out")
   }
 
-  test("localCheckpoint( occurs under src/main/scala/graft only in util/Checkpoints.scala (tools/ aside)") {
+  test("localCheckpoint( occurs under src/main/scala/graft only in util/Checkpoints.scala") {
     val root = java.nio.file.Paths.get(sys.props("user.dir"), "src", "main", "scala", "graft")
     val allowed = Set(root.resolve("util").resolve("Checkpoints.scala"))
     val offenders = scala.util.Using.resource(java.nio.file.Files.walk(root)) { paths =>
       paths.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala") && !p.startsWith(root.resolve("tools")) && !allowed(p))
+        .filter(p => p.toString.endsWith(".scala") && !allowed(p))
         .filter(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8").contains("localCheckpoint("))
         .map(root.relativize(_).toString)
         .toList.sorted

@@ -175,10 +175,10 @@ class VectorFunctionsSpec extends AnyFunSuite {
       queryIds.map(qid => (exactSets(qid) & fetch(qid)).size / 10.0).sum / queryIds.size
 
     // IVF. The sf0.01 "structure-aligned" premise does NOT transfer: at
-    // sf0.1 every learned cell contains all 10 labels (measured via
-    // tools/RecallProbe — the corpus has no k-means-separable
-    // macro-structure), so recall tracks the SCAN FRACTION nProbe/nLists,
-    // and the sf0.01 operating point (10/4) measures 0.770 here. The
+    // sf0.1 every learned cell contains all 10 labels (measured: the
+    // corpus has no k-means-separable macro-structure), so recall tracks
+    // the SCAN FRACTION nProbe/nLists, and the sf0.01 operating point
+    // (10/4) measures 0.770 here. The
     // sf0.1 operating point compensates with a higher probed fraction:
     // nLists=8 nProbe=6 measures 0.945 (nProbe=5: 0.900). Both the
     // degradation and the compensating point are recorded in SCALE.md —
@@ -217,8 +217,8 @@ class VectorFunctionsSpec extends AnyFunSuite {
     assert(lshRecall >= 0.8,
       f"sf0.1 LSH recall@10 $lshRecall%.3f below the 0.8 operating-point floor")
 
-    // Banded multi-table LSH: the RetrievalLadder datasheet floors
-    // (SCALE.md round-10 table). On this wide-angle corpus the band-OR
+    // Banded multi-table LSH: the retrieval datasheet floors (SCALE.md
+    // round-10 table). On this wide-angle corpus the band-OR
     // layout's recall is governed by L alone (recall = 1 - (1-q)^L, q
     // the per-table collision rate ~ 0.05 at b=6) — assert the L=16
     // point AND the monotone climb from L=4, so a signer regression
@@ -239,36 +239,6 @@ class VectorFunctionsSpec extends AnyFunSuite {
     assert(bandedL16 >= bandedL4 + 0.2,
       f"banded recall must climb with L: L=4 $bandedL4%.3f vs L=16 $bandedL16%.3f")
 
-    // calibrateBandedLMulti: the sizing answer must DELIVER its target,
-    // measured (VERDICT r10 #4, tightened r13 #5). Calibration predicts
-    // recall from sampled neighbor-pair angles (q_i = p_i^b, recall =
-    // mean 1-(1-q_i)^L) in the same inclusive convention recallOf uses,
-    // and since r14 the solver folds the measured correlated-tables
-    // slack (default 0.05) into the L search — so the MEASURED recall at
-    // the returned L must now clear the target itself, not target-slack.
-    val targetCal = 0.5
-    // both targets from one probe panel (0.7 is read further down)
-    val calibrated = VectorSearch.calibrateBandedLMulti(
-      emb, "vec_id", "embedding", bandBits = 6, recallTargets = Seq(targetCal, 0.7))
-    val calibratedL = calibrated(targetCal)
-    info(s"calibrated L=$calibratedL for target $targetCal at b=6")
-    assert(calibratedL >= 4 && calibratedL <= 40,
-      s"calibrated L=$calibratedL outside the sane band [4, 40] for target $targetCal")
-    val calRecall = bandedRecallAt(6, calibratedL)
-    info(f"measured recall@10 at calibrated L=$calibratedL: $calRecall%.3f")
-    assert(calRecall >= targetCal,
-      f"calibrated index recall $calRecall%.3f misses target $targetCal — the folded slack " +
-        "must make calibrate(t) deliver t")
-    // the raw-model answer (slack = 0) stays available and is never larger
-    val rawL = VectorSearch.calibrateBandedLMulti(
-      emb, "vec_id", "embedding", bandBits = 6, recallTargets = Seq(targetCal), slack = 0.0)(targetCal)
-    assert(rawL <= calibratedL, s"raw model L=$rawL must not exceed slack-folded L=$calibratedL")
-    // more ambition costs more tables — the curve's direction is part
-    // of the contract
-    val calibratedHigher = calibrated(0.7)
-    assert(calibratedHigher > calibratedL,
-      s"L must grow with the recall target: 0.5 -> $calibratedL, 0.7 -> $calibratedHigher")
-
     // SQ8 integer-dot search: near-exact (datasheet 0.985)
     val q8 = VectorSearch.quantizeInt8(emb, "vec_id", "embedding").persist()
     val q8Rows = queryIds.map { qid =>
@@ -282,19 +252,6 @@ class VectorFunctionsSpec extends AnyFunSuite {
     q8.unpersist()
     info(f"sf0.1 SQ8 recall@10: $sq8Recall%.3f")
     assert(sq8Recall >= 0.9, f"sf0.1 SQ8 recall@10 $sq8Recall%.3f below 0.9")
-
-    // MRL-16 prefix: the LOW recall is itself the documented contract
-    // (non-MRL-trained embeddings carry little prefix signal — the
-    // q_retrieval_eval finding, quantified in the SCALE.md datasheet);
-    // if this ever measures high, the corpus changed and the datasheet
-    // is stale
-    val mrl16 = recallOf { qid =>
-      VectorSearch.matryoshkaTopK(emb, "vec_id", "embedding", queries(qid), 16, 10)
-        .select("vec_id").collect().map(_.getLong(0)).toSet
-    }
-    info(f"sf0.1 MRL-16 recall@10: $mrl16%.3f")
-    assert(mrl16 >= 0.05 && mrl16 < 0.6,
-      f"sf0.1 MRL-16 recall@10 $mrl16%.3f outside the documented low-signal band [0.05, 0.6); update SCALE.md")
   }
 
   test("SQL registration works") {
@@ -398,22 +355,6 @@ class VectorFunctionsSpec extends AnyFunSuite {
     val recall = (sq8Top & exactTop).size / 10.0
     assert(recall >= 0.8, s"SQ8 recall@10 = $recall")
     q.unpersist()
-  }
-
-  test("matryoshkaTopK scores equal full cosine over the truncated prefix") {
-    import graft.operators.VectorSearch
-    val corpus = Seq(
-      (1L, Seq(1.0f, 0.0f, 5.0f, 5.0f)),
-      (2L, Seq(0.0f, 1.0f, 5.0f, 5.0f)),
-      (3L, Seq(1.0f, 1.0f, -5.0f, -5.0f))
-    ).toDF("id", "vec")
-    val query = Array(1.0f, 0.0f, 0.0f, 0.0f)
-    val got = VectorSearch.matryoshkaTopK(corpus, "id", "vec", query, dims = 2, k = 3)
-      .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    // prefix-2 cosines vs (1,0): id1 = 1.0, id3 = 1/sqrt(2), id2 = 0.0 —
-    // the full-dim tail (which would rank id2 ~ id1) is ignored
-    assert(got.map(_._1).toSeq == Seq(1L, 3L, 2L), got.toSeq.toString)
-    assert(math.abs(got(1)._2 - 1.0 / math.sqrt(2)) < 1e-9)
   }
 
   test("SimHashSignature kernel == Seq[Float] UDF reference == driver signatureOf") {
