@@ -12,19 +12,19 @@ import graft.util.SessionIndices.Resident
   * src/load/lancedb_store.py:192-222).
   *
   * Scale design:
-  *   - The session-resident postings ([[buildCached]], [[extendForBatch]])
+  *   - The session-resident postings ([[buildCached]], [[following]])
   *     are hash-partitioned by `term` into the session's shuffle-partition
   *     count — the single shuffle of the build, placed before the
   *     `groupBy(doc, term)` tf count — and pinned eagerly with that
   *     partitioning stated (`graftbridge.keepHashPartitioning`).
-  *     Every batch fragment is laid out the same way, so their union
-  *     keeps it too. At 100 TB the postings table is written bucketed by
-  *     term so query-time term lookups touch only matching buckets.
+  *     Every fragment is laid out the same way, so their union keeps it
+  *     too. At 100 TB the postings table is written bucketed by term so
+  *     query-time term lookups touch only matching buckets.
   *   - Corpus stats (N, avgdl) are two scalars; per-term document
   *     frequencies are derived at QUERY time over the query's terms only
   *     (a window count on the isin-filtered postings, which reads each
   *     term's rows where they sit — no Exchange), and the index itself
-  *     stays df-free so batch extension is a pure append.
+  *     stays df-free so growing it by new files is a pure append.
   *   - Query-side scoring is: filter postings to the query's terms, the
   *     per-term df window, per-(doc,term) BM25 term score, then a single
   *     `groupBy(doc)` sum — one shuffle, over candidate docs only.
@@ -37,8 +37,7 @@ object FtsIndex {
     * count on the already-filtered postings). That keeps index
     * maintenance a pure APPEND: a new batch's postings union in without
     * touching (or staleing) any existing row, which is what makes
-    * incremental ingest O(batch) instead of O(corpus) — see
-    * [[extendForBatch]].
+    * incremental ingest O(batch) instead of O(corpus) — see [[following]].
     *
     * The corpus stats carry the integer doc-length total, not a running
     * mean: `avgDocLen` is `totalDocLen / numDocs`, which is bit-equal to
@@ -52,16 +51,9 @@ object FtsIndex {
       totalDocLen: Long,
       // the pinned postings fragments `postings` unions (empty for a
       // single build); a resident entry owns their checkpoint RDDs and
-      // releases ALL of them on invalidate, or a long-lived session
-      // would leak one pin per batch
-      retained: Seq[DataFrame] = Nil,
-      // RUN-SCOPED token of the last batch unioned in — the idempotence
-      // stamp that lets a replayed batch skip re-extension (see
-      // extendForBatch). Includes the run identity (checkpoint path), not
-      // just the batch id: batch ids restart from 0 on a fresh
-      // checkpoint, and a bare-id stamp would misread a new run's batch N
-      // as a replay of the old run's batch N and silently drop it.
-      lastBatchToken: Option[String] = None
+      // releases every one it does not carry over when it is replaced,
+      // or a long-lived session would leak one pin per batch
+      retained: Seq[DataFrame] = Nil
   ) {
     def avgDocLen: Double = if (numDocs == 0) 0.0 else totalDocLen.toDouble / numDocs
   }
@@ -110,14 +102,11 @@ object FtsIndex {
     layout(tokens.select(col("doc_id"), col("doc_len"), explode(col("tokens")).as("term")))
       .groupBy("doc_id", "doc_len", "term").agg(count(lit(1)).as("tf"))
 
-  /** Incremental maintenance: extend `index` with `newDocs` WITHOUT
-    * touching the existing postings — an O(batch) union plus a constant
-    * stats update, vs the reference's O(corpus) per-batch index rebuild.
-    * Sound for append-only ingest; a deletion/upsert batch still wants a
-    * rebuild (df would be stale nowhere — df is query-derived — but
-    * removed docs' postings must go). The batch's postings are pinned
-    * like a resident build's, so only a resident entry may hold the
-    * result: its [[invalidate]] releases the pins.
+  /** Extend `index` with `newDocs` WITHOUT touching the existing
+    * postings — an O(batch) union plus a constant stats update, vs the
+    * reference's O(corpus) per-batch index rebuild. The new postings are
+    * pinned like a resident build's, so only a resident entry may hold
+    * the result: replacing the entry releases the pins.
     */
   private def append(index: Index, newDocs: DataFrame, idCol: String, textCol: String): Index = {
     val batch = pinnedIndex(newDocs, idCol, textCol)
@@ -137,7 +126,13 @@ object FtsIndex {
   // reference's write-then-index lifecycle.
   private val resident = graft.util.SessionIndices.namespace[Index]("fts")
 
-  /** Once the index has this many postings fragments, the next batch
+  /** A resident index over a table's files, stamped with the (path, size,
+    * mtime) of every file it covers.
+    */
+  private final case class Stamped(files: Seq[(String, Long, Long)], index: Index)
+  private val overFiles = graft.util.SessionIndices.namespace[Stamped]("fts-files")
+
+  /** Once the index has this many postings fragments, the next growth
     * folds them back into one build instead of adding another, so a
     * long-lived stream keeps a bounded union for every search to plan and
     * scan.
@@ -145,63 +140,53 @@ object FtsIndex {
   private val MaxFragments = 8
 
   /** A resident entry owns the pins of every fragment its postings
-    * union. Every fragment is pinned at once: a lazily persisted plan over
-    * a catalog table would be re-listed when a later append refreshes
-    * that path (`Catalog.read`), and then count the rows the per-batch
-    * fragments already carry a second time.
+    * union. Every fragment is pinned at once, so a later write to the
+    * table it was read from cannot change what it holds.
     */
   private def owned(idx: Index): Resident[Index] = Resident.pinning(idx, idx.postings)
 
   def buildCached(key: String, docs: => DataFrame, idCol: String, textCol: String): Index =
     resident.getOrBuild(key)(owned(pinnedIndex(docs, idCol, textCol)))
 
-  /** Batch-safe incremental maintenance: atomically ensure the cached
-    * index under `key` includes the batch identified by `batchToken` (a
-    * RUN-SCOPED identity, e.g. "checkpointDir#batchId" — bare batch ids
-    * collide across runs/checkpoint resets). Exactly one of these
-    * happens, under the key's monitor (which also serializes against
-    * concurrent [[buildCached]] calls):
+  /** The resident index under `key` over a parquet table's data files,
+    * brought up to date with `files` (the table's sorted (path, size,
+    * mtime) listing, taken under the key's monitor). The entry is stamped
+    * with the files it covers, and exactly one of these happens:
     *
-    *   - index present, `lastBatchToken == batchToken`: REPLAYED batch —
-    *     no-op (a retried batch must not union its postings twice);
-    *   - index present with fewer than [[MaxFragments]] fragments:
-    *     extend with the batch, stamp the token;
-    *   - otherwise (absent, or at the fragment bound): a pinned build of
-    *     `preBatchCorpus` (the table BEFORE this batch lands, without this
-    *     batch's documents), extended with the batch, stamp — or the
-    *     batch's build alone when that corpus is empty. At the bound this
-    *     folds every fragment back into one build.
+    *   - same files: the entry as it is;
+    *   - the files only grew, and the entry has fewer than
+    *     [[MaxFragments]] fragments: the added files' postings are pinned
+    *     as one more fragment, O(batch);
+    *   - anything else (a file removed or rewritten, no entry, or the
+    *     entry at its bound): one pinned build over all the files.
     *
-    * Call BEFORE appending the batch to the table: then a concurrent
-    * search can neither double-count the batch (any index it builds/uses
-    * is the one this critical section produced or preceded) nor lose it
-    * (the table only gains the batch after the index already has it).
-    *
-    * Ownership: the batch's postings are pinned here, so the index never
-    * reads `newDocs` again; any checkpoint under `newDocs` stays the
-    * caller's to release.
+    * Both builds read exactly the stamped files, with an explicit schema
+    * of the two string columns (no schema inference), so the entry covers
+    * its stamp exactly, whoever wrote the files. A search holding the
+    * replaced entry of a rebuild loses its pins; a grown entry carries
+    * the old fragments over.
     */
-  def extendForBatch(
+  def following(
+      spark: SparkSession,
       key: String,
-      batchToken: String,
-      newDocs: DataFrame,
+      files: => Seq[(String, Long, Long)],
       idCol: String,
-      textCol: String,
-      preBatchCorpus: => DataFrame
+      textCol: String
   ): Index = {
-    def stamped(idx: Index): Resident[Index] = owned(idx.copy(lastBatchToken = Some(batchToken)))
-    resident.update(key) {
-      case Some(r) if r.value.lastBatchToken.contains(batchToken) => r
-      case Some(r) if r.value.retained.length < MaxFragments => stamped(append(r.value, newDocs, idCol, textCol))
-      case _ =>
-        val corpus = preBatchCorpus
-        if (corpus.isEmpty) stamped(pinnedIndex(newDocs, idCol, textCol))
-        else stamped(append(pinnedIndex(corpus, idCol, textCol), newDocs, idCol, textCol))
-    }
+    def read(fs: Seq[(String, Long, Long)]): DataFrame =
+      spark.read.schema(s"`$idCol` STRING, `$textCol` STRING").parquet(fs.map(_._1): _*)
+    overFiles.update(key) { current =>
+      val now = files
+      def stamped(idx: Index) = Resident.pinning(Stamped(now, idx), idx.postings)
+      current match {
+        case Some(r) if r.value.files == now => r
+        case Some(Resident(Stamped(old, idx), _, _, _))
+            if idx.retained.length < MaxFragments && old.forall(now.toSet) =>
+          stamped(append(idx, read(now.filterNot(old.toSet)), idCol, textCol))
+        case _ => stamped(pinnedIndex(read(now), idCol, textCol))
+      }
+    }.index
   }
-
-  /** Drop the index under `key` and release the pins of its fragments. */
-  def invalidate(key: String): Unit = resident.invalidate(key)
 
   /** BM25 score expression for one (tf, df, docLen) posting.
     * idf = ln(1 + (N - df + 0.5)/(df + 0.5)) — the Robertson-Sparck Jones

@@ -16,14 +16,16 @@ import graft.sources.{Catalog, MarkdownSource, PdfSource}
   * One lazy DAG per batch ([[ingestBatch]]):
   *   binaryFile scan -> per-hash check against the ledger (J1) -> validate
   *   (F1) -> extract (U1, mapPartitions provider) -> markdown checkpoint
-  *   (S4) -> chunk flatMap (U4+U5) -> embed (U6) -> extend the resident
-  *   FTS index (S7) -> load chunks, then the documents ledger.
+  *   (S4) -> chunk flatMap (U4+U5) -> embed (U6) -> load chunks, then the
+  *   documents ledger -> bring the resident FTS index up to the chunks
+  *   table's files (S7).
   *
   * Spark jobs of an incremental batch (13): 2 schema reads of the changed
   * tables; the batch pin (ledger broadcast, J1 shuffle, pin; it counts the
-  * batch); the chunks pin; the FTS fragment pin (term shuffle, pin); the
-  * chunks append (2 broadcasts, write); the ledger append (broadcast,
-  * write), or one swap with a third broadcast if the batch re-admits files.
+  * batch); the chunks pin; the chunks append (2 broadcasts, write); the
+  * ledger append (broadcast, write), or one swap with a third broadcast if
+  * the batch re-admits files; the FTS fragment pin over the appended
+  * chunks files (term shuffle, pin).
   *
   * Scale notes: every stage until the table writes is a narrow,
   * per-partition transformation except J1's per-hash aggregate and the
@@ -47,7 +49,6 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
     graft.sources.StoreLease.install(graft.sources.StoreLease.forName(n)))
 
   val catalog = new Catalog(spark, config.warehouseDir)
-  private def ftsKey = s"${config.warehouseDir}/chunks"
 
   /** Process every new-or-previously-failed PDF under `pdfDir`
     * (incremental semantics of src/pipeline.py:192-220). Returns the
@@ -69,15 +70,18 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
     * grow the resident FTS index by it. The one ingest body: both
     * [[processDirectory]] and each micro-batch of
     * [[graft.streaming.StreamingIngest]] run it. `batchToken` names the
-    * batch for the index's replay stamp (a stream's checkpoint plus its
+    * batch in the `ingest_batch` log line (a stream's checkpoint plus its
     * batch id). Returns the number of documents ingested.
     *
     * Crash-safe order: the chunks append goes first, skipping documents
     * whose chunks already landed, and the `documents` ledger is written
-    * last. A crash between the two appends leaves chunks without ledger
-    * rows, so the rerun re-admits those files and appends only their
-    * ledger rows; the reverse order would leave `completed` rows with no
-    * chunks that no rerun re-admits.
+    * after it. A crash between the two appends leaves chunks without
+    * ledger rows, so the rerun re-admits those files and appends only
+    * their ledger rows; the reverse order would leave `completed` rows
+    * with no chunks that no rerun re-admits. The index comes last, as the
+    * reference's index-after-load (pipeline.py:164-165), and it needs no
+    * crash handling: [[ftsIndex]] follows the chunks table's files, so
+    * whatever a crashed batch appended is indexed on the next call.
     */
   private[graft] def ingestBatch(
       scanned: DataFrame,
@@ -120,7 +124,7 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
     // The batch's two checkpoints, the extracted rows and the chunks, are
     // released when the batch ends, however it ends: each cuts the lineage
     // of everything built on it, so its blocks are live until the last
-    // append. The resident FTS index pins its own batch postings.
+    // append. The resident FTS index reads the appended files, not these.
     graft.util.Checkpoints.scoped(spark) { scratch =>
       // Materialize the batch ONCE and CUT its lineage before mutating
       // the tables: a recompute through J1 after the ledger append would
@@ -163,77 +167,61 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
         }
 
         // U4+U5: chunk; U6: embed — both narrow, run once: the pinned rows
-        // feed the chunks append, the ledger's chunk counts and the FTS
-        // extension.
+        // feed the chunks append and the ledger's chunk counts.
         val chunks =
           scratch.pin(embedChunkRows(chunkDocs(valid.select(col("id"), col("title"), col("markdown")))))
-        try {
-          // ids are unique in a batch (content-derived, hashes deduplicated)
-          val batchDocs = broadcast(valid.select(col("id").as("document_id")))
-          val tableChunks = if (catalog.exists("chunks")) catalog.read("chunks") else chunks.limit(0)
+        // ids are unique in a batch (content-derived, hashes deduplicated)
+        val batchDocs = broadcast(valid.select(col("id").as("document_id")))
+        val tableChunks = if (catalog.exists("chunks")) catalog.read("chunks") else chunks.limit(0)
 
-          // S7: grow the resident index by the batch BEFORE the append (the
-          // reference indexes after load, pipeline.py:164-165; a concurrent
-          // search then sees the batch in the index no earlier than in the
-          // table). A build it falls back to reads the table without this
-          // batch's documents, which may already hold an earlier attempt's
-          // chunks.
-          FtsIndex.extendForBatch(ftsKey, batchToken, chunks, "id", "text",
-            preBatchCorpus = tableChunks.join(batchDocs, Seq("document_id"), "left_anti"))
+        // replay guard: skip documents whose chunks already landed (a crash
+        // after this append and before the ledger's); parquet appends commit
+        // whole, so a document's chunks are all there or none are. The
+        // broadcast side reads the listing resolved above and is built
+        // before the append writes.
+        val presentDocs = tableChunks.select("document_id").join(batchDocs, Seq("document_id"), "left_semi")
+        catalog.append(chunks.join(broadcast(presentDocs), Seq("document_id"), "left_anti"), "chunks")
 
-          // replay guard: skip documents whose chunks already landed (a crash
-          // after this append and before the ledger's); parquet appends commit
-          // whole, so a document's chunks are all there or none are. The
-          // broadcast side reads the listing resolved above and is built
-          // before the append writes.
-          val presentDocs = tableChunks.select("document_id").join(batchDocs, Seq("document_id"), "left_semi")
-          catalog.append(chunks.join(broadcast(presentDocs), Seq("document_id"), "left_anti"), "chunks")
+        // Then the documents ledger: rows for completed and failed files.
+        // A document's chunk count rides on each of its chunks.
+        val totalByDoc = chunks.where(col("chunk_index") === 0)
+          .select(col("document_id").as("id"), col("total_chunks").cast("long"))
+        val docRows = valid
+          .select(
+            col("id"), col("path").as("source_path"), col("title"), col("file_hash"),
+            col("length").as("file_size_bytes"), col("page_count"),
+            lit(config.extraction.method).as("extraction_method"),
+            col("quality_fallback")
+          )
+          .join(broadcast(totalByDoc), Seq("id"), "left")
+          .withColumn("total_chunks", coalesce(col("total_chunks"), lit(0L)))
+          .withColumn("status", lit(DocumentStatus.Completed))
+          .withColumn("error_message", lit(null).cast("string"))
+          .withColumn("uploaded_at", current_timestamp())
+          .withColumn("processed_at", current_timestamp())
 
-          // Load the documents ledger last: rows for completed and failed
-          // files. A document's chunk count rides on each of its chunks.
-          val totalByDoc = chunks.where(col("chunk_index") === 0)
-            .select(col("document_id").as("id"), col("total_chunks").cast("long"))
-          val docRows = valid
-            .select(
-              col("id"), col("path").as("source_path"), col("title"), col("file_hash"),
-              col("length").as("file_size_bytes"), col("page_count"),
-              lit(config.extraction.method).as("extraction_method"),
-              col("quality_fallback")
-            )
-            .join(broadcast(totalByDoc), Seq("id"), "left")
-            .withColumn("total_chunks", coalesce(col("total_chunks"), lit(0L)))
-            .withColumn("status", lit(DocumentStatus.Completed))
-            .withColumn("error_message", lit(null).cast("string"))
-            .withColumn("uploaded_at", current_timestamp())
-            .withColumn("processed_at", current_timestamp())
+        val failedRows = batch.where(!isValid)
+          .select(
+            col("id"), col("path").as("source_path"), col("title"), col("file_hash"),
+            col("length").as("file_size_bytes"), col("page_count"),
+            lit(config.extraction.method).as("extraction_method"),
+            col("quality_fallback"),
+            concat(lit("validation failed: "), col("validation")).as("error_message")
+          )
+          .withColumn("total_chunks", lit(0L))
+          .withColumn("status", lit(DocumentStatus.Failed))
+          .withColumn("uploaded_at", current_timestamp())
+          .withColumn("processed_at", lit(null).cast("timestamp"))
 
-          val failedRows = batch.where(!isValid)
-            .select(
-              col("id"), col("path").as("source_path"), col("title"), col("file_hash"),
-              col("length").as("file_size_bytes"), col("page_count"),
-              lit(config.extraction.method).as("extraction_method"),
-              col("quality_fallback"),
-              concat(lit("validation failed: "), col("validation")).as("error_message")
-            )
-            .withColumn("total_chunks", lit(0L))
-            .withColumn("status", lit(DocumentStatus.Failed))
-            .withColumn("uploaded_at", current_timestamp())
-            .withColumn("processed_at", lit(null).cast("timestamp"))
-
-          val rows = docRows.unionByName(failedRows)
-          // re-admitted files replace their failed rows in one ledger swap (the
-          // reference UPDATEs the row on reprocess, sqlite_store.py:153-172)
-          if (nReadmitted == 0L) catalog.append(rows, "documents")
-          else catalog.overwrite(rows.unionByName(catalog.read("documents").join(
-            broadcast(batch.where(col("readmitted")).select("file_hash")), Seq("file_hash"), "left_anti")), "documents")
-          nIngested
-        } catch {
-          case t: Throwable =>
-            // the index may hold a batch the tables never got: rebuild it
-            // from the tables on the next use
-            FtsIndex.invalidate(ftsKey)
-            throw t
-        }
+        val rows = docRows.unionByName(failedRows)
+        // re-admitted files replace their failed rows in one ledger swap (the
+        // reference UPDATEs the row on reprocess, sqlite_store.py:153-172)
+        if (nReadmitted == 0L) catalog.append(rows, "documents")
+        else catalog.overwrite(rows.unionByName(catalog.read("documents").join(
+          broadcast(batch.where(col("readmitted")).select("file_hash")), Seq("file_hash"), "left_anti")), "documents")
+        // S7: the reference indexes after load (pipeline.py:164-165)
+        ftsIndex
+        nIngested
       }
     }
   }
@@ -415,9 +403,13 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
       .withEmbedding(chunkRows, "text", "embedding", config.embedding)
       .withColumn("created_at", current_timestamp())
 
-  /** Cached FTS index over the chunks table (built on demand). */
+  /** The resident FTS index over the chunks table, brought up to date
+    * with the table's data files on every call ([[FtsIndex.following]]),
+    * whoever wrote them: this pipeline, another `Catalog` or another
+    * process. The one place the entry changes: no write path touches it.
+    */
   def ftsIndex: FtsIndex.Index =
-    FtsIndex.buildCached(ftsKey, catalog.read("chunks"), "id", "text")
+    FtsIndex.following(spark, s"${config.warehouseDir}/chunks", catalog.dataFiles("chunks"), "id", "text")
 
   /** Cascade delete (S10/J5, src/pipeline.py:270-295): remove a document
     * and its chunks; anti-join rewrite of both tables.
@@ -515,13 +507,12 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
     cascadeImages(Seq(documentId).toDF("document_id"))
     catalog.deleteWhere("chunks", col("document_id") === documentId)
     catalog.deleteWhere("documents", col("id") === documentId)
-    FtsIndex.invalidate(ftsKey)
     graft.util.JsonLog.info("delete_document", "document_id" -> documentId)
   }
 
-  /** Flush the warehouse AND every session-resident index — every other
-    * mutation path invalidates the FTS cache, and flush must too, or a
-    * long-lived session would serve BM25 hits for a deleted corpus.
+  /** Flush the warehouse AND every session-resident index: with the
+    * tables gone nothing would refresh the resident entries, so their
+    * pins would stay held for good.
     */
   def flush(dryRun: Boolean = false): Seq[String] = {
     val dropped = catalog.flush(dryRun)
@@ -563,7 +554,6 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
         catalog.deleteMatching("chunks", doomed.withColumnRenamed("id", "document_id"), Seq("document_id"))
         catalog.deleteMatching("documents", doomed, Seq("id"))
       }
-      FtsIndex.invalidate(ftsKey)
       graft.util.JsonLog.info("force_replace_delete", "file_hash" -> hash)
     }
     // the binaryFile source accepts a single-file path: only THIS file is
@@ -652,8 +642,6 @@ final class Pipeline(spark: SparkSession, config: GraftConfig = GraftConfig.defa
           .withColumn("total_chunks", coalesce(col("_new_total"), col("total_chunks")))
           .drop("_new_total"))
         catalog.overwrite(updatedDocs, "documents")
-
-        FtsIndex.invalidate(ftsKey)
       }
       nDocs
     }

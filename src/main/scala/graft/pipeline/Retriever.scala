@@ -104,12 +104,13 @@ final class Retriever(
   def hybridSearch(query: String, k: Int, titleFilter: Option[String] = None): DataFrame = {
     val v = vectorSearch(query, k, titleFilter)
     // The fallback covers what the keyword leg does before the caller's
-    // action: `pipeline.ftsIndex` builds the resident index eagerly (its
-    // reads, tokenization and pin all run there), and plan construction
-    // analyzes eagerly. The action itself reads the resident index's
-    // pinned postings, so an `invalidate` of that index (a document
-    // delete, `flush`, a failed batch, a fold) between this call and the
-    // caller's action fails the request instead of falling back.
+    // action: `pipeline.ftsIndex` brings the resident index up to date
+    // eagerly (its reads, tokenization and pin all run there), and plan
+    // construction analyzes eagerly. The action itself reads the resident
+    // index's pinned postings, so a refresh that replaces the entry (a
+    // rebuild after chunks files were removed or rewritten, a fold) or a
+    // `flush` between this call and the caller's action fails the
+    // request instead of falling back.
     val kw =
       try keywordSearch(query, k, titleFilter)
       catch {

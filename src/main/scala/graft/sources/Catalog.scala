@@ -4,6 +4,7 @@ import java.io.IOException
 import java.nio.file.{FileVisitResult, Files, Path, Paths, SimpleFileVisitor}
 import java.nio.file.attribute.BasicFileAttributes
 import java.util.concurrent.{ConcurrentHashMap, TimeUnit}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,12 +25,13 @@ import org.apache.spark.sql.functions._
   * modification time). Each `Catalog` keeps the frame it last resolved
   * for a table together with that listing. A read whose listing matches
   * returns the kept frame: no cache refresh, no schema inference, no
-  * Spark job, so plans cached over the table (the resident FTS postings)
-  * stay loaded across queries. Any write changes the listing, whoever
-  * makes it: an append, a swap, a flush, another `Catalog` or another
-  * process. The next read
+  * Spark job, so plans cached over the table stay loaded across queries.
+  * Any write changes the listing, whoever makes it: an append, a swap, a
+  * flush, another `Catalog` or another process. The next read
   * then refreshes every cached plan over the path and resolves the table
-  * again, so no reader is served a stale listing.
+  * again, so no reader is served a stale listing. A structure derived
+  * from a table, such as the resident FTS postings, stamps itself with
+  * the table's [[dataFiles]] and follows them the same way.
   */
 final class Catalog(spark: SparkSession, warehouseDir: String) {
 
@@ -59,6 +61,22 @@ final class Catalog(spark: SparkSession, warehouseDir: String) {
         }
         df
     }
+  }
+
+  /** The table's data files: the (path, size, mtime) of every file under
+    * it whose path below the table has no segment starting with `_` or
+    * `.`, the names Spark's file index skips. Sorted; throws when the
+    * table cannot be listed.
+    */
+  def dataFiles(name: String): Seq[(String, Long, Long)] = {
+    val dir = tablePath(name)
+    def hidden(f: String): Boolean =
+      dir.relativize(Paths.get(f)).iterator().asScala.exists { s =>
+        val n = s.toString
+        n.startsWith("_") || n.startsWith(".")
+      }
+    Catalog.listing(dir).getOrElse(throw new java.io.FileNotFoundException(s"table $name: cannot list $dir"))
+      .filterNot { case (f, _, _) => hidden(f) }
   }
 
   /** Append rows (the reference's INSERT path, sqlite_store.py:120-151). */
@@ -113,7 +131,6 @@ final class Catalog(spark: SparkSession, warehouseDir: String) {
   def flush(dryRun: Boolean = false): Seq[String] = {
     val root = Paths.get(warehouseDir)
     if (!Files.exists(root)) return Seq.empty
-    import scala.jdk.CollectionConverters._
     val listing = Files.list(root)
     val tables =
       try listing.iterator().asScala.toSeq

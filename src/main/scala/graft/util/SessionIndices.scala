@@ -24,7 +24,7 @@ object SessionIndices {
   /** A built structure plus exactly the storage its build function hands over:
     * `persisted` frames are unpersisted and `pinned` checkpoint RDD ids
     * go through [[Checkpoints.release]] (blocks in local mode, files in
-    * reliable mode) when the entry is invalidated. RDD ids are numbered
+    * reliable mode) when the entry is dropped or replaced. RDD ids are numbered
     * per SparkContext, so the ids are released against `pinnedIn`, the
     * session of the frames they were read from, never whichever session
     * happens to be active at release time.
@@ -81,9 +81,6 @@ object SessionIndices {
         r.value
       }
     }
-
-    /** Drop the entry under `key` and release its storage. */
-    def invalidate(key: String): Unit = SessionIndices.invalidate(s"$name:$key")
   }
 
   def namespace[A](name: String): Namespace[A] = new Namespace[A](name)

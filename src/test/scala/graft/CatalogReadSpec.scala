@@ -88,4 +88,66 @@ class CatalogReadSpec extends AnyFunSuite {
     assert((pipe.ftsIndex eq built) && pins == pinned, "the second search rebuilt the postings")
     assert(loaded(pinned))
   }
+
+  test("keyword and hybrid search follow another writer's appended files and rewrite of the served chunks table") {
+    import graft.operators.{FtsIndex, HybridSearch}
+    val base = Files.createTempDirectory("graft-cat-xproc").toString
+    def pdfs(dir: String, docs: (String, String)*): String = {
+      Files.createDirectories(Paths.get(dir))
+      docs.foreach { case (name, body) =>
+        Files.write(Paths.get(dir, s"$name.pdf"), s"%PDF-1.4\n# $name\n\n$body".getBytes("UTF-8"))
+      }
+      dir
+    }
+    val cfg = GraftConfig(warehouseDir = s"$base/served")
+    val pipe = new Pipeline(spark, cfg)
+    val other = new Pipeline(spark, GraftConfig(warehouseDir = s"$base/other"))
+    val q = "sprockets gears widget"
+    try {
+      pipe.processDirectory(pdfs(s"$base/a",
+        "EP001 Widget" -> "the widget manual describes gears and sprockets.",
+        "EP002 Gadget" -> "the gadget handbook covers springs and levers."))
+      val retriever = new Retriever(spark, pipe, cfg)
+      assert(retriever.keywordSearch("widget gears", 3).count() > 0, "precondition: the resident index is built")
+
+      def pairs(df: org.apache.spark.sql.DataFrame, score: String): Seq[(String, Double)] =
+        df.select(col("id"), col(score)).collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+      /** keyword and hybrid through the served Retriever against a fresh
+        * build over the table.
+        */
+      def check(what: String): Seq[(String, Double)] = {
+        val fresh = FtsIndex.build(pipe.catalog.read("chunks"), "id", "text")
+        try {
+          val kw = FtsIndex.search(spark, fresh, q, 5).withColumnRenamed("doc_id", "id")
+          val hybrid = HybridSearch.rrf(retriever.vectorSearch(q, 5), kw, "id", "score", 5, cfg.search.rrfK)
+          val served = pairs(retriever.keywordSearch(q, 5), "score")
+          assert(served == pairs(kw, "score"), s"keyword $what")
+          assert(pairs(retriever.hybridSearch(q, 5), "score") == pairs(hybrid, "rrf_score"), s"hybrid $what")
+          served
+        } finally fresh.postings.unpersist()
+      }
+
+      // (a) another warehouse's ingest writes a third document; its part
+      // files land in the served tables, as another process's append would
+      other.processDirectory(pdfs(s"$base/b", "EP003 Sprocket" -> "sprockets mesh with widget gears in the gearbox."))
+      Seq("chunks", "documents").foreach { t =>
+        val parts = Files.list(Paths.get(base, "other", t))
+        try parts.filter(_.getFileName.toString.endsWith(".parquet"))
+          .forEach(p => Files.move(p, Paths.get(base, "served", t, "xproc-" + p.getFileName)))
+        finally parts.close()
+      }
+      val sprocket = pipe.catalog.read("documents").where(col("title") === "Sprocket")
+        .select("id").as[String].collect().toSeq match { case Seq(id) => id }
+      val chunkIds = pipe.catalog.read("chunks").where(col("document_id") === sprocket).select("id").as[String].collect().toSet
+      assert(check("after another writer's append").exists(h => chunkIds(h._1)),
+        "keyword search must find the document another writer appended")
+
+      // (b) a second Catalog rewrites the chunks table without one document
+      val widget = pipe.catalog.read("documents").where(col("title") === "Widget")
+        .select("id").as[String].collect().head
+      new Catalog(spark, s"$base/served").deleteWhere("chunks", col("document_id") === widget)
+      val afterDelete = check("after another writer's rewrite")
+      assert(afterDelete.nonEmpty && pipe.ftsIndex.numDocs == pipe.catalog.read("chunks").count())
+    } finally { pipe.flush(); other.flush() }
+  }
 }

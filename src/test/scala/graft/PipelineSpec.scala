@@ -582,6 +582,27 @@ class PipelineSpec extends AnyFunSuite {
     } finally pipe.flush()
   }
 
+  test("a keyword request on an unchanged warehouse runs at most 3 Spark jobs and keeps the resident index") {
+    val (pdfDir, wh, _) = freshDirs()
+    Seq("widget", "gadget").foreach(t => mkPdf(pdfDir, s"EP $t.pdf", longBody(t)))
+    val cfg = GraftConfig(warehouseDir = wh)
+    val pipe = new Pipeline(spark, cfg)
+    try {
+      assert(pipe.processDirectory(pdfDir) == 2)
+      val retriever = new Retriever(spark, pipe, cfg)
+      // the first request resolves the chunks table the batch changed
+      assert(retriever.search("widget gears", SearchMode.Keyword, 5).collect().nonEmpty)
+      val index = pipe.ftsIndex
+      var hits = 0
+      val jobs = SparkTestBase.jobsDuring {
+        hits = retriever.search("gadget sprockets", SearchMode.Keyword, 5).collect().length
+      }
+      assert(hits > 0)
+      assert(jobs <= 3, s"$jobs Spark jobs")
+      assert(pipe.ftsIndex eq index, "the unchanged warehouse replaced its resident index")
+    } finally pipe.flush()
+  }
+
   test("delete, force re-ingest, reprocess and gcImages leave no checkpoint but the resident index's") {
     import graft.pdf.PdfGen
     import graft.pdf.PdfGen.{Img, Run}
@@ -608,9 +629,15 @@ class PipelineSpec extends AnyFunSuite {
       assert(pipe.processDirectory(pdfDir, Some(md), Some(s"$pdfDir-images")) == 3)
       assert(pipe.catalog.read("images").count() == 1)
       val docA = pipe.catalog.read("documents").where(col("source_path").endsWith("/a.pdf")).head().getAs[String]("id")
+      // after each write the resident index (refreshed from the chunks
+      // table's files, with no invalidate anywhere) equals a fresh build
+      def fresh(what: String): Unit = SparkTestBase.assertFreshIndex(pipe, "gradients figure encodings", what)
       assert(leftBy(pipe.deleteDocument(docA)).isEmpty, "deleteDocument")
+      fresh("deleteDocument")
       assert(leftBy(pipe.processFile(s"$pdfDir/b.pdf", force = true)).isEmpty, "processFile(force = true)")
+      fresh("processFile(force = true)")
       assert(leftBy(assert(pipe.reprocessFromMarkdown(md) == 2L)).isEmpty, "reprocessFromMarkdown")
+      fresh("reprocessFromMarkdown")
       assert(leftBy(pipe.gcImages()).isEmpty, "gcImages")
     } finally pipe.flush()
   }

@@ -70,70 +70,85 @@ class RetrievalSpec extends AnyFunSuite {
       f"hybrid mrr@10 $hMrr%.3f must not fall below the weak leg's $bMrr%.3f")
   }
 
+  /** A pipeline over a fresh warehouse whose chunks table is written by
+    * [[SparkTestBase.appendChunks]], one file per batch.
+    */
+  private def tablePipe(name: String): (String, graft.pipeline.Pipeline) = {
+    val wh = java.nio.file.Files.createTempDirectory(name).toString
+    (wh, new graft.pipeline.Pipeline(spark, GraftConfig(warehouseDir = wh)))
+  }
+  private lazy val rows = docs.collect().map(r => (r.getLong(0).toString, r.getString(1))).toSeq
+
   test("incremental append == full rebuild (scores bit-identical, stats exact)") {
-    val batchA = docs.where($"doc_id" <= 3)
-    val batchB = docs.where($"doc_id" > 3)
-    val key = "fts-append-test"
-    FtsIndex.invalidate(key)
+    val (wh, pipe) = tablePipe("fts-append")
     try {
-      // absent entry over a non-empty pre-batch corpus: a build of batchA
-      // with batchB appended
-      val incremental = FtsIndex.extendForBatch(key, "run#1", batchB, "doc_id", "text", batchA)
+      SparkTestBase.appendChunks(wh, rows.take(3): _*)
+      pipe.ftsIndex
+      SparkTestBase.appendChunks(wh, rows.drop(3): _*)
+      val incremental = pipe.ftsIndex
       assert(incremental.retained.length == 2, "the batch must be appended, not folded into one build")
-      val full = FtsIndex.build(docs, "doc_id", "text")
-      assert(incremental.numDocs == full.numDocs)
-      assert(math.abs(incremental.avgDocLen - full.avgDocLen) < 1e-12)
-      val a = FtsIndex.search(spark, incremental, "spark data", 5).collect().map(r => (r.getLong(0), r.getDouble(1)))
-      val b = FtsIndex.search(spark, full, "spark data", 5).collect().map(r => (r.getLong(0), r.getDouble(1)))
+      val full = FtsIndex.build(pipe.catalog.read("chunks"), "id", "text")
+      assert(incremental.numDocs == full.numDocs && incremental.totalDocLen == full.totalDocLen)
+      assert(incremental.avgDocLen == full.avgDocLen)
+      val a = FtsIndex.search(spark, incremental, "spark data", 5).collect().map(r => (r.getString(0), r.getDouble(1)))
+      val b = FtsIndex.search(spark, full, "spark data", 5).collect().map(r => (r.getString(0), r.getDouble(1)))
       assert(a.toSeq == b.toSeq, "append-maintained index must score identically to a rebuild")
       full.postings.unpersist()
-    } finally FtsIndex.invalidate(key)
+    } finally pipe.flush()
   }
 
-  test("extendForBatch extends the cached index; invalidate unpersists every fragment") {
+  test("a grown chunks table extends the resident index by one fragment; a rewrite releases every fragment") {
     import graft.util.Checkpoints
     def persistent = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val key = "fts-leak-test"
-    FtsIndex.invalidate(key)
-    val pre = docs.where($"doc_id" <= 3)
-    val base = FtsIndex.buildCached(key, pre, "doc_id", "text")
-    val extended = FtsIndex.extendForBatch(key, "run#1", docs.where($"doc_id" > 3), "doc_id", "text", pre)
-    assert(extended.numDocs == 5)
-    assert(extended.retained.length == 2, "extended index must track its pinned fragments")
-    // each fragment is its own pin, held while the index lives
-    val pins = extended.retained.map(Checkpoints.pinnedRddIds(_))
-    assert(pins.forall(_.nonEmpty) && pins.reduce(_ ++ _).subsetOf(persistent) && pins.distinct.length == 2)
-    assert(Checkpoints.pinnedRddIds(base.postings) == pins.head, "the base fragment is the cold build")
-    // searching through the cache sees the extended corpus
-    val hits = FtsIndex.search(spark, FtsIndex.buildCached(key, docs, "doc_id", "text"),
-      "streaming", 5).collect()
-    assert(hits.map(_.getLong(0)).contains(5L), "doc 5 arrived via the batch extension")
+    val (wh, pipe) = tablePipe("fts-leak")
+    try {
+      SparkTestBase.appendChunks(wh, rows.take(3): _*)
+      val base = pipe.ftsIndex
+      SparkTestBase.appendChunks(wh, rows.drop(3): _*)
+      val extended = pipe.ftsIndex
+      assert(extended.numDocs == 5)
+      assert(extended.retained.length == 2, "extended index must track its pinned fragments")
+      // each fragment is its own pin, held while the index lives
+      val pins = extended.retained.map(Checkpoints.pinnedRddIds(_))
+      assert(pins.forall(_.nonEmpty) && pins.reduce(_ ++ _).subsetOf(persistent) && pins.distinct.length == 2)
+      assert(Checkpoints.pinnedRddIds(base.postings) == pins.head, "the base fragment is the cold build")
+      assert(pipe.ftsIndex eq extended, "an unchanged table keeps its entry")
+      val hits = FtsIndex.search(spark, pipe.ftsIndex, "streaming", 5).collect()
+      assert(hits.map(_.getString(0)).contains("5"), "doc 5 arrived with the second file")
 
-    FtsIndex.invalidate(key)
-    pins.foreach(ids => assert(ids.intersect(persistent).isEmpty, s"fragment pin $ids not released"))
+      // another writer rewrites the table: the next call rebuilds over the
+      // new files and releases both fragments
+      new graft.sources.Catalog(spark, wh).deleteWhere("chunks", col("id") === "2")
+      val rebuilt = pipe.ftsIndex
+      assert(rebuilt.numDocs == 4 && rebuilt.retained.isEmpty)
+      pins.foreach(ids => assert(ids.intersect(persistent).isEmpty, s"fragment pin $ids not released"))
+    } finally pipe.flush()
   }
 
-  test("extendForBatch folds the fragments into one build at its bound; stats stay exact") {
-    val key = "fts-fold-test"
-    FtsIndex.invalidate(key)
-    val corpus = (1 to 12).map(i => (i.toLong, s"doc$i " + Seq.fill(i % 4 + 1)("shared").mkString(" ")))
-      .toDF("doc_id", "text")
-    def upTo(n: Int) = corpus.where($"doc_id" <= n)
+  test("the resident index folds its fragments into one build at its bound; stats stay exact") {
+    import graft.util.Checkpoints
+    def persistent = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val (wh, pipe) = tablePipe("fts-fold")
+    val corpus = (1 to 12).map(i => (i.toString, s"doc$i " + Seq.fill(i % 4 + 1)("shared").mkString(" ")))
     try {
-      val fragments = (1 to 12).map { i =>
-        FtsIndex.extendForBatch(key, s"run#$i", corpus.where($"doc_id" === i), "doc_id", "text", upTo(i - 1))
-          .retained.length
+      var beforeFold = Set.empty[Int]
+      val fragments = corpus.zipWithIndex.map { case (row, i) =>
+        if (i == 8) beforeFold = Checkpoints.pinnedRddIds(pipe.ftsIndex.postings)
+        SparkTestBase.appendChunks(wh, row)
+        pipe.ftsIndex.retained.length
       }
-      // absent over an empty corpus: the batch's own build (no retained
-      // list); one more per batch up to the bound of 8; the next batch
-      // folds back to a pinned build plus the batch
-      assert(fragments == Seq(0, 2, 3, 4, 5, 6, 7, 8, 2, 3, 4, 5), fragments)
-      val idx = FtsIndex.buildCached(key, corpus, "doc_id", "text")
-      val full = FtsIndex.build(corpus, "doc_id", "text")
+      // the first file's own build (no retained list); one more per file
+      // up to the bound of 8; the next file folds every file back into one
+      // pinned build
+      assert(fragments == Seq(0, 2, 3, 4, 5, 6, 7, 8, 0, 2, 3, 4), fragments)
+      assert(beforeFold.size == 8 && beforeFold.intersect(persistent).isEmpty,
+        "the fold must release every fragment it replaced")
+      val idx = pipe.ftsIndex
+      val full = FtsIndex.build(pipe.catalog.read("chunks"), "id", "text")
       assert(idx.numDocs == full.numDocs && idx.totalDocLen == full.totalDocLen && idx.avgDocLen == full.avgDocLen)
       assert(idx.postings.count() == full.postings.count(), "no postings row counted twice")
       full.postings.unpersist()
-    } finally FtsIndex.invalidate(key)
+    } finally pipe.flush()
   }
 
   test("BM25: term-matching docs rank first; scores positive and ordered") {
@@ -407,14 +422,14 @@ class RetrievalSpec extends AnyFunSuite {
     sc.setCheckpointDir(s"failing://$base/ckpt")
     try {
       FailingFs.failure = new java.io.IOException("checkpoint store unavailable")
-      FtsIndex.invalidate(s"$base/wh/chunks")
+      graft.util.SessionIndices.clear()
       assert(retriever.hybridSearch("spark ranking", 5).collect().toSeq == vectorOnly,
         "hybrid must return the vector-only hits")
       assert(logged.exists(l => l.contains("hybrid_keyword_fallback") && l.contains("checkpoint store unavailable")),
         s"the fallback must be logged: $logged")
 
       FailingFs.failure = new OutOfMemoryError("simulated")
-      FtsIndex.invalidate(s"$base/wh/chunks")
+      graft.util.SessionIndices.clear()
       intercept[OutOfMemoryError](retriever.hybridSearch("spark ranking", 5))
     } finally {
       FailingFs.failure = null
@@ -423,7 +438,7 @@ class RetrievalSpec extends AnyFunSuite {
         .invoke(sc, None)
       logger.removeAppender(capture)
       logger.setLevel(level)
-      FtsIndex.invalidate(s"$base/wh/chunks")
+      graft.util.SessionIndices.clear()
     }
     // with the store back, the keyword leg serves again
     assert(retriever.hybridSearch("spark ranking", 5).collect().length == vectorOnly.length)
@@ -440,15 +455,20 @@ class RetrievalSpec extends AnyFunSuite {
     val pipe = new graft.pipeline.Pipeline(spark, cfg)
     pipe.processDirectory(s"$base/in")
     val retriever = new graft.pipeline.Retriever(spark, pipe, cfg)
-    val stored = pipe.catalog.read("chunks").select("id").as[String].collect().toSet
-    // a batch whose postings are in the resident index but whose chunks
-    // have not landed yet; its ids top the keyword ranking
-    val ghosts = (1 to 3).map(i => (s"ghost-$i", "spark ranking spark ranking spark ranking")).toDF("id", "text")
+    val before = pipe.ftsIndex
+    // a batch whose chunks have landed but whose ledger write and index
+    // refresh have not; its ids top the keyword ranking
+    val late = pipe.catalog.read("chunks").limit(3).withColumn("id", concat(lit("late-"), col("id")))
+      .withColumn("text", lit("spark ranking spark ranking spark ranking")).localCheckpoint()
+    pipe.catalog.append(late, "chunks")
     try {
-      FtsIndex.extendForBatch(s"$base/wh/chunks", "inflight#1", ghosts, "id", "text", pipe.catalog.read("chunks"))
+      val stored = pipe.catalog.read("chunks").select("id").as[String].collect().toSet
       val hits = retriever.hybridSearch("spark ranking", 3).select("id").as[String].collect().toSeq
       assert(hits.length == 3 && hits.forall(stored), s"every fused slot must hold a stored chunk: $hits")
-    } finally FtsIndex.invalidate(s"$base/wh/chunks")
+      assert(hits.exists(_.startsWith("late-")), s"the keyword leg must see the landed chunks: $hits")
+      assert(pipe.ftsIndex.numDocs == before.numDocs + 3 && pipe.ftsIndex.retained.length == 2,
+        "the search extended the index by the landed file")
+    } finally pipe.flush()
   }
 }
 

@@ -29,46 +29,27 @@ class SessionIndicesSpec extends AnyFunSuite {
 
   private def persistent: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
-  test("invalidate releases the checkpoint blocks a streaming batch handed to the FTS index") {
-    val key = uniq("handover")
-    val batch = Seq((4L, "foxtrot golf")).toDF("id", "text").localCheckpoint()
-    val batchIds = Checkpoints.pinnedRddIds(batch)
-    assert(batchIds.nonEmpty && batchIds.subsetOf(persistent), "precondition: the batch is pinned")
-    val idx = FtsIndex.extendForBatch(key, "run#0", batch, "id", "text", docs)
-    // the index pins its own postings fragments and never reads the batch
-    // again, so the batch's checkpoint stays its caller's to release
-    val fragmentPins = idx.retained.map(Checkpoints.pinnedRddIds(_))
-    assert(fragmentPins.length == 2 && fragmentPins.forall(ids => ids.nonEmpty && ids.subsetOf(persistent)))
-    assert(fragmentPins.reduce(_ ++ _).intersect(batchIds).isEmpty)
-    Checkpoints.release(batchIds, spark)
-    assert(FtsIndex.search(spark, idx, "foxtrot", 5).count() == 1L)
-    // a replayed batch is skipped by the index: it pins no new fragment
-    val replay = Seq((4L, "foxtrot golf")).toDF("id", "text").localCheckpoint()
-    val replayIds = Checkpoints.pinnedRddIds(replay)
-    val beforeReplay = persistent
-    assert(FtsIndex.extendForBatch(key, "run#0", replay, "id", "text", docs).numDocs == 4L)
-    assert(persistent == beforeReplay, "a replayed batch adds no pin")
-    Checkpoints.release(replayIds, spark)
+  test("an unchanged chunks table adds no pin, and clear() releases every fragment of the FTS entry") {
+    val wh = java.nio.file.Files.createTempDirectory("graft-fts-fragments").toString
+    val pipe = new graft.pipeline.Pipeline(spark, GraftConfig(warehouseDir = wh))
+    try {
+      SparkTestBase.appendChunks(wh, ("1", "alpha bravo"), ("2", "charlie delta"), ("3", "echo alpha"))
+      pipe.ftsIndex
+      SparkTestBase.appendChunks(wh, ("4", "foxtrot golf"))
+      val idx = pipe.ftsIndex
+      val fragmentPins = idx.retained.map(Checkpoints.pinnedRddIds(_))
+      assert(fragmentPins.length == 2 && fragmentPins.forall(ids => ids.nonEmpty && ids.subsetOf(persistent)))
+      assert(FtsIndex.search(spark, idx, "foxtrot", 5).count() == 1L)
+      // the same files again (a replayed batch appended nothing): the
+      // entry as it is, with no new pin
+      val beforeReplay = persistent
+      assert((pipe.ftsIndex eq idx) && idx.numDocs == 4L)
+      assert(persistent == beforeReplay, "an unchanged table adds no pin")
 
-    FtsIndex.invalidate(key)
-    fragmentPins.foreach(ids => assert(ids.intersect(persistent).isEmpty,
-      s"fragment pin $ids must be released with the index"))
-  }
-
-  test("an invalidate between extendForBatch and the batch's appends frees nothing the batch still reads") {
-    val key = uniq("handover-race")
-    val batch = Seq((5L, "hotel india")).toDF("id", "text").localCheckpoint()
-    val batchIds = Checkpoints.pinnedRddIds(batch)
-    val fragmentPins = Checkpoints.pinnedRddIds(FtsIndex.extendForBatch(key, "run#1", batch, "id", "text", docs).postings)
-    // a takedown (Pipeline.deleteDocument) or Pipeline.flush lands mid-batch
-    FtsIndex.invalidate(key)
-    assert(batchIds.subsetOf(persistent), "the batch's blocks survive the invalidate")
-    assert(fragmentPins.nonEmpty && fragmentPins.intersect(persistent).isEmpty, "the index's own pins go with it")
-    // the batch's table append still reads its chunks
-    val out = java.nio.file.Files.createTempDirectory("graft-handover-race").resolve("chunks").toString
-    batch.write.parquet(out)
-    assert(spark.read.parquet(out).count() == 1L)
-    Checkpoints.release(batchIds, spark)
+      SessionIndices.clear()
+      fragmentPins.foreach(ids => assert(ids.intersect(persistent).isEmpty,
+        s"fragment pin $ids must be released with the index"))
+    } finally pipe.flush()
   }
 
   private def mkPdf(dir: String, name: String, body: String): Unit = {
@@ -80,7 +61,6 @@ class SessionIndicesSpec extends AnyFunSuite {
     val base = java.nio.file.Files.createTempDirectory("graft-stream-release").toString
     val wh = s"$base/wh"
     val pipe = new graft.pipeline.Pipeline(spark, GraftConfig(warehouseDir = wh))
-    val ftsKey = s"$wh/chunks"
     val before = persistent
     def batch(i: Int) = {
       mkPdf(s"$base/in$i", s"d$i.pdf", s"# Doc $i\n\nrelease every pin of batch $i once the index goes.")
@@ -89,16 +69,18 @@ class SessionIndicesSpec extends AnyFunSuite {
     try {
       pipe.ingestBatch(batch(0), "ckptRel#0")
       assert((persistent -- before).nonEmpty, "precondition: the live index holds the batch's chunks")
-      // a delete racing later batches: each invalidate lands while the
-      // batch may still be reading its chunks, and must never fail it
+      // a flush of the session's indices racing later batches: each clear
+      // lands while the batch may still be reading its chunks, and must
+      // never fail it or free what it reads
       val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
       val invalidator = new Thread(() =>
-        while (!stop.get) { FtsIndex.invalidate(ftsKey); Thread.sleep(5) })
+        while (!stop.get) { SessionIndices.clear(); Thread.sleep(5) })
       invalidator.start()
       try (1 to 3).foreach(i => pipe.ingestBatch(batch(i), s"ckptRel#$i"))
       finally { stop.set(true); invalidator.join() }
       assert(pipe.catalog.read("chunks").select("document_id").distinct().count() == 4L)
-    } finally FtsIndex.invalidate(ftsKey)
+      assert(pipe.ftsIndex.numDocs == pipe.catalog.read("chunks").count())
+    } finally SessionIndices.clear()
     assert((persistent -- before).isEmpty, s"left pinned: ${persistent -- before}")
   }
 
@@ -200,7 +182,7 @@ class SessionIndicesSpec extends AnyFunSuite {
       val got = futures.map(_.get(120, TimeUnit.SECONDS))
       assert(ftsBuilds.get == 1 && ivfBuilds.get == 1, s"builds: fts ${ftsBuilds.get}, ivf ${ivfBuilds.get}")
       assert(got.forall(g => (g._1 eq got.head._1) && (g._2 eq got.head._2)))
-    } finally { pool.shutdown(); FtsIndex.invalidate(ftsKey) }
+    } finally { pool.shutdown(); SessionIndices.clear() }
   }
 
   test("clear() releases all four kinds of entry and the next request rebuilds") {

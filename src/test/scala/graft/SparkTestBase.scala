@@ -16,6 +16,30 @@ object SparkTestBase {
     s
   }
 
+  /** Append `rows` as one parquet file of (id, text) rows to the `chunks`
+    * table of warehouse `wh`: the table shape `Pipeline.ftsIndex` reads.
+    */
+  def appendChunks(wh: String, rows: (String, String)*): Unit = {
+    import spark.implicits._
+    rows.toDF("id", "text").coalesce(1).write.mode("append").parquet(s"$wh/chunks")
+  }
+
+  /** `pipe`'s resident FTS index against a fresh build over its chunks
+    * table: the same stats, and the same (id, score) list for `query`.
+    */
+  def assertFreshIndex(pipe: graft.pipeline.Pipeline, query: String, what: String): Unit = {
+    import org.scalatest.Assertions._
+    import graft.operators.FtsIndex
+    val resident = pipe.ftsIndex
+    val fresh = FtsIndex.build(pipe.catalog.read("chunks"), "id", "text")
+    def hits(idx: FtsIndex.Index): Seq[(String, Double)] =
+      FtsIndex.search(spark, idx, query, 10).collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+    try {
+      assert((resident.numDocs, resident.totalDocLen) == ((fresh.numDocs, fresh.totalDocLen)), what)
+      assert(hits(resident).nonEmpty && hits(resident) == hits(fresh), what)
+    } finally fresh.postings.unpersist()
+  }
+
   /** The Spark jobs `body` starts on the shared session. */
   def jobsDuring(body: => Unit): Long = {
     val jobs = new AtomicLong

@@ -10,7 +10,9 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.FtsIndex
 import graft.pipeline.Pipeline
+import graft.sources.CommitProtocol
 import graft.streaming.StreamingIngest
+import graft.util.SessionIndices
 
 /** The watch ingest (`Cli process --watch`) and the batch body it shares
   * with `Pipeline.processDirectory`: exactly-once across restarts,
@@ -100,10 +102,9 @@ class StreamingSpec extends AnyFunSuite {
     val pipe = new Pipeline(spark, cfg)
     try {
       watchOnce(ingest, in)
-      // batch 1 created the live index (extendForBatch's absent path
-      // builds-then-extends during ingest); this is a cache HIT
+      // batch 1 built the live index at the end of its ingest; this is a
+      // cache HIT
       val idx1 = pipe.ftsIndex
-      assert(idx1.lastBatchToken.isDefined, "ingest-created index carries its batch stamp")
       assert(FtsIndex.search(spark, idx1, "catalyst plans", 5).count() > 0)
 
       // batch 2 extends the LIVE index in place: a search through the same
@@ -112,7 +113,6 @@ class StreamingSpec extends AnyFunSuite {
       watchOnce(ingest, in)
       val idx2 = pipe.ftsIndex
       assert(idx2.numDocs == idx1.numDocs + 1, "cached index extended in place")
-      assert(idx2.lastBatchToken != idx1.lastBatchToken, "batch-2 stamp replaced batch-1's")
       assert(idx1.retained.isEmpty && idx2.retained.length == 2, "one new fragment, no rebuild")
       assert(FtsIndex.search(spark, idx2, "tungsten bytecode", 5).count() > 0)
     } finally pipe.flush()
@@ -130,8 +130,8 @@ class StreamingSpec extends AnyFunSuite {
       assert(pipe.processDirectory(in) == 2)
       val chunkCount = pipe.catalog.read("chunks").count()
       // ...then the crash window: the ledger append is not visible (drop
-      // the table) and the process died (cold FTS cache, no replay stamp)
-      FtsIndex.invalidate(s"$wh/chunks")
+      // the table) and the process died (cold FTS cache)
+      SessionIndices.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(Paths.get(wh, "documents").toFile)
       // the rerun re-admits both files
       assert(pipe.processDirectory(in) == 2)
@@ -140,34 +140,59 @@ class StreamingSpec extends AnyFunSuite {
       assert(pipe.catalog.read("chunks").select("id").distinct().count() == chunkCount)
       val ledger = pipe.catalog.read("documents")
       assert(ledger.count() == 2 && ledger.select("id").distinct().count() == 2)
-      // the replay's cold build corpus EXCLUDED this batch's documents
-      // (their chunks were already in the table), so stats are exact and
-      // every (doc, term) has exactly one postings row
+      // the index covers the table's files, which hold each chunk once, so
+      // stats are exact and every (doc, term) has exactly one postings row
       val idx = pipe.ftsIndex
       assert(idx.numDocs == chunkCount,
         s"index numDocs ${idx.numDocs} != table rows $chunkCount: batch double-counted on replay")
       val dup = idx.postings.groupBy("doc_id", "term").count().where(col("count") > 1).count()
       assert(dup == 0, "duplicated postings rows after crash-replay")
+      SparkTestBase.assertFreshIndex(pipe, "ledger replay", "after the replay")
+
+      // a batch that throws after its chunks append: c3 failed once, so its
+      // re-admission rewrites the ledger through the commit protocol, which
+      // dies before the swap
+      val in3 = s"$base/in3"
+      Files.createDirectories(Paths.get(in3))
+      mkPdf(in3, "c3.pdf", "# Partial\n\na crashed batch leaves its chunks without ledger rows.")
+      val tight = GraftConfig(warehouseDir = wh, extraction = ExtractionConfig(maxFileSizeMb = 0))
+      assert(new Pipeline(spark, tight).processDirectory(in3) == 0)
+      val ledgerDir = Paths.get(wh, "documents").toAbsolutePath
+      val prev = CommitProtocol.current
+      CommitProtocol.install(new CommitProtocol {
+        def name: String = "dies-before-the-ledger-swap"
+        def swapIn(target: java.nio.file.Path)(write: java.nio.file.Path => Unit): Unit =
+          if (target.toAbsolutePath == ledgerDir) throw new RuntimeException("injected crash before the ledger swap")
+          else prev.swapIn(target)(write)
+      })
+      try intercept[RuntimeException](pipe.processDirectory(in3))
+      finally CommitProtocol.install(prev)
+      assert(pipe.catalog.read("chunks").count() > chunkCount, "precondition: the crashed batch's chunks landed")
+      SparkTestBase.assertFreshIndex(pipe, "crashed batch chunks ledger", "after a batch that threw after its chunks append")
+      // its rerun appends only the ledger rows
+      assert(pipe.processDirectory(in3) == 1)
+      SparkTestBase.assertFreshIndex(pipe, "crashed batch chunks ledger", "after the crashed batch's rerun")
     } finally pipe.flush()
   }
 
   test("a search during streaming extension never observes a half-extended index") {
     import spark.implicits._
-    val key = "spec:concurrent-extend"
-    FtsIndex.invalidate(key)
-    def docsUpTo(n: Int) = (0 to n).map(i => (i.toLong, s"token$i shared")).toDF("id", "text")
-    FtsIndex.buildCached(key, docsUpTo(0), "id", "text")
+    val wh = Files.createTempDirectory("graft-stream-concurrent").toString
+    val pipe = new Pipeline(spark, GraftConfig(warehouseDir = wh))
+    SparkTestBase.appendChunks(wh, ("0", "token0 shared"))
+    pipe.ftsIndex
     val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val done = new java.util.concurrent.atomic.AtomicBoolean(false)
-    // the searcher hammers the cache while batches extend it: every index
-    // it sees must be internally consistent (stats match postings) and
-    // must contain a PREFIX of the batch sequence — a half-extended state
-    // (stats bumped but postings missing, or vice versa) fails both
+    // the searcher hammers the index while batches land in the table and
+    // extend it: every index it sees must be internally consistent (stats
+    // match postings) and must contain a PREFIX of the batch sequence — a
+    // half-extended state (stats bumped but postings missing, or vice
+    // versa) fails both
     val searcher = new Thread(() => {
       try {
         while (!done.get()) {
-          val idx = FtsIndex.buildCached(key, docsUpTo(0), "id", "text")
-          val ids = idx.postings.select("doc_id").distinct().as[Long].collect().sorted.toSeq
+          val idx = pipe.ftsIndex
+          val ids = idx.postings.select("doc_id").distinct().as[String].collect().map(_.toLong).sorted.toSeq
           if (idx.numDocs != ids.length)
             errors.add(s"numDocs ${idx.numDocs} != ${ids.length} distinct postings docs")
           if (ids.nonEmpty && ids != (0L to ids.max))
@@ -184,45 +209,12 @@ class StreamingSpec extends AnyFunSuite {
     })
     searcher.start()
     try {
-      (1 to 6).foreach { i =>
-        FtsIndex.extendForBatch(
-          key, s"runC#$i",
-          Seq((i.toLong, s"token$i shared")).toDF("id", "text"),
-          "id", "text",
-          docsUpTo(i - 1)
-        )
-      }
-    } finally { done.set(true); searcher.join() }
-    val idx = FtsIndex.buildCached(key, docsUpTo(0), "id", "text")
-    assert(idx.numDocs == 7, "all six batches extended the seed index")
-    assert(errors.isEmpty, s"inconsistent index states observed: $errors")
-    FtsIndex.invalidate(key)
-  }
-
-  test("extendForBatch: replay no-op, new batch extends, absent key builds, runs don't collide") {
-    import spark.implicits._
-    val key = "spec:extend-for-batch"
-    FtsIndex.invalidate(key)
-    val base = Seq((1L, "alpha bravo"), (2L, "charlie delta")).toDF("id", "text")
-    val batch7 = Seq((3L, "echo foxtrot")).toDF("id", "text")
-    val batch8 = Seq((4L, "golf hotel")).toDF("id", "text")
-    val otherRun7 = Seq((5L, "india juliet")).toDF("id", "text")
-    try {
-      // absent key: builds from the pre-batch corpus, then extends
-      val idx = FtsIndex.extendForBatch(key, "runA#7", batch7, "id", "text", base)
-      assert(idx.numDocs == 3 && idx.lastBatchToken.contains("runA#7"))
-      // replay of batch 7 (failed table append, micro-batch retry): no-op
-      val replayed = FtsIndex.extendForBatch(key, "runA#7", batch7, "id", "text", base)
-      assert(replayed.numDocs == 3, "a replayed batch must not union its postings twice")
-      // the next batch extends normally
-      val next = FtsIndex.extendForBatch(key, "runA#8", batch8, "id", "text", base)
-      assert(next.numDocs == 4 && next.lastBatchToken.contains("runA#8"))
-      assert(FtsIndex.search(spark, next, "echo golf", 5).count() == 2)
-      // a DIFFERENT run's batch 8 is new content, not a replay: the
-      // run-scoped token must not misread it (bare batch ids collide
-      // after a checkpoint reset)
-      val otherRun = FtsIndex.extendForBatch(key, "runB#8", otherRun7, "id", "text", base)
-      assert(otherRun.numDocs == 5, "same batch id from another run must extend, not skip")
-    } finally FtsIndex.invalidate(key)
+      try (1 to 6).foreach { i =>
+        SparkTestBase.appendChunks(wh, (i.toString, s"token$i shared"))
+        pipe.ftsIndex
+      } finally { done.set(true); searcher.join() }
+      assert(pipe.ftsIndex.numDocs == 7, "all six batches extended the seed index")
+      assert(errors.isEmpty, s"inconsistent index states observed: $errors")
+    } finally pipe.flush()
   }
 }
